@@ -705,34 +705,30 @@ object Bench {
       System.err.println(s"[bench] $name failed: ${e.getMessage}"); -1.0 }
   }
 
-  /** Pay the one-time langid train+publish OUTSIDE any timed window
-    * whenever the phase is about to time a query that SERVES from the
-    * committed model (c79b/c92): the first serving probe in a fresh
-    * phase JVM would otherwise pay the publish and best-of-N would only
-    * hide it. No-op when the phase's query set doesn't serve the model.
+  /** The queries that SERVE from each store fixture, by fixture name:
+    * whenever a phase is about to time one of them, the fixture's
+    * one-time derivation + publish (the langid train, an image decode,
+    * a tokenize pass) is paid OUTSIDE any timed window — the first
+    * serving probe in a fresh phase JVM would otherwise pay it and
+    * best-of-N would only hide it.
     */
-  private val modelServingQueries =
-    Set("c79b_trained_langid", "c92_budget_threshold")
-  private val imageServingQueries =
-    Set("c104_image_code_serve", "c114_image_banding_curve",
+  private val storeServingQueries = Seq(
+    "clf_langid" -> Set("c79b_trained_langid", "c92_budget_threshold"),
+    "img_codes" -> Set("c104_image_code_serve", "c114_image_banding_curve",
       "c118_crossmodal_dup", "c123_trimodal_dup",
       "c128_image_incremental_pairs", "c130_verdict_store_serve",
       // r19 (the r18 verdict's ask #5): c97b now resolves clusters from
       // the stored codes — the decode+publish is prepaid like every
       // other store-fed row; c97 keeps the in-query decode
-      "c97b_image_dup_clusters")
-  private val audioServingQueries =
-    Set("c115_audio_code_serve", "c123_trimodal_dup",
-      "c129_audio_incremental_pairs", "c130_verdict_store_serve")
-  private val textSigServingQueries =
-    Set("c119_text_sig_serve", "c121_text_sig_incremental")
-  private val spanServingQueries =
-    Set("c125_span_store_serve", "c132_extents_from_store",
+      "c97b_image_dup_clusters"),
+    "audio_codes" -> Set("c115_audio_code_serve", "c123_trimodal_dup",
+      "c129_audio_incremental_pairs", "c130_verdict_store_serve"),
+    "text_sigs" -> Set("c119_text_sig_serve", "c121_text_sig_incremental"),
+    "span_digests" -> Set("c125_span_store_serve", "c132_extents_from_store",
       // r16 (the r15 verdict's ask #4): the strip family serves its
       // digests from the C125 store — the digest pass is prepaid here
-      "c76c_extent_strip", "c84_canonical_extent_strip")
-  private val spanQualityServingQueries =
-    Set("c87_quality_extent_strip")
+      "c76c_extent_strip", "c84_canonical_extent_strip"),
+    "span_qdigests" -> Set("c87_quality_extent_strip"))
 
   /** The five store-lifecycle keys that time SERVE-ONLY under the bench
     * (the r15 verdict's ask #1a): one untimed invocation here runs the
@@ -760,30 +756,11 @@ object Bench {
       catch { case e: Throwable =>
         System.err.println(s"[bench] prewarm $n failed: ${e.getMessage}") }
     }
-    if (names.exists(modelServingQueries)) {
-      System.err.println(s"[bench] prewarming langid model for $dir")
-      SparkEntry.prewarmLangidModel(spark, dir)
-    }
-    if (names.exists(imageServingQueries)) {
-      System.err.println(s"[bench] prewarming image-code store for $dir")
-      SparkEntry.prewarmImageCodes(spark, dir)
-    }
-    if (names.exists(audioServingQueries)) {
-      System.err.println(s"[bench] prewarming audio-code store for $dir")
-      SparkEntry.prewarmAudioCodes(spark, dir)
-    }
-    if (names.exists(textSigServingQueries)) {
-      System.err.println(s"[bench] prewarming text-signature store for $dir")
-      SparkEntry.prewarmTextSigs(spark, dir)
-    }
-    if (names.exists(spanServingQueries)) {
-      System.err.println(s"[bench] prewarming span-digest store for $dir")
-      SparkEntry.prewarmSpanDigests(spark, dir)
-    }
-    if (names.exists(spanQualityServingQueries)) {
-      System.err.println(
-        s"[bench] prewarming quality span-digest store for $dir")
-      SparkEntry.prewarmSpanQualityDigests(spark, dir)
+    storeServingQueries.foreach { case (fixture, keys) =>
+      if (names.exists(keys)) {
+        System.err.println(s"[bench] prewarming $fixture store for $dir")
+        SparkEntry.prewarmStore(spark, fixture, dir)
+      }
     }
   }
 

@@ -64,108 +64,101 @@ object SparkEntry {
     Seq("join", "sort", "merge"),
     Seq("spark", "batch", "window"))
 
-  /** The committed langid MODEL ARTIFACT, trained-and-published at most
-    * ONCE per corpus dir per JVM (the r11 ask: c79b/c92 serving paths
-    * must LOAD the deployed model, not retrain inline — a quality
+  /** A scratch root private to this run for `name` over corpus `dir`.
+    * The name carries a hash of the FULL corpus path: two dirs sharing a
+    * basename in one JVM must not share a root (cache key and storage
+    * location must not diverge).
+    */
+  private def scratchRoot(name: String, dir: String): String =
+    Tables.scratch(name + "_" + java.lang.Integer.toHexString(
+      scala.util.hashing.MurmurHash3.stringHash(dir)))
+
+  /** Delete whatever an earlier build left under `root`; returns the
+    * root's file system.
+    */
+  private def freshRoot(s: SparkSession, root: String)
+      : org.apache.hadoop.fs.FileSystem = {
+    val p = new org.apache.hadoop.fs.Path(root)
+    val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
+    fs.delete(p, true)
+    fs
+  }
+
+  /** `df` persisted for the duration of `body`, then released. */
+  private def withPersisted[T](df: DataFrame)(body: DataFrame => T): T = {
+    val p = df.persist()
+    try body(p) finally { p.unpersist(); () }
+  }
+
+  /** Land `rows` as two ingest epochs split by `idCol` parity (even →
+    * epoch 0, odd → epoch 1), then REDELIVER epoch 1 — at-least-once
+    * delivery, which the D8 partition rule makes exactly-once (the
+    * redelivery overwrites its own partition with bit-identical rows).
+    */
+  private def appendByParity(rows: DataFrame, idCol: String)(
+      append: (DataFrame, Long) => Unit): Unit =
+    Seq(0L, 1L, 1L).foreach(e =>
+      append(rows.where(pmod(col(idCol), lit(2)) === e), e))
+
+  private val storeRoots =
+    new java.util.concurrent.ConcurrentHashMap[String, String]()
+
+  /** A store built at most ONCE per (JVM, fixture, corpus): the root is
+    * named, emptied, and handed to `build`, which publishes the store's
+    * spec and lands its rows. Every serving query then reads the stored
+    * table; the derivation (decode, tokenize, train) is paid here —
+    * never per query.
+    */
+  private def storeFixture(s: SparkSession, name: String, dir: String)(
+      build: String => Unit): String =
+    storeRoots.computeIfAbsent(s"$name:$dir", _ => {
+      val root = scratchRoot(name, dir)
+      freshRoot(s, root)
+      build(root)
+      root
+    })
+
+  /** The committed langid MODEL ARTIFACT (the r11 ask: c79b/c92 serving
+    * paths must LOAD the deployed model, not retrain inline — a quality
     * filter that must be retrained to be consulted isn't deployed).
     * Training depth is EXACTLY what the c79b/c92 oracles replay
     * (5 classes, nBuckets=128, epochs=1, nBatches=2, lrDiv=64); the
     * integer-grid weights round-trip parquet bit-exactly, so
     * score-from-load ≡ score-from-train and the oracles gate the loaded
-    * path unchanged. Bench.maybePrewarm calls [[prewarmLangidModel]]
-    * before any phase that times c79b/c92, so probe rows time serving,
-    * not the one-time publish.
+    * path unchanged.
     */
-  private val clfModelRoots =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   private def langidModelRoot(s: SparkSession, dir: String): String =
-    clfModelRoots.computeIfAbsent(dir, _ => {
+    storeFixture(s, "clf_langid", dir) { root =>
       import graft.operators.ClassifierTrain
-      import org.apache.hadoop.fs.Path
-      // the scratch name carries a hash of the FULL corpus path, not just
-      // its basename: two dirs sharing a basename in one JVM would
-      // otherwise train into the same root — the second publish would
-      // overwrite the first's store while the first's cached root kept
-      // serving it (cache key and storage location must not diverge)
-      val root = Tables.scratch("clf_langid_" +
-        new java.io.File(dir).getName + "_" + java.lang.Integer.toHexString(
-          scala.util.hashing.MurmurHash3.stringHash(dir)))
-      val fs = org.apache.hadoop.fs.FileSystem.get(new Path(root).toUri,
-        s.sparkContext.hadoopConfiguration)
-      fs.delete(new Path(root), true)
       val classes = Seq("de", "en", "es", "fr", "zh")
-      val feats = ClassifierTrain.featurizeMulti(
-        t(s, dir, "documents"), "text", "doc_id", "lang", 128, 2).persist()
-      try {
+      withPersisted(ClassifierTrain.featurizeMulti(
+          t(s, dir, "documents"), "text", "doc_id", "lang", 128, 2)) { feats =>
         val model = ClassifierTrain
           .trainMulticlass(feats, classes, 128, 1, 2, 64L)
           .map { case (c, res) => (c, res.weights) }
         val rep = graft.sources.ModelStore.publishModel(
           s, root, model, trainedAtEpoch = 1L)
         require(rep.committed, s"langid model publish failed: ${rep.failures}")
-      } finally { feats.unpersist(); () }
-      root
-    })
+      }
+    }
 
-  /** Bench hook: pay the one-time train+publish OUTSIDE a timed probe. */
-  def prewarmLangidModel(s: SparkSession, dir: String): Unit = {
-    langidModelRoot(s, dir); ()
-  }
-
-  private val imgCodeRoots =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
-  /** The C104 stored-code root for `dir`: decode + publish ONCE per
-    * (JVM, corpus) — the spec version, then the blockhash codes in two
-    * ingest epochs (even / odd media ids) with epoch 1 REPLAYED
-    * (at-least-once delivery; the D8 partition rule makes it
-    * exactly-once). Every serving query reads the stored table; the
-    * decode pass is paid here, per NEW image — never per query.
+  /** The C104 stored-code root: the blockhash spec, then the codes in
+    * two ingest epochs by media-id parity with epoch 1 replayed.
     */
   private def imageCodesRoot(s: SparkSession, dir: String): String =
-    imgCodeRoots.computeIfAbsent(dir, _ => {
+    storeFixture(s, "img_codes", dir) { root =>
       import graft.operators.ImageDedup
       import graft.sources.ImageCodeStore
-      import org.apache.hadoop.fs.Path
-      // full-path hash in the scratch name (the langidModelRoot rule):
-      // two dirs sharing a basename must not share a store
-      val root = Tables.scratch("img_codes_" +
-        new java.io.File(dir).getName + "_" +
-        java.lang.Integer.toHexString(
-          scala.util.hashing.MurmurHash3.stringHash(dir)))
-      val fs = org.apache.hadoop.fs.FileSystem.get(new Path(root).toUri,
-        s.sparkContext.hadoopConfiguration)
-      fs.delete(new Path(root), true)
       val rep = ImageCodeStore.publishSpec(s, root, "blockhash",
         grid = 8, bands = 4)
       require(rep.committed, s"img code spec publish failed: ${rep.failures}")
       val v = ImageCodeStore.committedSpecVersion(s, root)
       val packed = ImageDedup.packImageVariants(s,
         t(s, dir, "documents"), "doc_id")
-      // persist: the two epoch filters below would otherwise decode the
-      // corpus twice — the decode is exactly the cost this store exists
-      // to pay once
-      val codes = ImageDedup.blockhashCodes(s, packed).persist()
-      try {
-        ImageCodeStore.appendCodesEpoch(
-          codes.where(pmod(col("media_id"), lit(2)) === 0), root, v, 0L)
-        ImageCodeStore.appendCodesEpoch(
-          codes.where(pmod(col("media_id"), lit(2)) === 1), root, v, 1L)
-        // at-least-once delivery: epoch 1 redelivered — the D8 rule
-        // overwrites its own partition with bit-identical rows
-        ImageCodeStore.appendCodesEpoch(
-          codes.where(pmod(col("media_id"), lit(2)) === 1), root, v, 1L)
-      } finally { codes.unpersist(); () }
-      root
-    })
-
-  /** Bench hook: pay the one-time decode+publish OUTSIDE a timed probe
-    * (the c95 prewarm discipline on the image-code store).
-    */
-  def prewarmImageCodes(s: SparkSession, dir: String): Unit = {
-    imageCodesRoot(s, dir); ()
-  }
+      withPersisted(ImageDedup.blockhashCodes(s, packed))(
+        appendByParity(_, "media_id")(
+          ImageCodeStore.appendEpoch(_, root, v, _)))
+    }
 
   /** The c105/c112/c115 audio-dedup corpus: every doc_id % 4 == 0 doc
     * as a REAL WAV clip, plus a half-gain re-master of every
@@ -183,59 +176,22 @@ object SparkEntry {
     wavs.unionByName(halved)
   }
 
-  private val audioCodeRoots =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
-  /** The C115 stored-code root for `dir`: decode + publish ONCE per
-    * (JVM, corpus) — the spec version, then the chained-landmark rows
-    * in two ingest epochs (even / odd media ids) with epoch 1 REPLAYED
-    * (at-least-once delivery; the D8 partition rule makes it
-    * exactly-once). Every serving query reads the stored table; the
-    * WAV-decode + WHT chain is paid here, per NEW clip — never per
-    * query (the imageCodesRoot discipline on the audio surface).
+  /** The C115 stored-code root: the chained-landmark spec, then the
+    * landmark rows in two ingest epochs by media-id parity with epoch 1
+    * replayed — the WAV-decode + WHT chain is paid here, per NEW clip.
     */
   private def audioCodesRoot(s: SparkSession, dir: String): String =
-    audioCodeRoots.computeIfAbsent(dir, _ => {
+    storeFixture(s, "audio_codes", dir) { root =>
       import graft.operators.Audio
       import graft.sources.AudioCodeStore
-      import org.apache.hadoop.fs.Path
-      // full-path hash in the scratch name (the langidModelRoot rule):
-      // two dirs sharing a basename must not share a store
-      val root = Tables.scratch("audio_codes_" +
-        new java.io.File(dir).getName + "_" +
-        java.lang.Integer.toHexString(
-          scala.util.hashing.MurmurHash3.stringHash(dir)))
-      val fs = org.apache.hadoop.fs.FileSystem.get(new Path(root).toUri,
-        s.sparkContext.hadoopConfiguration)
-      fs.delete(new Path(root), true)
       val rep = AudioCodeStore.publishSpec(s, root, "chained_landmark",
         frame = 128)
       require(rep.committed, s"audio code spec publish failed: ${rep.failures}")
       val v = AudioCodeStore.committedSpecVersion(s, root)
-      // persist: the two epoch filters below would otherwise decode the
-      // corpus twice — the decode+WHT chain is exactly the cost this
-      // store exists to pay once
-      val rows = Audio.chainedLandmarkRows(s, audioDupCorpus(s, dir))
-        .persist()
-      try {
-        AudioCodeStore.appendCodesEpoch(
-          rows.where(pmod(col("media_id"), lit(2)) === 0), root, v, 0L)
-        AudioCodeStore.appendCodesEpoch(
-          rows.where(pmod(col("media_id"), lit(2)) === 1), root, v, 1L)
-        // at-least-once delivery: epoch 1 redelivered — the D8 rule
-        // overwrites its own partition with bit-identical rows
-        AudioCodeStore.appendCodesEpoch(
-          rows.where(pmod(col("media_id"), lit(2)) === 1), root, v, 1L)
-      } finally { rows.unpersist(); () }
-      root
-    })
-
-  /** Bench hook: pay the one-time decode+publish OUTSIDE a timed probe
-    * (the c104 prewarm discipline on the audio-code store).
-    */
-  def prewarmAudioCodes(s: SparkSession, dir: String): Unit = {
-    audioCodesRoot(s, dir); ()
-  }
+      withPersisted(Audio.chainedLandmarkRows(s, audioDupCorpus(s, dir)))(
+        appendByParity(_, "media_id")(
+          AudioCodeStore.appendEpoch(_, root, v, _)))
+    }
 
   /** The c119/c121 text-dedup corpus: every document plus one exact
     * re-crawl copy at +1e6 — the c2 construction verbatim, so the c2
@@ -247,61 +203,24 @@ object SparkEntry {
       docs.withColumn("doc_id", col("doc_id") + lit(1000000L)))
   }
 
-  private val textSigRoots =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
-  /** The C119 stored-signature root for `dir`: tokenize + minhash +
-    * publish ONCE per (JVM, corpus) — the spec version, then the
-    * MinHash signature rows in two ingest epochs (even / odd doc ids)
-    * with epoch 1 REPLAYED (at-least-once delivery; the D8 partition
-    * rule makes it exactly-once). Every serving query reads the stored
-    * table; the full-corpus MinHashSigExpr pass is paid here, per NEW
-    * document — never per query (the imageCodesRoot discipline on the
-    * text surface, where at 100 TB the tokenize pass IS the query
-    * cost).
+  /** The C119 stored-signature root: the MinHash spec, then the
+    * signature rows in two ingest epochs by doc-id parity with epoch 1
+    * replayed — the full-corpus MinHashSigExpr pass is paid here, per
+    * NEW document.
     */
   private def textSigsRoot(s: SparkSession, dir: String): String =
-    textSigRoots.computeIfAbsent(dir, _ => {
+    storeFixture(s, "text_sigs", dir) { root =>
       import graft.operators.Dedup
       import graft.sources.TextSigStore
-      import org.apache.hadoop.fs.Path
-      // full-path hash in the scratch name (the langidModelRoot rule):
-      // two dirs sharing a basename must not share a store
-      val root = Tables.scratch("text_sigs_" +
-        new java.io.File(dir).getName + "_" +
-        java.lang.Integer.toHexString(
-          scala.util.hashing.MurmurHash3.stringHash(dir)))
-      val fs = org.apache.hadoop.fs.FileSystem.get(new Path(root).toUri,
-        s.sparkContext.hadoopConfiguration)
-      fs.delete(new Path(root), true)
       val rep = TextSigStore.publishSpec(s, root, "minhash",
         k = 64, bands = 16, shingleW = 3)
       require(rep.committed, s"text sig spec publish failed: ${rep.failures}")
       val v = TextSigStore.committedSpecVersion(s, root)
-      // persist: the two epoch filters below would otherwise tokenize
-      // the corpus twice — the signature pass is exactly the cost this
-      // store exists to pay once
-      val sigs = Dedup.minhashSigRows(textSigCorpus(s, dir), "text",
-        "doc_id").persist()
-      try {
-        TextSigStore.appendSigsEpoch(
-          sigs.where(pmod(col("doc_id"), lit(2)) === 0), root, v, 0L)
-        TextSigStore.appendSigsEpoch(
-          sigs.where(pmod(col("doc_id"), lit(2)) === 1), root, v, 1L)
-        // at-least-once delivery: epoch 1 redelivered — the D8 rule
-        // overwrites its own partition with bit-identical rows
-        TextSigStore.appendSigsEpoch(
-          sigs.where(pmod(col("doc_id"), lit(2)) === 1), root, v, 1L)
-      } finally { sigs.unpersist(); () }
-      root
-    })
-
-  /** Bench hook: pay the one-time tokenize+publish OUTSIDE a timed
-    * probe (the c104 prewarm discipline on the text-signature store).
-    */
-  def prewarmTextSigs(s: SparkSession, dir: String): Unit = {
-    textSigsRoot(s, dir); ()
-  }
+      withPersisted(Dedup.minhashSigRows(textSigCorpus(s, dir), "text",
+          "doc_id"))(
+        appendByParity(_, "doc_id")(
+          TextSigStore.appendEpoch(_, root, v, _)))
+    }
 
   /** The c27/c76/c125 span-dedup corpus: every document plus a re-crawl
     * copy of the ≡0 mod 10 slice at +1e6 — the planted whole-document
@@ -314,63 +233,33 @@ object SparkEntry {
         .withColumn("doc_id", col("doc_id") + lit(1000000L)))
   }
 
-  private val spanDigestRoots =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
-  /** The C125 stored-digest root for `dir`: tokenize + digest + publish
-    * ONCE per (JVM, corpus) — the spec (the c76 width ladder 8/16/32),
-    * then per level the span-digest rows in two ingest epochs (even /
-    * odd doc ids) with epoch 1 REPLAYED (at-least-once delivery; the
-    * D8 partition rule makes it exactly-once). Every serving query
-    * reads the stored tables; the tokenize+digest map passes — the
-    * measured majority of the c76 quiet 100x profile — are paid here,
-    * per NEW document, never per query.
+  /** Publish a span-digest spec over `widths` under `root` (`label`
+    * names it in a refusal) and land
+    * `corpus`'s digests at every level, two epochs by doc-id parity with
+    * epoch 1 replayed — the tokenize+digest map passes (the measured
+    * majority of the c76 quiet 100x profile) are paid here, per NEW
+    * document.
     */
-  private def spanDigestsRoot(s: SparkSession, dir: String): String =
-    spanDigestRoots.computeIfAbsent(dir, _ => {
-      import graft.operators.Dedup
-      import graft.sources.SpanStore
-      import org.apache.hadoop.fs.Path
-      val root = Tables.scratch("span_digests_" +
-        new java.io.File(dir).getName + "_" +
-        java.lang.Integer.toHexString(
-          scala.util.hashing.MurmurHash3.stringHash(dir)))
-      val fs = org.apache.hadoop.fs.FileSystem.get(new Path(root).toUri,
-        s.sparkContext.hadoopConfiguration)
-      fs.delete(new Path(root), true)
-      val widths = Seq(8, 16, 32)
-      val rep = SpanStore.publishSpec(s, root, "span_md5", widths)
-      require(rep.committed, s"span spec publish failed: ${rep.failures}")
-      val v = SpanStore.committedSpecVersion(s, root)
-      val corpus = spanDupCorpus(s, dir)
-      widths.foreach { w =>
-        // per level: one digest pass, split into two epochs by parity
-        // with epoch 1 redelivered (the D8 rule converges it)
-        val rows = Dedup.spanDigestRows(corpus, "text", "doc_id", w)
-          .persist()
-        try {
-          SpanStore.appendDigestsEpoch(
-            rows.where(pmod(col("id"), lit(2)) === 0), root, v, w, 0L)
-          SpanStore.appendDigestsEpoch(
-            rows.where(pmod(col("id"), lit(2)) === 1), root, v, w, 1L)
-          SpanStore.appendDigestsEpoch(
-            rows.where(pmod(col("id"), lit(2)) === 1), root, v, w, 1L)
-        } finally { rows.unpersist(); () }
-      }
-      root
-    })
-
-  /** Bench hook: pay the one-time digest+publish OUTSIDE a timed probe
-    * (the c104 prewarm discipline on the span-digest store).
-    */
-  def prewarmSpanDigests(s: SparkSession, dir: String): Unit = {
-    spanDigestsRoot(s, dir); ()
+  private def spanDigestStore(s: SparkSession, root: String, label: String,
+                              corpus: DataFrame, widths: Seq[Int]): Unit = {
+    import graft.operators.Dedup
+    import graft.sources.SpanStore
+    val rep = SpanStore.publishSpec(s, root, "span_md5", widths)
+    require(rep.committed, s"$label spec publish failed: ${rep.failures}")
+    val v = SpanStore.committedSpecVersion(s, root)
+    widths.foreach { w =>
+      withPersisted(Dedup.spanDigestRows(corpus, "text", "doc_id", w))(
+        appendByParity(_, "id")(
+          SpanStore.level(w).appendEpoch(_, root, v, _)))
+    }
   }
 
-  private val spanLedgerRootsMemo =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
+  /** The C125 stored-digest root: the c76 width ladder 8/16/32. */
+  private def spanDigestsRoot(s: SparkSession, dir: String): String =
+    storeFixture(s, "span_digests", dir)(
+      spanDigestStore(s, _, "span", spanDupCorpus(s, dir), Seq(8, 16, 32)))
 
-  /** The C137 fired-window LEDGER root for `dir` — the spanDigestsRoot
+  /** The C137 fired-window LEDGER root — the spanDigestsRoot
     * discipline carried to the incremental-pair arc: the c76 corpus
     * arrives in two ingest epochs (by doc-id parity, so the planted
     * +1e6 re-crawl copies land WITH their originals — the within-delta
@@ -384,16 +273,8 @@ object SparkEntry {
     * here, per epoch, never per question.
     */
   private def spanLedgerRoot(s: SparkSession, dir: String): String =
-    spanLedgerRootsMemo.computeIfAbsent(dir, _ => {
+    storeFixture(s, "ledger", dir) { root =>
       import graft.sources.{SpanLedger, SpanStore}
-      import org.apache.hadoop.fs.Path
-      val root = Tables.scratch("span_ledger_" +
-        new java.io.File(dir).getName + "_" +
-        java.lang.Integer.toHexString(
-          scala.util.hashing.MurmurHash3.stringHash(dir)))
-      val fs = org.apache.hadoop.fs.FileSystem.get(new Path(root).toUri,
-        s.sparkContext.hadoopConfiguration)
-      fs.delete(new Path(root), true)
       val widths = Seq(8, 16, 32)
       val rep = SpanStore.publishSpec(s, s"$root/store", "span_md5",
         widths)
@@ -413,13 +294,7 @@ object SparkEntry {
       }
       ingest(1L) // post-compaction straggler: absorbed by the sweep,
       // retired by the next fold — the C135 replay contract
-      root
-    })
-
-  /** Bench hook for the c137 serving path. */
-  def prewarmSpanLedger(s: SparkSession, dir: String): Unit = {
-    spanLedgerRoot(s, dir); ()
-  }
+    }
 
   /** The c87 corpus: every ≡0 mod 10 original DEGRADED with a junk
     * tail while its +1e6 re-crawl copy stays clean — the planted
@@ -436,47 +311,28 @@ object SparkEntry {
         .withColumn("doc_id", col("doc_id") + lit(1000000L)))
   }
 
-  private val spanQualityDigestRoots =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   /** The C87 stored-digest root: the [[spanDigestsRoot]] discipline on
     * the QUALITY corpus (a corpus variant is its own store — the
-    * degraded tails change every window digest of the degraded docs).
-    * Single-level spec ({16} — the strip family's width), two ingest
-    * epochs by parity with epoch 1 replayed (the D8 rule).
+    * degraded tails change every window digest of the degraded docs),
+    * single-level ({16} — the strip family's width).
     */
   private def spanQualityDigestsRoot(s: SparkSession, dir: String): String =
-    spanQualityDigestRoots.computeIfAbsent(dir, _ => {
-      import graft.operators.Dedup
-      import graft.sources.SpanStore
-      import org.apache.hadoop.fs.Path
-      val root = Tables.scratch("span_qdigests_" +
-        new java.io.File(dir).getName + "_" +
-        java.lang.Integer.toHexString(
-          scala.util.hashing.MurmurHash3.stringHash(dir)))
-      val fs = org.apache.hadoop.fs.FileSystem.get(new Path(root).toUri,
-        s.sparkContext.hadoopConfiguration)
-      fs.delete(new Path(root), true)
-      val rep = SpanStore.publishSpec(s, root, "span_md5", Seq(16))
-      require(rep.committed,
-        s"quality span spec publish failed: ${rep.failures}")
-      val v = SpanStore.committedSpecVersion(s, root)
-      val rows = Dedup.spanDigestRows(spanQualityCorpus(s, dir), "text",
-        "doc_id", 16).persist()
-      try {
-        SpanStore.appendDigestsEpoch(
-          rows.where(pmod(col("id"), lit(2)) === 0), root, v, 16, 0L)
-        SpanStore.appendDigestsEpoch(
-          rows.where(pmod(col("id"), lit(2)) === 1), root, v, 16, 1L)
-        SpanStore.appendDigestsEpoch(
-          rows.where(pmod(col("id"), lit(2)) === 1), root, v, 16, 1L)
-      } finally { rows.unpersist(); () }
-      root
-    })
+    storeFixture(s, "span_qdigests", dir)(
+      spanDigestStore(s, _, "quality span", spanQualityCorpus(s, dir),
+        Seq(16)))
 
-  /** Bench hook for the c87 serving path. */
-  def prewarmSpanQualityDigests(s: SparkSession, dir: String): Unit = {
-    spanQualityDigestsRoot(s, dir); ()
+  private val storeFixtures = Map[String, (SparkSession, String) => String](
+    "clf_langid" -> langidModelRoot, "img_codes" -> imageCodesRoot,
+    "audio_codes" -> audioCodesRoot, "text_sigs" -> textSigsRoot,
+    "span_digests" -> spanDigestsRoot, "ledger" -> spanLedgerRoot,
+    "span_qdigests" -> spanQualityDigestsRoot)
+
+  /** Bench hook: build store fixture `name` for `dir` OUTSIDE a timed
+    * probe (the c95 prewarm discipline), so probe rows time serving,
+    * not the one-time derivation + publish.
+    */
+  def prewarmStore(s: SparkSession, name: String, dir: String): Unit = {
+    storeFixtures(name)(s, dir); ()
   }
 
   /** Bench-only serve-phase gate (the r15 verdict's ask #1a): the five
@@ -491,7 +347,7 @@ object SparkEntry {
     * body runs ONCE per (JVM, corpus) — the maybePrewarm invocation —
     * and every subsequent timed sample in that JVM skips straight to
     * the serve expression against the already-committed store. In-JVM
-    * memoization (the imageCodesRoot discipline) means no on-disk
+    * memoization (the storeFixture discipline) means no on-disk
     * marker can ever go stale across code changes or rounds.
     */
   private def serveOnlyBench: Boolean =
@@ -509,6 +365,93 @@ object SparkEntry {
         catch { case e: Throwable => lifecyclesDone.remove(key); throw e }
     } else body
 
+  /** One store version's rows as (row count, xor of row hashes) — the
+    * byte-stability pin the lifecycles below compare across a flip.
+    */
+  private def storeDigest(s: SparkSession, store: graft.sources.EpochStore,
+                          root: String, v: Int): (Long, Long) = {
+    val df = store.read(s, root, v)
+    val r = df.agg(count(lit(1)), bit_xor(xxhash64(df.columns.map(col): _*)))
+      .collect().head
+    (r.getLong(0), r.getLong(1))
+  }
+
+  /** Is `store`'s whole version-`v` tree (every width subtree) gone? */
+  private def versionGone(s: SparkSession, store: graft.sources.EpochStore,
+                          root: String, v: Int): Boolean = {
+    val p = new org.apache.hadoop.fs.Path(store.dir(root, v))
+    !p.getFileSystem(s.sparkContext.hadoopConfiguration).exists(p)
+  }
+
+  /** The blue/green spec ROLLOVER lifecycle (the C85 story on a stored-
+    * code store), shared by c117/c122/c126/c127. The caller has
+    * published spec v1 and landed `pin`'s v1 rows. Every `backfill`
+    * level's v2 rows then land in their own key space WHILE v1 serves
+    * (two epochs by `idCol` parity, epoch 1 replayed); the backfill must
+    * not move the pointer; the FLIP is the spec-v2 publish (a pointer
+    * commit, never an overwrite); a session pinned at v1 is byte-stable
+    * through it; replaying the first level's epoch 1 POST-flip is still
+    * a no-op (`what` names its rows); and the vacuum retires v1 whole.
+    */
+  private def rollover(s: SparkSession, root: String,
+                       store: graft.sources.EpochStore,
+                       pin: graft.sources.EpochStore,
+                       backfill: Seq[(graft.sources.EpochStore, DataFrame)],
+                       idCol: String, what: String)(flip: => Boolean): Unit = {
+    val pin1 = storeDigest(s, pin, root, 1)
+    val (head, headRows) = backfill.head
+    withPersisted(headRows) { rows =>
+      appendByParity(rows, idCol)(head.appendEpoch(_, root, 2, _))
+      backfill.tail.foreach { case (level, r) =>
+        withPersisted(r)(
+          appendByParity(_, idCol)(level.appendEpoch(_, root, 2, _)))
+      }
+      require(store.committedSpecVersion(s, root) == 1,
+        "a backfill must not move the committed pointer")
+      val pre = storeDigest(s, head, root, 2)
+      require(flip)
+      require(store.committedSpecVersion(s, root) == 2,
+        "the flip must land the committed pointer on v2")
+      require(storeDigest(s, pin, root, 1) == pin1,
+        "the pinned v1 key space moved across the flip")
+      head.appendEpoch(rows.where(pmod(col(idCol), lit(2)) === 1), root, 2,
+        1L)
+      require(storeDigest(s, head, root, 2) == pre,
+        s"post-flip epoch replay duplicated stored $what")
+      val rep = store.vacuumRetired(s, root, keepVersions = 1)
+      require(rep.committed == 2 && rep.removed == Seq(1) &&
+        rep.kept == Seq(2), s"vacuum accounting off: $rep")
+      require(versionGone(s, store, root, 1),
+        "retired key space must be gone whole (all width subtrees)")
+    }
+  }
+
+  /** The retired-version VACUUM lifecycle (the C86 rule on a stored-code
+    * store), shared by c110/c116/c120: `rows` land under v1, `publish`
+    * runs again as v2 (same parameters — the version is the key, not the
+    * content) and `rows` backfill v2; the vacuum then removes v1 and
+    * only v1, and a rerun is a no-op.
+    */
+  private def retireV1(s: SparkSession, root: String,
+                       store: graft.sources.EpochStore, rows: DataFrame)(
+                       publish: => Boolean): Unit = {
+    freshRoot(s, root)
+    withPersisted(rows) { r =>
+      require(publish)
+      store.appendEpoch(r, root, 1, 0L)
+      require(publish)
+      store.appendEpoch(r, root, 2, 0L)
+      val rep = store.vacuumRetired(s, root, keepVersions = 1)
+      require(rep.committed == 2 && rep.removed == Seq(1) &&
+        rep.kept == Seq(2), s"vacuum accounting off: $rep")
+      require(versionGone(s, store, root, 1), "retired key space must be gone")
+      // idempotent: a rerun finds nothing to remove
+      val again = store.vacuumRetired(s, root, 1)
+      require(again.removed.isEmpty && again.kept == Seq(2),
+        s"vacuum rerun must be a no-op: $again")
+    }
+  }
+
   /** Stage the single-file events table into a scratch DIRECTORY —
     * Spark's file streaming source requires a directory basePath. One
     * copy per (JVM, corpus); the copy is file-sized and untimed
@@ -518,10 +461,7 @@ object SparkEntry {
     new java.util.concurrent.ConcurrentHashMap[String, String]()
   private def stageEventsDir(s: SparkSession, dir: String): String =
     eventsStaged.computeIfAbsent(dir, { d =>
-      val stage = Tables.scratch("events_dir_" +
-        new java.io.File(d).getName + "_" +
-        java.lang.Integer.toHexString(
-          scala.util.hashing.MurmurHash3.stringHash(d)))
+      val stage = scratchRoot("events_dir", d)
       java.nio.file.Files.createDirectories(
         java.nio.file.Paths.get(stage))
       java.nio.file.Files.copy(
@@ -610,7 +550,7 @@ object SparkEntry {
     // image side: stored-code pairs over the shared link table
     val iroot = imageCodesRoot(s, dir)
     val ip = ImageDedup.perceptualPairs(
-        ImageCodeStore.readCodes(s, iroot,
+        ImageCodeStore.read(s, iroot,
           ImageCodeStore.committedSpecVersion(s, iroot)),
         maxHamming = 3, hotBucketCap = 64)
       .select("id_a", "id_b")
@@ -619,7 +559,7 @@ object SparkEntry {
     // audio side: stored landmarks, duration-blocked pairs (the c105
     // contract), cross-doc via the narration link
     val aroot = audioCodesRoot(s, dir)
-    val stored = AudioCodeStore.readCodes(s, aroot,
+    val stored = AudioCodeStore.read(s, aroot,
       AudioCodeStore.committedSpecVersion(s, aroot))
     val meta = stored.where(col("anchor") === -1)
       .select("media_id", "n_samples")
@@ -643,7 +583,7 @@ object SparkEntry {
         col("l_orderkey"), col("l_linenumber"),
         col("l_quantity").cast("int").as("qty"), col("l_returnflag"),
         date_format(col("l_shipdate"), "yyyy-MM-dd").as("ship"))
-      val path = Tables.scratch("a1_csv_" + new java.io.File(dir).getName)
+      val path = scratchRoot("a1_csv", dir)
       li.write.mode("overwrite")
         .options(Map("header" -> "true", "delimiter" -> "|")).csv(path)
       val schema = SchemaCsv.schemaFromJson(
@@ -735,7 +675,7 @@ object SparkEntry {
     }),
 
     "a10_partitioned_sink" -> ((s, dir) => {
-      val path = Tables.scratch("a10_sink_" + new java.io.File(dir).getName)
+      val path = scratchRoot("a10_sink", dir)
       SchemaCsv.writePartitioned(
         t(s, dir, "lineitem").select(col("l_orderkey"),
           col("l_quantity").cast("int").as("qty"), col("l_returnflag")),
@@ -757,7 +697,7 @@ object SparkEntry {
     // A12: partitioned sink → catalog registration (DROP + CREATE + MSCK)
     // → SQL over the registered table with a partition-pruned filter.
     "a12_catalog_table" -> ((s, dir) => {
-      val path = Tables.scratch("a12_catalog_" + new java.io.File(dir).getName)
+      val path = scratchRoot("a12_catalog", dir)
       SchemaCsv.writePartitioned(
         t(s, dir, "lineitem").select(col("l_orderkey"),
           col("l_quantity").cast("int").as("qty"), col("l_returnflag")),
@@ -1446,7 +1386,7 @@ object SparkEntry {
     "a19_jsonl_export" -> ((s, dir) => {
       val docs = t(s, dir, "documents")
         .select("doc_id", "lang", "text", "n_chars")
-      val base = Tables.scratch("a19_" + new java.io.File(dir).getName)
+      val base = scratchRoot("a19", dir)
       graft.operators.BalancedRepartition(docs, Seq("lang"), 1000L)
         .write.mode("overwrite").option("compression", "gzip")
         .partitionBy("lang").json(base)
@@ -1468,7 +1408,7 @@ object SparkEntry {
     // write-time file sizing.
     "a18_compaction" -> ((s, dir) => {
       val docs = t(s, dir, "documents")
-      val base = Tables.scratch("a18_" + new java.io.File(dir).getName)
+      val base = scratchRoot("a18", dir)
       docs.repartition(7).write.partitionBy("lang").mode("overwrite")
         .parquet(base)
       val r1 = graft.sources.Compaction.compactPartitioned(
@@ -1495,7 +1435,7 @@ object SparkEntry {
       val li = t(s, dir, "lineitem")
         .select(col("l_orderkey"), col("l_shipdate").cast("date").as("ship"),
           col("l_extendedprice"), col("l_discount"), col("l_quantity"))
-      val base = Tables.scratch("a22_" + new java.io.File(dir).getName)
+      val base = scratchRoot("a22", dir)
       li.repartitionByRange(8, col("ship")).sortWithinPartitions("ship")
         .write.mode("overwrite").parquet(base)
       val stats = graft.sources.DataSkipping.collectStats(s, base,
@@ -2506,12 +2446,9 @@ object SparkEntry {
     // finds nothing missing. The no-op path costs one FS listing + one
     // guarded distinct — no table scan.
     "a30_ingest_ledger" -> ((s, dir) => {
-      import org.apache.hadoop.fs.Path
       import graft.sources.IngestLedger
-      val path = Tables.scratch("a30_ledger_" + new java.io.File(dir).getName)
-      val fs = org.apache.hadoop.fs.FileSystem.get(new Path(path).toUri,
-        s.sparkContext.hadoopConfiguration)
-      fs.delete(new Path(path), true)
+      val path = scratchRoot("a30_ledger", dir)
+      freshRoot(s, path)
       val src = t(s, dir, "orders")
         .withColumn("yr", year(col("o_orderdate")))
       src.where(col("yr") <= 1997)
@@ -2535,7 +2472,7 @@ object SparkEntry {
     // rule), and the oracle recomputes every name/size/hash from the
     // documents table without touching the filesystem.
     "a34_binary_ingest" -> ((s, dir) => {
-      val path = Tables.scratch("a34_bin_" + new java.io.File(dir).getName)
+      val path = scratchRoot("a34_bin", dir)
       val d = new java.io.File(path)
       org.apache.commons.io.FileUtils.deleteQuietly(d)
       d.mkdirs()
@@ -2562,11 +2499,8 @@ object SparkEntry {
     // make a lost or resurrected row anywhere fatal.
     "a33_targeted_delete" -> ((s, dir) => {
       import graft.sources.TargetedDelete
-      import org.apache.hadoop.fs.Path
-      val path = Tables.scratch("a33_del_" + new java.io.File(dir).getName)
-      val fs = org.apache.hadoop.fs.FileSystem.get(new Path(path).toUri,
-        s.sparkContext.hadoopConfiguration)
-      fs.delete(new Path(path), true)
+      val path = scratchRoot("a33_del", dir)
+      freshRoot(s, path)
       val ord = t(s, dir, "orders")
       ord.repartitionByRange(8, col("o_orderkey"))
         .write.mode("overwrite").parquet(path)
@@ -2595,10 +2529,8 @@ object SparkEntry {
     "a36_deletion_vectors" -> ((s, dir) => {
       import graft.sources.DeletionVectors
       import org.apache.hadoop.fs.Path
-      val path = Tables.scratch("a36_dv_" + new java.io.File(dir).getName)
-      val fs = org.apache.hadoop.fs.FileSystem.get(new Path(path).toUri,
-        s.sparkContext.hadoopConfiguration)
-      fs.delete(new Path(path), true)
+      val path = scratchRoot("a36_dv", dir)
+      val fs = freshRoot(s, path)
       val ord = t(s, dir, "orders")
         .withColumn("okey", when(col("o_orderkey") % 97 === 0,
           lit(null).cast("long")).otherwise(col("o_orderkey")))
@@ -2699,12 +2631,9 @@ object SparkEntry {
     // source table — a file misattributed to any snapshot breaks one
     // version's row immediately.
     "a35_wap_time_travel" -> ((s, dir) => {
-      import org.apache.hadoop.fs.Path
       import graft.sources.Wap
-      val path = Tables.scratch("a35_tt_" + new java.io.File(dir).getName)
-      val fs = org.apache.hadoop.fs.FileSystem.get(new Path(path).toUri,
-        s.sparkContext.hadoopConfiguration)
-      fs.delete(new Path(path), true)
+      val path = scratchRoot("a35_tt", dir)
+      freshRoot(s, path)
       val cols = Seq("o_orderkey", "o_custkey", "o_totalprice",
         "o_orderstatus").map(col)
       val orders = t(s, dir, "orders")
@@ -2747,10 +2676,8 @@ object SparkEntry {
     "a39_snapshot_expire" -> ((s, dir) => {
       import graft.sources.{MultiPublish, Wap}
       import org.apache.hadoop.fs.Path
-      val root = Tables.scratch("a39_exp_" + new java.io.File(dir).getName)
-      val fs = org.apache.hadoop.fs.FileSystem.get(new Path(root).toUri,
-        s.sparkContext.hadoopConfiguration)
-      fs.delete(new Path(root), true)
+      val root = scratchRoot("a39_exp", dir)
+      val fs = freshRoot(s, root)
       val orders = t(s, dir, "orders")
       def snap(mod: Int) = orders.where(col("o_orderkey") % mod === 0)
         .groupBy("o_orderstatus")
@@ -2774,11 +2701,8 @@ object SparkEntry {
 
     "a37_multi_publish" -> ((s, dir) => {
       import graft.sources.{MultiPublish, Wap}
-      import org.apache.hadoop.fs.Path
-      val root = Tables.scratch("a37_multi_" + new java.io.File(dir).getName)
-      val fs = org.apache.hadoop.fs.FileSystem.get(new Path(root).toUri,
-        s.sparkContext.hadoopConfiguration)
-      fs.delete(new Path(root), true)
+      val root = scratchRoot("a37_multi", dir)
+      freshRoot(s, root)
       val orders = t(s, dir, "orders")
         .select("o_orderkey", "o_custkey", "o_totalprice")
       val cust = t(s, dir, "customer")
@@ -2813,10 +2737,8 @@ object SparkEntry {
     "a29_wap" -> ((s, dir) => {
       import org.apache.hadoop.fs.Path
       import graft.sources.Wap
-      val path = Tables.scratch("a29_wap_" + new java.io.File(dir).getName)
-      val fs = org.apache.hadoop.fs.FileSystem.get(new Path(path).toUri,
-        s.sparkContext.hadoopConfiguration)
-      fs.delete(new Path(path), true)
+      val path = scratchRoot("a29_wap", dir)
+      val fs = freshRoot(s, path)
       val cols = Seq("o_orderkey", "o_custkey", "o_totalprice",
         "o_orderstatus").map(col)
       val orders = t(s, dir, "orders")
@@ -5037,24 +4959,15 @@ object SparkEntry {
     // hash, so oracle-green IS the exactly-once proof.
     "c82_incremental_codes_serve" -> ((s, dir) => {
       import graft.sources.AnnIndexStore
-      import org.apache.hadoop.fs.Path
       val emb = t(s, dir, "embeddings")
-      val root = Tables.scratch("c82_codes_" + new java.io.File(dir).getName)
-      val fs = org.apache.hadoop.fs.FileSystem.get(new Path(root).toUri,
-        s.sparkContext.hadoopConfiguration)
-      fs.delete(new Path(root), true)
+      val root = scratchRoot("c82_codes", dir)
+      freshRoot(s, root)
       val (cells, pq) = Similarity.buildIvfpqIndex(
         emb, "vec_id", "embedding", nLists = 8, m = 8, kCodes = 16)
-      val ep0 = Similarity.encodeCodes(
-        emb.where(pmod(col("vec_id"), lit(2)) === 0),
-        "vec_id", "embedding", cells, pq)
-      val ep1 = Similarity.encodeCodes(
-        emb.where(pmod(col("vec_id"), lit(2)) === 1),
-        "vec_id", "embedding", cells, pq)
-      AnnIndexStore.appendCodesEpoch(ep0, root, 1, 0L)
-      AnnIndexStore.appendCodesEpoch(ep1, root, 1, 1L)
-      AnnIndexStore.appendCodesEpoch(ep1, root, 1, 1L) // replayed delivery
-      Similarity.ivfpqTopKFromCodes(AnnIndexStore.readCodes(s, root, 1),
+      appendByParity(Similarity.encodeCodes(emb, "vec_id", "embedding",
+        cells, pq), "neighbor_id")(
+        AnnIndexStore.Codes.appendEpoch(_, root, 1, _))
+      Similarity.ivfpqTopKFromCodes(AnnIndexStore.Codes.read(s, root, 1),
           emb.where(col("vec_id") < 5), "vec_id", "embedding",
           cells, pq, k = 6, nProbe = 8)
         .orderBy("query_id", "rnk")
@@ -5070,12 +4983,9 @@ object SparkEntry {
     // build — same exhaustive-probe brute-force ADC oracle.
     "c81_ann_index_serve" -> ((s, dir) => {
       import graft.sources.AnnIndexStore
-      import org.apache.hadoop.fs.Path
       val emb = t(s, dir, "embeddings")
-      val root = Tables.scratch("c81_ann_" + new java.io.File(dir).getName)
-      val fs = org.apache.hadoop.fs.FileSystem.get(new Path(root).toUri,
-        s.sparkContext.hadoopConfiguration)
-      fs.delete(new Path(root), true)
+      val root = scratchRoot("c81_ann", dir)
+      freshRoot(s, root)
       val (cells, pq) = Similarity.buildIvfpqIndex(
         emb, "vec_id", "embedding", nLists = 8, m = 8, kCodes = 16)
       val rep = AnnIndexStore.publish(s, root, cells, pq)
@@ -5090,7 +5000,7 @@ object SparkEntry {
     // VERSION, so a re-built index (new C81 publish with different
     // codebooks — kCodes 16 → 12) cannot silently invalidate the old
     // version's codes. The old version keeps serving its own
-    // (cells, codebooks, iv1-codes) triple via the loadAt/readCodes
+    // (cells, codebooks, iv1-codes) triple via the loadAt/Codes.read
     // pin while the new version backfills as ordinary epochs (one
     // replayed — the D8 rule holds per version key). Output = BOTH
     // pins' servings tagged by version; the oracle is the c28
@@ -5099,28 +5009,17 @@ object SparkEntry {
     // mix-up (codes decoded against the wrong codebooks) cannot.
     "c85_blue_green_codes" -> ((s, dir) => {
       import graft.sources.AnnIndexStore
-      import org.apache.hadoop.fs.Path
       val emb = t(s, dir, "embeddings")
-      val root = Tables.scratch("c85_bg_" + new java.io.File(dir).getName)
-      val fs = org.apache.hadoop.fs.FileSystem.get(new Path(root).toUri,
-        s.sparkContext.hadoopConfiguration)
-      fs.delete(new Path(root), true)
+      val root = scratchRoot("c85_bg", dir)
+      freshRoot(s, root)
       val queries = emb.where(col("vec_id") < 5)
+      // r18: persisted — the replayed epoch-1 append would otherwise
+      // re-run the PQ encode over the corpus a second time
       def ingest(cells: graft.operators.L2Cells,
-                 pq: graft.operators.PqIndex, iv: Int): Unit = {
-        val ep0 = Similarity.encodeCodes(
-          emb.where(pmod(col("vec_id"), lit(2)) === 0),
-          "vec_id", "embedding", cells, pq)
-        // r18: persisted — the replayed epoch-1 append would otherwise
-        // re-run the PQ encode over the corpus a second time
-        val ep1 = Similarity.encodeCodes(
-          emb.where(pmod(col("vec_id"), lit(2)) === 1),
-          "vec_id", "embedding", cells, pq).persist()
-        AnnIndexStore.appendCodesEpoch(ep0, root, iv, 0L)
-        AnnIndexStore.appendCodesEpoch(ep1, root, iv, 1L)
-        AnnIndexStore.appendCodesEpoch(ep1, root, iv, 1L) // replay
-        ep1.unpersist()
-      }
+                 pq: graft.operators.PqIndex, iv: Int): Unit =
+        withPersisted(Similarity.encodeCodes(emb, "vec_id", "embedding",
+          cells, pq))(appendByParity(_, "neighbor_id")(
+          AnnIndexStore.Codes.appendEpoch(_, root, iv, _)))
       // BLUE: v1 index published + codes ingested under iv1
       val (c1, p1) = Similarity.buildIvfpqIndex(
         emb, "vec_id", "embedding", nLists = 8, m = 8, kCodes = 16)
@@ -5140,7 +5039,7 @@ object SparkEntry {
       // serve BOTH pins — each from its own version triple
       def serve(iv: Int): DataFrame = {
         val (lc, lpq) = AnnIndexStore.loadAt(s, root, iv)
-        Similarity.ivfpqTopKFromCodes(AnnIndexStore.readCodes(s, root, iv),
+        Similarity.ivfpqTopKFromCodes(AnnIndexStore.Codes.read(s, root, iv),
           queries, "vec_id", "embedding", lc, lpq, k = 6, nProbe = 8)
           .withColumn("version", lit(iv))
       }
@@ -5150,7 +5049,7 @@ object SparkEntry {
 
     // C86 retired-version code vacuum: the C85 lifecycle completed —
     // after the rollover flips serving to v2, v1's corpus-sized codes
-    // are dead weight; vacuumRetiredCodes removes iv1 (and ONLY iv1:
+    // are dead weight; the codes vacuum removes iv1 (and ONLY iv1:
     // the committed pin and any in-flight newer backfill are refused),
     // then the committed version serves exactly as before. Oracle =
     // the v2 brute-force ADC replica — if the vacuum touched live
@@ -5159,23 +5058,14 @@ object SparkEntry {
     // space is gone before emitting rows.
     "c86_codes_vacuum" -> ((s, dir) => {
       import graft.sources.AnnIndexStore
-      import org.apache.hadoop.fs.Path
       val emb = t(s, dir, "embeddings")
-      val root = Tables.scratch("c86_vac_" + new java.io.File(dir).getName)
-      val fs = org.apache.hadoop.fs.FileSystem.get(new Path(root).toUri,
-        s.sparkContext.hadoopConfiguration)
-      fs.delete(new Path(root), true)
+      val root = scratchRoot("c86_vac", dir)
+      freshRoot(s, root)
       def ingest(cells: graft.operators.L2Cells,
-                 pq: graft.operators.PqIndex, iv: Int): Unit = {
-        val ep0 = Similarity.encodeCodes(
-          emb.where(pmod(col("vec_id"), lit(2)) === 0),
-          "vec_id", "embedding", cells, pq)
-        val ep1 = Similarity.encodeCodes(
-          emb.where(pmod(col("vec_id"), lit(2)) === 1),
-          "vec_id", "embedding", cells, pq)
-        AnnIndexStore.appendCodesEpoch(ep0, root, iv, 0L)
-        AnnIndexStore.appendCodesEpoch(ep1, root, iv, 1L)
-      }
+                 pq: graft.operators.PqIndex, iv: Int): Unit =
+        appendByParity(Similarity.encodeCodes(emb, "vec_id", "embedding",
+          cells, pq), "neighbor_id")(
+          AnnIndexStore.Codes.appendEpoch(_, root, iv, _))
       val (c1, p1) = Similarity.buildIvfpqIndex(
         emb, "vec_id", "embedding", nLists = 8, m = 8, kCodes = 16)
       require(AnnIndexStore.publish(s, root, c1, p1).committed)
@@ -5184,13 +5074,13 @@ object SparkEntry {
         emb, "vec_id", "embedding", nLists = 8, m = 8, kCodes = 12)
       require(AnnIndexStore.publish(s, root, c2, p2).committed)
       ingest(c2, p2, 2)
-      val rep = AnnIndexStore.vacuumRetiredCodes(s, root, keepVersions = 1)
+      val rep = AnnIndexStore.Codes.vacuumRetired(s, root, keepVersions = 1)
       require(rep.committed == 2 && rep.removed == Seq(1) &&
         rep.kept == Seq(2), s"vacuum accounting off: $rep")
-      require(!fs.exists(new Path(s"$root/${AnnIndexStore.CodesTable}/iv1")),
+      require(versionGone(s, AnnIndexStore.Codes, root, 1),
         "retired key space must be gone")
       val (lc2, lp2) = AnnIndexStore.loadAt(s, root, 2)
-      Similarity.ivfpqTopKFromCodes(AnnIndexStore.readCodes(s, root, 2),
+      Similarity.ivfpqTopKFromCodes(AnnIndexStore.Codes.read(s, root, 2),
           emb.where(col("vec_id") < 5), "vec_id", "embedding",
           lc2, lp2, k = 6, nProbe = 8)
         .withColumn("version", lit(2))
@@ -5226,15 +5116,12 @@ object SparkEntry {
     // spec-locked.
     "c90_filtered_ann_serve" -> ((s, dir) => {
       import graft.sources.AnnIndexStore
-      import org.apache.hadoop.fs.Path
       val emb = t(s, dir, "embeddings")
-      val root = Tables.scratch("c90_filt_" + new java.io.File(dir).getName)
-      val fs = org.apache.hadoop.fs.FileSystem.get(new Path(root).toUri,
-        s.sparkContext.hadoopConfiguration)
-      fs.delete(new Path(root), true)
+      val root = scratchRoot("c90_filt", dir)
+      freshRoot(s, root)
       val (cells, pq) = Similarity.buildIvfpqIndex(
         emb, "vec_id", "embedding", nLists = 8, m = 8, kCodes = 16)
-      AnnIndexStore.appendCodesEpoch(
+      AnnIndexStore.Codes.appendEpoch(
         Similarity.encodeCodes(emb, "vec_id", "embedding", cells, pq,
           attrCols = Seq("label")),
         root, 1, 0L)
@@ -5257,15 +5144,12 @@ object SparkEntry {
     // the tombstoned candidates.
     "c91_tombstone_ann_serve" -> ((s, dir) => {
       import graft.sources.{AnnIndexStore, DeletionVectors}
-      import org.apache.hadoop.fs.Path
       val emb = t(s, dir, "embeddings")
-      val root = Tables.scratch("c91_tomb_" + new java.io.File(dir).getName)
-      val fs = org.apache.hadoop.fs.FileSystem.get(new Path(root).toUri,
-        s.sparkContext.hadoopConfiguration)
-      fs.delete(new Path(root), true)
+      val root = scratchRoot("c91_tomb", dir)
+      freshRoot(s, root)
       val (cells, pq) = Similarity.buildIvfpqIndex(
         emb, "vec_id", "embedding", nLists = 8, m = 8, kCodes = 16)
-      AnnIndexStore.appendCodesEpoch(
+      AnnIndexStore.Codes.appendEpoch(
         Similarity.encodeCodes(emb, "vec_id", "embedding", cells, pq),
         root, 1, 0L)
       val rep = DeletionVectors.markDeleted(s,
@@ -5416,13 +5300,10 @@ object SparkEntry {
     "c95_versioned_model" -> ((s, dir) => {
       import graft.operators.ClassifierTrain
       import graft.sources.ModelStore
-      import org.apache.hadoop.fs.Path
       val docs = t(s, dir, "documents")
       val classes = Seq("de", "en", "es")
-      val root = Tables.scratch("c95_model_" + new java.io.File(dir).getName)
-      val fs = org.apache.hadoop.fs.FileSystem.get(new Path(root).toUri,
-        s.sparkContext.hadoopConfiguration)
-      fs.delete(new Path(root), true)
+      val root = scratchRoot("c95_model", dir)
+      freshRoot(s, root)
       val feats = ClassifierTrain.featurizeMulti(
         docs, "text", "doc_id", "lang", 128, 2).persist()
       try {
@@ -5482,14 +5363,9 @@ object SparkEntry {
     "c96_versioned_tokenizer" -> ((s, dir) => {
       import graft.operators.BpeTrain
       import graft.sources.TokenizerStore
-      import org.apache.hadoop.fs.Path
       val docs = t(s, dir, "documents")
-      val root = Tables.scratch("c96_tok_" + new java.io.File(dir).getName +
-        "_" + java.lang.Integer.toHexString(
-          scala.util.hashing.MurmurHash3.stringHash(dir)))
-      val fs = org.apache.hadoop.fs.FileSystem.get(new Path(root).toUri,
-        s.sparkContext.hadoopConfiguration)
-      fs.delete(new Path(root), true)
+      val root = scratchRoot("c96_tok", dir)
+      freshRoot(s, root)
       val merges = BpeTrain.train(docs, "text", numMerges = 24)
       val rep1 = TokenizerStore.publishTokenizer(s, root, merges.take(12),
         trainedAtEpoch = 12L)
@@ -5547,15 +5423,10 @@ object SparkEntry {
       import graft.operators.ClassifierTrain
       import graft.sources.ModelStore
       import graft.streaming.ModelRolloverStream
-      import org.apache.hadoop.fs.Path
       val docs = t(s, dir, "documents")
       val classes = Seq("de", "en", "es")
-      val root = Tables.scratch("d39_roll_" + new java.io.File(dir).getName +
-        "_" + java.lang.Integer.toHexString(
-          scala.util.hashing.MurmurHash3.stringHash(dir)))
-      val fs = org.apache.hadoop.fs.FileSystem.get(new Path(root).toUri,
-        s.sparkContext.hadoopConfiguration)
-      fs.delete(new Path(root), true)
+      val root = scratchRoot("d39_roll", dir)
+      freshRoot(s, root)
       val st = new ClassifierTrain.OnlineMulticlassState(classes, 128, 64L)
       (0 to 1).foreach { e =>
         val rep = ModelRolloverStream.foldAndPublish(st, classes,
@@ -5631,7 +5502,7 @@ object SparkEntry {
       // in-query decode and stays the measure of what the store saves.
       val root = imageCodesRoot(s, dir)
       val v = ImageCodeStore.committedSpecVersion(s, root)
-      val codes = ImageCodeStore.readCodes(s, root, v)
+      val codes = ImageCodeStore.read(s, root, v)
       // localCheckpoint BEFORE the propagation loop: each CC round
       // re-nests its input plan, and the pair plan here is deep
       // (band explode + self-join over the stored scan) — without
@@ -5995,7 +5866,7 @@ object SparkEntry {
       val root = spanDigestsRoot(s, dir)
       val v = SpanStore.committedSpecVersion(s, root)
       Dedup.stripDuplicatedExtentsFromDigests(spanDupCorpus(s, dir),
-          "text", "doc_id", SpanStore.readDigests(s, root, v, 16), w = 16)
+          "text", "doc_id", SpanStore.level(16).read(s, root, v), w = 16)
         .where(col("n_tokens") + col("kept_tokens") >= 0)
         .orderBy("id")
     }),
@@ -6014,7 +5885,7 @@ object SparkEntry {
       val root = spanDigestsRoot(s, dir)
       val v = SpanStore.committedSpecVersion(s, root)
       Dedup.canonicalStripExtentsFromDigests(spanDupCorpus(s, dir),
-          "text", "doc_id", SpanStore.readDigests(s, root, v, 16), w = 16)
+          "text", "doc_id", SpanStore.level(16).read(s, root, v), w = 16)
         .where(col("n_tokens") + col("kept_tokens") >= 0)
         .orderBy("id")
     }),
@@ -6034,7 +5905,7 @@ object SparkEntry {
       val root = spanQualityDigestsRoot(s, dir)
       val v = SpanStore.committedSpecVersion(s, root)
       Dedup.canonicalStripExtentsFromDigests(spanQualityCorpus(s, dir),
-          "text", "doc_id", SpanStore.readDigests(s, root, v, 16), w = 16,
+          "text", "doc_id", SpanStore.level(16).read(s, root, v), w = 16,
           quality = Some(TextFunctions.qualityScore(col("text"))))
         .where(col("n_tokens") + col("kept_tokens") >= 0)
         .orderBy("id")
@@ -6134,7 +6005,7 @@ object SparkEntry {
       import graft.sources.ImageCodeStore
       val root = imageCodesRoot(s, dir)
       val v = ImageCodeStore.committedSpecVersion(s, root)
-      val stored = ImageCodeStore.readCodes(s, root, v)
+      val stored = ImageCodeStore.read(s, root, v)
       // replay visibility: perceptualPairs' groupBy(id_a,id_b) would
       // collapse duplicated code rows, so exactly-once is gated here —
       // one stored row per media id, loudly
@@ -6236,14 +6107,9 @@ object SparkEntry {
       import graft.operators.BpeTrain
       import graft.sources.TokenizerStore
       import graft.streaming.TokenizerRolloverStream
-      import org.apache.hadoop.fs.Path
       val docs = t(s, dir, "documents")
-      val root = Tables.scratch("d40_tok_" + new java.io.File(dir).getName +
-        "_" + java.lang.Integer.toHexString(
-          scala.util.hashing.MurmurHash3.stringHash(dir)))
-      val fs = org.apache.hadoop.fs.FileSystem.get(new Path(root).toUri,
-        s.sparkContext.hadoopConfiguration)
-      fs.delete(new Path(root), true)
+      val root = scratchRoot("d40_tok", dir)
+      freshRoot(s, root)
       val st = new TokenizerRolloverStream.TokenizerTrainState(
         docs, "text", depthPerEpoch = 12)
       (0 to 1).foreach { e =>
@@ -6368,7 +6234,7 @@ object SparkEntry {
       import graft.sources.ImageCodeStore
       val root = imageCodesRoot(s, dir)
       val v = ImageCodeStore.committedSpecVersion(s, root)
-      val refCodes = ImageCodeStore.readCodes(s, root, v)
+      val refCodes = ImageCodeStore.read(s, root, v)
         .where(col("media_id") < 2000000L)
       val packed = ImageDedup.packImageVariants(s,
           t(s, dir, "documents"), "doc_id")
@@ -6391,7 +6257,7 @@ object SparkEntry {
       import graft.sources.AudioCodeStore
       val root = audioCodesRoot(s, dir)
       val v = AudioCodeStore.committedSpecVersion(s, root)
-      val stored = AudioCodeStore.readCodes(s, root, v)
+      val stored = AudioCodeStore.read(s, root, v)
       val refCodes = stored.where(col("media_id") < 3000000L)
       val docs = t(s, dir, "documents").select("doc_id")
         .where(col("doc_id") % 4 === 0)
@@ -6427,61 +6293,26 @@ object SparkEntry {
     "c126_text_sig_rollover" -> ((s, dir) => {
       import graft.operators.Dedup
       import graft.sources.TextSigStore
-      import org.apache.hadoop.fs.Path
-      val root = Tables.scratch("c126_roll_" + new java.io.File(dir).getName +
-        "_" + java.lang.Integer.toHexString(
-          scala.util.hashing.MurmurHash3.stringHash(dir)))
+      val root = scratchRoot("c126_roll", dir)
       val corpus = textSigCorpus(s, dir)
       lifecycleOncePerBenchJvm(s"c126:$dir") {
-        val fs = org.apache.hadoop.fs.FileSystem.get(new Path(root).toUri,
-          s.sparkContext.hadoopConfiguration)
-        fs.delete(new Path(root), true)
+        freshRoot(s, root)
         // blue: spec v1 = k 32, bands 8 — signed under the LOADED spec
         require(TextSigStore.publishSpec(s, root, "minhash", k = 32,
           bands = 8, shingleW = 3).committed)
         val (_, k1, _, _) = TextSigStore.loadSpecAt(s, root, 1)
-        TextSigStore.appendSigsEpoch(
+        TextSigStore.appendEpoch(
           Dedup.minhashSigRows(corpus, "text", "doc_id", k = k1),
           root, 1, 0L)
-        def digest(v: Int): (Long, Long) = {
-          val r = TextSigStore.readSigs(s, root, v)
-            .agg(count(lit(1)).as("n"),
-              bit_xor(xxhash64(col("doc_id"), col("sig"))).as("x"))
-            .collect().head
-          (r.getLong(0), r.getLong(1))
-        }
-        val pin1 = digest(1)
-        // green backfill: k=64 signatures land in sv2 WHILE v1 serves
-        val sigs64 = Dedup.minhashSigRows(corpus, "text", "doc_id", k = 64)
-          .persist()
-        try {
-          TextSigStore.appendSigsEpoch(
-            sigs64.where(pmod(col("doc_id"), lit(2)) === 0), root, 2, 0L)
-          TextSigStore.appendSigsEpoch(
-            sigs64.where(pmod(col("doc_id"), lit(2)) === 1), root, 2, 1L)
-          TextSigStore.appendSigsEpoch(
-            sigs64.where(pmod(col("doc_id"), lit(2)) === 1), root, 2, 1L)
-          require(TextSigStore.committedSpecVersion(s, root) == 1,
-            "a backfill must not move the committed pointer")
-          val pre = digest(2)
-          // the FLIP: publish spec v2 (k 64, bands 16) — a pointer commit
-          require(TextSigStore.publishSpec(s, root, "minhash", 64, 16, 3)
-            .committed)
-          require(TextSigStore.committedSpecVersion(s, root) == 2,
-            "the flip must land the committed pointer on v2")
-          require(digest(1) == pin1,
-            "the pinned v1 key space moved across the flip")
-          TextSigStore.appendSigsEpoch(
-            sigs64.where(pmod(col("doc_id"), lit(2)) === 1), root, 2, 1L)
-          require(digest(2) == pre,
-            "post-flip epoch replay duplicated stored signatures")
-          val rep = TextSigStore.vacuumRetiredSigs(s, root, keepVersions = 1)
-          require(rep.committed == 2 && rep.removed == Seq(1) &&
-            rep.kept == Seq(2), s"vacuum accounting off: $rep")
-        } finally { sigs64.unpersist(); () }
+        // green: k=64 signatures backfill sv2; the FLIP publishes spec
+        // v2 (k 64, bands 16)
+        rollover(s, root, TextSigStore, TextSigStore, Seq(TextSigStore ->
+            Dedup.minhashSigRows(corpus, "text", "doc_id", k = 64)),
+          "doc_id", "signatures")(
+          TextSigStore.publishSpec(s, root, "minhash", 64, 16, 3).committed)
       }
       Dedup.minhashPairsFromSigs(
-          requireOneSigPerDoc(TextSigStore.readSigs(s, root, 2)),
+          requireOneSigPerDoc(TextSigStore.read(s, root, 2)),
           corpus, "text", "doc_id", k = 64, bands = 16)
         .where(col("id_b") - col("id_a") === 1000000L)
         .orderBy("id_a", "id_b")
@@ -6498,66 +6329,27 @@ object SparkEntry {
     "c127_span_spec_rollover" -> ((s, dir) => {
       import graft.operators.Dedup
       import graft.sources.SpanStore
-      import org.apache.hadoop.fs.Path
-      val root = Tables.scratch("c127_roll_" + new java.io.File(dir).getName +
-        "_" + java.lang.Integer.toHexString(
-          scala.util.hashing.MurmurHash3.stringHash(dir)))
+      val root = scratchRoot("c127_roll", dir)
       lifecycleOncePerBenchJvm(s"c127:$dir") {
-        val fs = org.apache.hadoop.fs.FileSystem.get(new Path(root).toUri,
-          s.sparkContext.hadoopConfiguration)
-        fs.delete(new Path(root), true)
+        freshRoot(s, root)
         val corpus = spanDupCorpus(s, dir)
         require(SpanStore.publishSpec(s, root, "span_md5", Seq(16))
           .committed)
-        SpanStore.appendDigestsEpoch(
-          Dedup.spanDigestRows(corpus, "text", "doc_id", 16), root, 1, 16, 0L)
-        def digest(v: Int, w: Int): (Long, Long) = {
-          val r = SpanStore.readDigests(s, root, v, w)
-            .agg(count(lit(1)).as("n"),
-              bit_xor(xxhash64(col("id"), col("pos"), col("h"))).as("x"))
-            .collect().head
-          (r.getLong(0), r.getLong(1))
-        }
-        val pin1 = digest(1, 16)
+        SpanStore.level(16).appendEpoch(
+          Dedup.spanDigestRows(corpus, "text", "doc_id", 16), root, 1, 0L)
+        // green: the full ladder backfills pv2 level by level; the FLIP
+        // publishes spec v2 (the full ladder)
         val widths2 = Seq(8, 16, 32)
-        widths2.foreach { w =>
-          val rows = Dedup.spanDigestRows(corpus, "text", "doc_id", w)
-            .persist()
-          try {
-            SpanStore.appendDigestsEpoch(
-              rows.where(pmod(col("id"), lit(2)) === 0), root, 2, w, 0L)
-            SpanStore.appendDigestsEpoch(
-              rows.where(pmod(col("id"), lit(2)) === 1), root, 2, w, 1L)
-            SpanStore.appendDigestsEpoch(
-              rows.where(pmod(col("id"), lit(2)) === 1), root, 2, w, 1L)
-          } finally { rows.unpersist(); () }
-        }
-        require(SpanStore.committedSpecVersion(s, root) == 1,
-          "a backfill must not move the committed pointer")
-        val pre = digest(2, 8)
-        // the FLIP: publish spec v2 (the full ladder) — a pointer commit
-        require(SpanStore.publishSpec(s, root, "span_md5", widths2)
-          .committed)
-        require(SpanStore.committedSpecVersion(s, root) == 2,
-          "the flip must land the committed pointer on v2")
-        require(digest(1, 16) == pin1,
-          "the pinned v1 key space moved across the flip")
-        SpanStore.appendDigestsEpoch(
-          Dedup.spanDigestRows(corpus, "text", "doc_id", 8)
-            .where(pmod(col("id"), lit(2)) === 1), root, 2, 8, 1L)
-        require(digest(2, 8) == pre,
-          "post-flip epoch replay duplicated stored digests")
-        val rep = SpanStore.vacuumRetiredDigests(s, root, keepVersions = 1)
-        require(rep.committed == 2 && rep.removed == Seq(1) &&
-          rep.kept == Seq(2), s"vacuum accounting off: $rep")
-        require(!fs.exists(new Path(
-          s"$root/${SpanStore.DigestsTable}/pv1")),
-          "retired key space must be gone whole (all width subtrees)")
+        rollover(s, root, SpanStore, SpanStore.level(16),
+          widths2.map(w => SpanStore.level(w) ->
+            Dedup.spanDigestRows(corpus, "text", "doc_id", w)),
+          "id", "digests")(
+          SpanStore.publishSpec(s, root, "span_md5", widths2).committed)
       }
       val (_, widths) = SpanStore.loadSpecAt(s, root, 2)
       widths.map { w =>
         Dedup.duplicatedSpansFromDigests(
-            SpanStore.readDigests(s, root, 2, w))
+            SpanStore.level(w).read(s, root, 2))
           .select(col("id"), lit(w).as("w"),
             col("n_spans"), col("n_dup_spans"))
       }.reduce(_ unionByName _).orderBy("id", "w")
@@ -6585,7 +6377,7 @@ object SparkEntry {
       val (_, widths) = SpanStore.loadSpecAt(s, root, v)
       widths.map { w =>
         Dedup.duplicatedSpansFromDigests(
-            SpanStore.readDigests(s, root, v, w))
+            SpanStore.level(w).read(s, root, v))
           .select(col("id"), lit(w).as("w"),
             col("n_spans"), col("n_dup_spans"))
       }.reduce(_ unionByName _).orderBy("id", "w")
@@ -6642,7 +6434,7 @@ object SparkEntry {
       val (_, widths) = SpanStore.loadSpecAt(s, root, v)
       widths.map { w =>
         Dedup.spanExtentsFromDigests(
-          SpanStore.readDigests(s, root, v, w), w)
+          SpanStore.level(w).read(s, root, v), w)
       }.reduce(_ unionByName _).orderBy("id", "w", "start_tok")
     }),
 
@@ -6669,11 +6461,7 @@ object SparkEntry {
           (col("tk") + 300L).as("tk")))
       val assigned = Chunking.lptShards(corpus, "doc_id", "tk", "source",
         nBands = 4, shards = 3)
-      // full-path hash in the scratch name (the langidModelRoot rule):
-      // two dirs sharing a basename must not share an export directory
-      val path = Tables.scratch("c131_exp_" + new java.io.File(dir).getName +
-        "_" + java.lang.Integer.toHexString(
-          scala.util.hashing.MurmurHash3.stringHash(dir)))
+      val path = scratchRoot("c131_exp", dir)
       // co-locate each shard before the write: one task owns one
       // (source, band, shard) → one JSONL file per shard directory
       assigned.repartition(col("source"), col("band"), col("shard"))
@@ -6727,10 +6515,7 @@ object SparkEntry {
           (col("tk") + 300L).as("tk")))
       val assigned = Chunking.packWholeDocsBounded(corpus, "doc_id",
         "tk", "source", nBands = 4, budget = 256L, openBins = 3)
-      // full-path hash in the scratch name (the langidModelRoot rule)
-      val path = Tables.scratch("c134_exp_" + new java.io.File(dir).getName +
-        "_" + java.lang.Integer.toHexString(
-          scala.util.hashing.MurmurHash3.stringHash(dir)))
+      val path = scratchRoot("c134_exp", dir)
       // co-locate each (source, band) before the write — one task owns
       // one directory, bins contiguous within the file
       assigned.repartition(col("source"), col("band"))
@@ -6777,7 +6562,6 @@ object SparkEntry {
     "c107_cross_version_gate" -> ((s, dir) => {
       import graft.functions.GraftExpressions._
       import graft.sources.AnnIndexStore
-      import org.apache.hadoop.fs.Path
       val G = graft.functions.GraftExpressions
       val signs = jlSigns(16, 64)
       val emb = t(s, dir, "embeddings")
@@ -6803,25 +6587,20 @@ object SparkEntry {
           .select(col("vec_id"),
             jlProject(col("embedding"), signs).as("code")))
       scenarios.map { case (name, arrCoded) =>
-        val root = Tables.scratch(s"c107_${name}_" +
-          new java.io.File(dir).getName + "_" +
-          java.lang.Integer.toHexString(
-            scala.util.hashing.MurmurHash3.stringHash(dir)))
-        val fs = org.apache.hadoop.fs.FileSystem.get(new Path(root).toUri,
-          s.sparkContext.hadoopConfiguration)
-        fs.delete(new Path(root), true)
-        AnnIndexStore.appendCodesEpoch(codesOf(refCoded, cents1), root, 1, 0L)
-        AnnIndexStore.appendCodesEpoch(codesOf(arrCoded, cents1), root, 1, 1L)
+        val root = scratchRoot(s"c107_$name", dir)
+        freshRoot(s, root)
+        AnnIndexStore.Codes.appendEpoch(codesOf(refCoded, cents1), root, 1, 0L)
+        AnnIndexStore.Codes.appendEpoch(codesOf(arrCoded, cents1), root, 1, 1L)
         // at-least-once delivery: epoch 1 redelivered (the D8 rule —
         // a duplicated arrival would double the epoch-1 histogram and
         // break the oracle, so replay safety is oracle-gated here)
-        AnnIndexStore.appendCodesEpoch(codesOf(arrCoded, cents1), root, 1, 1L)
+        AnnIndexStore.Codes.appendEpoch(codesOf(arrCoded, cents1), root, 1, 1L)
         // the v2 rebuild: the SAME centroid rule re-applied to the T2
         // corpus, stored under its own version key (the C85 contract)
         val t2 = refCoded.unionByName(arrCoded)
         val cents2: Array[Array[Long]] = t2.where(col("vec_id") < 32)
           .orderBy("vec_id").collect().map(_.getSeq[Long](1).toArray)
-        AnnIndexStore.appendCodesEpoch(codesOf(t2, cents2), root, 2, 0L)
+        AnnIndexStore.Codes.appendEpoch(codesOf(t2, cents2), root, 2, 0L)
         // ---- the gate: stored codes only, no floats, no re-encode ----
         import s.implicits._
         val iv1 = s.read
@@ -7063,7 +6842,7 @@ object SparkEntry {
       import graft.operators.ImageDedup
       import graft.sources.ImageCodeStore
       val root = imageCodesRoot(s, dir)
-      val stored = ImageCodeStore.readCodes(s, root,
+      val stored = ImageCodeStore.read(s, root,
         ImageCodeStore.committedSpecVersion(s, root))
       ImageDedup.bandingCurve(stored, Seq(2, 4, 8), maxHamming = 3,
         hotBucketCap = 64)
@@ -7080,40 +6859,15 @@ object SparkEntry {
     "c110_image_codes_vacuum" -> ((s, dir) => {
       import graft.operators.ImageDedup
       import graft.sources.ImageCodeStore
-      import org.apache.hadoop.fs.Path
-      val root = Tables.scratch("c110_vac_" + new java.io.File(dir).getName +
-        "_" + java.lang.Integer.toHexString(
-          scala.util.hashing.MurmurHash3.stringHash(dir)))
-      val fs = org.apache.hadoop.fs.FileSystem.get(new Path(root).toUri,
-        s.sparkContext.hadoopConfiguration)
-      fs.delete(new Path(root), true)
+      val root = scratchRoot("c110_vac", dir)
       val packed = ImageDedup.packImageVariants(s,
         t(s, dir, "documents"), "doc_id")
-      val codes = ImageDedup.blockhashCodes(s, packed).persist()
-      try {
-        require(ImageCodeStore.publishSpec(s, root, "blockhash", 8, 4)
-          .committed)
-        ImageCodeStore.appendCodesEpoch(codes, root, 1, 0L)
-        // the rollover: v2 re-published (same parameters — the version
-        // is the key, not the content), iv2 backfilled
-        require(ImageCodeStore.publishSpec(s, root, "blockhash", 8, 4)
-          .committed)
-        ImageCodeStore.appendCodesEpoch(codes, root, 2, 0L)
-        val rep = ImageCodeStore.vacuumRetiredCodes(s, root,
-          keepVersions = 1)
-        require(rep.committed == 2 && rep.removed == Seq(1) &&
-          rep.kept == Seq(2), s"vacuum accounting off: $rep")
-        require(!fs.exists(new Path(
-          s"$root/${ImageCodeStore.CodesTable}/iv1")),
-          "retired key space must be gone")
-        // idempotent: a rerun finds nothing to remove
-        val again = ImageCodeStore.vacuumRetiredCodes(s, root, 1)
-        require(again.removed.isEmpty && again.kept == Seq(2),
-          s"vacuum rerun must be a no-op: $again")
-        ImageDedup.perceptualPairs(ImageCodeStore.readCodes(s, root, 2),
-            maxHamming = 3, hotBucketCap = 64)
-          .orderBy("id_a", "id_b")
-      } finally { codes.unpersist(); () }
+      retireV1(s, root, ImageCodeStore,
+          ImageDedup.blockhashCodes(s, packed))(
+        ImageCodeStore.publishSpec(s, root, "blockhash", 8, 4).committed)
+      ImageDedup.perceptualPairs(ImageCodeStore.read(s, root, 2),
+          maxHamming = 3, hotBucketCap = 64)
+        .orderBy("id_a", "id_b")
     }),
 
     // C115 audio fingerprint-code STORE serving — the r14 verdict's
@@ -7134,7 +6888,7 @@ object SparkEntry {
       import graft.sources.AudioCodeStore
       val root = audioCodesRoot(s, dir)
       val v = AudioCodeStore.committedSpecVersion(s, root)
-      audioClustersFromStored(s, AudioCodeStore.readCodes(s, root, v))
+      audioClustersFromStored(s, AudioCodeStore.read(s, root, v))
     }),
 
     // C116 retired audio-code vacuum — the C110 lifecycle rule on the
@@ -7148,37 +6902,12 @@ object SparkEntry {
     "c116_audio_codes_vacuum" -> ((s, dir) => {
       import graft.operators.Audio
       import graft.sources.AudioCodeStore
-      import org.apache.hadoop.fs.Path
-      val root = Tables.scratch("c116_vac_" + new java.io.File(dir).getName +
-        "_" + java.lang.Integer.toHexString(
-          scala.util.hashing.MurmurHash3.stringHash(dir)))
-      val fs = org.apache.hadoop.fs.FileSystem.get(new Path(root).toUri,
-        s.sparkContext.hadoopConfiguration)
-      fs.delete(new Path(root), true)
-      val rows = Audio.chainedLandmarkRows(s, audioDupCorpus(s, dir))
-        .persist()
-      try {
-        require(AudioCodeStore.publishSpec(s, root, "chained_landmark",
-          128).committed)
-        AudioCodeStore.appendCodesEpoch(rows, root, 1, 0L)
-        // the rollover: v2 re-published (same parameters — the version
-        // is the key, not the content), av2 backfilled
-        require(AudioCodeStore.publishSpec(s, root, "chained_landmark",
-          128).committed)
-        AudioCodeStore.appendCodesEpoch(rows, root, 2, 0L)
-        val rep = AudioCodeStore.vacuumRetiredCodes(s, root,
-          keepVersions = 1)
-        require(rep.committed == 2 && rep.removed == Seq(1) &&
-          rep.kept == Seq(2), s"vacuum accounting off: $rep")
-        require(!fs.exists(new Path(
-          s"$root/${AudioCodeStore.CodesTable}/av1")),
-          "retired key space must be gone")
-        // idempotent: a rerun finds nothing to remove
-        val again = AudioCodeStore.vacuumRetiredCodes(s, root, 1)
-        require(again.removed.isEmpty && again.kept == Seq(2),
-          s"vacuum rerun must be a no-op: $again")
-        audioClustersFromStored(s, AudioCodeStore.readCodes(s, root, 2))
-      } finally { rows.unpersist(); () }
+      val root = scratchRoot("c116_vac", dir)
+      retireV1(s, root, AudioCodeStore,
+          Audio.chainedLandmarkRows(s, audioDupCorpus(s, dir)))(
+        AudioCodeStore.publishSpec(s, root, "chained_landmark", 128)
+          .committed)
+      audioClustersFromStored(s, AudioCodeStore.read(s, root, 2))
     }),
 
     // C122 audio-code SPEC ROLLOVER across a REAL frame change — the
@@ -7199,65 +6928,26 @@ object SparkEntry {
     "c122_audio_spec_rollover" -> ((s, dir) => {
       import graft.operators.Audio
       import graft.sources.AudioCodeStore
-      import org.apache.hadoop.fs.Path
-      val root = Tables.scratch("c122_roll_" + new java.io.File(dir).getName +
-        "_" + java.lang.Integer.toHexString(
-          scala.util.hashing.MurmurHash3.stringHash(dir)))
+      val root = scratchRoot("c122_roll", dir)
       lifecycleOncePerBenchJvm(s"c122:$dir") {
-        val fs = org.apache.hadoop.fs.FileSystem.get(new Path(root).toUri,
-          s.sparkContext.hadoopConfiguration)
-        fs.delete(new Path(root), true)
+        freshRoot(s, root)
         val packed = audioDupCorpus(s, dir)
         // blue: spec v1 = frame 64 — the ENCODE is driven by the loaded
         // spec, not a constant, so the rollover is a real re-encode
         require(AudioCodeStore.publishSpec(s, root, "chained_landmark",
           frame = 64).committed)
         val (_, f1) = AudioCodeStore.loadSpecAt(s, root, 1)
-        AudioCodeStore.appendCodesEpoch(
+        AudioCodeStore.appendEpoch(
           Audio.chainedLandmarkRows(s, packed, frame = f1), root, 1, 0L)
-        def digest(v: Int): (Long, Long) = {
-          val r = AudioCodeStore.readCodes(s, root, v)
-            .agg(count(lit(1)).as("n"), bit_xor(xxhash64(col("media_id"),
-              col("n_samples"), col("anchor"), col("line_a"),
-              col("line_t"))).as("x")).collect().head
-          (r.getLong(0), r.getLong(1))
-        }
-        val pin1 = digest(1)
-        // green backfill: frame-128 landmarks land in av2 WHILE v1
-        // serves (two epochs by parity; epoch 1 replayed pre-flip)
-        val rows128 = Audio.chainedLandmarkRows(s, packed, frame = 128)
-          .persist()
-        try {
-          AudioCodeStore.appendCodesEpoch(
-            rows128.where(pmod(col("media_id"), lit(2)) === 0), root, 2, 0L)
-          AudioCodeStore.appendCodesEpoch(
-            rows128.where(pmod(col("media_id"), lit(2)) === 1), root, 2, 1L)
-          AudioCodeStore.appendCodesEpoch(
-            rows128.where(pmod(col("media_id"), lit(2)) === 1), root, 2, 1L)
-          require(AudioCodeStore.committedSpecVersion(s, root) == 1,
-            "a backfill must not move the committed pointer")
-          val pre = digest(2)
-          // the FLIP: publish spec v2 (frame 128) — a pointer commit
-          require(AudioCodeStore.publishSpec(s, root, "chained_landmark",
+        // green: frame-128 landmarks backfill av2; the FLIP publishes
+        // spec v2 (frame 128)
+        rollover(s, root, AudioCodeStore, AudioCodeStore, Seq(
+            AudioCodeStore -> Audio.chainedLandmarkRows(s, packed, frame = 128)),
+          "media_id", "landmarks")(
+          AudioCodeStore.publishSpec(s, root, "chained_landmark",
             frame = 128).committed)
-          require(AudioCodeStore.committedSpecVersion(s, root) == 2,
-            "the flip must land the committed pointer on v2")
-          // a session pinned at v1 is byte-stable through the flip
-          require(digest(1) == pin1,
-            "the pinned v1 key space moved across the flip")
-          // a replayed backfill epoch POST-flip is still a no-op
-          AudioCodeStore.appendCodesEpoch(
-            rows128.where(pmod(col("media_id"), lit(2)) === 1), root, 2, 1L)
-          require(digest(2) == pre,
-            "post-flip epoch replay duplicated stored landmarks")
-          // retire the loser; the committed key space survives
-          val rep = AudioCodeStore.vacuumRetiredCodes(s, root,
-            keepVersions = 1)
-          require(rep.committed == 2 && rep.removed == Seq(1) &&
-            rep.kept == Seq(2), s"vacuum accounting off: $rep")
-        } finally { rows128.unpersist(); () }
       }
-      audioClustersFromStored(s, AudioCodeStore.readCodes(s, root, 2))
+      audioClustersFromStored(s, AudioCodeStore.read(s, root, 2))
     }),
 
     // C123 TRI-MODAL document-level dup verdict — c118 completed with
@@ -7289,14 +6979,9 @@ object SparkEntry {
     // hash-match).
     "c130_verdict_store_serve" -> ((s, dir) => {
       import graft.sources.VerdictStore
-      import org.apache.hadoop.fs.Path
-      val root = Tables.scratch("c130_verd_" + new java.io.File(dir).getName +
-        "_" + java.lang.Integer.toHexString(
-          scala.util.hashing.MurmurHash3.stringHash(dir)))
+      val root = scratchRoot("c130_verd", dir)
       lifecycleOncePerBenchJvm(s"c130:$dir") {
-        val fs = org.apache.hadoop.fs.FileSystem.get(new Path(root).toUri,
-          s.sparkContext.hadoopConfiguration)
-        fs.delete(new Path(root), true)
+        freshRoot(s, root)
         val v = trimodalVerdicts(s, dir).persist()
         try {
           // a torn table is REFUSED with the pointer unmoved: a verdict
@@ -7348,14 +7033,9 @@ object SparkEntry {
     "c133_verdict_ledger_serve" -> ((s, dir) => {
       import graft.streaming.VerdictStream
       import graft.sources.VerdictStore
-      import org.apache.hadoop.fs.Path
-      val root = Tables.scratch("c133_ledg_" + new java.io.File(dir).getName +
-        "_" + java.lang.Integer.toHexString(
-          scala.util.hashing.MurmurHash3.stringHash(dir)))
+      val root = scratchRoot("c133_ledg", dir)
       lifecycleOncePerBenchJvm(s"c133:$dir") {
-        val fs = org.apache.hadoop.fs.FileSystem.get(new Path(root).toUri,
-          s.sparkContext.hadoopConfiguration)
-        fs.delete(new Path(root), true)
+        freshRoot(s, root)
         val r = VerdictStream.Roots(s"$root/sigs", s"$root/img",
           s"$root/aud", s"$root/verd", s"$root/docs_seen")
         VerdictStream.initStores(s, r)
@@ -7405,13 +7085,9 @@ object SparkEntry {
       import graft.streaming.VerdictStream
       import graft.sources.{PairLedger, VerdictStore}
       import org.apache.hadoop.fs.Path
-      val root = Tables.scratch("c135_comp_" + new java.io.File(dir).getName +
-        "_" + java.lang.Integer.toHexString(
-          scala.util.hashing.MurmurHash3.stringHash(dir)))
+      val root = scratchRoot("c135_comp", dir)
       lifecycleOncePerBenchJvm(s"c135:$dir") {
-        val fs = org.apache.hadoop.fs.FileSystem.get(new Path(root).toUri,
-          s.sparkContext.hadoopConfiguration)
-        fs.delete(new Path(root), true)
+        val fs = freshRoot(s, root)
         val r = VerdictStream.Roots(s"$root/sigs", s"$root/img",
           s"$root/aud", s"$root/verd", s"$root/docs_seen")
         VerdictStream.initStores(s, r)
@@ -7475,14 +7151,9 @@ object SparkEntry {
     "c136_ledger_pair_retire" -> ((s, dir) => {
       import graft.streaming.VerdictStream
       import graft.sources.{DeletionVectors, PairLedger, VerdictStore}
-      import org.apache.hadoop.fs.Path
-      val root = Tables.scratch("c136_ret_" + new java.io.File(dir).getName +
-        "_" + java.lang.Integer.toHexString(
-          scala.util.hashing.MurmurHash3.stringHash(dir)))
+      val root = scratchRoot("c136_ret", dir)
       lifecycleOncePerBenchJvm(s"c136:$dir") {
-        val fs = org.apache.hadoop.fs.FileSystem.get(new Path(root).toUri,
-          s.sparkContext.hadoopConfiguration)
-        fs.delete(new Path(root), true)
+        freshRoot(s, root)
         val r = VerdictStream.Roots(s"$root/sigs", s"$root/img",
           s"$root/aud", s"$root/verd", s"$root/docs_seen")
         VerdictStream.initStores(s, r)
@@ -7592,14 +7263,9 @@ object SparkEntry {
     "c138_ledger_ttl_retire" -> ((s, dir) => {
       import graft.operators.Dedup
       import graft.sources.{PairLedger, TextSigStore}
-      import org.apache.hadoop.fs.Path
-      val root = Tables.scratch("c138_ttl_" + new java.io.File(dir).getName +
-        "_" + java.lang.Integer.toHexString(
-          scala.util.hashing.MurmurHash3.stringHash(dir)))
+      val root = scratchRoot("c138_ttl", dir)
       lifecycleOncePerBenchJvm(s"c138:$dir") {
-        val fs = org.apache.hadoop.fs.FileSystem.get(new Path(root).toUri,
-          s.sparkContext.hadoopConfiguration)
-        fs.delete(new Path(root), true)
+        freshRoot(s, root)
         require(TextSigStore.publishSpec(s, s"$root/sigs", "minhash",
           64, 16, 3).committed, "c138 sig spec publish failed")
         val docs = t(s, dir, "documents").select("doc_id", "text")
@@ -7612,8 +7278,8 @@ object SparkEntry {
           graft.streaming.EventStreams.epochIdempotentSink(
             b.select("doc_id", "text"), e, s"$root/docs")
           val sigs = Dedup.minhashSigRows(b, "text", "doc_id")
-          TextSigStore.appendSigsEpoch(sigs, s"$root/sigs", 1, e)
-          val refSigs = TextSigStore.readSigsBefore(s, s"$root/sigs", 1, e)
+          TextSigStore.appendEpoch(sigs, s"$root/sigs", 1, e)
+          val refSigs = TextSigStore.readBefore(s, s"$root/sigs", 1, e)
           val refDocs = s.read.parquet(s"$root/docs")
             .where(col("__epoch") < e).select("doc_id", "text")
           val cross = Dedup.minhashCrossPairsFromSigs(
@@ -7671,19 +7337,14 @@ object SparkEntry {
     "d17_stream_mv" -> ((s, dir) => {
       import graft.operators.MaterializedView
       import graft.streaming.EventStreams
-      import org.apache.hadoop.fs.Path
-      val root = Tables.scratch("d17_mv_" + new java.io.File(dir).getName +
-        "_" + java.lang.Integer.toHexString(
-          scala.util.hashing.MurmurHash3.stringHash(dir)))
+      val root = scratchRoot("d17_mv", dir)
       val ev = t(s, dir, "events").select(
         col("user_id").cast("long").as("k"),
         pmod(col("user_id"), lit(7)).cast("long").as("g"),
         col("event_id").cast("long").as("v"),
         pmod(col("event_id"), lit(3)).cast("long").as("e"))
       lifecycleOncePerBenchJvm(s"d17:$dir") {
-        val fs = org.apache.hadoop.fs.FileSystem.get(new Path(root).toUri,
-          s.sparkContext.hadoopConfiguration)
-        fs.delete(new Path(root), true)
+        freshRoot(s, root)
         (0L to 2L).foreach { e =>
           ev.where(col("e") === e).drop("e")
             .write.mode("append").parquet(s"$root/arrivals")
@@ -7747,7 +7408,7 @@ object SparkEntry {
       // image side: perceptual pairs SERVED from the stored code table
       val root = imageCodesRoot(s, dir)
       val ip = ImageDedup.perceptualPairs(
-          ImageCodeStore.readCodes(s, root,
+          ImageCodeStore.read(s, root,
             ImageCodeStore.committedSpecVersion(s, root)),
           maxHamming = 3, hotBucketCap = 64)
         .select("id_a", "id_b")
@@ -7803,14 +7464,9 @@ object SparkEntry {
     "c117_image_spec_rollover" -> ((s, dir) => {
       import graft.operators.ImageDedup
       import graft.sources.ImageCodeStore
-      import org.apache.hadoop.fs.Path
-      val root = Tables.scratch("c117_roll_" + new java.io.File(dir).getName +
-        "_" + java.lang.Integer.toHexString(
-          scala.util.hashing.MurmurHash3.stringHash(dir)))
+      val root = scratchRoot("c117_roll", dir)
       lifecycleOncePerBenchJvm(s"c117:$dir") {
-        val fs = org.apache.hadoop.fs.FileSystem.get(new Path(root).toUri,
-          s.sparkContext.hadoopConfiguration)
-        fs.delete(new Path(root), true)
+        freshRoot(s, root)
         val packed = ImageDedup.packImageVariants(s,
           t(s, dir, "documents"), "doc_id")
         // blue: spec v1 = grid 4 — the ENCODE is driven by the loaded
@@ -7818,50 +7474,17 @@ object SparkEntry {
         require(ImageCodeStore.publishSpec(s, root, "blockhash", grid = 4,
           bands = 4).committed)
         val (_, g1, _) = ImageCodeStore.loadSpecAt(s, root, 1)
-        ImageCodeStore.appendCodesEpoch(
+        ImageCodeStore.appendEpoch(
           ImageDedup.blockhashCodes(s, packed, grid = g1), root, 1, 0L)
-        def digest(v: Int): (Long, Long) = {
-          val r = ImageCodeStore.readCodes(s, root, v)
-            .agg(count(lit(1)).as("n"), bit_xor(xxhash64(col("media_id"),
-              col("width"), col("height"), col("code"), col("pixsum")))
-              .as("x")).collect().head
-          (r.getLong(0), r.getLong(1))
-        }
-        val pin1 = digest(1)
-        // green backfill: grid-8 codes land in iv2 WHILE v1 serves (two
-        // epochs by parity; epoch 1 replayed pre-flip)
-        val codes8 = ImageDedup.blockhashCodes(s, packed, grid = 8).persist()
-        try {
-          ImageCodeStore.appendCodesEpoch(
-            codes8.where(pmod(col("media_id"), lit(2)) === 0), root, 2, 0L)
-          ImageCodeStore.appendCodesEpoch(
-            codes8.where(pmod(col("media_id"), lit(2)) === 1), root, 2, 1L)
-          ImageCodeStore.appendCodesEpoch(
-            codes8.where(pmod(col("media_id"), lit(2)) === 1), root, 2, 1L)
-          require(ImageCodeStore.committedSpecVersion(s, root) == 1,
-            "a backfill must not move the committed pointer")
-          val pre = digest(2)
-          // the FLIP: publish spec v2 (grid 8) — a pointer commit
-          require(ImageCodeStore.publishSpec(s, root, "blockhash", grid = 8,
+        // green: grid-8 codes backfill iv2; the FLIP publishes spec v2
+        // (grid 8)
+        rollover(s, root, ImageCodeStore, ImageCodeStore, Seq(
+            ImageCodeStore -> ImageDedup.blockhashCodes(s, packed, grid = 8)),
+          "media_id", "codes")(
+          ImageCodeStore.publishSpec(s, root, "blockhash", grid = 8,
             bands = 4).committed)
-          require(ImageCodeStore.committedSpecVersion(s, root) == 2,
-            "the flip must land the committed pointer on v2")
-          // a session pinned at v1 is byte-stable through the flip
-          require(digest(1) == pin1,
-            "the pinned v1 key space moved across the flip")
-          // a replayed backfill epoch POST-flip is still a no-op
-          ImageCodeStore.appendCodesEpoch(
-            codes8.where(pmod(col("media_id"), lit(2)) === 1), root, 2, 1L)
-          require(digest(2) == pre,
-            "post-flip epoch replay duplicated stored codes")
-          // retire the loser; the committed key space survives
-          val rep = ImageCodeStore.vacuumRetiredCodes(s, root,
-            keepVersions = 1)
-          require(rep.committed == 2 && rep.removed == Seq(1) &&
-            rep.kept == Seq(2), s"vacuum accounting off: $rep")
-        } finally { codes8.unpersist(); () }
       }
-      ImageDedup.perceptualPairs(ImageCodeStore.readCodes(s, root, 2),
+      ImageDedup.perceptualPairs(ImageCodeStore.read(s, root, 2),
           maxHamming = 3, hotBucketCap = 64)
         .orderBy("id_a", "id_b")
     }),
@@ -7886,7 +7509,7 @@ object SparkEntry {
       import graft.sources.TextSigStore
       val root = textSigsRoot(s, dir)
       val v = TextSigStore.committedSpecVersion(s, root)
-      val sigs = requireOneSigPerDoc(TextSigStore.readSigs(s, root, v))
+      val sigs = requireOneSigPerDoc(TextSigStore.read(s, root, v))
       Dedup.minhashPairsFromSigs(sigs, textSigCorpus(s, dir), "text",
           "doc_id")
         .where(col("id_b") - col("id_a") === 1000000L)
@@ -7904,41 +7527,16 @@ object SparkEntry {
     "c120_text_sigs_vacuum" -> ((s, dir) => {
       import graft.operators.Dedup
       import graft.sources.TextSigStore
-      import org.apache.hadoop.fs.Path
-      val root = Tables.scratch("c120_vac_" + new java.io.File(dir).getName +
-        "_" + java.lang.Integer.toHexString(
-          scala.util.hashing.MurmurHash3.stringHash(dir)))
-      val fs = org.apache.hadoop.fs.FileSystem.get(new Path(root).toUri,
-        s.sparkContext.hadoopConfiguration)
-      fs.delete(new Path(root), true)
+      val root = scratchRoot("c120_vac", dir)
       val corpus = textSigCorpus(s, dir)
-      val sigs = Dedup.minhashSigRows(corpus, "text", "doc_id").persist()
-      try {
-        require(TextSigStore.publishSpec(s, root, "minhash", 64, 16, 3)
-          .committed)
-        TextSigStore.appendSigsEpoch(sigs, root, 1, 0L)
-        // the rollover: v2 re-published (same parameters — the version
-        // is the key, not the content), sv2 backfilled
-        require(TextSigStore.publishSpec(s, root, "minhash", 64, 16, 3)
-          .committed)
-        TextSigStore.appendSigsEpoch(sigs, root, 2, 0L)
-        val rep = TextSigStore.vacuumRetiredSigs(s, root,
-          keepVersions = 1)
-        require(rep.committed == 2 && rep.removed == Seq(1) &&
-          rep.kept == Seq(2), s"vacuum accounting off: $rep")
-        require(!fs.exists(new Path(
-          s"$root/${TextSigStore.SigsTable}/sv1")),
-          "retired key space must be gone")
-        // idempotent: a rerun finds nothing to remove
-        val again = TextSigStore.vacuumRetiredSigs(s, root, 1)
-        require(again.removed.isEmpty && again.kept == Seq(2),
-          s"vacuum rerun must be a no-op: $again")
-        Dedup.minhashPairsFromSigs(
-            requireOneSigPerDoc(TextSigStore.readSigs(s, root, 2)),
-            corpus, "text", "doc_id")
-          .where(col("id_b") - col("id_a") === 1000000L)
-          .orderBy("id_a", "id_b")
-      } finally { sigs.unpersist(); () }
+      retireV1(s, root, TextSigStore,
+          Dedup.minhashSigRows(corpus, "text", "doc_id"))(
+        TextSigStore.publishSpec(s, root, "minhash", 64, 16, 3).committed)
+      Dedup.minhashPairsFromSigs(
+          requireOneSigPerDoc(TextSigStore.read(s, root, 2)),
+          corpus, "text", "doc_id")
+        .where(col("id_b") - col("id_a") === 1000000L)
+        .orderBy("id_a", "id_b")
     }),
 
     // C121 INCREMENTAL cross-corpus dedup from stored signatures — the
@@ -7965,7 +7563,7 @@ object SparkEntry {
       // copies); the reference slice is the originals — a stored-key
       // filter, not a re-tokenize
       val refSigs = requireOneSigPerDoc(
-        TextSigStore.readSigs(s, root, v))
+        TextSigStore.read(s, root, v))
         .where(col("doc_id") < 1000000L)
       Dedup.minhashCrossPairsFromSigs(refSigs, docs, inc, "text",
           "doc_id")
@@ -8016,13 +7614,8 @@ object SparkEntry {
     // breaks rows AND hash; a replay that leaked into the OTHER
     // partition breaks its cents.
     "a15_idempotent_append" -> ((s, dir) => {
-      import org.apache.hadoop.fs.Path
-      val root = Tables.scratch("a15_idem_" + new java.io.File(dir).getName +
-        "_" + java.lang.Integer.toHexString(
-          scala.util.hashing.MurmurHash3.stringHash(dir)))
-      val fs = org.apache.hadoop.fs.FileSystem.get(new Path(root).toUri,
-        s.sparkContext.hadoopConfiguration)
-      fs.delete(new Path(root), true)
+      val root = scratchRoot("a15_idem", dir)
+      freshRoot(s, root)
       val ord = t(s, dir, "orders").select("o_orderkey", "o_totalprice")
       def slice(k: Int) =
         ord.where(pmod(col("o_orderkey"), lit(3)) === k)
@@ -8049,12 +7642,8 @@ object SparkEntry {
     "a21_orphan_vacuum" -> ((s, dir) => {
       import graft.sources.Compaction
       import org.apache.hadoop.fs.Path
-      val root = Tables.scratch("a21_vac_" + new java.io.File(dir).getName +
-        "_" + java.lang.Integer.toHexString(
-          scala.util.hashing.MurmurHash3.stringHash(dir)))
-      val fs = org.apache.hadoop.fs.FileSystem.get(new Path(root).toUri,
-        s.sparkContext.hadoopConfiguration)
-      fs.delete(new Path(root), true)
+      val root = scratchRoot("a21_vac", dir)
+      val fs = freshRoot(s, root)
       t(s, dir, "orders").select("o_orderkey", "o_orderstatus")
         .write.partitionBy("o_orderstatus").mode("overwrite").parquet(root)
       def plant(rel: String): Unit = {
@@ -8163,13 +7752,8 @@ object SparkEntry {
     // evictions) could not match.
     "d7_state_metrics" -> ((s, dir) => {
       import org.apache.spark.sql.streaming.{OutputMode, Trigger}
-      import org.apache.hadoop.fs.Path
-      val ck = Tables.scratch("d7_ck_" + new java.io.File(dir).getName +
-        "_" + java.lang.Integer.toHexString(
-          scala.util.hashing.MurmurHash3.stringHash(dir)))
-      val fs = org.apache.hadoop.fs.FileSystem.get(new Path(ck).toUri,
-        s.sparkContext.hadoopConfiguration)
-      fs.delete(new Path(ck), true) // fresh offsets: re-runs re-measure
+      val ck = scratchRoot("d7_ck", dir)
+      freshRoot(s, ck) // fresh offsets: re-runs re-measure
       val schema = t(s, dir, "events").schema
       val q = s.readStream.schema(schema)
         .parquet(stageEventsDir(s, dir))
@@ -8200,13 +7784,8 @@ object SparkEntry {
     // checks as counters). All longs — bit-deterministic.
     "d11_observed_metrics" -> ((s, dir) => {
       import org.apache.spark.sql.streaming.Trigger
-      import org.apache.hadoop.fs.Path
-      val ck = Tables.scratch("d11_ck_" + new java.io.File(dir).getName +
-        "_" + java.lang.Integer.toHexString(
-          scala.util.hashing.MurmurHash3.stringHash(dir)))
-      val fs = org.apache.hadoop.fs.FileSystem.get(new Path(ck).toUri,
-        s.sparkContext.hadoopConfiguration)
-      fs.delete(new Path(ck), true)
+      val ck = scratchRoot("d11_ck", dir)
+      freshRoot(s, ck)
       val schema = t(s, dir, "events").schema
       val q = s.readStream.schema(schema)
         .parquet(stageEventsDir(s, dir))

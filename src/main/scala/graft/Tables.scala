@@ -60,9 +60,32 @@ object Tables {
       case _ => df
     }
 
-  /** Scratch dir for sink/roundtrip operators (kept inside the repo tree). */
+  /** This JVM's scratch base: `target/scratch/<run id>` under the
+    * working directory, where the run id (pid + JVM start time in ms,
+    * both base 36) is unique per JVM. Two JVMs over one corpus (Verify
+    * beside Bench, forked bench chunks) therefore never share a store
+    * root, so neither can delete the other's store mid-read. Removed at
+    * JVM exit. Base 36 keeps the paths short: plan strings abbreviate a
+    * scan's location at 100 characters, and the plan audits read the
+    * table directory out of it.
+    */
+  lazy val scratchBase: String = {
+    val runId = java.lang.Long.toString(ProcessHandle.current().pid(), 36) +
+      "_" + java.lang.Long.toString(java.lang.management.ManagementFactory
+        .getRuntimeMXBean.getStartTime, 36)
+    val base = new java.io.File("target/scratch", runId).getAbsoluteFile
+    base.mkdirs()
+    sys.addShutdownHook {
+      org.apache.commons.io.FileUtils.deleteQuietly(base); ()
+    }
+    base.getPath
+  }
+
+  /** Scratch path `sub` for sink/roundtrip operators and stores, under
+    * [[scratchBase]].
+    */
   def scratch(sub: String): String = {
-    val p = s"/root/repo/target/scratch/$sub"
+    val p = s"$scratchBase/$sub"
     new java.io.File(p).getParentFile.mkdirs()
     p
   }

@@ -7,6 +7,12 @@ object Verify {
   def main(args: Array[String]): Unit = {
     val (sfDir, outDir) = (args(0), args(1))
     val only = args.drop(2).toSet // optional: run a subset (local iteration)
+    // a misspelled key must not shrink the run silently into a green one
+    val unknown = only.filterNot(SparkEntry.queries.contains).toSeq.sorted
+    if (unknown.nonEmpty) {
+      System.err.println(s"[verify] unknown query keys: ${unknown.mkString(", ")}")
+      sys.exit(2)
+    }
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val spark = GraftSession
       .builder("graft-verify", Some(s"local[$cpus]"), Some(cpus.toInt))

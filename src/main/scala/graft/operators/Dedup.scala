@@ -120,7 +120,7 @@ object Dedup {
 
   /** [[minhashDedupPairs]]'s join half, fed by precomputed signature rows
     * ((doc_id, sig) — [[minhashSigRows]] live, or
-    * [[graft.sources.TextSigStore.readSigs]] stored): banding, hot-bucket
+    * [[graft.sources.TextSigStore]] stored): banding, hot-bucket
     * census/escalation, candidate DISTINCT and exact-Jaccard verify are
     * IDENTICAL to the one-shot path — the only difference is where `sig`
     * comes from. The verify side still reads `docs` text, but only for
@@ -554,7 +554,7 @@ object Dedup {
 
   /** [[duplicatedSpans]]'s join half, fed by precomputed digest rows
     * ((id, pos, h) — [[spanDigestRows]] live, or
-    * [[graft.sources.SpanStore.readDigests]] stored): the count
+    * [[graft.sources.SpanStore]] stored): the count
     * aggregate, the hinted shuffle join, and the per-doc rollup are
     * IDENTICAL to the one-shot path.
     */
@@ -650,7 +650,7 @@ object Dedup {
 
   /** [[spanExtents]]'s merge half at ONE width, fed by precomputed
     * digest rows ((id, pos, h) — [[spanDigestRows]] live, or
-    * [[graft.sources.SpanStore.readDigests]] stored, C132): the
+    * [[graft.sources.SpanStore]] stored, C132): the
     * duplicated-vocabulary filter, the hinted flag join, and the
     * per-document gaps-and-islands sweep are IDENTICAL to the one-shot
     * path.
@@ -843,7 +843,7 @@ object Dedup {
 
   /** [[stripDuplicatedExtents]] fed by precomputed digest rows
     * ((id, pos, h) — [[spanDigestRows]] live, or
-    * [[graft.sources.SpanStore.readDigests]] stored — the r15 verdict's
+    * [[graft.sources.SpanStore]] stored — the r15 verdict's
     * ask #4: the strip family re-ran the tokenize+digest map passes,
     * the stage-probe-measured majority of the span-family cost, inside
     * every run). The duplicated-vocabulary filter, flag join, position

@@ -113,7 +113,9 @@ object ExactWindows {
         def next(): Row = {
           val r = rows.next()
           val k = r.get(keyIdx)
-          if (!started || k != curKey) { reset(); curKey = k; started = true }
+          if (!started || !sameKey(k, curKey)) {
+            reset(); curKey = k; started = true
+          }
           if (ringCnt == frameRows) {
             if (!ringNull(ringPos)) evict(ringVal(ringPos))
             ringCnt -= 1
@@ -140,5 +142,14 @@ object ExactWindows {
     }(enc)
     walked.withColumn("med", round(col("__w_med"), 4))
       .drop("__w_med", "__w_val")
+  }
+
+  /** Partition-key equality by content: a BINARY key arrives as
+    * `Array[Byte]`, whose `==` compares references — every row would
+    * restart the frame.
+    */
+  private def sameKey(a: Any, b: Any): Boolean = (a, b) match {
+    case (x: Array[Byte], y: Array[Byte]) => java.util.Arrays.equals(x, y)
+    case _ => a == b
   }
 }

@@ -1,6 +1,6 @@
 package graft.sources
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.operators.{L2Cells, PqIndex}
@@ -101,11 +101,9 @@ object AnnIndexStore {
       root, batchId)
   }
 
-  /** Append one ingest epoch's STORED CODES ([[graft.operators
-    * .Similarity.encodeCodes]] output) under the D8 epoch-partition
-    * rule: a replayed epoch overwrites its own partition with
-    * bit-identical rows — exactly-once under at-least-once delivery.
-    * This is the C82/C85 incremental-maintenance step: the float corpus
+  /** The STORED CODES ([[graft.operators.Similarity.encodeCodes]]
+    * output), one ingest epoch at a time under the D8 epoch-partition
+    * rule — the C82/C85 incremental-maintenance step: the float corpus
     * is encoded ONCE per epoch against a frozen index version; serving
     * reads the m-byte code table, never the raw vectors.
     *
@@ -115,25 +113,23 @@ object AnnIndexStore {
     * silently invalidate the stored codes — the new version re-encodes
     * as ordinary epochs into its own key space while the old version
     * keeps serving from its own (the C85 blue/green rollover). Serving
-    * always pins (version, codes-at-version) together via
-    * [[loadAt]] + [[readCodes]].
+    * always pins (version, codes-at-version) together via [[loadAt]] +
+    * `Codes.read`. An append lands the frame as given, so attribute
+    * columns written by `encodeCodes(..., attrCols)` ride along (C90);
+    * the vacuum decides against the atomic index pointer.
     */
-  def appendCodesEpoch(codes: DataFrame, root: String,
-                       indexVersion: Int, epoch: Long): Unit = {
-    require(indexVersion >= 1, s"indexVersion $indexVersion < 1")
-    graft.streaming.EventStreams.epochIdempotentSink(
-      codes, epoch, s"$root/$CodesTable/iv$indexVersion")
+  object Codes extends EpochStore(CellsTable, Nil, CodesTable, "iv",
+      Seq("neighbor_id", "cell", "codes"), None) {
+    protected def wellformed(spec: Row): Option[String] = None
+    override protected def stored(codes: DataFrame, root: String,
+                                  version: Int): DataFrame = codes
+    override protected def versionName: String = "indexVersion"
+    override def committedSpecVersion(spark: SparkSession,
+                                      root: String): Int =
+      committedVersion(spark, root)
   }
 
-  /** All code epochs stored under ONE index version, as one serving
-    * frame — codes from any other version are invisible by key.
-    */
-  def readCodes(spark: SparkSession, root: String,
-                indexVersion: Int): DataFrame =
-    spark.read.parquet(s"$root/$CodesTable/iv$indexVersion")
-      .select("neighbor_id", "cell", "codes")
-
-  /** [[readCodes]] keeping stored attribute columns (C90 — codes written
+  /** `Codes.read` keeping stored attribute columns (C90 — codes written
     * by `encodeCodes(..., attrCols)`): a serving-time metadata predicate
     * on these columns is a parquet PUSHDOWN on the m-byte code table —
     * filtered vector search with no attribute join and no float read.
@@ -142,11 +138,11 @@ object AnnIndexStore {
     */
   def readCodesWith(spark: SparkSession, root: String, indexVersion: Int,
                     attrCols: Seq[String]): DataFrame =
-    spark.read.parquet(s"$root/$CodesTable/iv$indexVersion")
+    spark.read.parquet(Codes.dir(root, indexVersion))
       .select(col("neighbor_id") +: col("cell") +: col("codes") +:
         attrCols.map(col): _*)
 
-  /** [[readCodes]] with A36 merge-on-read deletion vectors honored
+  /** `Codes.read` with A36 merge-on-read deletion vectors honored
     * (C91): tombstones marked against the version's code directory
     * (`DeletionVectors.markDeleted` on `iv<V>/`, key `neighbor_id`)
     * are anti-joined out at read time — a targeted delete (A33/GDPR)
@@ -157,53 +153,9 @@ object AnnIndexStore {
     */
   def readCodesWithDeletes(spark: SparkSession, root: String,
                            indexVersion: Int): DataFrame =
-    DeletionVectors.readWithDeletes(spark,
-        s"$root/$CodesTable/iv$indexVersion", "neighbor_id")
+    DeletionVectors.readWithDeletes(spark, Codes.dir(root, indexVersion),
+        "neighbor_id")
       .select("neighbor_id", "cell", "codes")
-
-  /** [[vacuumRetiredCodes]] accounting: the pointer the decision was
-    * made against, the version keys removed, and the ones kept (both
-    * still-serving and in-flight-newer).
-    */
-  case class CodesVacuumReport(committed: Int, removed: Seq[Int],
-                               kept: Seq[Int])
-
-  /** Retire dead code epochs after a completed blue/green rollover
-    * (C86 — the A21 orphan rule applied under `ann_codes/iv*`): once
-    * serving has flipped to the committed version, older versions'
-    * codes are corpus-sized dead weight — this removes every
-    * `iv<N>` tree with N ≤ committed − keepVersions, and REFUSES to
-    * touch the committed version, anything newer (a `iv` key above the
-    * pointer is an in-flight backfill for the NEXT rollover — deleting
-    * it would silently restart that ingest), or anything inside the
-    * keepVersions window (keepVersions = 2 keeps one rollback pin
-    * alive through the overlap period). The INDEX tables are not
-    * touched: they are KBs and stay readable for time travel
-    * ([[MultiPublish.readVersion]]); the codes are the m·n bytes that
-    * matter at 100 TB. Idempotent — a rerun finds nothing to remove.
-    */
-  def vacuumRetiredCodes(spark: SparkSession, root: String,
-                         keepVersions: Int = 1): CodesVacuumReport = {
-    require(keepVersions >= 1, s"keepVersions $keepVersions < 1")
-    val committed = committedVersion(spark, root)
-    val codesRoot = new org.apache.hadoop.fs.Path(s"$root/$CodesTable")
-    val fs = codesRoot.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val ivs =
-      if (!fs.exists(codesRoot)) Seq.empty[Int]
-      else fs.listStatus(codesRoot).toSeq
-        .filter(_.isDirectory)
-        .map(_.getPath.getName)
-        .collect { case n if n.startsWith("iv") &&
-          n.drop(2).forall(_.isDigit) => n.drop(2).toInt }
-        .sorted
-    val cutoff = committed - keepVersions
-    val (dead, live) = ivs.partition(_ <= cutoff)
-    dead.foreach { v =>
-      fs.delete(new org.apache.hadoop.fs.Path(s"$root/$CodesTable/iv$v"),
-        true)
-    }
-    CodesVacuumReport(committed, dead, live)
-  }
 
   /** The COMMITTED index version — the default pin for a fresh serving
     * session. Both index tables advance together through the A37

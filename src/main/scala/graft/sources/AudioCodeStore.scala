@@ -1,39 +1,29 @@
 package graft.sources
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Versioned AUDIO fingerprint-code persistence (C115) — the
-  * [[ImageCodeStore]] discipline applied to the LAST dedup family
-  * still paying full-corpus decode per query: c105/c112 re-decoded
-  * the WAV corpus and re-derived the chained-landmark codes inside
-  * every run, on the modality where decode is MOST expensive per byte
-  * (the decode + per-frame WHT chain dominates the c105 headline).
-  * Paying that chain once per NEW clip (an append-only epoch) instead
-  * of once per query is the entire point of a code store.
+  * [[ImageCodeStore]] discipline applied to the dedup family where
+  * decode is MOST expensive per byte: c105/c112 re-decoded the WAV
+  * corpus and re-derived the chained-landmark codes inside every run.
+  * Paying the decode + per-frame WHT chain once per NEW clip (an
+  * append-only epoch) instead of once per query is the entire point of
+  * a code store.
   *
-  * Two pieces, mirroring [[ImageCodeStore]] / [[AnnIndexStore]]:
+  * An [[EpochStore]]:
   *
-  *   - `audio_code_spec`: ONE KB-sized row describing the fingerprint
-  *     algorithm (family, WHT frame size) published through
-  *     [[MultiPublish]] — a landmark code is only comparable against
-  *     codes produced under the SAME frame grid, so a spec change
-  *     (say 128 → 256-sample frames) must be a new VERSION, not a
-  *     silent re-interpretation of stored rows. Audits refuse a
-  *     structurally impossible spec at publish (the dense-rule
-  *     posture: the WHT butterfly needs a power-of-two frame).
-  *   - `audio_codes/av<version>/`: the corpus-scale code table — the
-  *     exact [[graft.operators.Audio.chainedLandmarkRows]] output:
-  *     one META row per decodable clip ((media_id, n_samples,
-  *     anchor = −1) — the real decoded duration the c105 blocking and
-  *     election consume) plus one CODE row per chained landmark
-  *     (anchor ≥ 0, Wang-2003 (a, line_a, line_{a+1})) — appended one
-  *     ingest epoch at a time under the D8 epoch-partition rule: a
-  *     replayed epoch overwrites its own partition with bit-identical
-  *     rows, so exactly-once holds under at-least-once delivery.
-  *     Codes are keyed by spec version (the C85 key space): a new
-  *     spec backfills its own `av` tree while the old one keeps
-  *     serving.
+  *   - `audio_code_spec`: ONE row (family, WHT frame size) — a landmark
+  *     code is only comparable against codes produced under the SAME
+  *     frame grid, so a frame change (say 128 → 256 samples) is a new
+  *     VERSION. The audit refuses a structurally impossible spec (the
+  *     WHT butterfly needs a power-of-two frame).
+  *   - `audio_codes/av<version>/`: the exact
+  *     [[graft.operators.Audio.chainedLandmarkRows]] output — one META
+  *     row per decodable clip ((media_id, n_samples, anchor = −1) — the
+  *     real decoded duration the c105 blocking and election consume)
+  *     plus one CODE row per chained landmark (anchor ≥ 0, Wang-2003
+  *     (a, line_a, line_{a+1})).
   *
   * Every stored column is a small integer, so the table round-trips
   * parquet bit-exactly and pairs-from-stored ≡ pairs-from-decode BY
@@ -41,152 +31,51 @@ import org.apache.spark.sql.functions._
   * [[graft.operators.Audio.chainedPairsFromCodes]] verbatim) — the
   * property AudioCodeStoreSpec locks and the c115 oracle (the c105
   * cluster replay, unchanged) rests on.
-  *
-  * At 100 TB: serving reads ~24 bytes/landmark (frame-count-sized per
-  * clip) instead of decoding media; an ingest epoch decodes only its
-  * delta. The only corpus-scale passes left in a dedup query are the
-  * landmark equi-join and the CC rounds over the result-sized pair
-  * set.
   */
-object AudioCodeStore {
-
-  val SpecTable = "audio_code_spec"
-  val CodesTable = "audio_codes"
-
-  /** The spec table: one row — (family, frame). `frame` is the WHT
-    * frame size in samples (the landmark grid).
-    */
-  def specFrame(spark: SparkSession, family: String,
-                frame: Int): DataFrame = {
-    import spark.implicits._
-    Seq((family, frame.toLong)).toDF("family", "frame")
-  }
+object AudioCodeStore extends EpochStore(
+    "audio_code_spec", Seq("family", "frame"),
+    "audio_codes", "av",
+    Seq("media_id", "n_samples", "anchor", "line_a", "line_t"), None) {
 
   /** Publish one fingerprint spec as a new committed version under
-    * `root`. Audits: exactly one row; non-empty family; the frame must
-    * be a power of two in [4, 32768] (the fast-WHT butterfly's
-    * structural requirement — a non-power-of-two grid cannot have
-    * produced the stored lines).
+    * `root`; `frame` is the WHT frame size in samples (the landmark
+    * grid).
     */
   def publishSpec(spark: SparkSession, root: String, family: String,
                   frame: Int = 128,
                   batchId: Option[Long] = None): MultiPublish.MultiReport = {
-    val specAudit: Wap.Audit = ("spec_wellformed", df => {
-      val rows = df.select(col("family"), col("frame")).collect()
-      if (rows.length != 1)
-        Some(s"spec must be exactly one row, got ${rows.length}")
-      else {
-        val f = rows.head.getLong(1)
-        if (rows.head.getString(0).isEmpty) Some("empty code family")
-        else if (f < 4 || f > 32768 || (f & (f - 1)) != 0)
-          Some(s"frame $f is not a power of two in [4, 32768]")
-        else None
-      }
-    })
-    MultiPublish.publishAll(spark, Map(
-      SpecTable -> ((specFrame(spark, family, frame),
-        Seq(Wap.minRows(1), specAudit)))),
-      root, batchId)
+    import spark.implicits._
+    publish(spark, root,
+      Seq((family, frame.toLong)).toDF("family", "frame"), batchId)
   }
 
-  /** The COMMITTED spec version — the default pin for a serving
-    * session.
+  /** Non-empty family; the frame must be a power of two in [4, 32768]
+    * (the fast-WHT butterfly's structural requirement — a
+    * non-power-of-two grid cannot have produced the stored lines).
     */
-  def committedSpecVersion(spark: SparkSession, root: String): Int =
-    MultiPublish.commitVersions(spark, root).getOrElse(SpecTable,
-      throw new IllegalStateException(s"no committed $SpecTable under $root"))
+  protected def wellformed(spec: Row): Option[String] = {
+    val f = spec.getLong(1)
+    if (spec.getString(0).isEmpty) Some("empty code family")
+    else if (f < 4 || f > 32768 || (f & (f - 1)) != 0)
+      Some(s"frame $f is not a power of two in [4, 32768]")
+    else None
+  }
 
   /** Load an explicit spec version: (family, frame). */
   def loadSpecAt(spark: SparkSession, root: String,
                  version: Int): (String, Int) = {
-    val rows = MultiPublish.readVersion(spark, root, SpecTable, version)
-      .select("family", "frame").collect()
-    require(rows.length == 1,
-      s"$SpecTable v$version must be one row, got ${rows.length}")
-    (rows.head.getString(0), rows.head.getLong(1).toInt)
+    val r = specRow(spark, root, version)
+    (r.getString(0), r.getLong(1).toInt)
   }
 
-  /** Append one ingest epoch's landmark rows
-    * ([[graft.operators.Audio.chainedLandmarkRows]] output) under the
-    * D8 epoch-partition rule, keyed by spec version — the C82
-    * incremental step on the audio surface: only the DELTA is decoded,
-    * ever.
-    */
-  def appendCodesEpoch(codes: DataFrame, root: String, specVersion: Int,
-                       epoch: Long): Unit = {
-    require(specVersion >= 1, s"specVersion $specVersion < 1")
-    graft.streaming.EventStreams.epochIdempotentSink(
-      codes.select("media_id", "n_samples", "anchor", "line_a", "line_t"),
-      epoch, s"$root/$CodesTable/av$specVersion")
-  }
-
-  /** All landmark epochs stored under ONE spec version, as one serving
-    * frame (meta + code rows) — a dedup query's input, no decode
-    * anywhere in its plan.
-    */
-  def readCodes(spark: SparkSession, root: String,
-                specVersion: Int): DataFrame =
-    spark.read.parquet(s"$root/$CodesTable/av$specVersion")
-      .select("media_id", "n_samples", "anchor", "line_a", "line_t")
-
-  /** The landmark rows of epochs STRICTLY BEFORE `epochExclusive` —
-    * the D49 pair ledger's replay-stable reference side (partition
-    * pruning on the D8 epoch key; a redelivered epoch sees the same
-    * reference set as its first delivery).
-    */
-  def readCodesBefore(spark: SparkSession, root: String, specVersion: Int,
-                      epochExclusive: Long): DataFrame =
-    spark.read.parquet(s"$root/$CodesTable/av$specVersion")
-      .where(col("__epoch") < epochExclusive)
-      .select("media_id", "n_samples", "anchor", "line_a", "line_t")
-
-  /** The per-clip duration table carved from [[readCodes]]: one row
-    * per decodable clip, (media_id, n_samples) — what the c105
-    * duration blocking and the canonical election consume, without a
-    * decode or a distinct over the frame-count-sized code rows.
+  /** The per-clip duration table carved from [[read]]: one row per
+    * decodable clip, (media_id, n_samples) — what the c105 duration
+    * blocking and the canonical election consume, without a decode or a
+    * distinct over the frame-count-sized code rows.
     */
   def readMeta(spark: SparkSession, root: String,
                specVersion: Int): DataFrame =
-    readCodes(spark, root, specVersion)
+    read(spark, root, specVersion)
       .where(col("anchor") === -1)
       .select("media_id", "n_samples")
-
-  /** [[vacuumRetiredCodes]] accounting — the pointer the decision was
-    * made against, the version keys removed, and the ones kept.
-    */
-  case class CodesVacuumReport(committed: Int, removed: Seq[Int],
-                               kept: Seq[Int])
-
-  /** Retire dead code key spaces after a completed spec rollover
-    * (C116 — the ImageCodeStore C110 rule on the audio surface): once
-    * serving has flipped to the committed spec version, older
-    * versions' landmarks are corpus-sized dead weight. Removes every
-    * `av<N>` tree with N ≤ committed − keepVersions; REFUSES to touch
-    * the committed version, anything newer (an in-flight backfill for
-    * the NEXT rollover), or anything inside the keepVersions window.
-    * The spec table itself stays readable for time travel — it is one
-    * row; the landmark rows are the bytes that matter. Idempotent.
-    */
-  def vacuumRetiredCodes(spark: SparkSession, root: String,
-                         keepVersions: Int = 1): CodesVacuumReport = {
-    require(keepVersions >= 1, s"keepVersions $keepVersions < 1")
-    val committed = committedSpecVersion(spark, root)
-    val codesRoot = new org.apache.hadoop.fs.Path(s"$root/$CodesTable")
-    val fs = codesRoot.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val avs =
-      if (!fs.exists(codesRoot)) Seq.empty[Int]
-      else fs.listStatus(codesRoot).toSeq
-        .filter(_.isDirectory)
-        .map(_.getPath.getName)
-        .collect { case n if n.startsWith("av") &&
-          n.drop(2).forall(_.isDigit) => n.drop(2).toInt }
-        .sorted
-    val cutoff = committed - keepVersions
-    val (dead, live) = avs.partition(_ <= cutoff)
-    dead.foreach { v =>
-      fs.delete(new org.apache.hadoop.fs.Path(s"$root/$CodesTable/av$v"),
-        true)
-    }
-    CodesVacuumReport(committed, dead, live)
-  }
 }

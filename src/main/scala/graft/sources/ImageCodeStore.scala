@@ -1,181 +1,70 @@
 package graft.sources
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
+import org.apache.spark.sql.{Row, SparkSession}
 
 /** Versioned IMAGE perceptual-code persistence (C104) — the
   * C81/C82/C85 stored-code discipline applied to the one dedup family
   * that was still paying full-corpus decode per query: C97 rebuilt its
-  * blockhash codes inline on every run, while the embedding surface
-  * already had publish/load, incremental epochs, and blue/green
-  * rollover. At 100 TB the image DECODE pass dominates the banded
-  * join by orders of magnitude; paying it once per NEW image (an
-  * append-only epoch) instead of once per query is the entire point
-  * of a code store.
+  * blockhash codes inline on every run. At 100 TB the image DECODE pass
+  * dominates the banded join by orders of magnitude; paying it once per
+  * NEW image (an append-only epoch) instead of once per query is the
+  * entire point of a code store.
   *
-  * Two pieces, mirroring [[AnnIndexStore]]:
+  * An [[EpochStore]]:
   *
-  *   - `img_code_spec`: ONE KB-sized row describing the code algorithm
-  *     (family, grid side, band count) published through
-  *     [[MultiPublish]] — a code is only comparable against codes
-  *     produced by the SAME spec, so a spec change (say an 8×8 → 16×16
-  *     grid) must be a new VERSION, not a silent re-interpretation of
-  *     stored longs. Audits refuse a structurally impossible spec at
-  *     publish (the dense-rule posture).
-  *   - `img_codes/iv<version>/`: the corpus-scale code table
-  *     ((media_id, width, height, code, pixsum) — the exact
-  *     [[graft.operators.ImageDedup.blockhashCodes]] output), appended
-  *     one ingest epoch at a time under the D8 epoch-partition rule: a
-  *     replayed epoch overwrites its own partition with bit-identical
-  *     rows, so exactly-once holds under at-least-once delivery.
-  *     Codes are keyed by spec version (the C85 key space): a new spec
-  *     backfills its own `iv` tree while the old one keeps serving.
+  *   - `img_code_spec`: ONE row (family, grid side, band count) — a
+  *     code is only comparable against codes produced by the SAME spec,
+  *     so a grid change (say 8×8 → 16×16) is a new VERSION. The audit
+  *     refuses a structurally impossible spec at publish.
+  *   - `img_codes/iv<version>/`: (media_id, width, height, code,
+  *     pixsum) — the exact [[graft.operators.ImageDedup.blockhashCodes]]
+  *     output, one ingest epoch at a time.
   *
   * Codes are integers (one long + dims + a checksum long per image),
   * so they round-trip parquet bit-exactly and
   * pairs-from-stored-codes ≡ pairs-from-decode by construction — the
-  * property ImageCodeStoreSpec locks and the c104 oracle (the c97
-  * pair replay, unchanged) rests on.
-  *
-  * At 100 TB: serving reads ~36 bytes/image instead of decoding
-  * media; an ingest epoch decodes only its delta. The only
-  * corpus-scale pass left in a dedup query is the banded join itself.
+  * property ImageCodeStoreSpec locks and the c104 oracle (the c97 pair
+  * replay, unchanged) rests on. Serving reads ~36 bytes/image instead
+  * of decoding media; an ingest epoch decodes only its delta.
   */
-object ImageCodeStore {
-
-  val SpecTable = "img_code_spec"
-  val CodesTable = "img_codes"
-
-  /** The spec table: one row — (family, grid, bands). `grid` is the
-    * block-grid side (8 ⇒ 64-bit code), `bands` the LSH band count the
-    * banded join splits the code into.
-    */
-  def specFrame(spark: SparkSession, family: String, grid: Int,
-                bands: Int): DataFrame = {
-    import spark.implicits._
-    Seq((family, grid.toLong, bands.toLong))
-      .toDF("family", "grid", "bands")
-  }
+object ImageCodeStore extends EpochStore(
+    "img_code_spec", Seq("family", "grid", "bands"),
+    "img_codes", "iv", Seq("media_id", "width", "height", "code", "pixsum"),
+    None) {
 
   /** Publish one code spec as a new committed version under `root`.
-    * Audits: exactly one row; the grid must describe a code that fits
-    * the stored 64-bit long (grid² ≤ 64) and the bands must divide the
-    * code width evenly (the pigeonhole guarantee of the banded join is
-    * only sound on equal-width bands).
+    * `grid` is the block-grid side (8 ⇒ 64-bit code), `bands` the LSH
+    * band count the banded join splits the code into.
     */
   def publishSpec(spark: SparkSession, root: String, family: String,
                   grid: Int = 8, bands: Int = 4,
                   batchId: Option[Long] = None): MultiPublish.MultiReport = {
-    val specAudit: Wap.Audit = ("spec_wellformed", df => {
-      val rows = df.select(col("family"), col("grid"), col("bands"))
-        .collect()
-      if (rows.length != 1)
-        Some(s"spec must be exactly one row, got ${rows.length}")
-      else {
-        val g = rows.head.getLong(1)
-        val b = rows.head.getLong(2)
-        val bits = g * g
-        if (rows.head.getString(0).isEmpty) Some("empty code family")
-        else if (g < 2 || bits > 64)
-          Some(s"grid $g: code width ${bits} outside (4, 64]")
-        else if (b < 1 || bits % b != 0)
-          Some(s"bands $b do not divide code width $bits evenly")
-        else None
-      }
-    })
-    MultiPublish.publishAll(spark, Map(
-      SpecTable -> ((specFrame(spark, family, grid, bands),
-        Seq(Wap.minRows(1), specAudit)))),
-      root, batchId)
+    import spark.implicits._
+    publish(spark, root, Seq((family, grid.toLong, bands.toLong))
+      .toDF("family", "grid", "bands"), batchId)
   }
 
-  /** The COMMITTED spec version — the default pin for a serving
-    * session.
+  /** The grid must describe a code that fits the stored 64-bit long
+    * (grid² ≤ 64) and the bands must divide the code width evenly (the
+    * pigeonhole guarantee of the banded join is only sound on
+    * equal-width bands).
     */
-  def committedSpecVersion(spark: SparkSession, root: String): Int =
-    MultiPublish.commitVersions(spark, root).getOrElse(SpecTable,
-      throw new IllegalStateException(s"no committed $SpecTable under $root"))
+  protected def wellformed(spec: Row): Option[String] = {
+    val g = spec.getLong(1)
+    val b = spec.getLong(2)
+    val bits = g * g
+    if (spec.getString(0).isEmpty) Some("empty code family")
+    else if (g < 2 || bits > 64)
+      Some(s"grid $g: code width ${bits} outside (4, 64]")
+    else if (b < 1 || bits % b != 0)
+      Some(s"bands $b do not divide code width $bits evenly")
+    else None
+  }
 
   /** Load an explicit spec version: (family, grid, bands). */
   def loadSpecAt(spark: SparkSession, root: String,
                  version: Int): (String, Int, Int) = {
-    val rows = MultiPublish.readVersion(spark, root, SpecTable, version)
-      .select("family", "grid", "bands").collect()
-    require(rows.length == 1,
-      s"$SpecTable v$version must be one row, got ${rows.length}")
-    (rows.head.getString(0), rows.head.getLong(1).toInt,
-      rows.head.getLong(2).toInt)
-  }
-
-  /** Append one ingest epoch's codes
-    * ([[graft.operators.ImageDedup.blockhashCodes]] output) under the
-    * D8 epoch-partition rule, keyed by spec version — the C82
-    * incremental step on the image surface: only the DELTA is decoded,
-    * ever.
-    */
-  def appendCodesEpoch(codes: DataFrame, root: String, specVersion: Int,
-                       epoch: Long): Unit = {
-    require(specVersion >= 1, s"specVersion $specVersion < 1")
-    graft.streaming.EventStreams.epochIdempotentSink(
-      codes.select("media_id", "width", "height", "code", "pixsum"),
-      epoch, s"$root/$CodesTable/iv$specVersion")
-  }
-
-  /** All code epochs stored under ONE spec version, as one serving
-    * frame — a dedup query's input, no decode anywhere in its plan.
-    */
-  def readCodes(spark: SparkSession, root: String,
-                specVersion: Int): DataFrame =
-    spark.read.parquet(s"$root/$CodesTable/iv$specVersion")
-      .select("media_id", "width", "height", "code", "pixsum")
-
-  /** The code rows of epochs STRICTLY BEFORE `epochExclusive` — the
-    * D49 pair ledger's replay-stable reference side (partition pruning
-    * on the D8 epoch key; a redelivered epoch sees the same reference
-    * set as its first delivery).
-    */
-  def readCodesBefore(spark: SparkSession, root: String, specVersion: Int,
-                      epochExclusive: Long): DataFrame =
-    spark.read.parquet(s"$root/$CodesTable/iv$specVersion")
-      .where(col("__epoch") < epochExclusive)
-      .select("media_id", "width", "height", "code", "pixsum")
-
-  /** [[vacuumRetiredCodes]] accounting — the pointer the decision was
-    * made against, the version keys removed, and the ones kept.
-    */
-  case class CodesVacuumReport(committed: Int, removed: Seq[Int],
-                               kept: Seq[Int])
-
-  /** Retire dead code key spaces after a completed spec rollover
-    * (C110 — the AnnIndexStore C86 rule on the image surface): once
-    * serving has flipped to the committed spec version, older
-    * versions' codes are corpus-sized dead weight. Removes every
-    * `iv<N>` tree with N ≤ committed − keepVersions; REFUSES to touch
-    * the committed version, anything newer (an in-flight backfill for
-    * the NEXT rollover), or anything inside the keepVersions window.
-    * The spec table itself stays readable for time travel — it is one
-    * row; the codes are the ~36·n bytes that matter. Idempotent.
-    */
-  def vacuumRetiredCodes(spark: SparkSession, root: String,
-                         keepVersions: Int = 1): CodesVacuumReport = {
-    require(keepVersions >= 1, s"keepVersions $keepVersions < 1")
-    val committed = committedSpecVersion(spark, root)
-    val codesRoot = new org.apache.hadoop.fs.Path(s"$root/$CodesTable")
-    val fs = codesRoot.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val ivs =
-      if (!fs.exists(codesRoot)) Seq.empty[Int]
-      else fs.listStatus(codesRoot).toSeq
-        .filter(_.isDirectory)
-        .map(_.getPath.getName)
-        .collect { case n if n.startsWith("iv") &&
-          n.drop(2).forall(_.isDigit) => n.drop(2).toInt }
-        .sorted
-    val cutoff = committed - keepVersions
-    val (dead, live) = ivs.partition(_ <= cutoff)
-    dead.foreach { v =>
-      fs.delete(new org.apache.hadoop.fs.Path(s"$root/$CodesTable/iv$v"),
-        true)
-    }
-    CodesVacuumReport(committed, dead, live)
+    val r = specRow(spark, root, version)
+    (r.getString(0), r.getLong(1).toInt, r.getLong(2).toInt)
   }
 }

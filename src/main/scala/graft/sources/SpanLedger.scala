@@ -131,10 +131,10 @@ object SpanLedger {
       try {
         // store append FIRST so the subtree exists; the `< epoch`
         // bound keeps the just-landed delta out of its own ref side
-        SpanStore.appendDigestsEpoch(inc, storeRoot, specVersion, w,
+        SpanStore.level(w).appendEpoch(inc, storeRoot, specVersion,
           epoch)
-        val ref = SpanStore.readDigestsBefore(spark, storeRoot,
-          specVersion, w, epoch)
+        val ref = SpanStore.level(w).readBefore(spark, storeRoot,
+          specVersion, epoch)
         appendFiredEpoch(
           graft.operators.Dedup.firedWindowDeltas(ref, inc),
           ledgerRoot, w, epoch)

@@ -1,32 +1,25 @@
 package graft.sources
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 
 /** Versioned SPAN-DIGEST persistence (C125) — the stored-code
-  * discipline ([[ImageCodeStore]]/[[AudioCodeStore]]/[[TextSigStore]])
-  * applied to the sub-document dedup family: the r15 stage probe
-  * (`C76_STAGES_local_r15.json`) showed the c27/c76 100x cost is the
+  * discipline applied to the sub-document dedup family: the r15 stage
+  * probe (`C76_STAGES_local_r15.json`) showed the c27/c76 cost is the
   * map-side DIGEST passes — tokenize + stride-1 window md5 over every
   * byte of text, once per level, once per QUERY. A stored digest table
   * pays that pass once per NEW document per level; what remains at
-  * serve time is the count aggregate and the hinted shuffle join —
-  * the only stages a span-dedup question inherently needs.
+  * serve time is the count aggregate and the hinted shuffle join.
   *
-  * Two pieces, the house pattern:
+  * An [[EpochStore]] with one data table per ladder level:
   *
-  *   - `span_digest_spec`: ONE KB-sized row describing the digest
-  *     ladder (family + the strictly-increasing width list) published
-  *     through [[MultiPublish]] — a width-w digest only counts against
-  *     digests of the SAME width and tokenizer, so a ladder change
-  *     must be a new VERSION, not a silent re-interpretation.
-  *   - `span_digests/pv<version>/w<width>/`: one corpus-scale digest
-  *     table PER LEVEL — the exact
-  *     [[graft.operators.Dedup.spanDigestRows]] output ((id, pos, h))
-  *     — appended one ingest epoch at a time under the D8
-  *     epoch-partition rule, keyed by spec version (the C85 key
-  *     space). A duplicated replay epoch would be VISIBLE (every
-  *     window's n_occ doubles, flipping the whole corpus to
+  *   - `span_digest_spec`: ONE row (family + the strictly-increasing
+  *     width list as "8,16,32") — a width-w digest only counts against
+  *     digests of the SAME width and tokenizer, so a ladder change is a
+  *     new VERSION.
+  *   - `span_digests/pv<version>/w<width>/`: per level (see [[level]])
+  *     the exact [[graft.operators.Dedup.spanDigestRows]] output
+  *     ((id, pos, h)). A duplicated replay epoch would be VISIBLE
+  *     (every window's n_occ doubles, flipping the whole corpus to
   *     duplicated), which is exactly why the c125 oracle — the c76
   *     replay unchanged — cannot be fooled by one.
   *
@@ -34,157 +27,74 @@ import org.apache.spark.sql.functions._
   * round-trips parquet bit-exactly and counts-from-stored ≡
   * counts-from-compute BY CONSTRUCTION (both paths feed
   * [[graft.operators.Dedup.duplicatedSpansFromDigests]] verbatim).
-  *
-  * At 100 TB: the digest table is window-count-sized (~40 B/window ×
-  * levels — comparable to the text, the price of sub-document
-  * granularity), but serving SCANS it instead of recomputing it: the
-  * tokenize+digest map stages — the measured majority of the c76
-  * quiet profile — leave the per-query plan entirely. An ingest epoch
-  * digests only its delta.
+  * [[vacuumRetired]] removes a retired `pv<N>` tree whole, all width
+  * subtrees included.
   */
-object SpanStore {
-
-  val SpecTable = "span_digest_spec"
-  val DigestsTable = "span_digests"
-
-  /** The spec table: one row — (family, widths as "8,16,32"). */
-  def specFrame(spark: SparkSession, family: String,
-                widths: Seq[Int]): DataFrame = {
-    import spark.implicits._
-    Seq((family, widths.mkString(","))).toDF("family", "widths")
-  }
+object SpanStore extends EpochStore(
+    "span_digest_spec", Seq("family", "widths"),
+    "span_digests", "pv", Nil, None) {
 
   /** Publish one digest-ladder spec as a new committed version under
-    * `root`. Audits: exactly one row; non-empty family; a parseable,
-    * non-empty, strictly-increasing width list with every width ≥ 2
-    * (the [[graft.operators.Dedup.multiScaleSpans]] contract).
+    * `root`.
     */
   def publishSpec(spark: SparkSession, root: String, family: String,
                   widths: Seq[Int],
                   batchId: Option[Long] = None): MultiPublish.MultiReport = {
-    val specAudit: Wap.Audit = ("spec_wellformed", df => {
-      val rows = df.select(col("family"), col("widths")).collect()
-      if (rows.length != 1)
-        Some(s"spec must be exactly one row, got ${rows.length}")
-      else {
-        val ws = rows.head.getString(1).split(',').toSeq
-          .filter(_.nonEmpty).map(_.toInt)
-        if (rows.head.getString(0).isEmpty) Some("empty digest family")
-        else if (ws.isEmpty) Some("empty width ladder")
-        else if (ws.exists(_ < 2)) Some(s"widths $ws must all be >= 2")
-        else if (ws != ws.sorted || ws.distinct != ws)
-          Some(s"widths $ws must be strictly increasing")
-        else None
-      }
-    })
-    MultiPublish.publishAll(spark, Map(
-      SpecTable -> ((specFrame(spark, family, widths),
-        Seq(Wap.minRows(1), specAudit)))),
-      root, batchId)
+    import spark.implicits._
+    publish(spark, root,
+      Seq((family, widths.mkString(","))).toDF("family", "widths"), batchId)
   }
 
-  /** The COMMITTED spec version — the default pin for a serving
-    * session.
+  private def ladder(spec: Row): Seq[Int] =
+    spec.getString(1).split(',').toSeq.filter(_.nonEmpty).map(_.toInt)
+
+  /** Non-empty family; a parseable, non-empty, strictly-increasing
+    * width list with every width ≥ 2 (the
+    * [[graft.operators.Dedup.multiScaleSpans]] contract).
     */
-  def committedSpecVersion(spark: SparkSession, root: String): Int =
-    MultiPublish.commitVersions(spark, root).getOrElse(SpecTable,
-      throw new IllegalStateException(s"no committed $SpecTable under $root"))
+  protected def wellformed(spec: Row): Option[String] = {
+    val ws = ladder(spec)
+    if (spec.getString(0).isEmpty) Some("empty digest family")
+    else if (ws.isEmpty) Some("empty width ladder")
+    else if (ws.exists(_ < 2)) Some(s"widths $ws must all be >= 2")
+    else if (ws != ws.sorted || ws.distinct != ws)
+      Some(s"widths $ws must be strictly increasing")
+    else None
+  }
 
   /** Load an explicit spec version: (family, widths). */
   def loadSpecAt(spark: SparkSession, root: String,
                  version: Int): (String, Seq[Int]) = {
-    val rows = MultiPublish.readVersion(spark, root, SpecTable, version)
-      .select("family", "widths").collect()
-    require(rows.length == 1,
-      s"$SpecTable v$version must be one row, got ${rows.length}")
-    (rows.head.getString(0),
-      rows.head.getString(1).split(',').toSeq.map(_.toInt))
+    val r = specRow(spark, root, version)
+    (r.getString(0), ladder(r))
   }
 
-  /** Append one ingest epoch's digest rows at one width
-    * ([[graft.operators.Dedup.spanDigestRows]] output) under the D8
-    * epoch-partition rule, keyed by (spec version, width) — the C82
-    * incremental step on the span surface: only the DELTA is digested,
-    * ever.
+  /** The digest table of ladder level `w`: (id, pos, h) rows under
+    * `pv<version>/w<w>`, appended and read one level at a time.
     */
-  def appendDigestsEpoch(digests: DataFrame, root: String,
-                         specVersion: Int, w: Int, epoch: Long): Unit = {
-    require(specVersion >= 1, s"specVersion $specVersion < 1")
+  def level(w: Int): EpochStore = {
     require(w >= 2, s"width $w < 2")
-    // r15 advice: an UNDECLARED width appended under a published spec
-    // version would land silently and never serve (readDigests walks
-    // the declared ladder only) — when the target spec version is
-    // already published, the append must fail loudly instead. A
-    // backfill running AHEAD of its spec publish (the blue/green flip
-    // pattern: pv2 digests land while v1 is still the only published
-    // spec) is exempt — its widths are validated by every post-publish
-    // replay and by serving reads.
-    if (MultiPublish.versionExists(digests.sparkSession, root, SpecTable,
-        specVersion)) {
-      val (_, widths) = loadSpecAt(digests.sparkSession, root, specVersion)
-      require(widths.contains(w),
-        s"width $w is not in spec v$specVersion's declared ladder " +
-          s"${widths.mkString("{", ",", "}")} — a mis-keyed append " +
-          "would silently never serve")
+    new EpochStore(specTable, Seq("family", "widths"), dataTable, "pv",
+        Seq("id", "pos", "h"), Some(w)) {
+      protected def wellformed(spec: Row): Option[String] =
+        SpanStore.wellformed(spec)
+
+      /** An UNDECLARED width appended under a published spec version
+        * would land silently and never serve (serving walks the
+        * declared ladder only) — when the target spec version is
+        * already published, the append fails loudly instead.
+        */
+      override protected def stored(digests: DataFrame, root: String,
+                                    version: Int): DataFrame = {
+        publishedSpec(digests.sparkSession, root, version).foreach { spec =>
+          val widths = ladder(spec)
+          require(widths.contains(w),
+            s"width $w is not in spec v$version's declared ladder " +
+              s"${widths.mkString("{", ",", "}")} — a mis-keyed append " +
+              "would silently never serve")
+        }
+        super.stored(digests, root, version)
+      }
     }
-    graft.streaming.EventStreams.epochIdempotentSink(
-      digests.select("id", "pos", "h"),
-      epoch, s"$root/$DigestsTable/pv$specVersion/w$w")
-  }
-
-  /** All digest epochs stored under ONE (spec version, width), as one
-    * serving frame — a span-dedup query's count input, no tokenizer or
-    * digest compute anywhere in its plan.
-    */
-  def readDigests(spark: SparkSession, root: String, specVersion: Int,
-                  w: Int): DataFrame =
-    spark.read.parquet(s"$root/$DigestsTable/pv$specVersion/w$w")
-      .select("id", "pos", "h")
-
-  /** The digest epochs STRICTLY BEFORE `epochExclusive` at one
-    * (spec version, width) — the C137 incremental contract's ref side:
-    * partition pruning on the D8 epoch key bounds a delta computation
-    * to "the corpus as it stood when this epoch arrived", which is
-    * also what makes a redelivered epoch recompute the identical
-    * delta (later epochs that landed in the meantime are invisible).
-    */
-  def readDigestsBefore(spark: SparkSession, root: String,
-                        specVersion: Int, w: Int,
-                        epochExclusive: Long): DataFrame =
-    spark.read.parquet(s"$root/$DigestsTable/pv$specVersion/w$w")
-      .where(col("__epoch") < epochExclusive)
-      .select("id", "pos", "h")
-
-  /** [[vacuumRetiredDigests]] accounting. */
-  case class DigestsVacuumReport(committed: Int, removed: Seq[Int],
-                                 kept: Seq[Int])
-
-  /** Retire dead digest key spaces after a completed spec rollover
-    * (the C110/C116/C120 rule on the span surface): removes every
-    * `pv<N>` tree — ALL its width subtrees — with N ≤ committed −
-    * keepVersions; refuses the committed version, in-flight newer
-    * keys, and the keep window. Idempotent.
-    */
-  def vacuumRetiredDigests(spark: SparkSession, root: String,
-                           keepVersions: Int = 1): DigestsVacuumReport = {
-    require(keepVersions >= 1, s"keepVersions $keepVersions < 1")
-    val committed = committedSpecVersion(spark, root)
-    val digRoot = new org.apache.hadoop.fs.Path(s"$root/$DigestsTable")
-    val fs = digRoot.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val pvs =
-      if (!fs.exists(digRoot)) Seq.empty[Int]
-      else fs.listStatus(digRoot).toSeq
-        .filter(_.isDirectory)
-        .map(_.getPath.getName)
-        .collect { case n if n.startsWith("pv") &&
-          n.drop(2).forall(_.isDigit) => n.drop(2).toInt }
-        .sorted
-    val cutoff = committed - keepVersions
-    val (dead, live) = pvs.partition(_ <= cutoff)
-    dead.foreach { v =>
-      fs.delete(new org.apache.hadoop.fs.Path(s"$root/$DigestsTable/pv$v"),
-        true)
-    }
-    DigestsVacuumReport(committed, dead, live)
   }
 }

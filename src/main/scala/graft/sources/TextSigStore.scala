@@ -1,205 +1,94 @@
 package graft.sources
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Versioned TEXT MinHash-signature persistence (C119) — the
-  * [[ImageCodeStore]]/[[AudioCodeStore]] stored-code discipline applied
-  * to the LARGEST modality of all: every text dedup query (c2's LSH
-  * pairs, c13's clusters, c118's cross-modal verdict) was re-running
-  * the full-corpus MinHashSigExpr pass — normalize + tokenize +
-  * shingle chain-hash + k running minima over every byte of text —
-  * inside every run. At 100 TB of documents that pass IS the query
-  * cost; paying it once per NEW document (an append-only epoch)
-  * instead of once per query is the entire point of a signature store.
+  * stored-code discipline applied to the LARGEST modality of all: every
+  * text dedup query (c2's LSH pairs, c13's clusters, c118's cross-modal
+  * verdict) was re-running the full-corpus MinHashSigExpr pass —
+  * normalize + tokenize + shingle chain-hash + k running minima over
+  * every byte of text — inside every run. Paying it once per NEW
+  * document (an append-only epoch) instead of once per query is the
+  * entire point of a signature store.
   *
-  * Two pieces, mirroring the image/audio stores:
+  * An [[EpochStore]]:
   *
-  *   - `text_sig_spec`: ONE KB-sized row describing the signature
-  *     algorithm (family, k, bands, shingle width) published through
-  *     [[MultiPublish]] — a signature is only comparable against
-  *     signatures minhashed from the SAME shingle universe with the
-  *     SAME k, so a spec change (say k 64 → 128, or word → char
-  *     shingles) must be a new VERSION, not a silent re-interpretation
-  *     of stored arrays. Audits refuse a structurally impossible spec
-  *     at publish (bands must divide k — the pigeonhole guarantee of
-  *     the banded join is only sound on equal-width bands).
-  *   - `text_sigs/sv<version>/`: the corpus-scale signature table —
-  *     the exact [[graft.operators.Dedup.minhashSigRows]] output
-  *     ((doc_id, sig: array<long> of k exact minima)) — appended one
-  *     ingest epoch at a time under the D8 epoch-partition rule: a
-  *     replayed epoch overwrites its own partition with bit-identical
-  *     rows, so exactly-once holds under at-least-once delivery.
-  *     Signatures are keyed by spec version (the C85 key space): a new
-  *     spec backfills its own `sv` tree while the old one keeps
-  *     serving.
+  *   - `text_sig_spec`: ONE row (family, k, bands, shingle width) — a
+  *     signature is only comparable against signatures minhashed from
+  *     the SAME shingle universe with the SAME k, so a spec change (say
+  *     k 64 → 128) is a new VERSION. The audit refuses a structurally
+  *     impossible spec (bands must divide k).
+  *   - `text_sigs/sv<version>/`: the exact
+  *     [[graft.operators.Dedup.minhashSigRows]] output ((doc_id, sig:
+  *     array<long> of k exact minima)).
   *
   * Every stored value is an exact long, so the table round-trips
   * parquet bit-exactly and pairs-from-stored ≡ pairs-from-compute BY
   * CONSTRUCTION (both paths feed
   * [[graft.operators.Dedup.minhashPairsFromSigs]] verbatim) — the
   * property TextSigStoreSpec locks and the c119 oracle (the c2 planted
-  * replay, unchanged) rests on.
-  *
-  * At 100 TB: serving reads 8·k bytes/doc (512 B at k=64) instead of
-  * re-tokenizing text; an ingest epoch signs only its delta. The only
-  * corpus-scale passes left in a dedup query are the banded equi-join
-  * and the candidate-pruned verify.
+  * replay, unchanged) rests on. Serving reads 8·k bytes/doc instead of
+  * re-tokenizing text.
   */
-object TextSigStore {
-
-  val SpecTable = "text_sig_spec"
-  val SigsTable = "text_sigs"
-
-  /** The spec table: one row — (family, k, bands, shingle_w). */
-  def specFrame(spark: SparkSession, family: String, k: Int, bands: Int,
-                shingleW: Int): DataFrame = {
-    import spark.implicits._
-    Seq((family, k.toLong, bands.toLong, shingleW.toLong))
-      .toDF("family", "k", "bands", "shingle_w")
-  }
+object TextSigStore extends EpochStore(
+    "text_sig_spec", Seq("family", "k", "bands", "shingle_w"),
+    "text_sigs", "sv", Seq("doc_id", "sig"), None) {
 
   /** Publish one signature spec as a new committed version under
-    * `root`. Audits: exactly one row; non-empty family; k in
-    * [bands, 4096] with bands ≥ 1 dividing k evenly (equal-width
-    * bands — the banded join's pigeonhole guarantee); shingle width in
-    * [1, 16].
+    * `root`.
     */
   def publishSpec(spark: SparkSession, root: String, family: String,
                   k: Int = 64, bands: Int = 16, shingleW: Int = 3,
                   batchId: Option[Long] = None): MultiPublish.MultiReport = {
-    val specAudit: Wap.Audit = ("spec_wellformed", df => {
-      val rows = df.select(col("family"), col("k"), col("bands"),
-        col("shingle_w")).collect()
-      if (rows.length != 1)
-        Some(s"spec must be exactly one row, got ${rows.length}")
-      else {
-        val kk = rows.head.getLong(1)
-        val b = rows.head.getLong(2)
-        val w = rows.head.getLong(3)
-        if (rows.head.getString(0).isEmpty) Some("empty signature family")
-        else if (kk < 1 || kk > 4096) Some(s"k $kk outside [1, 4096]")
-        else if (b < 1 || kk % b != 0)
-          Some(s"bands $b do not divide k $kk evenly")
-        else if (w < 1 || w > 16)
-          Some(s"shingle width $w outside [1, 16]")
-        else None
-      }
-    })
-    MultiPublish.publishAll(spark, Map(
-      SpecTable -> ((specFrame(spark, family, k, bands, shingleW),
-        Seq(Wap.minRows(1), specAudit)))),
-      root, batchId)
+    import spark.implicits._
+    publish(spark, root,
+      Seq((family, k.toLong, bands.toLong, shingleW.toLong))
+        .toDF("family", "k", "bands", "shingle_w"), batchId)
   }
 
-  /** The COMMITTED spec version — the default pin for a serving
-    * session.
+  /** Non-empty family; k in [1, 4096] with bands ≥ 1 dividing k evenly
+    * (equal-width bands — the banded join's pigeonhole guarantee);
+    * shingle width in [1, 16].
     */
-  def committedSpecVersion(spark: SparkSession, root: String): Int =
-    MultiPublish.commitVersions(spark, root).getOrElse(SpecTable,
-      throw new IllegalStateException(s"no committed $SpecTable under $root"))
+  protected def wellformed(spec: Row): Option[String] = {
+    val kk = spec.getLong(1)
+    val b = spec.getLong(2)
+    val w = spec.getLong(3)
+    if (spec.getString(0).isEmpty) Some("empty signature family")
+    else if (kk < 1 || kk > 4096) Some(s"k $kk outside [1, 4096]")
+    else if (b < 1 || kk % b != 0)
+      Some(s"bands $b do not divide k $kk evenly")
+    else if (w < 1 || w > 16)
+      Some(s"shingle width $w outside [1, 16]")
+    else None
+  }
 
   /** Load an explicit spec version: (family, k, bands, shingleW). */
   def loadSpecAt(spark: SparkSession, root: String,
                  version: Int): (String, Int, Int, Int) = {
-    val rows = MultiPublish.readVersion(spark, root, SpecTable, version)
-      .select("family", "k", "bands", "shingle_w").collect()
-    require(rows.length == 1,
-      s"$SpecTable v$version must be one row, got ${rows.length}")
-    (rows.head.getString(0), rows.head.getLong(1).toInt,
-      rows.head.getLong(2).toInt, rows.head.getLong(3).toInt)
+    val r = specRow(spark, root, version)
+    (r.getString(0), r.getLong(1).toInt, r.getLong(2).toInt,
+      r.getLong(3).toInt)
   }
 
-  /** Append one ingest epoch's signature rows
-    * ([[graft.operators.Dedup.minhashSigRows]] output) under the D8
-    * epoch-partition rule, keyed by spec version — the C82 incremental
-    * step on the text surface: only the DELTA is tokenized, ever.
+  /** A k=32 signature appended under a k=64 sv key would land silently
+    * and never band (slice() past the array end yields short bands) —
+    * when the target spec version is already published, a row-local
+    * raise_error guard rides the write pass (zero extra scans) so a
+    * mis-keyed append fails loudly instead of degrading recall
+    * silently.
     */
-  def appendSigsEpoch(sigs: DataFrame, root: String, specVersion: Int,
-                      epoch: Long): Unit = {
-    require(specVersion >= 1, s"specVersion $specVersion < 1")
-    // r15 advice: a k=32 signature appended under a k=64 sv key would
-    // land silently and never band (slice() past the array end yields
-    // short bands) — when the target spec version is already published,
-    // a row-local raise_error guard rides the write pass (zero extra
-    // scans) so a mis-keyed append fails loudly instead of degrading
-    // recall silently. A backfill running AHEAD of its spec publish
-    // (the blue/green flip pattern) is exempt — its k is validated by
-    // every post-publish replay.
-    val guarded =
-      (if (MultiPublish.versionExists(sigs.sparkSession, root, SpecTable,
-          specVersion))
-        Some(loadSpecAt(sigs.sparkSession, root, specVersion))
-      else None) match {
-        case Some((_, k, _, _)) =>
-          sigs.select(col("doc_id"),
-            when(size(col("sig")) === k, col("sig"))
-              .otherwise(raise_error(concat(
-                lit(s"sig length != spec v$specVersion k=$k for doc "),
-                col("doc_id")))).as("sig"))
-        case None => sigs.select(col("doc_id"), col("sig"))
-      }
-    graft.streaming.EventStreams.epochIdempotentSink(
-      guarded, epoch, s"$root/$SigsTable/sv$specVersion")
-  }
-
-  /** All signature epochs stored under ONE spec version, as one serving
-    * frame — a dedup query's banding input, no tokenizer anywhere in
-    * its plan.
-    */
-  def readSigs(spark: SparkSession, root: String,
-               specVersion: Int): DataFrame =
-    spark.read.parquet(s"$root/$SigsTable/sv$specVersion")
-      .select("doc_id", "sig")
-
-  /** The signature rows of epochs STRICTLY BEFORE `epochExclusive` —
-    * the D49 pair ledger's replay-stable reference side ("the corpus
-    * as it stood when this epoch arrived"): partition pruning on the
-    * D8 epoch key, so a redelivered epoch sees the same reference set
-    * it saw on first delivery even though later epochs have landed.
-    */
-  def readSigsBefore(spark: SparkSession, root: String, specVersion: Int,
-                     epochExclusive: Long): DataFrame =
-    spark.read.parquet(s"$root/$SigsTable/sv$specVersion")
-      .where(col("__epoch") < epochExclusive)
-      .select("doc_id", "sig")
-
-  /** [[vacuumRetiredSigs]] accounting — the pointer the decision was
-    * made against, the version keys removed, and the ones kept.
-    */
-  case class SigsVacuumReport(committed: Int, removed: Seq[Int],
-                              kept: Seq[Int])
-
-  /** Retire dead signature key spaces after a completed spec rollover
-    * (C120 — the ImageCodeStore C110 rule on the text surface): once
-    * serving has flipped to the committed spec version, older versions'
-    * signatures are corpus-sized dead weight. Removes every `sv<N>`
-    * tree with N ≤ committed − keepVersions; REFUSES to touch the
-    * committed version, anything newer (an in-flight backfill for the
-    * NEXT rollover), or anything inside the keepVersions window. The
-    * spec table itself stays readable for time travel — it is one row;
-    * the signature rows are the bytes that matter. Idempotent.
-    */
-  def vacuumRetiredSigs(spark: SparkSession, root: String,
-                        keepVersions: Int = 1): SigsVacuumReport = {
-    require(keepVersions >= 1, s"keepVersions $keepVersions < 1")
-    val committed = committedSpecVersion(spark, root)
-    val sigsRoot = new org.apache.hadoop.fs.Path(s"$root/$SigsTable")
-    val fs = sigsRoot.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val svs =
-      if (!fs.exists(sigsRoot)) Seq.empty[Int]
-      else fs.listStatus(sigsRoot).toSeq
-        .filter(_.isDirectory)
-        .map(_.getPath.getName)
-        .collect { case n if n.startsWith("sv") &&
-          n.drop(2).forall(_.isDigit) => n.drop(2).toInt }
-        .sorted
-    val cutoff = committed - keepVersions
-    val (dead, live) = svs.partition(_ <= cutoff)
-    dead.foreach { v =>
-      fs.delete(new org.apache.hadoop.fs.Path(s"$root/$SigsTable/sv$v"),
-        true)
+  override protected def stored(sigs: DataFrame, root: String,
+                                version: Int): DataFrame =
+    publishedSpec(sigs.sparkSession, root, version) match {
+      case Some(spec) =>
+        val k = spec.getLong(1).toInt
+        sigs.select(col("doc_id"),
+          when(size(col("sig")) === k, col("sig"))
+            .otherwise(raise_error(concat(
+              lit(s"sig length != spec v$version k=$k for doc "),
+              col("doc_id")))).as("sig"))
+      case None => super.stored(sigs, root, version)
     }
-    SigsVacuumReport(committed, dead, live)
-  }
 }

@@ -74,11 +74,11 @@ object VerdictStream {
     EventStreams.epochIdempotentSink(
       batch.select("doc_id", "text"), epochId, r.docsSeen)
     // 2. delta-sized artifact ingest into the three stores
-    TextSigStore.appendSigsEpoch(
+    TextSigStore.appendEpoch(
       Dedup.minhashSigRows(batch, "text", "doc_id"), r.sigs, 1, epochId)
     val originals = batch.where(col("doc_id") < RecrawlOffset)
       .select("doc_id")
-    ImageCodeStore.appendCodesEpoch(
+    ImageCodeStore.appendEpoch(
       ImageDedup.blockhashCodes(s,
         ImageDedup.packImageVariants(s, originals, "doc_id")),
       r.images, 1, epochId)
@@ -87,7 +87,7 @@ object VerdictStream {
     val clips = wavs.unionByName(Audio.gainWav(s,
       wavs.where(pmod(col("media_id"), lit(7)) === 0)
         .withColumn("media_id", col("media_id") + lit(3000000L))))
-    AudioCodeStore.appendCodesEpoch(
+    AudioCodeStore.appendEpoch(
       Audio.chainedLandmarkRows(s, clips), r.audio, 1, epochId)
     // 3. verdicts from the stores so far; 4. versioned publish
     //    (replay-skipped by the batch watermark)
@@ -105,17 +105,17 @@ object VerdictStream {
   def verdictsFromStores(s: SparkSession, r: Roots): DataFrame = {
     val docsSeen = s.read.parquet(r.docsSeen)
     val textDup = Dedup.minhashPairsFromSigs(
-        TextSigStore.readSigs(s, r.sigs, 1), docsSeen, "text", "doc_id")
+        TextSigStore.read(s, r.sigs, 1), docsSeen, "text", "doc_id")
       .where(col("id_b") - col("id_a") === RecrawlOffset)
       .select(col("id_a").as("doc_id")).distinct()
     val ip = ImageDedup.perceptualPairs(
-        ImageCodeStore.readCodes(s, r.images, 1),
+        ImageCodeStore.read(s, r.images, 1),
         maxHamming = 3, hotBucketCap = 64)
       .select("id_a", "id_b")
     val ids = docsSeen.where(col("doc_id") < RecrawlOffset)
       .select(col("doc_id"))
     val imgDup = CrossModal.crossDocDups(ip, CrossModal.imageLinks(ids))
-    val stored = AudioCodeStore.readCodes(s, r.audio, 1)
+    val stored = AudioCodeStore.read(s, r.audio, 1)
     val meta = stored.where(col("anchor") === -1)
       .select("media_id", "n_samples")
     val ap = Audio.chainedPairsFromCodes(stored, minShared = 4)
@@ -191,16 +191,16 @@ object VerdictStream {
         .withColumn("media_id", col("media_id") + lit(3000000L))))
     val audCodes = Audio.chainedLandmarkRows(s, clips).persist()
     try {
-      TextSigStore.appendSigsEpoch(sigs, r.sigs, 1, epochId)
-      ImageCodeStore.appendCodesEpoch(imgCodes, r.images, 1, epochId)
-      AudioCodeStore.appendCodesEpoch(audCodes, r.audio, 1, epochId)
+      TextSigStore.appendEpoch(sigs, r.sigs, 1, epochId)
+      ImageCodeStore.appendEpoch(imgCodes, r.images, 1, epochId)
+      AudioCodeStore.appendEpoch(audCodes, r.audio, 1, epochId)
       // 3. delta pairs per modality → ledger (D8). Every ref side is
       //    bounded to epochs STRICTLY BEFORE this one (partition
       //    pruning on the D8 key): "the corpus as it stood when this
       //    epoch arrived" — which is also what makes a redelivery
       //    recompute the identical delta (later epochs that landed in
       //    the meantime are invisible to the replayed ref side).
-      val refSigs = TextSigStore.readSigsBefore(s, r.sigs, 1, epochId)
+      val refSigs = TextSigStore.readBefore(s, r.sigs, 1, epochId)
       val refDocs = s.read.parquet(r.docsSeen)
         .where(col("__epoch") < epochId).select("doc_id", "text")
       val textCross = Dedup.minhashCrossPairsFromSigs(
@@ -211,7 +211,7 @@ object VerdictStream {
         .select("id_a", "id_b")
       PairLedger.appendPairsEpoch(textCross.unionByName(textWithin),
         pairsRoot, "text", epochId)
-      val refImg = ImageCodeStore.readCodesBefore(s, r.images, 1, epochId)
+      val refImg = ImageCodeStore.readBefore(s, r.images, 1, epochId)
       val imgCross = ImageDedup.perceptualCrossPairs(refImg, imgCodes,
           maxHamming = 3, hotBucketCap = 64)
         .select(col("ref_id").as("id_a"), col("inc_id").as("id_b"))
@@ -221,7 +221,7 @@ object VerdictStream {
       PairLedger.appendPairsEpoch(imgCross.unionByName(imgWithin),
         pairsRoot, "image", epochId)
       // audio: duration-blocked (the c105 contract) on BOTH arms
-      val refAud = AudioCodeStore.readCodesBefore(s, r.audio, 1, epochId)
+      val refAud = AudioCodeStore.readBefore(s, r.audio, 1, epochId)
       def metaOf(codes: DataFrame) = codes.where(col("anchor") === -1)
         .select("media_id", "n_samples")
       val refMeta = metaOf(refAud)

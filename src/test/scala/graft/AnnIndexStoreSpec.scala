@@ -6,7 +6,7 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.operators.{PqIndex, Similarity}
-import graft.sources.{AnnIndexStore, MultiPublish}
+import graft.sources.{AnnIndexStore, EpochStore, MultiPublish}
 
 /** C81 contracts: a published-then-loaded index serves HASH-IDENTICAL
   * top-k to the in-memory build, versions advance atomically across
@@ -81,9 +81,9 @@ class AnnIndexStoreSpec extends AnyFunSuite with SparkSpec {
         "vec_id", "embedding", cells, pq)
       val ep1 = Similarity.encodeCodes(corpus.where(col("vec_id") % 2 === 1),
         "vec_id", "embedding", cells, pq)
-      AnnIndexStore.appendCodesEpoch(ep0, root, iv, 0L)
-      AnnIndexStore.appendCodesEpoch(ep1, root, iv, 1L)
-      AnnIndexStore.appendCodesEpoch(ep1, root, iv, 1L) // replay, per key
+      AnnIndexStore.Codes.appendEpoch(ep0, root, iv, 0L)
+      AnnIndexStore.Codes.appendEpoch(ep1, root, iv, 1L)
+      AnnIndexStore.Codes.appendEpoch(ep1, root, iv, 1L) // replay, per key
     }
     val (c1, p1) = Similarity.buildIvfpqIndex(
       corpus, "vec_id", "embedding", nLists = 4, m = 8, kCodes = 8)
@@ -91,7 +91,7 @@ class AnnIndexStoreSpec extends AnyFunSuite with SparkSpec {
     assert(AnnIndexStore.committedVersion(s, root) === 1)
     ingest(c1, p1, 1)
     val blueBefore = Similarity.ivfpqTopKFromCodes(
-      AnnIndexStore.readCodes(s, root, 1), queries, "vec_id", "embedding",
+      AnnIndexStore.Codes.read(s, root, 1), queries, "vec_id", "embedding",
       c1, p1, k = 5, nProbe = 4)
       .orderBy("query_id", "rnk").collect().map(_.toSeq).toSeq
     // ROLLOVER: rebuilt index (different codebooks) publishes as v2
@@ -103,7 +103,7 @@ class AnnIndexStoreSpec extends AnyFunSuite with SparkSpec {
     // the v1 pin is UNCHANGED by the rollover — same rows, same ranks
     val (lc1, lp1) = AnnIndexStore.loadAt(s, root, 1)
     val blueAfter = Similarity.ivfpqTopKFromCodes(
-      AnnIndexStore.readCodes(s, root, 1), queries, "vec_id", "embedding",
+      AnnIndexStore.Codes.read(s, root, 1), queries, "vec_id", "embedding",
       lc1, lp1, k = 5, nProbe = 4)
       .orderBy("query_id", "rnk").collect().map(_.toSeq).toSeq
     assert(blueAfter === blueBefore,
@@ -111,7 +111,7 @@ class AnnIndexStoreSpec extends AnyFunSuite with SparkSpec {
     // the v2 pin serves the rebuilt index exactly (≡ in-memory build)
     val (lc2, lp2) = AnnIndexStore.loadAt(s, root, 2)
     val green = Similarity.ivfpqTopKFromCodes(
-      AnnIndexStore.readCodes(s, root, 2), queries, "vec_id", "embedding",
+      AnnIndexStore.Codes.read(s, root, 2), queries, "vec_id", "embedding",
       lc2, lp2, k = 5, nProbe = 4)
       .orderBy("query_id", "rnk").collect().map(_.toSeq).toSeq
     val direct = Similarity.ivfpqTopKWith(corpus, queries, "vec_id",
@@ -121,8 +121,8 @@ class AnnIndexStoreSpec extends AnyFunSuite with SparkSpec {
     assert(green !== blueAfter,
       "rollover fixture must actually change rankings (kCodes 8 vs 12)")
     // code key spaces are disjoint: each version sees its own rows only
-    assert(AnnIndexStore.readCodes(s, root, 1).count() === 40L)
-    assert(AnnIndexStore.readCodes(s, root, 2).count() === 40L)
+    assert(AnnIndexStore.Codes.read(s, root, 1).count() === 40L)
+    assert(AnnIndexStore.Codes.read(s, root, 2).count() === 40L)
     // default load follows the pointer (v2), loadAt pins history
     val (lcDef, _) = AnnIndexStore.load(s, root)
     assert(lcDef.cents.map(_.toSeq).toSeq === c2.cents.map(_.toSeq).toSeq)
@@ -133,7 +133,7 @@ class AnnIndexStoreSpec extends AnyFunSuite with SparkSpec {
     val root = Files.createTempDirectory("graft_c86").toString
     def ingest(cells: graft.operators.L2Cells,
                pq: graft.operators.PqIndex, iv: Int): Unit =
-      AnnIndexStore.appendCodesEpoch(
+      AnnIndexStore.Codes.appendEpoch(
         Similarity.encodeCodes(corpus, "vec_id", "embedding", cells, pq),
         root, iv, 0L)
     val (c1, p1) = Similarity.buildIvfpqIndex(
@@ -148,32 +148,32 @@ class AnnIndexStoreSpec extends AnyFunSuite with SparkSpec {
     // codes landing before its publish) — the vacuum must not touch it
     ingest(c2, p2, 3)
     // keepVersions = 2: the rollback pin survives, nothing dies yet
-    val rep2 = AnnIndexStore.vacuumRetiredCodes(s, root, keepVersions = 2)
-    assert(rep2 === AnnIndexStore.CodesVacuumReport(2, Nil, Seq(1, 2, 3)),
+    val rep2 = AnnIndexStore.Codes.vacuumRetired(s, root, keepVersions = 2)
+    assert(rep2 === EpochStore.VacuumReport(2, Nil, Seq(1, 2, 3)),
       s"keepVersions=2 must keep the rollback pin: $rep2")
     // keepVersions = 1: exactly iv1 goes; committed (2) and in-flight
     // (3) stay
     val served2Before = Similarity.ivfpqTopKFromCodes(
-      AnnIndexStore.readCodes(s, root, 2),
+      AnnIndexStore.Codes.read(s, root, 2),
       corpus.where(col("vec_id") < 3), "vec_id", "embedding", c2, p2,
       k = 5, nProbe = 4).orderBy("query_id", "rnk")
       .collect().map(_.toSeq).toSeq
-    val rep1 = AnnIndexStore.vacuumRetiredCodes(s, root, keepVersions = 1)
-    assert(rep1 === AnnIndexStore.CodesVacuumReport(2, Seq(1), Seq(2, 3)),
+    val rep1 = AnnIndexStore.Codes.vacuumRetired(s, root, keepVersions = 1)
+    assert(rep1 === EpochStore.VacuumReport(2, Seq(1), Seq(2, 3)),
       s"keepVersions=1 must retire exactly iv1: $rep1")
     // retired key space is loudly unreadable; live ones are untouched
-    assertThrows[Exception] { AnnIndexStore.readCodes(s, root, 1).count() }
-    assert(AnnIndexStore.readCodes(s, root, 3).count() === corpus.count())
+    assertThrows[Exception] { AnnIndexStore.Codes.read(s, root, 1).count() }
+    assert(AnnIndexStore.Codes.read(s, root, 3).count() === corpus.count())
     val served2After = Similarity.ivfpqTopKFromCodes(
-      AnnIndexStore.readCodes(s, root, 2),
+      AnnIndexStore.Codes.read(s, root, 2),
       corpus.where(col("vec_id") < 3), "vec_id", "embedding", c2, p2,
       k = 5, nProbe = 4).orderBy("query_id", "rnk")
       .collect().map(_.toSeq).toSeq
     assert(served2After === served2Before,
       "committed-version serving changed across the vacuum")
     // idempotent: the rerun finds nothing below the cutoff
-    val rep1b = AnnIndexStore.vacuumRetiredCodes(s, root, keepVersions = 1)
-    assert(rep1b === AnnIndexStore.CodesVacuumReport(2, Nil, Seq(2, 3)))
+    val rep1b = AnnIndexStore.Codes.vacuumRetired(s, root, keepVersions = 1)
+    assert(rep1b === EpochStore.VacuumReport(2, Nil, Seq(2, 3)))
   }
 
   test("c82: serving from incrementally appended stored codes equals " +
@@ -187,10 +187,10 @@ class AnnIndexStoreSpec extends AnyFunSuite with SparkSpec {
     val ep1 = Similarity.encodeCodes(
       corpus.where(col("vec_id") % 2 === 1), "vec_id", "embedding",
       cells, pq)
-    AnnIndexStore.appendCodesEpoch(ep0, root, 1, 0L)
-    AnnIndexStore.appendCodesEpoch(ep1, root, 1, 1L)
-    AnnIndexStore.appendCodesEpoch(ep1, root, 1, 1L) // at-least-once replay
-    val stored = AnnIndexStore.readCodes(s, root, 1)
+    AnnIndexStore.Codes.appendEpoch(ep0, root, 1, 0L)
+    AnnIndexStore.Codes.appendEpoch(ep1, root, 1, 1L)
+    AnnIndexStore.Codes.appendEpoch(ep1, root, 1, 1L) // at-least-once replay
+    val stored = AnnIndexStore.Codes.read(s, root, 1)
     assert(stored.count() === corpus.count(),
       "replayed epoch must not duplicate rows")
     val queries = corpus.where(col("vec_id") < 3)
@@ -223,24 +223,27 @@ class AnnIndexStoreSpec extends AnyFunSuite with SparkSpec {
     }
     val src = s.readStream.schema(corpus.schema)
       .option("maxFilesPerTrigger", "1").parquet(staged.toString)
-    val q = graft.streaming.CodesStream.ingestSink(src, "vec_id",
-      "embedding", cells, pq, root,
-      Files.createTempDirectory("graft_d35_ck").toString)
+    val q = EpochStore.ingestSink(src,
+        Files.createTempDirectory("graft_d35_ck").toString) { (b, id) =>
+      AnnIndexStore.Codes.appendEpoch(
+        Similarity.encodeCodes(b, "vec_id", "embedding", cells, pq), root,
+        1, id)
+    }
     q.awaitTermination(120000)
-    val stored = AnnIndexStore.readCodes(s, root, 1)
+    val stored = AnnIndexStore.Codes.read(s, root, 1)
     assert(stored.count() === corpus.count())
     // sink-level replay: re-land epoch 2's batch directly — no-op
-    AnnIndexStore.appendCodesEpoch(
+    AnnIndexStore.Codes.appendEpoch(
       Similarity.encodeCodes(corpus.where(col("vec_id") % 3 === 2),
         "vec_id", "embedding", cells, pq), root, 1, 2L)
-    assert(AnnIndexStore.readCodes(s, root, 1).count() === corpus.count(),
+    assert(AnnIndexStore.Codes.read(s, root, 1).count() === corpus.count(),
       "replayed epoch must not duplicate rows")
     // streamed codes ≡ one-shot batch encode, row for row
     val batch = Similarity.encodeCodes(corpus, "vec_id", "embedding",
       cells, pq).collect()
       .map(r => (r.getLong(0), r.getInt(1),
         r.getSeq[Byte](2).toSeq)).toSet
-    val got = AnnIndexStore.readCodes(s, root, 1).collect()
+    val got = AnnIndexStore.Codes.read(s, root, 1).collect()
       .map(r => (r.getLong(0), r.getInt(1),
         r.getSeq[Byte](2).toSeq)).toSet
     assert(got === batch, "streamed code table diverged from batch encode")
@@ -253,7 +256,7 @@ class AnnIndexStoreSpec extends AnyFunSuite with SparkSpec {
     val root = Files.createTempDirectory("graft_d37").toString
     val (cells, pq) = Similarity.buildIvfpqIndex(
       corpus, "vec_id", "embedding", nLists = 4, m = 8, kCodes = 8)
-    AnnIndexStore.appendCodesEpoch(
+    AnnIndexStore.Codes.appendEpoch(
       Similarity.encodeCodes(corpus, "vec_id", "embedding", cells, pq),
       root, 1, 0L)
     val dir = s"$root/${AnnIndexStore.CodesTable}/iv1"
@@ -281,7 +284,7 @@ class AnnIndexStoreSpec extends AnyFunSuite with SparkSpec {
     // marks landed exactly; the code table itself is untouched (MoR)
     assert(DeletionVectors.deletes(s, dir).select("key").collect()
       .map(_.getLong(0)).toSet === deleted)
-    assert(AnnIndexStore.readCodes(s, root, 1).count() === corpus.count())
+    assert(AnnIndexStore.Codes.read(s, root, 1).count() === corpus.count())
     // serving honors the streamed tombstones
     val served = Similarity.ivfpqTopKFromCodes(
       AnnIndexStore.readCodesWithDeletes(s, root, 1),
@@ -362,7 +365,7 @@ class AnnIndexStoreSpec extends AnyFunSuite with SparkSpec {
     val corp = corpus.withColumn("label", (col("vec_id") % 3).cast("int"))
     val (cells, pq) = Similarity.buildIvfpqIndex(
       corp, "vec_id", "embedding", nLists = 4, m = 8, kCodes = 8)
-    AnnIndexStore.appendCodesEpoch(
+    AnnIndexStore.Codes.appendEpoch(
       Similarity.encodeCodes(corp, "vec_id", "embedding", cells, pq,
         attrCols = Seq("label")), root, 1, 0L)
     val codes = AnnIndexStore.readCodesWith(s, root, 1, Seq("label"))
@@ -397,14 +400,14 @@ class AnnIndexStoreSpec extends AnyFunSuite with SparkSpec {
     val root = Files.createTempDirectory("graft_c91").toString
     val (cells, pq) = Similarity.buildIvfpqIndex(
       corpus, "vec_id", "embedding", nLists = 4, m = 8, kCodes = 8)
-    AnnIndexStore.appendCodesEpoch(
+    AnnIndexStore.Codes.appendEpoch(
       Similarity.encodeCodes(corpus, "vec_id", "embedding", cells, pq),
       root, 1, 0L)
     val queries = corpus.where(col("vec_id") < 3)
     def serve(codes: org.apache.spark.sql.DataFrame) =
       Similarity.ivfpqTopKFromCodes(codes, queries, "vec_id", "embedding",
         cells, pq, k = 5, nProbe = 4)
-    val before = serve(AnnIndexStore.readCodes(s, root, 1))
+    val before = serve(AnnIndexStore.Codes.read(s, root, 1))
       .orderBy("query_id", "rnk").collect()
     // tombstone two ids that ARE currently served as neighbors
     val victims = before.map(_.getLong(1)).distinct.take(2).toSeq

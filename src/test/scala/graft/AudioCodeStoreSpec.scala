@@ -64,10 +64,10 @@ class AudioCodeStoreSpec extends AnyFunSuite with SparkSpec {
       .committed)
     val even = rows.where(pmod(col("media_id"), lit(2)) === 0)
     val odd = rows.where(pmod(col("media_id"), lit(2)) === 1)
-    AudioCodeStore.appendCodesEpoch(even, root, 1, 0L)
-    AudioCodeStore.appendCodesEpoch(odd, root, 1, 1L)
-    AudioCodeStore.appendCodesEpoch(odd, root, 1, 1L) // redelivery
-    val stored = AudioCodeStore.readCodes(s, root, 1)
+    AudioCodeStore.appendEpoch(even, root, 1, 0L)
+    AudioCodeStore.appendEpoch(odd, root, 1, 1L)
+    AudioCodeStore.appendEpoch(odd, root, 1, 1L) // redelivery
+    val stored = AudioCodeStore.read(s, root, 1)
     assert(stored.count() === rows.count(),
       "replayed epoch must not duplicate rows")
     val cols = Seq("media_id", "n_samples", "anchor", "line_a", "line_t")
@@ -94,9 +94,9 @@ class AudioCodeStoreSpec extends AnyFunSuite with SparkSpec {
     val root = freshRoot("serve")
     assert(AudioCodeStore.publishSpec(s, root, "chained_landmark", 128)
       .committed)
-    AudioCodeStore.appendCodesEpoch(rows, root, 1, 0L)
+    AudioCodeStore.appendEpoch(rows, root, 1, 0L)
     val fromStore = Audio
-      .chainedPairsFromCodes(AudioCodeStore.readCodes(s, root, 1), 4)
+      .chainedPairsFromCodes(AudioCodeStore.read(s, root, 1), 4)
       .orderBy("id_a", "id_b").collect().map(_.toSeq).toSeq
     val fromDecode = Audio.chainedFingerprintPairs(s, packed, minShared = 4)
       .orderBy("id_a", "id_b").collect().map(_.toSeq).toSeq
@@ -104,10 +104,10 @@ class AudioCodeStoreSpec extends AnyFunSuite with SparkSpec {
       "stored-landmark serving diverged from decode serving")
     assert(fromStore.nonEmpty, "vacuous pair set — no planted re-masters?")
     // a v2 backfill must be invisible to v1 readers (the C85 key space)
-    AudioCodeStore.appendCodesEpoch(rows.limit(5), root, 2, 0L)
-    assert(AudioCodeStore.readCodes(s, root, 1).count() === rows.count(),
+    AudioCodeStore.appendEpoch(rows.limit(5), root, 2, 0L)
+    assert(AudioCodeStore.read(s, root, 1).count() === rows.count(),
       "v2 landmarks leaked into the v1 key space")
-    assert(AudioCodeStore.readCodes(s, root, 2).count() === 5L)
+    assert(AudioCodeStore.read(s, root, 2).count() === 5L)
     // readMeta is the duration table, nothing else
     assert(AudioCodeStore.readMeta(s, root, 1).count() === packed.count())
   }
@@ -117,22 +117,22 @@ class AudioCodeStoreSpec extends AnyFunSuite with SparkSpec {
     val root = freshRoot("vac")
     assert(AudioCodeStore.publishSpec(s, root, "chained_landmark", 128)
       .committed)
-    AudioCodeStore.appendCodesEpoch(rows, root, 1, 0L)
+    AudioCodeStore.appendEpoch(rows, root, 1, 0L)
     // nothing retired yet: committed=1, keep 1 → cutoff 0 → no-op
-    val r0 = AudioCodeStore.vacuumRetiredCodes(s, root, 1)
+    val r0 = AudioCodeStore.vacuumRetired(s, root, 1)
     assert(r0.removed.isEmpty && r0.kept === Seq(1), r0.toString)
     // rollover + an IN-FLIGHT backfill above the pointer (av3)
     assert(AudioCodeStore.publishSpec(s, root, "chained_landmark", 128)
       .committed)
-    AudioCodeStore.appendCodesEpoch(rows, root, 2, 0L)
-    AudioCodeStore.appendCodesEpoch(rows.limit(3), root, 3, 0L)
-    val r1 = AudioCodeStore.vacuumRetiredCodes(s, root, 1)
+    AudioCodeStore.appendEpoch(rows, root, 2, 0L)
+    AudioCodeStore.appendEpoch(rows.limit(3), root, 3, 0L)
+    val r1 = AudioCodeStore.vacuumRetired(s, root, 1)
     assert(r1.committed === 2 && r1.removed === Seq(1) &&
       r1.kept === Seq(2, 3), r1.toString)
-    assert(AudioCodeStore.readCodes(s, root, 2).count() === rows.count())
-    assert(AudioCodeStore.readCodes(s, root, 3).count() === 3L,
+    assert(AudioCodeStore.read(s, root, 2).count() === rows.count())
+    assert(AudioCodeStore.read(s, root, 3).count() === 3L,
       "the in-flight newer key space must survive the vacuum")
-    val r2 = AudioCodeStore.vacuumRetiredCodes(s, root, 1)
+    val r2 = AudioCodeStore.vacuumRetired(s, root, 1)
     assert(r2.removed.isEmpty && r2.kept === Seq(2, 3), r2.toString)
   }
 }

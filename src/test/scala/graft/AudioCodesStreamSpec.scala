@@ -6,7 +6,7 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.operators.Audio
-import graft.sources.AudioCodeStore
+import graft.sources.{AudioCodeStore, EpochStore}
 
 /** D42 contracts through the REAL sink: arriving audio epochs are
   * decoded and landmark-coded as they land; the streamed code table is
@@ -47,7 +47,7 @@ class AudioCodesStreamSpec extends AnyFunSuite with SparkSpec {
     runSink()
     val batch = Audio.chainedLandmarkRows(s, packed)
       .orderBy("media_id", "anchor").collect().map(_.toSeq).toSeq
-    def storedRows() = AudioCodeStore.readCodes(s, root, 1)
+    def storedRows() = AudioCodeStore.read(s, root, 1)
       .orderBy("media_id", "anchor").collect().map(_.toSeq).toSeq
     assert(storedRows() === batch,
       "streamed landmark table diverged from the one-shot batch decode")
@@ -57,7 +57,7 @@ class AudioCodesStreamSpec extends AnyFunSuite with SparkSpec {
     assert(storedRows() === batch, "redelivery must converge, not append")
     // serving from the streamed table answers the decode question
     val fromStream = Audio
-      .chainedPairsFromCodes(AudioCodeStore.readCodes(s, root, 1), 4)
+      .chainedPairsFromCodes(AudioCodeStore.read(s, root, 1), 4)
       .orderBy("id_a", "id_b").collect().map(_.toSeq).toSeq
     val fromDecode = Audio.chainedFingerprintPairs(s, packed, minShared = 4)
       .orderBy("id_a", "id_b").collect().map(_.toSeq).toSeq
@@ -79,9 +79,9 @@ class AudioCodesStreamSpec extends AnyFunSuite with SparkSpec {
     // blue incumbent: spec v1 = frame 64, its landmarks in av1
     assert(AudioCodeStore.publishSpec(s, root, "chained_landmark",
       frame = 64).committed)
-    AudioCodeStore.appendCodesEpoch(
+    AudioCodeStore.appendEpoch(
       Audio.chainedLandmarkRows(s, packed, frame = 64), root, 1, 0L)
-    def rows(v: Int) = AudioCodeStore.readCodes(s, root, v)
+    def rows(v: Int) = AudioCodeStore.read(s, root, v)
       .orderBy("media_id", "anchor").collect().map(_.toSeq).toSeq
     val v1Rows = rows(1)
     // green backfill: frame-128 landmarks stream into av2 (the REAL sink)
@@ -97,14 +97,13 @@ class AudioCodesStreamSpec extends AnyFunSuite with SparkSpec {
     def runSink(): Unit = {
       val src = s.readStream.schema(packed.schema)
         .option("maxFilesPerTrigger", "1").parquet(staged.toString)
-      val q = graft.streaming.AudioCodesStream.ingestSink(src, root,
-        Files.createTempDirectory("graft_d46_ck").toString,
-        specVersion = 2, frame = 128)
+      val q = AudioCodesStreamRun.sink(src, root,
+        Files.createTempDirectory("graft_d46_ck").toString, 2, 128)
       q.awaitTermination(120000)
       ()
     }
     runSink()
-    assert(MultiPublish.commitVersions(s, root)(AudioCodeStore.SpecTable)
+    assert(MultiPublish.commitVersions(s, root)(AudioCodeStore.specTable)
       === 1, "a streamed backfill must not move the committed pointer")
     assert(rows(1) === v1Rows,
       "the serving v1 key space moved under the streamed backfill")
@@ -120,11 +119,11 @@ class AudioCodesStreamSpec extends AnyFunSuite with SparkSpec {
       frame = 128).committed)
     assert(AudioCodeStore.committedSpecVersion(s, root) === 2)
     assert(rows(1) === v1Rows, "pinned v1 moved across the flip")
-    val rep = AudioCodeStore.vacuumRetiredCodes(s, root, 1)
+    val rep = AudioCodeStore.vacuumRetired(s, root, 1)
     assert(rep.removed === Seq(1) && rep.kept === Seq(2), rep.toString)
     // post-rollover serving answers the frame-128 question exactly
     val served = Audio
-      .chainedPairsFromCodes(AudioCodeStore.readCodes(s, root, 2), 4)
+      .chainedPairsFromCodes(AudioCodeStore.read(s, root, 2), 4)
       .orderBy("id_a", "id_b").collect().map(_.toSeq).toSeq
     val direct = Audio.chainedFingerprintPairs(s, packed, frame = 128,
         minShared = 4)
@@ -135,9 +134,21 @@ class AudioCodesStreamSpec extends AnyFunSuite with SparkSpec {
 
 /** Isolates the sink start/await so the spec body reads as contracts. */
 private object AudioCodesStreamRun {
+  /** Frame-`frame` landmark rows of every arriving clip batch, landed
+    * under spec version `specVersion` through the real sink.
+    */
+  def sink(src: org.apache.spark.sql.DataFrame, root: String,
+           checkpoint: String, specVersion: Int,
+           frame: Int): org.apache.spark.sql.streaming.StreamingQuery =
+    EpochStore.ingestSink(src, checkpoint) { (b, id) =>
+      AudioCodeStore.appendEpoch(
+        Audio.chainedLandmarkRows(b.sparkSession, b, frame),
+        root, specVersion, id)
+    }
+
   def run(src: org.apache.spark.sql.DataFrame, root: String): Unit = {
-    val q = graft.streaming.AudioCodesStream.ingestSink(src, root,
-      Files.createTempDirectory("graft_d42_ck").toString)
+    val q = sink(src, root,
+      Files.createTempDirectory("graft_d42_ck").toString, 1, 128)
     q.awaitTermination(120000)
     ()
   }

@@ -23,6 +23,19 @@ class ExactWindowsSpec extends AnyFunSuite with SparkSpec {
            direct.exceptAll(out).count() === 0L)
   }
 
+  test("a BINARY partition key is compared by content, not reference") {
+    val keyed = events.withColumn("k", encode(col("event_type"), "UTF-8"))
+    val out = ExactWindows.trailingMedian(keyed, "k",
+      Seq(col("ts"), col("event_id")), col("value"), frameRows = 10)
+    val w = Window.partitionBy("k")
+      .orderBy(col("ts"), col("event_id"))
+      .rowsBetween(-9, Window.currentRow)
+    val direct = keyed.withColumn("med",
+      round(call_function("percentile", col("value"), lit(0.5)).over(w), 4))
+    assert(out.exceptAll(direct).count() === 0L &&
+           direct.exceptAll(out).count() === 0L)
+  }
+
   test("the at-scale guard refuses a frame x rows-per-key product that " +
        "would serialize, and names the t-digest alternative") {
     val e = intercept[IllegalArgumentException] {

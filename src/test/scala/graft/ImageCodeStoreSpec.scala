@@ -52,10 +52,10 @@ class ImageCodeStoreSpec extends AnyFunSuite with SparkSpec {
     assert(ImageCodeStore.publishSpec(s, root, "blockhash", 8, 4).committed)
     val even = codes.where(pmod(col("media_id"), lit(2)) === 0)
     val odd = codes.where(pmod(col("media_id"), lit(2)) === 1)
-    ImageCodeStore.appendCodesEpoch(even, root, 1, 0L)
-    ImageCodeStore.appendCodesEpoch(odd, root, 1, 1L)
-    ImageCodeStore.appendCodesEpoch(odd, root, 1, 1L) // redelivery
-    val stored = ImageCodeStore.readCodes(s, root, 1)
+    ImageCodeStore.appendEpoch(even, root, 1, 0L)
+    ImageCodeStore.appendEpoch(odd, root, 1, 1L)
+    ImageCodeStore.appendEpoch(odd, root, 1, 1L) // redelivery
+    val stored = ImageCodeStore.read(s, root, 1)
     assert(stored.count() === codes.count(),
       "replayed epoch must not duplicate rows")
     val cols = Seq("media_id", "width", "height", "code", "pixsum")
@@ -69,9 +69,9 @@ class ImageCodeStoreSpec extends AnyFunSuite with SparkSpec {
     "versions keep separate code key spaces") {
     val root = freshRoot("serve")
     assert(ImageCodeStore.publishSpec(s, root, "blockhash", 8, 4).committed)
-    ImageCodeStore.appendCodesEpoch(codes, root, 1, 0L)
+    ImageCodeStore.appendEpoch(codes, root, 1, 0L)
     val fromStore = ImageDedup
-      .perceptualPairs(ImageCodeStore.readCodes(s, root, 1), 3, 64)
+      .perceptualPairs(ImageCodeStore.read(s, root, 1), 3, 64)
       .orderBy("id_a", "id_b").collect().map(_.toSeq).toSeq
     val fromDecode = ImageDedup.perceptualPairs(codes, 3, 64)
       .orderBy("id_a", "id_b").collect().map(_.toSeq).toSeq
@@ -79,31 +79,31 @@ class ImageCodeStoreSpec extends AnyFunSuite with SparkSpec {
       "stored-code serving diverged from decode serving")
     assert(fromStore.nonEmpty, "vacuous pair set — no planted variants?")
     // a v2 backfill must be invisible to v1 readers (the C85 key space)
-    ImageCodeStore.appendCodesEpoch(codes.limit(5), root, 2, 0L)
-    assert(ImageCodeStore.readCodes(s, root, 1).count() === codes.count(),
+    ImageCodeStore.appendEpoch(codes.limit(5), root, 2, 0L)
+    assert(ImageCodeStore.read(s, root, 1).count() === codes.count(),
       "v2 codes leaked into the v1 key space")
-    assert(ImageCodeStore.readCodes(s, root, 2).count() === 5L)
+    assert(ImageCodeStore.read(s, root, 2).count() === 5L)
   }
 
   test("c110: the vacuum refuses the committed version and in-flight " +
     "newer keys, removes only retired ones, and is idempotent") {
     val root = freshRoot("vac")
     assert(ImageCodeStore.publishSpec(s, root, "blockhash", 8, 4).committed)
-    ImageCodeStore.appendCodesEpoch(codes, root, 1, 0L)
+    ImageCodeStore.appendEpoch(codes, root, 1, 0L)
     // nothing retired yet: committed=1, keep 1 → cutoff 0 → no-op
-    val r0 = ImageCodeStore.vacuumRetiredCodes(s, root, 1)
+    val r0 = ImageCodeStore.vacuumRetired(s, root, 1)
     assert(r0.removed.isEmpty && r0.kept === Seq(1), r0.toString)
     // rollover + an IN-FLIGHT backfill above the pointer (iv3)
     assert(ImageCodeStore.publishSpec(s, root, "blockhash", 8, 4).committed)
-    ImageCodeStore.appendCodesEpoch(codes, root, 2, 0L)
-    ImageCodeStore.appendCodesEpoch(codes.limit(3), root, 3, 0L)
-    val r1 = ImageCodeStore.vacuumRetiredCodes(s, root, 1)
+    ImageCodeStore.appendEpoch(codes, root, 2, 0L)
+    ImageCodeStore.appendEpoch(codes.limit(3), root, 3, 0L)
+    val r1 = ImageCodeStore.vacuumRetired(s, root, 1)
     assert(r1.committed === 2 && r1.removed === Seq(1) &&
       r1.kept === Seq(2, 3), r1.toString)
-    assert(ImageCodeStore.readCodes(s, root, 2).count() === codes.count())
-    assert(ImageCodeStore.readCodes(s, root, 3).count() === 3L,
+    assert(ImageCodeStore.read(s, root, 2).count() === codes.count())
+    assert(ImageCodeStore.read(s, root, 3).count() === 3L,
       "the in-flight newer key space must survive the vacuum")
-    val r2 = ImageCodeStore.vacuumRetiredCodes(s, root, 1)
+    val r2 = ImageCodeStore.vacuumRetired(s, root, 1)
     assert(r2.removed.isEmpty && r2.kept === Seq(2, 3), r2.toString)
   }
 }

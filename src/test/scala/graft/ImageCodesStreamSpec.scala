@@ -6,7 +6,7 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.operators.ImageDedup
-import graft.sources.ImageCodeStore
+import graft.sources.{EpochStore, ImageCodeStore}
 
 /** D41 contracts through the REAL sink: arriving image epochs are
   * decoded and coded as they land; the streamed code table is
@@ -42,7 +42,7 @@ class ImageCodesStreamSpec extends AnyFunSuite with SparkSpec {
     runSink()
     val batch = ImageDedup.blockhashCodes(s, packed)
       .orderBy("media_id").collect().map(_.toSeq).toSeq
-    def storedRows() = ImageCodeStore.readCodes(s, root, 1)
+    def storedRows() = ImageCodeStore.read(s, root, 1)
       .orderBy("media_id").collect().map(_.toSeq).toSeq
     assert(storedRows() === batch,
       "streamed code table diverged from the one-shot batch decode")
@@ -52,7 +52,7 @@ class ImageCodesStreamSpec extends AnyFunSuite with SparkSpec {
     assert(storedRows() === batch, "redelivery must converge, not append")
     // serving from the streamed table answers the decode question
     val fromStream = ImageDedup
-      .perceptualPairs(ImageCodeStore.readCodes(s, root, 1), 3, 64)
+      .perceptualPairs(ImageCodeStore.read(s, root, 1), 3, 64)
       .orderBy("id_a", "id_b").collect().map(_.toSeq).toSeq
     val fromDecode = ImageDedup
       .perceptualPairs(ImageDedup.blockhashCodes(s, packed), 3, 64)
@@ -70,9 +70,9 @@ class ImageCodesStreamSpec extends AnyFunSuite with SparkSpec {
     // blue incumbent: spec v1 = grid 4, its codes in iv1
     assert(ImageCodeStore.publishSpec(s, root, "blockhash", grid = 4,
       bands = 4).committed)
-    ImageCodeStore.appendCodesEpoch(
+    ImageCodeStore.appendEpoch(
       ImageDedup.blockhashCodes(s, packed, grid = 4), root, 1, 0L)
-    def rows(v: Int) = ImageCodeStore.readCodes(s, root, v)
+    def rows(v: Int) = ImageCodeStore.read(s, root, v)
       .orderBy("media_id").collect().map(_.toSeq).toSeq
     val v1Rows = rows(1)
     // green backfill: grid-8 codes stream into iv2 (the REAL sink)
@@ -91,7 +91,7 @@ class ImageCodesStreamSpec extends AnyFunSuite with SparkSpec {
       ImageCodesStreamRun.run(src, root, specVersion = 2, grid = 8)
     }
     runSink()
-    assert(MultiPublish.commitVersions(s, root)(ImageCodeStore.SpecTable)
+    assert(MultiPublish.commitVersions(s, root)(ImageCodeStore.specTable)
       === 1, "a streamed backfill must not move the committed pointer")
     assert(rows(1) === v1Rows,
       "the serving v1 key space moved under the streamed backfill")
@@ -107,11 +107,11 @@ class ImageCodesStreamSpec extends AnyFunSuite with SparkSpec {
       bands = 4).committed)
     assert(ImageCodeStore.committedSpecVersion(s, root) === 2)
     assert(rows(1) === v1Rows, "pinned v1 moved across the flip")
-    val rep = ImageCodeStore.vacuumRetiredCodes(s, root, 1)
+    val rep = ImageCodeStore.vacuumRetired(s, root, 1)
     assert(rep.removed === Seq(1) && rep.kept === Seq(2), rep.toString)
     // post-rollover serving answers the grid-8 question exactly
     val served = ImageDedup
-      .perceptualPairs(ImageCodeStore.readCodes(s, root, 2), 3, 64)
+      .perceptualPairs(ImageCodeStore.read(s, root, 2), 3, 64)
       .orderBy("id_a", "id_b").collect().map(_.toSeq).toSeq
     val direct = ImageDedup
       .perceptualPairs(ImageDedup.blockhashCodes(s, packed, grid = 8), 3, 64)
@@ -124,9 +124,12 @@ class ImageCodesStreamSpec extends AnyFunSuite with SparkSpec {
 private object ImageCodesStreamRun {
   def run(src: org.apache.spark.sql.DataFrame, root: String,
           specVersion: Int = 1, grid: Int = 8): Unit = {
-    val q = graft.streaming.ImageCodesStream.ingestSink(src, root,
-      Files.createTempDirectory("graft_d41_ck").toString, specVersion,
-      grid)
+    val q = EpochStore.ingestSink(src,
+        Files.createTempDirectory("graft_d41_ck").toString) { (b, id) =>
+      ImageCodeStore.appendEpoch(
+        ImageDedup.blockhashCodes(b.sparkSession, b, grid = grid), root,
+        specVersion, id)
+    }
     q.awaitTermination(120000)
     ()
   }

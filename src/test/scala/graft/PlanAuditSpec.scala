@@ -330,10 +330,10 @@ class PlanAuditSpec extends AnyFunSuite with SparkSpec {
     assert(AudioCodeStore.publishSpec(spark, root, "chained_landmark", 128)
       .committed)
     val docs = Tables(spark, sfDir(), "documents").select("doc_id").limit(40)
-    AudioCodeStore.appendCodesEpoch(
+    AudioCodeStore.appendEpoch(
       Audio.chainedLandmarkRows(spark,
         Audio.packWav(spark, docs, "doc_id")), root, 1, 0L)
-    val stored = AudioCodeStore.readCodes(spark, root, 1)
+    val stored = AudioCodeStore.read(spark, root, 1)
     val meta = stored.where(col("anchor") === -1)
       .select(col("media_id").as("id"), col("n_samples"))
     val pairs = Audio.chainedPairsFromCodes(stored, 4)

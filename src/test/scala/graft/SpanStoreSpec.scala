@@ -6,7 +6,7 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.operators.Dedup
-import graft.sources.SpanStore
+import graft.sources.{EpochStore, SpanStore}
 
 /** C125/D47 contracts: a malformed ladder is REFUSED at publish with
   * the pointer untouched; digest epochs are exactly-once under replay
@@ -62,13 +62,10 @@ class SpanStoreSpec extends AnyFunSuite with SparkSpec {
       .committed)
     Seq(8, 16).foreach { w =>
       val rows = Dedup.spanDigestRows(docs, "text", "doc_id", w)
-      SpanStore.appendDigestsEpoch(
-        rows.where(pmod(col("id"), lit(2)) === 0), root, 1, w, 0L)
-      SpanStore.appendDigestsEpoch(
-        rows.where(pmod(col("id"), lit(2)) === 1), root, 1, w, 1L)
-      SpanStore.appendDigestsEpoch(
-        rows.where(pmod(col("id"), lit(2)) === 1), root, 1, w, 1L)
-      val stored = SpanStore.readDigests(s, root, 1, w)
+      SpanStore.level(w).appendEpoch(rows.where(pmod(col("id"), lit(2)) === 0), root, 1, 0L)
+      SpanStore.level(w).appendEpoch(rows.where(pmod(col("id"), lit(2)) === 1), root, 1, 1L)
+      SpanStore.level(w).appendEpoch(rows.where(pmod(col("id"), lit(2)) === 1), root, 1, 1L)
+      val stored = SpanStore.level(w).read(s, root, 1)
       assert(stored.count() === rows.count(),
         s"w=$w: replayed epoch must not duplicate rows")
       assert(stored.orderBy("id", "pos").collect().map(_.toSeq).toSeq
@@ -84,10 +81,10 @@ class SpanStoreSpec extends AnyFunSuite with SparkSpec {
     // the planted 12-token block fires at w=8 (5 dup windows per host)
     // and not at w=16 — the level separation the ladder exists for
     val c8 = Dedup.duplicatedSpansFromDigests(
-        SpanStore.readDigests(s, root, 1, 8))
+        SpanStore.level(8).read(s, root, 1))
       .where(col("n_dup_spans") > 0).count()
     val c16 = Dedup.duplicatedSpansFromDigests(
-        SpanStore.readDigests(s, root, 1, 16))
+        SpanStore.level(16).read(s, root, 1))
       .where(col("n_dup_spans") > 0).count()
     assert(c8 === 2L && c16 === 0L, s"level separation broken: $c8/$c16")
   }
@@ -97,19 +94,19 @@ class SpanStoreSpec extends AnyFunSuite with SparkSpec {
     val root = freshRoot("vac")
     val rows8 = Dedup.spanDigestRows(docs, "text", "doc_id", 8)
     assert(SpanStore.publishSpec(s, root, "span_md5", Seq(8)).committed)
-    SpanStore.appendDigestsEpoch(rows8, root, 1, 8, 0L)
-    val r0 = SpanStore.vacuumRetiredDigests(s, root, 1)
+    SpanStore.level(8).appendEpoch(rows8, root, 1, 0L)
+    val r0 = SpanStore.vacuumRetired(s, root, 1)
     assert(r0.removed.isEmpty && r0.kept === Seq(1), r0.toString)
     assert(SpanStore.publishSpec(s, root, "span_md5", Seq(8)).committed)
-    SpanStore.appendDigestsEpoch(rows8, root, 2, 8, 0L)
-    SpanStore.appendDigestsEpoch(rows8.limit(3), root, 3, 8, 0L)
-    val r1 = SpanStore.vacuumRetiredDigests(s, root, 1)
+    SpanStore.level(8).appendEpoch(rows8, root, 2, 0L)
+    SpanStore.level(8).appendEpoch(rows8.limit(3), root, 3, 0L)
+    val r1 = SpanStore.vacuumRetired(s, root, 1)
     assert(r1.committed === 2 && r1.removed === Seq(1) &&
       r1.kept === Seq(2, 3), r1.toString)
-    assert(SpanStore.readDigests(s, root, 2, 8).count() === rows8.count())
-    assert(SpanStore.readDigests(s, root, 3, 8).count() === 3L,
+    assert(SpanStore.level(8).read(s, root, 2).count() === rows8.count())
+    assert(SpanStore.level(8).read(s, root, 3).count() === 3L,
       "the in-flight newer key space must survive the vacuum")
-    val r2 = SpanStore.vacuumRetiredDigests(s, root, 1)
+    val r2 = SpanStore.vacuumRetired(s, root, 1)
     assert(r2.removed.isEmpty && r2.kept === Seq(2, 3), r2.toString)
   }
 
@@ -136,9 +133,13 @@ class SpanStoreSpec extends AnyFunSuite with SparkSpec {
     def runSink(): Unit = {
       val src = s.readStream.schema(corpus.schema)
         .option("maxFilesPerTrigger", "1").parquet(staged.toString)
-      val q = graft.streaming.SpanDigestsStream.ingestSink(src, root,
-        Files.createTempDirectory("graft_d47_ck").toString,
-        specVersion = 1, widths = widths)
+      val q = EpochStore.ingestSink(src,
+          Files.createTempDirectory("graft_d47_ck").toString) { (b, id) =>
+        widths.foreach { w =>
+          SpanStore.level(w).appendEpoch(
+            Dedup.spanDigestRows(b, "text", "doc_id", w), root, 1, id)
+        }
+      }
       q.awaitTermination(120000)
       ()
     }
@@ -146,7 +147,7 @@ class SpanStoreSpec extends AnyFunSuite with SparkSpec {
     widths.foreach { w =>
       val batch = Dedup.spanDigestRows(corpus, "text", "doc_id", w)
         .orderBy("id", "pos").collect().map(_.toSeq).toSeq
-      def storedRows() = SpanStore.readDigests(s, root, 1, w)
+      def storedRows() = SpanStore.level(w).read(s, root, 1)
         .orderBy("id", "pos").collect().map(_.toSeq).toSeq
       assert(storedRows() === batch,
         s"w=$w: streamed digest table diverged from batch compute")
@@ -155,7 +156,7 @@ class SpanStoreSpec extends AnyFunSuite with SparkSpec {
         s"w=$w: redelivery must converge, not append")
     }
     val fromStream = Dedup.duplicatedSpansFromDigests(
-        SpanStore.readDigests(s, root, 1, 8))
+        SpanStore.level(8).read(s, root, 1))
       .orderBy("id").collect().map(_.toSeq).toSeq
     val fromCompute = Dedup.duplicatedSpans(corpus, "text", "doc_id", 8)
       .orderBy("id").collect().map(_.toSeq).toSeq

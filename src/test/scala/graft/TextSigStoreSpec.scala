@@ -70,10 +70,10 @@ class TextSigStoreSpec extends AnyFunSuite with SparkSpec {
     val sigs = Dedup.minhashSigRows(docs, "text", "doc_id")
     val even = sigs.where(pmod(col("doc_id"), lit(2)) === 0)
     val odd = sigs.where(pmod(col("doc_id"), lit(2)) === 1)
-    TextSigStore.appendSigsEpoch(even, root, 1, 0L)
-    TextSigStore.appendSigsEpoch(odd, root, 1, 1L)
-    TextSigStore.appendSigsEpoch(odd, root, 1, 1L) // redelivery
-    val stored = TextSigStore.readSigs(s, root, 1)
+    TextSigStore.appendEpoch(even, root, 1, 0L)
+    TextSigStore.appendEpoch(odd, root, 1, 1L)
+    TextSigStore.appendEpoch(odd, root, 1, 1L) // redelivery
+    val stored = TextSigStore.read(s, root, 1)
     assert(stored.count() === 5L, "replayed epoch must not duplicate rows")
     assert(stored.orderBy("doc_id").collect().map(_.toSeq).toSeq
       === sigs.orderBy("doc_id").collect().map(_.toSeq).toSeq,
@@ -85,10 +85,10 @@ class TextSigStoreSpec extends AnyFunSuite with SparkSpec {
     val root = freshRoot("serve")
     assert(TextSigStore.publishSpec(s, root, "minhash", 64, 16, 3)
       .committed)
-    TextSigStore.appendSigsEpoch(
+    TextSigStore.appendEpoch(
       Dedup.minhashSigRows(docs, "text", "doc_id"), root, 1, 0L)
     val fromStore = Dedup.minhashPairsFromSigs(
-        TextSigStore.readSigs(s, root, 1), docs, "text", "doc_id",
+        TextSigStore.read(s, root, 1), docs, "text", "doc_id",
         threshold = 0.7)
       .orderBy("id_a", "id_b").collect().map(_.toSeq).toSeq
     val fromCompute = Dedup.minhashDedupPairs(docs, "text", "doc_id",
@@ -104,11 +104,11 @@ class TextSigStoreSpec extends AnyFunSuite with SparkSpec {
     val near = pairs.find(p => p._1 == 1L).get._3
     assert(near > 0.7 && near < 1.0, s"near pair must verify exact: $near")
     // a v2 backfill must be invisible to v1 readers (the C85 key space)
-    TextSigStore.appendSigsEpoch(
+    TextSigStore.appendEpoch(
       Dedup.minhashSigRows(docs.limit(2), "text", "doc_id"), root, 2, 0L)
-    assert(TextSigStore.readSigs(s, root, 1).count() === 5L,
+    assert(TextSigStore.read(s, root, 1).count() === 5L,
       "v2 signatures leaked into the v1 key space")
-    assert(TextSigStore.readSigs(s, root, 2).count() === 2L)
+    assert(TextSigStore.read(s, root, 2).count() === 2L)
   }
 
   test("c121: cross-corpus pairs with the REFERENCE side stored ≡ the " +
@@ -125,10 +125,10 @@ class TextSigStoreSpec extends AnyFunSuite with SparkSpec {
     ).toDF("doc_id", "text")
     assert(TextSigStore.publishSpec(s, root, "minhash", 64, 16, 3)
       .committed)
-    TextSigStore.appendSigsEpoch(
+    TextSigStore.appendEpoch(
       Dedup.minhashSigRows(ref, "text", "doc_id"), root, 1, 0L)
     val fromStore = Dedup.minhashCrossPairsFromSigs(
-        TextSigStore.readSigs(s, root, 1), ref, inc, "text", "doc_id",
+        TextSigStore.read(s, root, 1), ref, inc, "text", "doc_id",
         threshold = 0.7)
       .orderBy("ref_id", "inc_id").collect().map(_.toSeq).toSeq
     val fromCompute = Dedup.minhashCrossPairs(ref, inc, "text", "doc_id",
@@ -147,22 +147,22 @@ class TextSigStoreSpec extends AnyFunSuite with SparkSpec {
     val sigs = Dedup.minhashSigRows(docs, "text", "doc_id")
     assert(TextSigStore.publishSpec(s, root, "minhash", 64, 16, 3)
       .committed)
-    TextSigStore.appendSigsEpoch(sigs, root, 1, 0L)
+    TextSigStore.appendEpoch(sigs, root, 1, 0L)
     // nothing retired yet: committed=1, keep 1 → cutoff 0 → no-op
-    val r0 = TextSigStore.vacuumRetiredSigs(s, root, 1)
+    val r0 = TextSigStore.vacuumRetired(s, root, 1)
     assert(r0.removed.isEmpty && r0.kept === Seq(1), r0.toString)
     // rollover + an IN-FLIGHT backfill above the pointer (sv3)
     assert(TextSigStore.publishSpec(s, root, "minhash", 64, 16, 3)
       .committed)
-    TextSigStore.appendSigsEpoch(sigs, root, 2, 0L)
-    TextSigStore.appendSigsEpoch(sigs.limit(2), root, 3, 0L)
-    val r1 = TextSigStore.vacuumRetiredSigs(s, root, 1)
+    TextSigStore.appendEpoch(sigs, root, 2, 0L)
+    TextSigStore.appendEpoch(sigs.limit(2), root, 3, 0L)
+    val r1 = TextSigStore.vacuumRetired(s, root, 1)
     assert(r1.committed === 2 && r1.removed === Seq(1) &&
       r1.kept === Seq(2, 3), r1.toString)
-    assert(TextSigStore.readSigs(s, root, 2).count() === 5L)
-    assert(TextSigStore.readSigs(s, root, 3).count() === 2L,
+    assert(TextSigStore.read(s, root, 2).count() === 5L)
+    assert(TextSigStore.read(s, root, 3).count() === 2L,
       "the in-flight newer key space must survive the vacuum")
-    val r2 = TextSigStore.vacuumRetiredSigs(s, root, 1)
+    val r2 = TextSigStore.vacuumRetired(s, root, 1)
     assert(r2.removed.isEmpty && r2.kept === Seq(2, 3), r2.toString)
   }
 }

@@ -6,7 +6,7 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.operators.Dedup
-import graft.sources.TextSigStore
+import graft.sources.{EpochStore, TextSigStore}
 
 /** D45 contracts through the REAL sink: arriving document epochs are
   * tokenized and minhashed as they land; the streamed signature table
@@ -42,15 +42,18 @@ class TextSigsStreamSpec extends AnyFunSuite with SparkSpec {
     def runSink(): Unit = {
       val src = s.readStream.schema(corpus.schema)
         .option("maxFilesPerTrigger", "1").parquet(staged.toString)
-      val q = graft.streaming.TextSigsStream.ingestSink(src, root,
-        Files.createTempDirectory("graft_d45_ck").toString)
+      val q = EpochStore.ingestSink(src,
+          Files.createTempDirectory("graft_d45_ck").toString) { (b, id) =>
+        TextSigStore.appendEpoch(
+          Dedup.minhashSigRows(b, "text", "doc_id"), root, 1, id)
+      }
       q.awaitTermination(120000)
       ()
     }
     runSink()
     val batch = Dedup.minhashSigRows(corpus, "text", "doc_id")
       .orderBy("doc_id").collect().map(_.toSeq).toSeq
-    def storedRows() = TextSigStore.readSigs(s, root, 1)
+    def storedRows() = TextSigStore.read(s, root, 1)
       .orderBy("doc_id").collect().map(_.toSeq).toSeq
     assert(storedRows() === batch,
       "streamed signature table diverged from the one-shot batch compute")
@@ -60,7 +63,7 @@ class TextSigsStreamSpec extends AnyFunSuite with SparkSpec {
     assert(storedRows() === batch, "redelivery must converge, not append")
     // serving from the streamed table answers the compute question
     val fromStream = Dedup.minhashPairsFromSigs(
-        TextSigStore.readSigs(s, root, 1), corpus, "text", "doc_id")
+        TextSigStore.read(s, root, 1), corpus, "text", "doc_id")
       .where(col("id_b") - col("id_a") === 1000000L)
       .orderBy("id_a", "id_b").collect().map(_.toSeq).toSeq
     val fromCompute = Dedup.minhashDedupPairs(corpus, "text", "doc_id")

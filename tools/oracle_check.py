@@ -19,6 +19,12 @@ for p in glob.glob(f"{sfdir}/*.parquet"):
     con.execute(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{p}')")
 
 oracle = json.load(open(f"{outdir}/oracle_sql.json"))
+# a misspelled key must not shrink the check silently into a green one
+unknown = sorted(only - set(oracle))
+if unknown:
+    print(f"unknown keys (not in oracle_sql.json): {', '.join(unknown)}",
+          file=sys.stderr)
+    sys.exit(2)
 
 def canon(df):
     df = df[sorted(df.columns)]
