@@ -648,10 +648,30 @@ object Bench {
   private def probesOn: Boolean =
     sys.env.getOrElse("SPARK_GRAFT_SCALE_PROBE", "1") != "0"
 
+  /** A count-valued env var: None when unset, else its trimmed value as
+    * an integer ≥ `min` — anything else fails naming the variable.
+    */
+  private[graft] def envCount(env: collection.Map[String, String],
+                              name: String, min: Int): Option[Int] =
+    env.get(name).map { raw =>
+      raw.trim.toIntOption.filter(_ >= min).getOrElse(
+        throw new IllegalArgumentException(
+          s"$name must be an integer >= $min, got '$raw'"))
+    }
+
+  /** The core count every bench entry point (the phases, the
+    * `bench_c<cpus>.json` key, [[PlanDump]], [[StageProbe]], [[Probe]])
+    * runs at: SPARK_GRAFT_CPUS, else this machine's available
+    * processors.
+    */
+  private[graft] def cpus(env: collection.Map[String, String]): Int =
+    envCount(env, "SPARK_GRAFT_CPUS", 1)
+      .getOrElse(Runtime.getRuntime.availableProcessors)
+
   private def makeSession(tag: String): SparkSession = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val n = cpus(sys.env)
     val spark = GraftSession
-      .builder(s"graft-bench-$tag", Some(s"local[$cpus]"), Some(cpus.toInt))
+      .builder(s"graft-bench-$tag", Some(s"local[$n]"), Some(n))
       .config("spark.sql.autoBroadcastJoinThreshold", "64m")
       .config("spark.ui.enabled", "false")
       // a single-JVM bench block never hits the default 30-MINUTE
@@ -1293,8 +1313,7 @@ object Bench {
     // artifact to a core-count-keyed path and points its own
     // queries_full there, so the 32-cpu map survives the 8-cpu rerun
     // and each run's summary line names the map that belongs to it.
-    val cpusTag = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val perRunPath = s"target/bench_c$cpusTag.json"
+    val perRunPath = s"target/bench_c${cpus(sys.env)}.json"
     java.nio.file.Files.writeString(
       java.nio.file.Paths.get(perRunPath), full + "\n")
 
@@ -1392,6 +1411,29 @@ object ScaleReplica {
       java.nio.file.Files.readString(marker.toPath) == markerWant(tables)
   }
 
+  /** Run independent tasks on a pool of `threads` and return once all
+    * are done. Results are taken in COMPLETION order, so the first
+    * failure is seen at once: the outstanding tasks are cancelled and
+    * interrupted, the pool is drained — no task is still running when
+    * this returns — and the failing task's OWN exception is rethrown,
+    * not the `ExecutionException` wrapping it.
+    */
+  private[graft] def runAll(tasks: Seq[() => Unit], threads: Int): Unit = {
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(threads)
+    val done = new java.util.concurrent.ExecutorCompletionService[Unit](pool)
+    val futs = tasks.map(t => done.submit(
+      new java.util.concurrent.Callable[Unit] { def call(): Unit = t() }))
+    try futs.foreach(_ => done.take().get())
+    catch { case e: java.util.concurrent.ExecutionException =>
+      futs.foreach(_.cancel(true))
+      throw e.getCause
+    } finally {
+      pool.shutdownNow()
+      pool.awaitTermination(Long.MaxValue,
+        java.util.concurrent.TimeUnit.NANOSECONDS)
+    }
+  }
+
   def ensure(spark: SparkSession, baseDir: String, copies: Int,
              tables: Seq[String] = defaultTables,
              dirTag: String = ""): String = {
@@ -1467,13 +1509,7 @@ object ScaleReplica {
     // from a small thread pool makes the build's wall cost the slowest
     // table, not the sum (measured 42.6 s → 17.9 s cold for the
     // 6-table priority replica on this box).
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(
-      math.min(tables.size, 6))
-    try {
-      val futs = tables.map(t => pool.submit(
-        new java.util.concurrent.Callable[Unit] { def call(): Unit = builders(t)() }))
-      futs.foreach(_.get())
-    } finally { pool.shutdown() }
+    runAll(tables.map(builders), threads = math.min(tables.size, 6))
     marker.getParentFile.mkdirs()
     java.nio.file.Files.writeString(marker.toPath, want)
     dir

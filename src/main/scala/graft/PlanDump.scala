@@ -14,9 +14,9 @@ object PlanDump {
   def main(args: Array[String]): Unit = {
     val (sfDir, outDir, suffix) = (args(0), args(1), args(2))
     val names = args.drop(3)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val cpus = Bench.cpus(sys.env)
     val spark = GraftSession
-      .builder("graft-plandump", Some(s"local[$cpus]"), Some(cpus.toInt))
+      .builder("graft-plandump", Some(s"local[$cpus]"), Some(cpus))
       .config("spark.sql.autoBroadcastJoinThreshold", "64m")
       .config("spark.ui.enabled", "false")
       .getOrCreate()

@@ -11,8 +11,9 @@ object Probe {
     val dir = args(0)
     val n = args(1).toInt
     val names = args.drop(2).toSeq
+    val cpus = Bench.cpus(sys.env)
     val spark = GraftSession
-      .builder("graft-probe", Some("local[32]"), Some(32))
+      .builder("graft-probe", Some(s"local[$cpus]"), Some(cpus))
       .config("spark.sql.autoBroadcastJoinThreshold", "64m")
       .config("spark.ui.enabled", "false")
       .getOrCreate()

@@ -574,6 +574,22 @@ object SparkEntry {
     CrossModal.verdictTable(textDup, imgDup, audDup).orderBy("doc_id")
   }
 
+  /** The c12 image-codec rows: documents' ids → [[Multimodal.packImages]]
+    * → [[Multimodal.decodeImages]] → (media_id, width, height, mean RGB
+    * rounded to 6 places).
+    */
+  private def imageCodec(s: SparkSession, dir: String): DataFrame = {
+    val docs = t(s, dir, "documents").select("doc_id")
+    Multimodal.decodeImages(s, Multimodal.packImages(s, docs, "doc_id"))
+      .select(col("media_id"),
+        col("width").cast("long").as("width"),
+        col("height").cast("long").as("height"),
+        round(element_at(col("features"), 1), 6).as("mean_r"),
+        round(element_at(col("features"), 2), 6).as("mean_g"),
+        round(element_at(col("features"), 3), 6).as("mean_b"))
+      .orderBy("media_id")
+  }
+
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
 
     // ===== A: reference ETL surface =====
@@ -1535,60 +1551,17 @@ object SparkEntry {
         .orderBy("doc_id")
     }),
 
-    // REAL image codec (C12, full path): deterministic PNGs are encoded
-    // executor-side (javax.imageio), decoded back through the batched
-    // decode, and the decoded mean-RGB features are oracle-checked — the
-    // DuckDB side recomputes the same means from the pixel FORMULA, so a
-    // codec that lied about a single pixel would hash-mismatch. PNG is
-    // lossless and the sums are exact-integer, so equality is bit-exact.
-    "c12_image_codec" -> ((s, dir) => {
-      val docs = t(s, dir, "documents").select("doc_id")
-      val imgs = Multimodal.packImages(s, docs, "doc_id")
-      Multimodal.decodeImages(s, imgs)
-        .select(col("media_id"),
-          col("width").cast("long").as("width"),
-          col("height").cast("long").as("height"),
-          round(element_at(col("features"), 1), 6).as("mean_r"),
-          round(element_at(col("features"), 2), 6).as("mean_g"),
-          round(element_at(col("features"), 3), 6).as("mean_b"))
-        .orderBy("media_id")
-    }),
-
-    // batched-codec transport variant: same pixels, same features, same
-    // oracle — the per-image ImageIO overhead (temp-file cache, per-call
-    // reader/writer instantiation, per-pixel color-model conversion) is
-    // amortized per partition instead (MultimodalSpec locks payload
-    // byte-equality between the two paths)
-    "c12b_image_codec_batched" -> ((s, dir) => {
-      val docs = t(s, dir, "documents").select("doc_id")
-      val imgs = Multimodal.packImagesBatched(s, docs, "doc_id")
-      Multimodal.decodeImagesBatched(s, imgs)
-        .select(col("media_id"),
-          col("width").cast("long").as("width"),
-          col("height").cast("long").as("height"),
-          round(element_at(col("features"), 1), 6).as("mean_r"),
-          round(element_at(col("features"), 2), 6).as("mean_g"),
-          round(element_at(col("features"), 3), 6).as("mean_b"))
-        .orderBy("media_id")
-    }),
-
-    // columnar-transport decode (c12c): the custom columnar SparkPlan
-    // (DecodeImagesExec) replaces the mapPartitions row loop — payload
-    // bytes travel as ColumnarBatch vectors end to end (vectorized
-    // parquet reader → codec → one ColumnarToRow above). Same pixels,
-    // same ImageDecoder code object, same oracle as c12/c12b.
-    "c12c_image_codec_columnar" -> ((s, dir) => {
-      val docs = t(s, dir, "documents").select("doc_id")
-      val imgs = Multimodal.packImagesBatched(s, docs, "doc_id")
-      Multimodal.decodeImagesColumnar(s, imgs)
-        .select(col("media_id"),
-          col("width").cast("long").as("width"),
-          col("height").cast("long").as("height"),
-          round(element_at(col("features"), 1), 6).as("mean_r"),
-          round(element_at(col("features"), 2), 6).as("mean_g"),
-          round(element_at(col("features"), 3), 6).as("mean_b"))
-        .orderBy("media_id")
-    }),
+    // REAL image codec (C12): deterministic PNGs are encoded
+    // executor-side (javax.imageio), decoded back, and the decoded
+    // mean-RGB features are oracle-checked — the DuckDB side recomputes
+    // the same means from the pixel FORMULA, so a codec that lied about
+    // a single pixel would hash-mismatch. PNG is lossless and the sums
+    // are exact-integer, so equality is bit-exact. c12b/c12c stay as key
+    // names (key names are part of the SparkEntry contract) over the
+    // same builder.
+    "c12_image_codec" -> imageCodec,
+    "c12b_image_codec_batched" -> imageCodec,
+    "c12c_image_codec_columnar" -> imageCodec,
 
     // Multi-frame media (c12e): REAL animated GIFs through ImageIO's
     // sequence writer/reader — the "video" surface: container-reported
@@ -4500,11 +4473,12 @@ object SparkEntry {
         .orderBy("doc_id")),
 
     // The oracle checks what IS engine surface — payload byte counts and
-    // feature-vector shape surviving the pack → batched-decode round trip;
-    // the stub codec's feature VALUES are locked by MultimodalSpec.
+    // feature-vector shape surviving the pack → decode round trip: text
+    // payloads are not images, so the decoder's quarantine emits the
+    // 16-bin byte histogram (its VALUES are locked by MultimodalSpec).
     "c12_multimodal" -> ((s, dir) => {
       val packed = Multimodal.packMedia(t(s, dir, "documents"), "doc_id", "text")
-      Multimodal.decodeStub(s, packed)
+      Multimodal.decodeImages(s, packed)
         .select(col("media_id"), col("n_bytes"),
           size(col("features")).as("n_features"))
         .orderBy("media_id")
@@ -7823,10 +7797,28 @@ object SparkEntry {
 
   def oracleSql: Map[String, String] = {
     val base = oracleSqlBase
-    // c28b answers the SAME question as c28 through a different plan
-    // (batched joinless scan vs per-query broadcast join) — exhaustive
-    // probes make both exact, so they share one brute-force replica
-    base + ("c28b_ivfpq_rank_many" -> base("c28_ivfpq_topk"),
+    base + (
+      // the three image-codec keys run one pack → decode builder, so
+      // they replay one pixel formula
+      "c12b_image_codec_batched" -> base("c12_image_codec"),
+      "c12c_image_codec_columnar" -> base("c12_image_codec"),
+      // the bucketed variant must be semantics-identical to b18
+      "b18b_asof_bucketed" -> base("b18_asof_join"),
+      // dispatch must not change b19's results
+      "b19b_range_join_auto" -> base("b19_range_join"),
+      // a10 reads its partitioned write back into a8's per-flag
+      // count/quantity rollup
+      "a10_partitioned_sink" -> base("a8_union_regions"),
+      // exhaustive probes make every IVF plan exact — flat (c14),
+      // two-level (c14b) and the batched scan (c14c) share c6's
+      // brute-force replica (the plan differs, the answer must not)
+      "c14_ivf_topk" -> base("c6_cosine_topk"),
+      "c14b_ivf_two_level" -> base("c6_cosine_topk"),
+      "c14c_ivf_rank_many" -> base("c6_cosine_topk"),
+      // c28b answers the SAME question as c28 through a different plan
+      // (batched joinless scan vs per-query broadcast join) — exhaustive
+      // probes make both exact, so they share one brute-force replica
+      "c28b_ivfpq_rank_many" -> base("c28_ivfpq_topk"),
       // c81 serves c28's exact question from a published-then-loaded
       // index — floats round-trip parquet bit-exactly, so the same
       // exhaustive-probe brute-force ADC replica is the oracle; any
@@ -9597,11 +9589,6 @@ hist_${src}_$cent AS (
       """SELECT l_returnflag, count(*) AS cnt
         |FROM lineitem GROUP BY 1 ORDER BY 1""".stripMargin,
 
-    "a10_partitioned_sink" ->
-      """SELECT l_returnflag, count(*) AS cnt,
-        |       CAST(sum(CAST(l_quantity AS INT)) AS BIGINT) AS sum_qty
-        |FROM lineitem GROUP BY 1 ORDER BY 1""".stripMargin,
-
     "a11_censo_pipeline" ->
       """SELECT CASE l_returnflag WHEN 'A' THEN 'Accepted'
         |            WHEN 'N' THEN 'None' WHEN 'R' THEN 'Refused' END
@@ -10218,42 +10205,6 @@ hist_${src}_$cent AS (
     // side must round-trip those pixels through a real PNG encode/decode
     // to produce the same exact-integer channel sums.
     "c12_image_codec" ->
-      """WITH ids AS (
-        |  SELECT doc_id AS media_id, doc_id % 64 + 16 AS w,
-        |         doc_id % 48 + 16 AS h
-        |  FROM documents),
-        |xs AS (SELECT media_id, w, h, unnest(range(0, w)) AS x FROM ids),
-        |px AS (SELECT media_id, w, h, x, unnest(range(0, h)) AS y FROM xs),
-        |v AS (SELECT media_id, w, h,
-        |        ((media_id * 1103515245 + x * 31 + y * 131) & 16777215) AS v
-        |      FROM px)
-        |SELECT media_id, w AS width, h AS height,
-        |       round(sum((v >> 16) & 255) / (w * h * 255.0), 6) AS mean_r,
-        |       round(sum((v >> 8) & 255) / (w * h * 255.0), 6) AS mean_g,
-        |       round(sum(v & 255) / (w * h * 255.0), 6) AS mean_b
-        |FROM v GROUP BY 1, 2, 3 ORDER BY media_id""".stripMargin,
-
-    // identical pixel formula — the batched transport must hit the same
-    // bit-exact means as the per-call codec path
-    "c12b_image_codec_batched" ->
-      """WITH ids AS (
-        |  SELECT doc_id AS media_id, doc_id % 64 + 16 AS w,
-        |         doc_id % 48 + 16 AS h
-        |  FROM documents),
-        |xs AS (SELECT media_id, w, h, unnest(range(0, w)) AS x FROM ids),
-        |px AS (SELECT media_id, w, h, x, unnest(range(0, h)) AS y FROM xs),
-        |v AS (SELECT media_id, w, h,
-        |        ((media_id * 1103515245 + x * 31 + y * 131) & 16777215) AS v
-        |      FROM px)
-        |SELECT media_id, w AS width, h AS height,
-        |       round(sum((v >> 16) & 255) / (w * h * 255.0), 6) AS mean_r,
-        |       round(sum((v >> 8) & 255) / (w * h * 255.0), 6) AS mean_g,
-        |       round(sum(v & 255) / (w * h * 255.0), 6) AS mean_b
-        |FROM v GROUP BY 1, 2, 3 ORDER BY media_id""".stripMargin,
-
-    // identical oracle to c12b: the columnar transport must produce the
-    // same decoded features from the same formula-pinned pixels
-    "c12c_image_codec_columnar" ->
       """WITH ids AS (
         |  SELECT doc_id AS media_id, doc_id % 64 + 16 AS w,
         |         doc_id % 48 + 16 AS h
@@ -11085,34 +11036,6 @@ hist_${src}_$cent AS (
         |       CAST(sum(CAST(l_quantity AS INT)) AS BIGINT) AS sum_qty,
         |       true AS colocated_ok
         |FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-        |GROUP BY 1 ORDER BY 1""".stripMargin,
-
-    // identical oracle to b18 — the bucketed variant must be
-    // semantics-identical
-    "b18b_asof_bucketed" ->
-      """WITH ro AS (
-        |  SELECT * FROM (
-        |    SELECT o_custkey AS k, o_orderdate, o_orderkey, o_totalprice,
-        |           row_number() OVER (PARTITION BY o_custkey, o_orderdate
-        |               ORDER BY o_orderkey DESC) AS rn
-        |    FROM orders) WHERE rn = 1)
-        |SELECT e.event_type, count(*) AS n_events,
-        |       count(r.o_orderkey) AS n_matched,
-        |       count(DISTINCT r.o_orderkey) AS n_orders,
-        |       round(sum(r.o_totalprice), 2) AS sum_price
-        |FROM events e ASOF LEFT JOIN ro r
-        |  ON e.user_id = r.k AND e.ts >= r.o_orderdate
-        |GROUP BY 1 ORDER BY 1""".stripMargin,
-
-    // identical oracle to b19 — dispatch must not change results
-    "b19b_range_join_auto" ->
-      """WITH bands AS (
-        |  SELECT band_id, band_id * 10 + 1 AS lo, band_id * 10 + 10 AS hi
-        |  FROM (VALUES (0), (1), (2), (3), (4)) t(band_id)
-        |  UNION ALL SELECT 9, 1, 50)
-        |SELECT band_id, count(*) AS cnt,
-        |       CAST(sum(CAST(l_quantity AS INT)) AS BIGINT) AS sum_qty
-        |FROM lineitem JOIN bands ON l_quantity BETWEEN lo AND hi
         |GROUP BY 1 ORDER BY 1""".stripMargin,
 
     "c17_gopher_quality" ->
@@ -14164,34 +14087,6 @@ hist_${src}_$cent AS (
         |       round(sum(value), 2) AS sum_value
         |FROM events GROUP BY 1 ORDER BY 1""".stripMargin,
 
-    "c14_ivf_topk" ->
-      """SELECT query_id, neighbor_id, round(cos, 6) AS cos, rnk FROM (
-        |  SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
-        |         list_cosine_similarity(CAST(c.embedding AS DOUBLE[]),
-        |                                CAST(q.embedding AS DOUBLE[])) AS cos,
-        |         row_number() OVER (PARTITION BY q.vec_id
-        |             ORDER BY list_cosine_similarity(
-        |                 CAST(c.embedding AS DOUBLE[]),
-        |                 CAST(q.embedding AS DOUBLE[])) DESC, c.vec_id) AS rnk
-        |  FROM embeddings c, embeddings q
-        |  WHERE q.vec_id < 8 AND c.vec_id <> q.vec_id) t
-        |WHERE rnk <= 5 ORDER BY query_id, rnk""".stripMargin,
-
-    // exhaustive probes make the batched scan exact — same brute-force
-    // replica as c14 (the plan differs, the answer must not)
-    "c14c_ivf_rank_many" ->
-      """SELECT query_id, neighbor_id, round(cos, 6) AS cos, rnk FROM (
-        |  SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
-        |         list_cosine_similarity(CAST(c.embedding AS DOUBLE[]),
-        |                                CAST(q.embedding AS DOUBLE[])) AS cos,
-        |         row_number() OVER (PARTITION BY q.vec_id
-        |             ORDER BY list_cosine_similarity(
-        |                 CAST(c.embedding AS DOUBLE[]),
-        |                 CAST(q.embedding AS DOUBLE[])) DESC, c.vec_id) AS rnk
-        |  FROM embeddings c, embeddings q
-        |  WHERE q.vec_id < 8 AND c.vec_id <> q.vec_id) t
-        |WHERE rnk <= 5 ORDER BY query_id, rnk""".stripMargin,
-
     // Full replica of the mixing computation: totals → k → rates →
     // content-hash filter, all in SQL. Arithmetic shape matches the Scala
     // side exactly (((k*w)/toks)*10000, left-assoc; weights cast to
@@ -14248,20 +14143,6 @@ hist_${src}_$cent AS (
         |       COALESCE(ov.n_overlap, 0) > 0 AS contaminated
         |FROM documents d LEFT JOIN ov USING (doc_id)
         |ORDER BY doc_id""".stripMargin,
-
-    // full-probe two-level IVF ≡ exact — same brute-force oracle as c14
-    "c14b_ivf_two_level" ->
-      """SELECT query_id, neighbor_id, round(cos, 6) AS cos, rnk FROM (
-        |  SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
-        |         list_cosine_similarity(CAST(c.embedding AS DOUBLE[]),
-        |                                CAST(q.embedding AS DOUBLE[])) AS cos,
-        |         row_number() OVER (PARTITION BY q.vec_id
-        |             ORDER BY list_cosine_similarity(
-        |                 CAST(c.embedding AS DOUBLE[]),
-        |                 CAST(q.embedding AS DOUBLE[])) DESC, c.vec_id) AS rnk
-        |  FROM embeddings c, embeddings q
-        |  WHERE q.vec_id < 8 AND c.vec_id <> q.vec_id) t
-        |WHERE rnk <= 5 ORDER BY query_id, rnk""".stripMargin,
 
     // full PQ replica: same md5-ordered codebook sample as pqTopK, encode
     // = per-(vec, subspace) argmin over codewords (ties → lowest index),

@@ -33,27 +33,35 @@ object StageProbe {
     s.replace("\\", "\\\\").replace("\"", "\\\"")
       .replace("\n", " ").replace("\t", " ")
 
+  /** The data scale to probe, from SPARK_GRAFT_STAGE_COPIES (r19): 0
+    * probes the BASE sf dir (stage attribution for rows whose cost
+    * question is "where do the sf0.1 seconds go", e.g. the tokenizer
+    * lifecycle family), 10/100 the replicas; unset stays the 100-copy
+    * replica (the original c76-arbitration protocol). A non-negative
+    * integer, else a loud error naming the variable; 1 IS the base dir,
+    * so it reads (and is reported) as 0.
+    */
+  private[graft] def stageCopies(env: collection.Map[String, String]): Int = {
+    val n = Bench.envCount(env, "SPARK_GRAFT_STAGE_COPIES", 0).getOrElse(100)
+    if (n <= 1) 0 else n
+  }
+
   def main(args: Array[String]): Unit = {
     val queries =
       if (args.nonEmpty) args.toSeq
       else Seq("q5_star_join", "c27_span_dedup", "c76_multiscale_spans")
     val sf = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val cpus = Bench.cpus(sys.env)
     val spark = GraftSession
-      .builder("graft-stage-probe", Some(s"local[$cpus]"), Some(cpus.toInt))
+      .builder("graft-stage-probe", Some(s"local[$cpus]"), Some(cpus))
       .config("spark.sql.autoBroadcastJoinThreshold", "64m")
       .config("spark.ui.enabled", "false")
       .config("spark.cleaner.periodicGC.interval", "60s")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    // r19: SPARK_GRAFT_STAGE_COPIES picks the data scale — 0 probes the
-    // BASE sf dir (stage attribution for rows whose cost question is
-    // "where do the sf0.1 seconds go", e.g. the tokenizer lifecycle
-    // family), 10/100 the replicas; default stays the 100-copy replica
-    // (the original c76-arbitration protocol).
-    val copies = sys.env.getOrElse("SPARK_GRAFT_STAGE_COPIES", "100").toInt
+    val copies = stageCopies(sys.env)
     val dir =
-      if (copies <= 1) sf
+      if (copies == 0) sf
       else ScaleReplica.ensure(spark, sf, copies = copies,
         tables = if (copies >= 100) Bench.scale100Tables
                  else ScaleReplica.defaultTables)

@@ -13,9 +13,10 @@ object Verify {
       System.err.println(s"[verify] unknown query keys: ${unknown.mkString(", ")}")
       sys.exit(2)
     }
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
+    // the bench's parser; the correctness run keeps its own default of 4
+    val cpus = Bench.envCount(sys.env, "SPARK_GRAFT_CPUS", 1).getOrElse(4)
     val spark = GraftSession
-      .builder("graft-verify", Some(s"local[$cpus]"), Some(cpus.toInt))
+      .builder("graft-verify", Some(s"local[$cpus]"), Some(cpus))
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

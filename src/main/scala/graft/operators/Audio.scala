@@ -163,7 +163,7 @@ object Audio {
       .encoderFor(outSchema)
     val narrow = df.select(col(idCol).cast("long").as("media_id"))
     // codec stages are CPU-bound per row: size by cores, not by the
-    // source file's split count (the packImagesBatched rule)
+    // source file's split count (the packImages rule)
     val target = spark.sparkContext.defaultParallelism
     val in = if (narrow.rdd.getNumPartitions < target)
       narrow.repartition(target) else narrow

@@ -49,23 +49,19 @@ import org.apache.spark.sql.types._
   */
 object ImageDedup {
 
-  /** Deterministic channel value replayed by the oracle (the c12 pixel
-    * formula), brightness-shifted by `delta` with saturation at 255.
-    */
-  @inline private def shiftClamp(ch: Int, delta: Int): Int =
-    math.min(ch + delta, 255)
-
   /** Build the c97 probe corpus: one REAL PNG per id from the c12 pixel
-    * formula, plus — for ids divisible by 10 — two planted variants of
-    * the SAME pixels: a BMP re-encode (media_id + 2e6; different bytes,
-    * identical pixels) and a brightness-shifted PNG (media_id + 3e6;
-    * every channel +`brightDelta`, saturating — different pixels
-    * everywhere, same perceptual content). Exact byte-level dedup finds
-    * neither; this operator must find both.
+    * formula (byte-identical to [[Multimodal.packImages]]' payload), plus
+    * — for ids divisible by 10 — two planted variants of the SAME
+    * pixels: a BMP re-encode (media_id + 2e6; different bytes, identical
+    * pixels) and a brightness-shifted PNG (media_id + 3e6; every channel
+    * +`brightDelta`, saturating — different pixels everywhere, same
+    * perceptual content). Exact byte-level dedup finds neither; this
+    * operator must find both. Pixels come from
+    * [[Multimodal.renderImage]], bytes from one
+    * [[Multimodal.ImageEncoder]] per partition.
     */
   def packImageVariants(spark: SparkSession, df: DataFrame, idCol: String,
-                        brightDelta: Int = 8,
-                        batchSize: Int = 64): DataFrame = {
+                        brightDelta: Int = 8): DataFrame = {
     val outSchema = StructType(Seq(
       StructField("media_id", LongType),
       StructField("media", BinaryType),
@@ -74,91 +70,27 @@ object ImageDedup {
       .encoderFor(outSchema)
     val in = df.select(col(idCol).cast("long").as("media_id"))
     in.mapPartitions { rows =>
-      // r18: the packImagesBatched codec amortizations applied to the
-      // variant packer — no ImageIO temp-file cache, ONE writer per
-      // (partition, format) instead of a registry scan + fresh writer
-      // per call, pixels written straight into the TYPE_INT_RGB backing
-      // int[] (setRGB stores the same int — payloads bit-identical).
-      // setUseCache is JVM-global (r18 ADVICE): flipping it off from a
-      // task is idempotent and the only sane setting for byte-array
-      // round trips — every executor task wants the no-temp-file path,
-      // so the global flip is safe here (and it is how decodeImages*
-      // already behaves); noting it because it IS cross-task state.
-      javax.imageio.ImageIO.setUseCache(false)
-      val writers = scala.collection.mutable.Map.empty[
-        String, javax.imageio.ImageWriter]
-      // native codec resources are released when the task ends, not
-      // left to GC (r18 ADVICE): the iterator below is lazy, so a
-      // task-completion listener is the only hook that runs after it
-      // is exhausted (or the task dies)
-      val tc = org.apache.spark.TaskContext.get()
-      if (tc != null) tc.addTaskCompletionListener[Unit] { _ =>
-        writers.values.foreach(w => scala.util.Try(w.dispose())); ()
-      }
-      def encodeAs(img: java.awt.image.BufferedImage,
-                   fmt: String): Array[Byte] = {
-        val writer = writers.getOrElseUpdate(fmt, {
-          val found = javax.imageio.ImageIO.getImageWritersByFormatName(fmt)
-          // a missing codec must fail with the format named, not with
-          // an iterator NoSuchElementException (r18 ADVICE)
-          require(found.hasNext,
-            s"packImageVariants: no ImageIO writer for format '$fmt'")
-          found.next()
-        })
-        val bos = new java.io.ByteArrayOutputStream()
-        val ios = new javax.imageio.stream.MemoryCacheImageOutputStream(bos)
-        writer.setOutput(ios)
-        writer.write(img)
-        ios.close()
-        bos.toByteArray
-      }
-      rows.grouped(batchSize).flatMap { batch =>
-        batch.flatMap { r =>
-          val id = r.getLong(0)
-          // variant ids live at base + 2e6 / base + 3e6: a base id at or
-          // above 2e6 WITHIN ITS 1e7 BAND would silently COLLIDE a
-          // planted variant with a real media id (r13 advice) — refuse
-          // loudly instead. Bands of 1e7 are the documents replica
-          // convention (ScaleReplica's docShift: copy i sits at
-          // i·1e7 + base), which this guard turns from convention into
-          // a checked invariant.
-          require(id >= 0 && id % 10000000L < 2000000L,
-            s"packImageVariants: base id $id at or above 2e6 within its " +
-              "1e7 band — variant ids (+2e6/+3e6) would collide with the " +
-              "corpus id domain")
-          val w = (id % 64 + 16).toInt
-          val h = (id % 48 + 16).toInt
-          def render(delta: Int): java.awt.image.BufferedImage = {
-            val img = new java.awt.image.BufferedImage(
-              w, h, java.awt.image.BufferedImage.TYPE_INT_RGB)
-            val px = img.getRaster.getDataBuffer
-              .asInstanceOf[java.awt.image.DataBufferInt].getData
-            var y = 0
-            while (y < h) {
-              var x = 0
-              val row = y * w
-              while (x < w) {
-                val v = (id * 1103515245L + x * 31L + y * 131L) & 0xFFFFFF
-                val rr = shiftClamp(((v >> 16) & 255).toInt, delta)
-                val gg = shiftClamp(((v >> 8) & 255).toInt, delta)
-                val bb = shiftClamp((v & 255).toInt, delta)
-                px(row + x) = (rr << 16) | (gg << 8) | bb
-                x += 1
-              }
-              y += 1
-            }
-            img
-          }
-          val base = render(0)
-          val out = Seq.newBuilder[Row]
-          out += Row(id, encodeAs(base, "png"), "image/png")
-          if (id % 10 == 0) {
-            out += Row(id + 2000000L, encodeAs(base, "bmp"), "image/bmp")
-            out += Row(id + 3000000L,
-              encodeAs(render(brightDelta), "png"), "image/png")
-          }
-          out.result()
-        }
+      val encoder = new Multimodal.ImageEncoder
+      rows.flatMap { r =>
+        val id = r.getLong(0)
+        // variant ids live at base + 2e6 / base + 3e6: a base id at or
+        // above 2e6 WITHIN ITS 1e7 BAND would silently COLLIDE a
+        // planted variant with a real media id (r13 advice) — refuse
+        // loudly instead. Bands of 1e7 are the documents replica
+        // convention (ScaleReplica's docShift: copy i sits at
+        // i·1e7 + base), which this guard turns from convention into
+        // a checked invariant.
+        require(id >= 0 && id % 10000000L < 2000000L,
+          s"packImageVariants: base id $id at or above 2e6 within its " +
+            "1e7 band — variant ids (+2e6/+3e6) would collide with the " +
+            "corpus id domain")
+        val base = Multimodal.renderImage(id, 0)
+        val png = Row(id, encoder.encode(base, "png"), "image/png")
+        if (id % 10 != 0) Iterator.single(png)
+        else Iterator(png,
+          Row(id + 2000000L, encoder.encode(base, "bmp"), "image/bmp"),
+          Row(id + 3000000L, encoder.encode(
+            Multimodal.renderImage(id, brightDelta), "png"), "image/png"))
       }
     }(enc)
   }
@@ -177,7 +109,7 @@ object ImageDedup {
     *        long.
     */
   def blockhashCodes(spark: SparkSession, packed: DataFrame,
-                     batchSize: Int = 64, grid: Int = 8): DataFrame = {
+                     grid: Int = 8): DataFrame = {
     require(grid >= 2 && grid * grid <= 64,
       s"grid $grid: code width ${grid * grid} outside (4, 64]")
     val outSchema = StructType(Seq(
@@ -190,87 +122,49 @@ object ImageDedup {
       .encoderFor(outSchema)
     val in = packed.select(col("media_id").cast("long"), col("media"))
     in.mapPartitions { rows =>
-      // r18: decodeImagesBatched's codec amortizations — no ImageIO
-      // temp-file cache, and the per-pixel channel sum taken straight
-      // off the decoded raster's backing array where the layout is the
-      // JDK codec's TYPE_3BYTE_BGR / TYPE_INT_RGB (these PNGs/BMPs
-      // carry no ICC profile, so getRGB's sRGB conversion is the
-      // identity on the stored 8-bit channels — same g per pixel, one
-      // virtual call + color-model conversion per IMAGE instead of per
-      // PIXEL). Any other layout falls back to one bulk getRGB.
-      javax.imageio.ImageIO.setUseCache(false)
-      rows.grouped(batchSize).flatMap { batch =>
-        batch.flatMap { r =>
-          val id = r.getLong(0)
-          val bytes = r.getAs[Array[Byte]](1)
-          // NonFatal only (r13 advice): an OOM or interrupt must fail
-          // the task, not silently drop the image as "undecodable"
-          val img =
-            try javax.imageio.ImageIO.read(
-              new java.io.ByteArrayInputStream(bytes))
-            catch { case scala.util.control.NonFatal(_) => null }
-          if (img == null) Iterator.empty
+      val dec = new Multimodal.ImageDecoder
+      rows.flatMap { r =>
+        val id = r.getLong(0)
+        val img = dec.read(r.getAs[Array[Byte]](1))
+        if (img == null) Iterator.empty
+        else {
+          val w = img.getWidth
+          val h = img.getHeight
+          val w8 = w - w % grid
+          val h8 = h - h % grid
+          if (w8 < grid || h8 < grid) Iterator.empty
           else {
-            val w = img.getWidth
-            val h = img.getHeight
-            val w8 = w - w % grid
-            val h8 = h - h % grid
-            if (w8 < grid || h8 < grid) Iterator.empty
-            else {
-              val bw = w8 / grid
-              val bh = h8 / grid
-              val nCells = grid * grid
-              val sums = new Array[Long](nCells)
-              var total = 0L
-              var pixsum = 0L
-              // per-pixel grey sum g(x, y), layout-specialized
-              val gAt: (Int, Int) => Int = img.getRaster.getDataBuffer match {
-                case db: java.awt.image.DataBufferByte
-                    if img.getType ==
-                      java.awt.image.BufferedImage.TYPE_3BYTE_BGR =>
-                  val a = db.getData
-                  (x, y) => {
-                    val i = (y * w + x) * 3
-                    (a(i) & 0xFF) + (a(i + 1) & 0xFF) + (a(i + 2) & 0xFF)
-                  }
-                case db: java.awt.image.DataBufferInt
-                    if img.getType ==
-                      java.awt.image.BufferedImage.TYPE_INT_RGB =>
-                  val a = db.getData
-                  (x, y) => {
-                    val p = a(y * w + x)
-                    ((p >> 16) & 255) + ((p >> 8) & 255) + (p & 255)
-                  }
-                case _ =>
-                  val a = img.getRGB(0, 0, w, h, null, 0, w)
-                  (x, y) => {
-                    val p = a(y * w + x)
-                    ((p >> 16) & 255) + ((p >> 8) & 255) + (p & 255)
-                  }
-              }
-              var y = 0
-              while (y < h) {
-                var x = 0
-                while (x < w) {
-                  val g = gAt(x, y)
-                  pixsum += g.toLong * (x + 1) * (y + 3)
-                  if (x < w8 && y < h8) {
-                    val cell = (y / bh) * grid + (x / bw)
-                    sums(cell) += g
-                    total += g
-                  }
-                  x += 1
+            val bw = w8 / grid
+            val bh = h8 / grid
+            val nCells = grid * grid
+            val sums = new Array[Long](nCells)
+            var total = 0L
+            var pixsum = 0L
+            val px = Multimodal.packedRgb(img)
+            var y = 0
+            while (y < h) {
+              var x = 0
+              while (x < w) {
+                // grey g(x, y) = the exact integer r + g + b
+                val p = px(y * w + x)
+                val g = ((p >> 16) & 255) + ((p >> 8) & 255) + (p & 255)
+                pixsum += g.toLong * (x + 1) * (y + 3)
+                if (x < w8 && y < h8) {
+                  val cell = (y / bh) * grid + (x / bw)
+                  sums(cell) += g
+                  total += g
                 }
-                y += 1
+                x += 1
               }
-              var code = 0L
-              var c = 0
-              while (c < nCells) {
-                if (nCells.toLong * sums(c) > total) code |= (1L << c)
-                c += 1
-              }
-              Iterator.single(Row(id, w, h, code, pixsum))
+              y += 1
             }
+            var code = 0L
+            var c = 0
+            while (c < nCells) {
+              if (nCells.toLong * sums(c) > total) code |= (1L << c)
+              c += 1
+            }
+            Iterator.single(Row(id, w, h, code, pixsum))
           }
         }
       }

@@ -1,6 +1,12 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
+import java.awt.image.{BufferedImage, DataBufferInt}
+import javax.imageio.{ImageIO, ImageWriter}
+
+import scala.collection.immutable.ArraySeq
+
+import org.apache.spark.TaskContext
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -8,12 +14,15 @@ import org.apache.spark.sql.types._
   * opaque `binary` columns with a typed metadata struct alongside, so
   * Catalyst prunes/filters on metadata WITHOUT ever deserializing payloads.
   *
-  * The decode/feature step is the only place a codec runs; it is
-  * mapPartitions-batched so a real codec (libjpeg/ffmpeg/…) would amortize
-  * init per batch, and the batch shape (id, bytes) → (id, features…) is
-  * exactly what a vectorized/Arrow UDF needs. Codecs aren't available in
-  * this container, so [[decodeStub]] produces a deterministic fake feature
-  * vector — clearly marked; swap the body, keep the plumbing.
+  * Still images go through ONE codec: [[renderImage]] is the pixel
+  * formula the oracles replay, [[ImageEncoder]] the one encoder and
+  * [[ImageDecoder]] the one decoder (`javax.imageio`, pure JVM), each
+  * built once per partition. [[packImages]] / [[decodeImages]] are
+  * their one transport — a mapPartitions row path — and the c97
+  * perceptual codes ([[ImageDedup]]) ride the same encoder, decoder and
+  * raster accessor. Payloads the decoder cannot read quarantine to a
+  * deterministic byte histogram instead of failing the task. Animated
+  * GIFs keep their own sequence codec ([[packAnimatedGifs]]).
   */
 object Multimodal {
 
@@ -56,150 +65,96 @@ object Multimodal {
 
   private val histBins = 16
 
-  /** Generate REAL PNG payloads (deterministic pixels from the id) through
-    * the same batched mapPartitions shape the decode path uses — the codec
-    * (`javax.imageio`, pure JVM) runs executor-side, driver never sees
-    * bytes. Dimensions follow the same formula as [[packMedia]] so metadata
-    * stays the prunable source of truth.
+  /** Dimensions of id's synthetic image — the [[packMedia]] formula, so
+    * metadata stays the prunable source of truth.
     */
-  def packImages(spark: SparkSession, df: DataFrame, idCol: String,
-                 batchSize: Int = 64): DataFrame = {
-    val outSchema = StructType(Seq(
-      StructField("media_id", LongType),
-      StructField("media", BinaryType),
-      StructField("meta", mediaMetaSchema)))
-    val enc = org.apache.spark.sql.catalyst.encoders.RowEncoder
-      .encoderFor(outSchema)
-    val in = df.select(col(idCol).cast("long").as("media_id"))
-    in.mapPartitions { rows =>
-      rows.grouped(batchSize).flatMap { batch =>
-        batch.map { r =>
-          val id = r.getLong(0)
-          val w = (id % 64 + 16).toInt
-          val h = (id % 48 + 16).toInt
-          val img = new java.awt.image.BufferedImage(
-            w, h, java.awt.image.BufferedImage.TYPE_INT_RGB)
-          var y = 0
-          while (y < h) {
-            var x = 0
-            while (x < w) {
-              // deterministic pseudo-content: id-seeded per-pixel mix
-              val v = (id * 1103515245L + x * 31L + y * 131L) & 0xFFFFFF
-              img.setRGB(x, y, v.toInt)
-              x += 1
-            }
-            y += 1
-          }
-          val bos = new java.io.ByteArrayOutputStream()
-          javax.imageio.ImageIO.write(img, "png", bos)
-          Row(id, bos.toByteArray,
-            Row("image/png", w, h, 1))
-        }
+  private def imageW(id: Long): Int = (id % 64 + 16).toInt
+  private def imageH(id: Long): Int = (id % 48 + 16).toInt
+
+  /** Render image `id` from the pixel formula the DuckDB oracles replay:
+    * pixel (x, y) is `(id·1103515245 + 31x + 131y) & 0xFFFFFF` read as
+    * packed RGB, every channel shifted by `delta` and saturated at 255
+    * (the c97 brightness variant; `delta = 0` is the raw formula, bit
+    * for bit). Pixels go straight into the TYPE_INT_RGB backing `int[]`
+    * — the int `setRGB` would store, minus a virtual call per pixel.
+    */
+  private[graft] def renderImage(id: Long, delta: Int): BufferedImage = {
+    val w = imageW(id); val h = imageH(id)
+    val img = new BufferedImage(w, h, BufferedImage.TYPE_INT_RGB)
+    val px = img.getRaster.getDataBuffer.asInstanceOf[DataBufferInt].getData
+    def ch(v: Int): Int = math.min((v & 255) + delta, 255)
+    var y = 0
+    while (y < h) {
+      var x = 0
+      val row = y * w
+      while (x < w) {
+        val v = ((id * 1103515245L + x * 31L + y * 131L) & 0xFFFFFF).toInt
+        px(row + x) = (ch(v >> 16) << 16) | (ch(v >> 8) << 8) | ch(v)
+        x += 1
       }
-    }(enc)
+      y += 1
+    }
+    img
   }
 
-  private val PngMagic = Array[Byte](0x89.toByte, 'P', 'N', 'G')
-
-  /** Decode + feature-extract with a REAL codec (`javax.imageio`, PNG/BMP
-    * — pure JVM, no native deps), batched per partition. Payloads that are
-    * not a supported image (no PNG/BMP magic, or codec failure) fall back
-    * to the byte-histogram stub features with null dimensions — the same
-    * quarantine-not-crash posture as PERMISSIVE ingest (A13).
-    *
-    * Output: (media_id, n_bytes, width, height, features[3] = mean RGB in
-    * [0,1]). Scale note: the per-image codec call IS the hot path — batch
-    * boundaries exist so a vectorized/Arrow transport (mapInArrow on the
-    * PySpark side) or a pooled native codec slots in without changing the
-    * plan shape; everything around the codec is straight-line primitive
-    * code, no per-pixel boxing (grabs the raster once per image).
+  /** Run `release` when the current Spark task completes (or dies): the
+    * packers/decoders are lazy iterators, so a completion listener is
+    * the only hook that runs after the partition is exhausted. Off a
+    * task (driver-side use) the codec objects are left to GC.
     */
-  def decodeImages(spark: SparkSession, packed: DataFrame,
-                   batchSize: Int = 64): DataFrame = {
-    val outSchema = StructType(Seq(
-      StructField("media_id", LongType),
-      StructField("n_bytes", IntegerType),
-      StructField("width", IntegerType),
-      StructField("height", IntegerType),
-      StructField("features", ArrayType(DoubleType))))
-    val enc = org.apache.spark.sql.catalyst.encoders.RowEncoder
-      .encoderFor(outSchema)
-    val in = packed.select(col("media_id").cast("long"), col("media"))
-    in.mapPartitions { rows =>
-      rows.grouped(batchSize).flatMap { batch =>
-        batch.map { r =>
-          val id = r.getLong(0)
-          val bytes = r.getAs[Array[Byte]](1)
-          val isImage = bytes.length > 4 &&
-            ((bytes(0) == PngMagic(0) && bytes(1) == PngMagic(1) &&
-              bytes(2) == PngMagic(2) && bytes(3) == PngMagic(3)) ||
-             (bytes(0) == 'B' && bytes(1) == 'M') ||
-             (bytes(0) == 0xFF.toByte && bytes(1) == 0xD8.toByte &&
-              bytes(2) == 0xFF.toByte) ||
-             (bytes(0) == 'G' && bytes(1) == 'I' && bytes(2) == 'F' &&
-              bytes(3) == '8'))
-          val decoded =
-            if (!isImage) null
-            else try javax.imageio.ImageIO.read(
-              new java.io.ByteArrayInputStream(bytes))
-            catch { case _: java.io.IOException => null }
-          if (decoded != null) {
-            val w = decoded.getWidth; val h = decoded.getHeight
-            // one raster grab per image; tight primitive loop over pixels
-            val px = decoded.getRGB(0, 0, w, h, null, 0, w)
-            var sr = 0L; var sg = 0L; var sb = 0L
-            var i = 0
-            while (i < px.length) {
-              val p = px(i)
-              sr += (p >> 16) & 0xFF; sg += (p >> 8) & 0xFF; sb += p & 0xFF
-              i += 1
-            }
-            val n = math.max(px.length, 1) * 255.0
-            Row(id, bytes.length, w, h,
-              Seq(sr / n, sg / n, sb / n))
-          } else {
-            val hist = new Array[Double](histBins)
-            var i = 0
-            while (i < bytes.length) {
-              hist((bytes(i) & 0xFF) * histBins / 256) += 1.0
-              i += 1
-            }
-            val total = math.max(bytes.length, 1).toDouble
-            Row(id, bytes.length, null, null, hist.map(_ / total).toSeq)
-          }
-        }
-      }
-    }(enc)
+  private def atTaskEnd(release: => Unit): Unit = {
+    val tc = TaskContext.get()
+    if (tc != null) tc.addTaskCompletionListener[Unit](_ => release)
   }
 
-  /** [[packImages]] with the per-image codec overhead stripped out — the
-    * "vectorized transport" the r4 review asked for, in the form the JVM
-    * actually rewards:
-    *   - `ImageIO.setUseCache(false)`: the default ImageIO path spools
-    *     every encode/decode through a TEMP FILE on disk; per-partition
-    *     in-memory streams remove a file create+write+delete per image;
-    *   - ONE `ImageWriter` instance per partition (`ImageIO.write` scans
-    *     the registry and instantiates a fresh writer per call);
-    *   - pixels written straight into the image's backing `int[]`
-    *     (`DataBufferInt`) instead of per-pixel `setRGB` calls — for
-    *     TYPE_INT_RGB `setRGB` stores the same int, so the payload is
-    *     BIT-IDENTICAL, minus a virtual call + bounds check per pixel.
-    * An Arrow/ColumnarBatch transport would change how rows REACH this
-    * loop, not the codec cost inside it — batching stays at the
-    * mapPartitions boundary, which is where a columnar exchange would
-    * plug in.
+  /** The one image encoder, one per partition (the twin of
+    * [[ImageDecoder]]): ONE `ImageWriter` per format instead of
+    * `ImageIO.write`'s registry scan + fresh writer per call, in-memory
+    * streams instead of the ImageIO temp-file cache, every writer
+    * disposed when the task completes. A missing codec fails naming the
+    * format, not with an iterator NoSuchElementException.
     *
-    * The codec stage is additionally sized by CORES, not by the source
-    * file's split count: a codec is CPU-bound per row, so partitioning
-    * inherited from a small parquet scan (one split for a sub-128 MB
-    * file) would serialize the whole stage behind one task. The id frame
-    * is widened to defaultParallelism when narrower — a shuffle of bare
-    * longs, nothing next to the per-image work it unlocks. (Downstream
-    * [[decodeImagesBatched]] inherits this partitioning and stays
-    * payload-local.)
+    * `setUseCache` is JVM-global: flipping it off from a task is
+    * idempotent and the only sane setting for byte-array round trips,
+    * so every codec object sets it — noted because it IS cross-task
+    * state.
     */
-  def packImagesBatched(spark: SparkSession, df: DataFrame, idCol: String,
-                        batchSize: Int = 64): DataFrame = {
+  final class ImageEncoder {
+    ImageIO.setUseCache(false)
+    private val writers =
+      scala.collection.mutable.Map.empty[String, ImageWriter]
+    atTaskEnd(writers.values.foreach(w => scala.util.Try(w.dispose())))
+
+    def encode(img: BufferedImage, format: String): Array[Byte] = {
+      val writer = writers.getOrElseUpdate(format, {
+        val found = ImageIO.getImageWritersByFormatName(format)
+        require(found.hasNext,
+          s"ImageEncoder: no ImageIO writer for format '$format'")
+        found.next()
+      })
+      val bos = new java.io.ByteArrayOutputStream()
+      val ios = new javax.imageio.stream.MemoryCacheImageOutputStream(bos)
+      writer.setOutput(ios)
+      writer.write(img)
+      ios.close()
+      bos.toByteArray
+    }
+  }
+
+  /** Generate REAL PNG payloads — [[renderImage]]'s pixels through one
+    * [[ImageEncoder]] per partition; the codec (`javax.imageio`, pure
+    * JVM) runs executor-side, the driver never sees bytes.
+    *
+    * The codec stage is sized by CORES, not by the source file's split
+    * count: a codec is CPU-bound per row, so partitioning inherited from
+    * a small parquet scan (one split for a sub-128 MB file) would
+    * serialize the whole stage behind one task. The id frame is widened
+    * to defaultParallelism when narrower — a shuffle of bare longs,
+    * nothing next to the per-image work it unlocks ([[decodeImages]]
+    * inherits this partitioning and stays payload-local).
+    */
+  def packImages(spark: SparkSession, df: DataFrame,
+                 idCol: String): DataFrame = {
     val outSchema = StructType(Seq(
       StructField("media_id", LongType),
       StructField("media", BinaryType),
@@ -211,52 +166,24 @@ object Multimodal {
     val in = if (narrow.rdd.getNumPartitions < target)
       narrow.repartition(target) else narrow
     in.mapPartitions { rows =>
-      javax.imageio.ImageIO.setUseCache(false)
-      val writer = javax.imageio.ImageIO
-        .getImageWritersByFormatName("png").next()
-      rows.grouped(batchSize).flatMap { batch =>
-        batch.map { r =>
-          val id = r.getLong(0)
-          val w = (id % 64 + 16).toInt
-          val h = (id % 48 + 16).toInt
-          val img = new java.awt.image.BufferedImage(
-            w, h, java.awt.image.BufferedImage.TYPE_INT_RGB)
-          val px = img.getRaster.getDataBuffer
-            .asInstanceOf[java.awt.image.DataBufferInt].getData
-          var y = 0
-          while (y < h) {
-            var x = 0
-            val row = y * w
-            while (x < w) {
-              px(row + x) =
-                ((id * 1103515245L + x * 31L + y * 131L) & 0xFFFFFF).toInt
-              x += 1
-            }
-            y += 1
-          }
-          val bos = new java.io.ByteArrayOutputStream()
-          val ios = new javax.imageio.stream.MemoryCacheImageOutputStream(bos)
-          writer.setOutput(ios)
-          writer.write(img)
-          ios.close()
-          Row(id, bos.toByteArray, Row("image/png", w, h, 1))
-        }
+      val encoder = new ImageEncoder
+      rows.map { r =>
+        val id = r.getLong(0)
+        Row(id, encoder.encode(renderImage(id, 0), "png"),
+          Row("image/png", imageW(id), imageH(id), 1))
       }
     }(enc)
   }
 
-  /** [[decodeImages]] with the same per-partition codec amortization as
-    * [[packImagesBatched]]: no ImageIO temp-file cache, ONE reused
-    * `ImageReader` per partition, and channel sums taken straight off the
-    * decoded raster's backing byte/int array (PNG decodes to
-    * TYPE_3BYTE_BGR on the JDK codec; `getRGB` would re-convert every
-    * pixel through the color model). Output and quarantine semantics are
-    * identical to [[decodeImages]] — same bit-exact DuckDB oracle.
-    * The per-image decode lives in [[ImageDecoder]], shared verbatim with
-    * the columnar transport ([[decodeImagesColumnar]]).
+  /** Decode + feature-extract every payload with one [[ImageDecoder]]
+    * per partition. Output: (media_id, n_bytes, width, height, features)
+    * — features[3] = mean RGB in [0, 1] for a decoded image; a payload
+    * that is not a decodable image quarantines (the A13 posture) to null
+    * dimensions and the 16-bin L1-normalized byte histogram, so opaque
+    * media such as [[packMedia]]'s text bytes still get a deterministic
+    * feature vector.
     */
-  def decodeImagesBatched(spark: SparkSession, packed: DataFrame,
-                          batchSize: Int = 64): DataFrame = {
+  def decodeImages(spark: SparkSession, packed: DataFrame): DataFrame = {
     val outSchema = StructType(Seq(
       StructField("media_id", LongType),
       StructField("n_bytes", IntegerType),
@@ -268,120 +195,68 @@ object Multimodal {
     val in = packed.select(col("media_id").cast("long"), col("media"))
     in.mapPartitions { rows =>
       val dec = new ImageDecoder
-      rows.grouped(batchSize).flatMap { batch =>
-        batch.map { r =>
-          val id = r.getLong(0)
-          val bytes = r.getAs[Array[Byte]](1)
-          val d = dec.decode(bytes)
-          if (d.width >= 0)
-            Row(id, bytes.length, d.width, d.height,
-              scala.collection.immutable.ArraySeq.unsafeWrapArray(d.features))
-          else
-            Row(id, bytes.length, null, null,
-              scala.collection.immutable.ArraySeq.unsafeWrapArray(d.features))
-        }
+      rows.map { r =>
+        val bytes = r.getAs[Array[Byte]](1)
+        val d = dec.decode(bytes)
+        val feats = ArraySeq.unsafeWrapArray(d.features)
+        if (d.width >= 0)
+          Row(r.getLong(0), bytes.length, d.width, d.height, feats)
+        else Row(r.getLong(0), bytes.length, null, null, feats)
       }
     }(enc)
   }
 
-  /** Columnar-transport variant of [[decodeImagesBatched]]: a custom
-    * physical operator ([[graft.plans.DecodeImagesExec]], registered via
-    * [[graft.plans.GraftExtensions]]) that consumes and produces
-    * `ColumnarBatch`es — the JVM equivalent of the `mapInArrow` transport.
-    * Catalyst inserts the transitions: a columnar child (the vectorized
-    * parquet reader, when packed media is read from disk) feeds the codec
-    * WITHOUT ever pivoting payload bytes through rows, and a single
-    * codegen'd `ColumnarToRowExec` sits above. Row-producing children get
-    * a `RowToColumnarExec` staged in by Spark (still cheaper than the
-    * per-row `RowEncoder` serialization of the mapPartitions path, which
-    * allocates a GenericRow + copies the feature array per image).
-    * Decode semantics are [[ImageDecoder]] — byte-identical features,
-    * same oracle.
-    */
-  def decodeImagesColumnar(spark: SparkSession, packed: DataFrame): DataFrame = {
-    val in = packed.select(col("media_id").cast("long").as("media_id"),
-      col("media"))
-    org.apache.spark.sql.classic.GraftColumnBridge.ofRows(spark,
-      graft.plans.DecodeImagesNode(in.queryExecution.analyzed))
-  }
-
   /** Result of one image decode: `width < 0` means the payload was not a
-    * decodable image and `features` holds the histogram-stub fallback.
+    * decodable image and `features` holds the byte-histogram quarantine.
     */
   final case class DecodeResult(width: Int, height: Int,
                                 features: Array[Double])
 
-  /** The per-image decode, shared verbatim between the row transport
-    * ([[decodeImagesBatched]]) and the columnar transport
-    * ([[decodeImagesColumnar]]) so the two are bit-identical by
-    * construction. One instance per partition: owns the reused PNG
-    * `ImageReader` and disables the ImageIO temp-file cache once.
+  private def hasPrefix(bytes: Array[Byte], magic: Int*): Boolean =
+    bytes.length > 4 && magic.indices.forall(i => bytes(i) == magic(i).toByte)
+
+  /** The one image decoder, one per partition. Sniffs the magic bytes —
+    * PNG decodes through ONE reused `ImageReader` (disposed when the
+    * task completes); BMP, JPEG (FF D8 FF) and GIF ("GIF8") ride the
+    * JDK's own ImageIO plugins, no native deps. Lossy JPEG means its
+    * features are codec-true, not formula-pinned, so the oracles stay on
+    * PNG/BMP and JPEG is spec-gated by round-trip tolerance instead.
     */
   final class ImageDecoder {
-    javax.imageio.ImageIO.setUseCache(false)
-    private val pngReader = javax.imageio.ImageIO
-      .getImageReadersByFormatName("png").next()
+    ImageIO.setUseCache(false)
+    private val pngReader = ImageIO.getImageReadersByFormatName("png").next()
+    atTaskEnd(pngReader.dispose())
+
+    /** The decoded image, or null when `bytes` is not a decodable image:
+      * no known magic, or any NonFatal codec failure (an OOM or interrupt
+      * still fails the task).
+      */
+    def read(bytes: Array[Byte]): BufferedImage =
+      try {
+        if (hasPrefix(bytes, 0x89, 'P', 'N', 'G')) {
+          val iis = new javax.imageio.stream.MemoryCacheImageInputStream(
+            new java.io.ByteArrayInputStream(bytes))
+          try { pngReader.setInput(iis, true, true); pngReader.read(0) }
+          finally iis.close()
+        } else if (hasPrefix(bytes, 'B', 'M') ||
+                   hasPrefix(bytes, 0xFF, 0xD8, 0xFF) ||
+                   hasPrefix(bytes, 'G', 'I', 'F', '8'))
+          ImageIO.read(new java.io.ByteArrayInputStream(bytes))
+        else null
+      } catch { case scala.util.control.NonFatal(_) => null }
 
     def decode(bytes: Array[Byte]): DecodeResult = {
-      val isPng = bytes.length > 4 &&
-        bytes(0) == PngMagic(0) && bytes(1) == PngMagic(1) &&
-        bytes(2) == PngMagic(2) && bytes(3) == PngMagic(3)
-      val isBmp = bytes.length > 4 && bytes(0) == 'B' && bytes(1) == 'M'
-      // JPEG (FF D8 FF) and GIF ("GIF8") ride the JDK's own ImageIO
-      // plugins — no native deps; lossy JPEG means features are
-      // codec-true, not formula-pinned, so the oracle stays on PNG and
-      // the JPEG path is spec-gated by round-trip tolerance instead
-      val isJpg = bytes.length > 4 && bytes(0) == 0xFF.toByte &&
-        bytes(1) == 0xD8.toByte && bytes(2) == 0xFF.toByte
-      val isGif = bytes.length > 4 && bytes(0) == 'G' &&
-        bytes(1) == 'I' && bytes(2) == 'F' && bytes(3) == '8'
-      val decoded =
-        if (isPng) {
-          try {
-            val iis = new javax.imageio.stream.MemoryCacheImageInputStream(
-              new java.io.ByteArrayInputStream(bytes))
-            pngReader.setInput(iis, true, true)
-            val img = pngReader.read(0)
-            iis.close()
-            img
-          } catch { case _: java.io.IOException => null }
-        } else if (isBmp || isJpg || isGif) {
-          try javax.imageio.ImageIO.read(
-            new java.io.ByteArrayInputStream(bytes))
-          catch { case _: java.io.IOException => null }
-        } else null
-      if (decoded != null) {
-        val w = decoded.getWidth; val h = decoded.getHeight
+      val img = read(bytes)
+      if (img != null) {
+        val px = packedRgb(img)
         var sr = 0L; var sg = 0L; var sb = 0L
-        decoded.getRaster.getDataBuffer match {
-          case db: java.awt.image.DataBufferByte
-              if decoded.getType ==
-                java.awt.image.BufferedImage.TYPE_3BYTE_BGR =>
-            val a = db.getData
-            var i = 0
-            while (i < a.length) {
-              sb += a(i) & 0xFF; sg += a(i + 1) & 0xFF; sr += a(i + 2) & 0xFF
-              i += 3
-            }
-          case db: java.awt.image.DataBufferInt
-              if decoded.getType ==
-                java.awt.image.BufferedImage.TYPE_INT_RGB =>
-            val a = db.getData
-            var i = 0
-            while (i < a.length) {
-              val p = a(i)
-              sr += (p >> 16) & 0xFF; sg += (p >> 8) & 0xFF; sb += p & 0xFF
-              i += 1
-            }
-          case _ =>
-            val px = decoded.getRGB(0, 0, w, h, null, 0, w)
-            var i = 0
-            while (i < px.length) {
-              val p = px(i)
-              sr += (p >> 16) & 0xFF; sg += (p >> 8) & 0xFF; sb += p & 0xFF
-              i += 1
-            }
+        var i = 0
+        while (i < px.length) {
+          val p = px(i)
+          sr += (p >> 16) & 0xFF; sg += (p >> 8) & 0xFF; sb += p & 0xFF
+          i += 1
         }
+        val (w, h) = (img.getWidth, img.getHeight)
         val n = math.max(w * h, 1) * 255.0
         DecodeResult(w, h, Array(sr / n, sg / n, sb / n))
       } else {
@@ -392,10 +267,38 @@ object Multimodal {
           i += 1
         }
         val total = math.max(bytes.length, 1).toDouble
-        var i2 = 0
-        while (i2 < histBins) { hist(i2) /= total; i2 += 1 }
-        DecodeResult(-1, -1, hist)
+        DecodeResult(-1, -1, hist.map(_ / total))
       }
+    }
+  }
+
+  /** Every pixel of a decoded image as packed 0xRRGGBB ints, row-major —
+    * the one raster accessor behind the mean-RGB features and the
+    * blockhash grey sums. The JDK codecs' TYPE_INT_RGB / TYPE_3BYTE_BGR
+    * layouts are read straight off the backing array (these payloads
+    * carry no ICC profile, so `getRGB`'s sRGB conversion would be the
+    * identity on the stored 8-bit channels — one color-model conversion
+    * per IMAGE instead of per PIXEL); any other layout takes one bulk
+    * `getRGB`. Only the low 24 bits are meaningful.
+    */
+  private[graft] def packedRgb(img: BufferedImage): Array[Int] = {
+    val w = img.getWidth; val h = img.getHeight
+    img.getRaster.getDataBuffer match {
+      case db: DataBufferInt if img.getType == BufferedImage.TYPE_INT_RGB =>
+        db.getData
+      case db: java.awt.image.DataBufferByte
+          if img.getType == BufferedImage.TYPE_3BYTE_BGR =>
+        val a = db.getData
+        val px = new Array[Int](w * h)
+        var i = 0
+        while (i < px.length) {
+          val j = 3 * i
+          px(i) = ((a(j + 2) & 0xFF) << 16) | ((a(j + 1) & 0xFF) << 8) |
+            (a(j) & 0xFF)
+          i += 1
+        }
+        px
+      case _ => img.getRGB(0, 0, w, h, null, 0, w)
     }
   }
 
@@ -621,44 +524,6 @@ object Multimodal {
             Seq(Row(id, null, -1, null, null, null, null, null, null))
           else deltas.map { case (n, pf, f, w, h, mr, mg, mb) =>
             Row(id, n, pf, f, w, h, mr, mg, mb) }
-        }
-      }
-    }(enc)
-  }
-
-  /** Decode + feature-extract, batched per partition.
-    *
-    * >>> STUB CODEC <<< — kept as the declared stand-in for codecs the
-    * container lacks (JPEG/video/audio): features are a deterministic byte
-    * histogram (16 bins, L1-normalized) + payload length. For PNG/BMP the
-    * REAL codec path is [[decodeImages]] (javax.imageio). The Spark-side
-    * contract (schema, batching, partition-locality, no shuffle) is
-    * identical in both.
-    */
-  def decodeStub(spark: SparkSession, packed: DataFrame,
-                 batchSize: Int = 64): DataFrame = {
-    val outSchema = StructType(Seq(
-      StructField("media_id", LongType),
-      StructField("n_bytes", IntegerType),
-      StructField("features", ArrayType(DoubleType))))
-    val enc = org.apache.spark.sql.catalyst.encoders.RowEncoder
-      .encoderFor(outSchema)
-    val in = packed.select(col("media_id").cast("long"), col("media"))
-    in.mapPartitions { rows =>
-      // batch so a real codec amortizes per-batch init (codec handle,
-      // pinned buffers, GPU context, …)
-      rows.grouped(batchSize).flatMap { batch =>
-        batch.map { r =>
-          val id = r.getLong(0)
-          val bytes = r.getAs[Array[Byte]](1)
-          val hist = new Array[Double](histBins)
-          var i = 0
-          while (i < bytes.length) {
-            hist((bytes(i) & 0xFF) * histBins / 256) += 1.0
-            i += 1
-          }
-          val total = math.max(bytes.length, 1).toDouble
-          Row(id, bytes.length, hist.map(_ / total).toSeq)
         }
       }
     }(enc)

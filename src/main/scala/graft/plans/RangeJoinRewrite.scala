@@ -215,8 +215,6 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
 
   override def apply(extensions: SparkSessionExtensions): Unit = {
     extensions.injectOptimizerRule(_ => RangeJoinRewrite)
-    // whole-operator columnar decode (DecodeImagesNode → DecodeImagesExec)
-    extensions.injectPlannerStrategy(_ => MultimodalStrategy)
 
     extensions.injectFunction((FunctionIdentifier("simhash64"),
       info("simhash64", classOf[graft.functions.SimHash64Expr]),

@@ -11,12 +11,4 @@ import org.apache.spark.sql.catalyst.expressions.Expression
 object GraftColumnBridge {
   def column(e: Expression): Column = ExpressionUtils.column(e)
   def expression(c: Column): Expression = ExpressionUtils.expression(c)
-
-  /** `Dataset.ofRows` for a custom logical plan (also `private[sql]`) —
-    * how an engine surfaces a custom operator node as a plain DataFrame.
-    */
-  def ofRows(spark: org.apache.spark.sql.SparkSession,
-             plan: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan)
-      : org.apache.spark.sql.DataFrame =
-    Dataset.ofRows(spark.asInstanceOf[SparkSession], plan)
 }

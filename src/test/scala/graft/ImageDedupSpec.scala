@@ -183,4 +183,34 @@ class ImageDedupSpec extends AnyFunSuite with SparkSpec {
         s"degenerate truth must read 0 ppm, got $r")
     }
   }
+
+  test("packImageVariants' base PNG is byte-identical to packImages' PNG " +
+       "for the same id") {
+    val base = ImageDedup.packImageVariants(s, docs, "doc_id")
+      .where(col("media_id") < 2000000L)
+      .select(col("media_id"), md5(col("media")).as("m"))
+    val plain = graft.operators.Multimodal.packImages(s, docs, "doc_id")
+      .select(col("media_id"), md5(col("media")).as("m"))
+    assert(base.count() === 100L)
+    assert(base.join(plain, Seq("media_id", "m")).count() === 100L,
+      "one renderer + one encoder must give one payload per id")
+  }
+
+  test("a truncated PNG is quarantined by the decode and dropped by " +
+       "blockhashCodes") {
+    import s.implicits._
+    val png = graft.operators.Multimodal.packImages(s, docs.limit(1),
+      "doc_id").select("media").head().getAs[Array[Byte]](0)
+    val cut = png.take(png.length / 2)
+    val packed = Seq((1L, png), (2L, cut)).toDF("media_id", "media")
+    val decoded = graft.operators.Multimodal.decodeImages(s, packed)
+      .orderBy("media_id").collect()
+    assert(!decoded(0).isNullAt(2), "the whole PNG decodes")
+    assert(decoded(1).isNullAt(2) && decoded(1).isNullAt(3) &&
+      decoded(1).getSeq[Double](4).length === 16,
+      "the truncated PNG quarantines to the byte histogram")
+    val ids = ImageDedup.blockhashCodes(s, packed)
+      .select("media_id").collect().map(_.getLong(0))
+    assert(ids.toSeq === Seq(1L), "the truncated PNG gets no code")
+  }
 }

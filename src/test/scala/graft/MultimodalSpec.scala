@@ -119,8 +119,8 @@ class MultimodalSpec extends AnyFunSuite with SparkSpec {
   }
 
   test("real codec: packImages round-trips PNG bytes to correct dimensions") {
-    val imgs = Multimodal.packImages(spark, docs, "doc_id", batchSize = 16)
-    val out = Multimodal.decodeImages(spark, imgs, batchSize = 16)
+    val imgs = Multimodal.packImages(spark, docs, "doc_id")
+    val out = Multimodal.decodeImages(spark, imgs)
       .join(imgs.select(col("media_id"), col("meta.width").as("mw"),
         col("meta.height").as("mh")), "media_id")
     val rows = out.collect()
@@ -141,62 +141,57 @@ class MultimodalSpec extends AnyFunSuite with SparkSpec {
     }
   }
 
-  test("batched codec transport is bit-identical to the per-call path") {
-    // encode: same deterministic pixels → byte-identical PNG payloads
-    val slow = Multimodal.packImages(spark, docs, "doc_id", batchSize = 16)
-      .select(col("media_id"), md5(col("media")).as("m"))
-    val fast = Multimodal.packImagesBatched(spark, docs, "doc_id", batchSize = 16)
-      .select(col("media_id"), md5(col("media")).as("m"))
-    assert(slow.join(fast, Seq("media_id", "m")).count() === 50,
-      "batched encoder must produce byte-identical PNGs")
-    // decode: identical features from either decoder over either payload
-    val imgs = Multimodal.packImagesBatched(spark, docs, "doc_id")
-    val a = Multimodal.decodeImages(spark, imgs, batchSize = 16)
-    val b = Multimodal.decodeImagesBatched(spark, imgs, batchSize = 16)
-    assert(a.exceptAll(b).count() === 0L && b.exceptAll(a).count() === 0L,
-      "raster-direct decode must match the getRGB path exactly")
-    // quarantine posture identical too: non-image payloads → stub histogram
-    val q = Multimodal.decodeImagesBatched(spark, packed, batchSize = 16)
-    val qa = Multimodal.decodeImages(spark, packed, batchSize = 16)
-    assert(q.exceptAll(qa).count() === 0L && qa.exceptAll(q).count() === 0L)
+  /** Plain-Scala replay of the c12 pixel formula (the one the DuckDB
+    * oracle runs): exact dims and exact mean RGB of image `id`.
+    */
+  private def formulaMeans(id: Long): (Int, Int, Seq[Double]) = {
+    val (w, h) = ((id % 64 + 16).toInt, (id % 48 + 16).toInt)
+    val sums = Array(0L, 0L, 0L)
+    for (y <- 0 until h; x <- 0 until w) {
+      val v = (id * 1103515245L + x * 31L + y * 131L) & 0xFFFFFF
+      sums(0) += (v >> 16) & 255; sums(1) += (v >> 8) & 255; sums(2) += v & 255
+    }
+    (w, h, sums.toSeq.map(_ / (w * h * 255.0)))
   }
 
-  test("columnar decode transport is bit-identical to the row path, on " +
-       "image AND quarantined payloads, and plans as a columnar operator") {
-    val imgs = Multimodal.packImagesBatched(spark, docs, "doc_id")
-    val row = Multimodal.decodeImagesBatched(spark, imgs, batchSize = 16)
-    val colr = Multimodal.decodeImagesColumnar(spark, imgs)
-    assert(colr.schema === row.schema)
-    assert(colr.exceptAll(row).count() === 0L &&
-           row.exceptAll(colr).count() === 0L,
-      "columnar transport must be bit-identical to the row transport")
-    // quarantine path (non-image payloads → null dims + histogram stub)
-    val rowQ = Multimodal.decodeImagesBatched(spark, packed, batchSize = 16)
-    val colQ = Multimodal.decodeImagesColumnar(spark, packed)
-    assert(colQ.exceptAll(rowQ).count() === 0L &&
-           rowQ.exceptAll(colQ).count() === 0L)
-    // plan shape: the decode node executes columnar, with exactly one
-    // ColumnarToRow transition above it (no row pivot inside). Execute
-    // first — under AQE the final plan (with transitions) only
-    // materializes then.
-    colr.collect()
-    val plan = colr.queryExecution.executedPlan.toString
-    assert(plan.contains("DecodeImages"), plan)
-    assert(plan.contains("ColumnarToRow"), plan)
-    // parquet round-trip: reading packed media back from disk feeds the
-    // decode from the vectorized reader's columnar batches
+  test("packImages then decodeImages land the pixel formula exactly: dims " +
+       "and mean RGB") {
+    val out = Multimodal.decodeImages(spark,
+      Multimodal.packImages(spark, docs, "doc_id")).collect()
+    assert(out.length === 50)
+    out.foreach { r =>
+      val id = r.getLong(0)
+      val (w, h, means) = formulaMeans(id)
+      assert(r.getInt(2) === w && r.getInt(3) === h, s"id=$id dims")
+      assert(r.getAs[scala.collection.Seq[Double]]("features") === means,
+        s"id=$id: decoded mean RGB must equal the formula bit for bit")
+    }
+  }
+
+  test("ImageEncoder refuses a format it has no writer for, naming it") {
+    val e = intercept[IllegalArgumentException](new Multimodal.ImageEncoder()
+      .encode(Multimodal.renderImage(7L, 0), "no-such-format"))
+    assert(e.getMessage.contains("'no-such-format'"), e.getMessage)
+  }
+
+  test("decodeImages: parquet round trip unchanged, images and " +
+       "quarantined payloads") {
+    val imgs = Multimodal.packImages(spark, docs, "doc_id")
     val dir = java.nio.file.Files
-      .createTempDirectory("graft_colr").toString
-    imgs.write.mode("overwrite").parquet(dir)
-    val fromDisk = Multimodal.decodeImagesColumnar(
-      spark, spark.read.parquet(dir))
-    assert(fromDisk.exceptAll(row).count() === 0L &&
-           row.exceptAll(fromDisk).count() === 0L)
+      .createTempDirectory("graft_decode").toString
+    imgs.unionByName(packed).write.mode("overwrite").parquet(dir)
+    val fromDisk = Multimodal.decodeImages(spark, spark.read.parquet(dir))
+    val inMemory = Multimodal.decodeImages(spark, imgs.unionByName(packed))
+    assert(fromDisk.count() === 100L)
+    assert(fromDisk.exceptAll(inMemory).count() === 0L &&
+           inMemory.exceptAll(fromDisk).count() === 0L)
+    assert(fromDisk.where(col("width").isNull).count() === 50L,
+      "the text payloads quarantine after the round trip too")
   }
 
   test("codec breadth: JPEG and GIF payloads decode through the JDK " +
        "ImageIO plugins — dimensions exact, JPEG features within lossy " +
-       "tolerance, row and columnar transports agree") {
+       "tolerance") {
     val s = spark
     import s.implicits._
     // deterministic 32x24 gradient, encoded to JPEG and GIF executor-free
@@ -218,47 +213,36 @@ class MultimodalSpec extends AnyFunSuite with SparkSpec {
     val trueMeans = Seq(16, 8, 0).map(sh =>
       px.map(p => (p >> sh) & 0xFF).map(_.toLong).sum / (px.length * 255.0))
     val packed = Seq((1L, jpg), (2L, gif)).toDF("media_id", "media")
-    for (out <- Seq(
-        Multimodal.decodeImagesBatched(spark, packed, batchSize = 4),
-        Multimodal.decodeImagesColumnar(spark, packed))) {
-      val rows = out.orderBy("media_id").collect()
-      assert(rows.length === 2)
-      rows.foreach { r =>
-        assert(r.getInt(2) === 32 && r.getInt(3) === 24,
-          "decoded dimensions must be exact for both formats")
-        val feats = r.getAs[scala.collection.Seq[Double]]("features")
-        assert(feats.length === 3, "decoded (not quarantined) features")
-        // JPEG is lossy, GIF palettizes: means within 3% of the source
-        feats.zip(trueMeans).foreach { case (got, want) =>
-          assert(math.abs(got - want) < 0.03, s"$got vs $want") }
-      }
+    val rows = Multimodal.decodeImages(spark, packed)
+      .orderBy("media_id").collect()
+    assert(rows.length === 2)
+    rows.foreach { r =>
+      assert(r.getInt(2) === 32 && r.getInt(3) === 24,
+        "decoded dimensions must be exact for both formats")
+      val feats = r.getAs[scala.collection.Seq[Double]]("features")
+      assert(feats.length === 3, "decoded (not quarantined) features")
+      // JPEG is lossy, GIF palettizes: means within 3% of the source
+      feats.zip(trueMeans).foreach { case (got, want) =>
+        assert(math.abs(got - want) < 0.03, s"$got vs $want") }
     }
-    // the two transports agree bit-for-bit on the lossy formats too
-    val a = Multimodal.decodeImagesBatched(spark, packed, batchSize = 4)
-    val b = Multimodal.decodeImagesColumnar(spark, packed)
-    assert(a.exceptAll(b).count() === 0L && b.exceptAll(a).count() === 0L)
   }
 
   test("real codec: non-image payloads quarantine to stub features") {
-    val out = Multimodal.decodeImages(spark, packed, batchSize = 16)
+    val out = Multimodal.decodeImages(spark, packed)
     val rows = out.collect()
     assert(rows.length === 50)
+    val payloads = packed.select("media_id", "media").collect()
+      .map(r => r.getLong(0) -> r.getAs[Array[Byte]](1)).toMap
     rows.foreach { r =>
       assert(r.isNullAt(2) && r.isNullAt(3), "no fake dimensions")
+      val bytes = payloads(r.getLong(0))
+      assert(r.getInt(1) === bytes.length && bytes.length > 0)
       val feats = r.getAs[scala.collection.Seq[Double]]("features")
       assert(feats.length === 16 && math.abs(feats.sum - 1.0) < 1e-9)
-    }
-  }
-
-  test("decodeStub: batched partition-local decode keeps schema contract") {
-    val out = Multimodal.decodeStub(spark, packed, batchSize = 16)
-    val rows = out.collect()
-    assert(rows.length === 50)
-    rows.foreach { r =>
-      val feats = r.getSeq[Double](2)
-      assert(feats.length === 16)
-      assert(math.abs(feats.sum - 1.0) < 1e-9) // L1-normalized histogram
-      assert(r.getInt(1) > 0)
+      // the values: the 16-bin L1-normalized byte histogram
+      val hist = new Array[Double](16)
+      bytes.foreach(b => hist((b & 0xFF) * 16 / 256) += 1.0)
+      assert(feats === hist.toSeq.map(_ / bytes.length))
     }
   }
 }
