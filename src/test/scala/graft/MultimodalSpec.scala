@@ -245,4 +245,23 @@ class MultimodalSpec extends AnyFunSuite with SparkSpec {
       assert(feats === hist.toSeq.map(_ / bytes.length))
     }
   }
+
+  test("decodeStub: batched partition-local decode keeps schema contract") {
+    // one ImageDecoder per partition: spread the payloads over several
+    // partitions and check every row comes back once, under one schema
+    val out = Multimodal.decodeImages(spark, packed.repartition(4))
+    assert(out.schema.map(f => f.name -> f.dataType.simpleString) === Seq(
+      "media_id" -> "bigint", "n_bytes" -> "int", "width" -> "int",
+      "height" -> "int", "features" -> "array<double>"))
+    val rows = out.collect()
+    assert(rows.length === 50)
+    assert(rows.map(_.getLong(0)).toSet ===
+      packed.select("media_id").collect().map(_.getLong(0)).toSet)
+    rows.foreach { r =>
+      val feats = r.getSeq[Double](4)
+      assert(feats.length === 16)
+      assert(math.abs(feats.sum - 1.0) < 1e-9) // L1-normalized histogram
+      assert(r.getInt(1) > 0)
+    }
+  }
 }
