@@ -87,6 +87,100 @@ class AudioSpec extends AnyFunSuite with SparkSpec {
     assert(out.isNullAt(2), s"empty clip must quarantine (n_samples): $out")
   }
 
+  test("decode gate: a JDK-written WAV that is not 16-bit LE mono PCM " +
+    "quarantines in every audio operator") {
+    import spark.implicits._
+    // the non-canonical clips carry the canonical clip's PCM bytes under
+    // a stereo / 8-bit header, so an operator that skipped the gate would
+    // read the same samples and pair them with the canonical clip
+    val id = 4L
+    val canon = Audio.packWav(spark, Seq(id).toDF("doc_id"), "doc_id")
+      .collect().head.getAs[Array[Byte]]("media")
+    val pcm = javax.sound.sampled.AudioSystem.getAudioInputStream(
+      new java.io.ByteArrayInputStream(canon)).readAllBytes()
+    def wav(enc: javax.sound.sampled.AudioFormat.Encoding, bits: Int,
+            channels: Int): Array[Byte] = {
+      val frameBytes = bits / 8 * channels
+      val fmt = new javax.sound.sampled.AudioFormat(enc,
+        Audio.SampleRate.toFloat, bits, channels, frameBytes,
+        Audio.SampleRate.toFloat, false)
+      val bos = new java.io.ByteArrayOutputStream()
+      javax.sound.sampled.AudioSystem.write(
+        new javax.sound.sampled.AudioInputStream(
+          new java.io.ByteArrayInputStream(pcm), fmt,
+          (pcm.length / frameBytes).toLong),
+        javax.sound.sampled.AudioFileFormat.Type.WAVE, bos)
+      bos.toByteArray
+    }
+    val stereo = wav(
+      javax.sound.sampled.AudioFormat.Encoding.PCM_SIGNED, 16, 2)
+    val mono8 = wav(
+      javax.sound.sampled.AudioFormat.Encoding.PCM_UNSIGNED, 8, 1)
+    Seq(stereo, mono8).foreach { b =>
+      val fmt = javax.sound.sampled.AudioSystem.getAudioInputStream(
+        new java.io.ByteArrayInputStream(b)).getFormat
+      assert(fmt.getChannels != 1 || fmt.getSampleSizeInBits != 16,
+        s"fixture must be non-canonical: $fmt")
+    }
+    val (copyId, stereoId, mono8Id) = (id + 1000000L, 2001L, 2002L)
+    val bad = Set(stereoId, mono8Id)
+    val clips = Seq(id -> canon, copyId -> canon, stereoId -> stereo,
+      mono8Id -> mono8).toDF("media_id", "media")
+    def byId(df: org.apache.spark.sql.DataFrame)
+        : Map[Long, Array[org.apache.spark.sql.Row]] =
+      df.collect().groupBy(_.getLong(0))
+    def one(rs: Array[org.apache.spark.sql.Row]): org.apache.spark.sql.Row = {
+      assert(rs.length === 1, s"one quarantine row expected: ${rs.toSeq}")
+      rs.head
+    }
+
+    val dec = byId(Audio.decodeWav(spark, clips))
+    assert(!dec(id).head.isNullAt(dec(id).head.fieldIndex("rms")))
+    Seq(stereoId -> stereo, mono8Id -> mono8).foreach { case (b, bytes) =>
+      val r = one(dec(b))
+      (2 until r.length).foreach(i => assert(r.isNullAt(i), s"decodeWav $r"))
+      assert(r.getAs[Int]("n_bytes") === bytes.length)
+    }
+    val spec = byId(Audio.spectralFeatures(spark, clips))
+    assert(!spec(id).head.isNullAt(3))
+    bad.foreach { b =>
+      val r = one(spec(b))
+      (1 until r.length).foreach(i =>
+        assert(r.isNullAt(i), s"spectralFeatures $r"))
+    }
+    val bands = byId(Audio.bandEnergies(spark, clips))
+    assert(bands(id).length === 8)
+    bad.foreach { b =>
+      val r = one(bands(b))
+      assert(r.getInt(1) === -1 && r.isNullAt(2), s"bandEnergies $r")
+    }
+    Seq(Audio.spectrogram(spark, clips),
+        Audio.activityFrames(spark, clips)).foreach { df =>
+      val rows = byId(df)
+      assert(rows(id).length > 1)
+      bad.foreach { b =>
+        val r = one(rows(b))
+        assert(r.getInt(1) === -1 && r.isNullAt(2), s"frame grid $r")
+      }
+    }
+    val codes = byId(Audio.chainedLandmarkRows(spark, clips))
+    assert(codes.contains(id) && bad.forall(b => !codes.contains(b)))
+    Seq(Audio.fingerprintPairs(spark, clips),
+        Audio.robustFingerprintPairs(spark, clips)).foreach { df =>
+      val pairs = df.collect().map(r => (r.getLong(0), r.getLong(1)))
+      assert(pairs.toSeq === Seq((id, copyId)),
+        s"only the canonical copy pair may match: ${pairs.toSeq}")
+    }
+    Seq(Audio.ditherWav(spark, clips), Audio.gainWav(spark, clips))
+      .foreach { df =>
+        val out = df.collect().map(r => r.getLong(0) -> r.getAs[Array[Byte]](1))
+          .toMap
+        assert(!java.util.Arrays.equals(out(id), canon))
+        assert(java.util.Arrays.equals(out(stereoId), stereo))
+        assert(java.util.Arrays.equals(out(mono8Id), mono8))
+      }
+  }
+
   test("clip lengths vary by id class and durations are the exact " +
     "50/60/70/80/90 ms grid") {
     val d = Audio.decodeWav(spark, packed)
