@@ -668,7 +668,7 @@ object Bench {
     envCount(env, "SPARK_GRAFT_CPUS", 1)
       .getOrElse(Runtime.getRuntime.availableProcessors)
 
-  private def makeSession(tag: String): SparkSession = {
+  private[graft] def makeSession(tag: String): SparkSession = {
     val n = cpus(sys.env)
     val spark = GraftSession
       .builder(s"graft-bench-$tag", Some(s"local[$n]"), Some(n))
@@ -943,10 +943,6 @@ object Bench {
     val pb = new ProcessBuilder(cmd: _*)
       .redirectErrorStream(true)
       .redirectOutput(ProcessBuilder.Redirect.to(log))
-    // serve-only lifecycle timing for the rollover keys (ask #1a) — the
-    // child's maybePrewarm invocation runs the lifecycle, timed samples
-    // serve the committed store
-    pb.environment().put("SPARK_GRAFT_SERVE_ONLY", "1")
     val proc = pb.start()
     val done = proc.waitFor(limitSec, java.util.concurrent.TimeUnit.SECONDS)
     if (!done) { proc.destroyForcibly(); proc.waitFor() }
@@ -1090,9 +1086,6 @@ object Bench {
     "c134_packed_export"))
 
   def main(args: Array[String]): Unit = {
-    // serve-only lifecycle timing everywhere under the bench (forked
-    // children get it via env; this covers the in-process fallback path)
-    sys.props("graft.bench.serveOnly") = "1"
     args.toList match {
       case "--phase" :: phase :: out :: rest =>
         val only = rest match {

@@ -14,13 +14,7 @@ object PlanDump {
   def main(args: Array[String]): Unit = {
     val (sfDir, outDir, suffix) = (args(0), args(1), args(2))
     val names = args.drop(3)
-    val cpus = Bench.cpus(sys.env)
-    val spark = GraftSession
-      .builder("graft-plandump", Some(s"local[$cpus]"), Some(cpus))
-      .config("spark.sql.autoBroadcastJoinThreshold", "64m")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Bench.makeSession("plandump")
     Files.createDirectories(Paths.get(outDir))
     // failures are collected and FAIL the run (r18 ADVICE: a silently
     // missing before/after file is exactly what an evidence check would

@@ -11,20 +11,17 @@ object Probe {
     val dir = args(0)
     val n = args(1).toInt
     val names = args.drop(2).toSeq
-    val cpus = Bench.cpus(sys.env)
-    val spark = GraftSession
-      .builder("graft-probe", Some(s"local[$cpus]"), Some(cpus))
-      .config("spark.sql.autoBroadcastJoinThreshold", "64m")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Bench.makeSession("probe")
+    // toRdd.count(), as Bench times it: a bare count() lets Catalyst
+    // prune every output column and times the query minus its work
     names.foreach { name =>
       // tiny warmup like Bench does
-      try SparkEntry.queries(name)(spark, "/root/testdata/sf0.001").count()
+      try SparkEntry.queries(name)(spark, "/root/testdata/sf0.001")
+        .queryExecution.toRdd.count()
       catch { case e: Throwable => System.err.println(s"warmup $name: $e") }
       val times = (1 to n).map { _ =>
         val t0 = System.nanoTime()
-        SparkEntry.queries(name)(spark, dir).count()
+        SparkEntry.queries(name)(spark, dir).queryExecution.toRdd.count()
         (System.nanoTime() - t0) / 1e9
       }
       println(f"[probe] $name%-28s ${times.map(t => f"$t%.2f").mkString(" ")}  min=${times.min}%.2f")

@@ -51,14 +51,7 @@ object StageProbe {
       if (args.nonEmpty) args.toSeq
       else Seq("q5_star_join", "c27_span_dedup", "c76_multiscale_spans")
     val sf = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = Bench.cpus(sys.env)
-    val spark = GraftSession
-      .builder("graft-stage-probe", Some(s"local[$cpus]"), Some(cpus))
-      .config("spark.sql.autoBroadcastJoinThreshold", "64m")
-      .config("spark.ui.enabled", "false")
-      .config("spark.cleaner.periodicGC.interval", "60s")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Bench.makeSession("stage-probe")
     val copies = stageCopies(sys.env)
     val dir =
       if (copies == 0) sf

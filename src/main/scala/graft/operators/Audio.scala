@@ -7,15 +7,18 @@ import org.apache.spark.sql.types._
 /** Audio-column support — the second real codec of the multimodal surface
   * (C12 images; this file is the audio twin). Payloads are REAL WAV
   * (RIFF/PCM) bytes produced and parsed by the JDK's own sampled-audio
-  * stack (`javax.sound.sampled.AudioSystem` — pure JVM, headless-safe, no
-  * native deps), so both directions run an actual container codec, not a
-  * formula over raw bytes.
+  * stack (the `javax.sound.sampled` WAVE providers — pure JVM,
+  * headless-safe, no native deps), so both directions run an actual
+  * container codec, not a formula over raw bytes.
   *
   * Engine contract (identical to the image path): payloads are opaque
-  * `binary` columns the optimizer never deserializes; the codec runs
-  * executor-side in batched `mapPartitions` with per-partition
-  * `AudioFormat` reuse; payloads that are not parseable WAV quarantine to
-  * null features instead of failing the task (the A13 PERMISSIVE rule).
+  * `binary` columns the optimizer never deserializes; every walk runs
+  * executor-side through the one media transport
+  * ([[Multimodal.mediaRows]]) with [[Wav]] as its codec — one encoder
+  * ([[Wav.encode]]) and one decode gate ([[Wav.decode]]): a payload that
+  * is not canonical 16-bit LE mono PCM WAV quarantines instead of
+  * failing the task (the A13 PERMISSIVE rule), each operator in its
+  * documented shape.
   *
   * Determinism contract (what makes the DuckDB gate possible): synthesized
   * PCM samples are an integer formula of (id, sample index), every
@@ -28,109 +31,100 @@ object Audio {
 
   val SampleRate = 16000
 
-  /** The JDK's WAV SPI providers, resolved ONCE per JVM. Going through
-    * the `AudioSystem` facade per row serializes the whole executor:
-    * every `AudioSystem.write`/`getAudioInputStream` call walks the
-    * provider registry via a `static synchronized` lookup
-    * (`JDK13Services.getProviders`), so 32 codec threads contend on one
-    * lock and per-row cost balloons ~30x (measured 3.6 ms/row vs the
-    * 0.13 ms the codec itself costs). The providers themselves
-    * (`WaveFileWriter`/`WaveFileReader` behind the
-    * `javax.sound.sampled.spi` interfaces) are stateless, so one shared
-    * instance serves all partitions — same parser, same bytes, no lock.
-    * Resolution still goes through the public facade (one call), not a
-    * ServiceLoader walk, so module visibility rules are untouched.
+  /** Decoded canonical PCM: 16-bit LE mono sample bytes and the
+    * container's declared sample rate.
     */
-  private lazy val wavWriter: javax.sound.sampled.spi.AudioFileWriter = {
-    // one facade call primes the registry; grab the WAVE-capable
-    // provider through the public SPI ServiceLoader view
-    val it = java.util.ServiceLoader
-      .load(classOf[javax.sound.sampled.spi.AudioFileWriter]).iterator()
-    var found: javax.sound.sampled.spi.AudioFileWriter = null
-    while (found == null && it.hasNext) {
-      val w = it.next()
-      if (w.isFileTypeSupported(javax.sound.sampled.AudioFileFormat.Type.WAVE))
-        found = w
-    }
-    if (found != null) found
-    else // facade fallback (never taken on a stock JDK; keeps us honest)
-      new javax.sound.sampled.spi.AudioFileWriter {
-        override def getAudioFileTypes()
-            : Array[javax.sound.sampled.AudioFileFormat.Type] =
-          Array(javax.sound.sampled.AudioFileFormat.Type.WAVE)
-        override def getAudioFileTypes(
-            s: javax.sound.sampled.AudioInputStream)
-            : Array[javax.sound.sampled.AudioFileFormat.Type] =
-          Array(javax.sound.sampled.AudioFileFormat.Type.WAVE)
-        override def write(s: javax.sound.sampled.AudioInputStream,
-            t: javax.sound.sampled.AudioFileFormat.Type,
-            o: java.io.OutputStream): Int =
-          javax.sound.sampled.AudioSystem.write(s, t, o)
-        override def write(s: javax.sound.sampled.AudioInputStream,
-            t: javax.sound.sampled.AudioFileFormat.Type,
-            o: java.io.File): Int =
-          javax.sound.sampled.AudioSystem.write(s, t, o)
-      }
+  private[graft] final class Pcm(val bytes: Array[Byte], val rate: Float) {
+    def n: Int = bytes.length / 2
   }
 
-  /** Registry order puts `SoftMidiAudioFileReader` BEFORE the WAV
-    * parser, and its per-row rejection costs ~0.1 ms with its own
-    * internal synchronization — 20x the whole WAV parse. Probing a
-    * 1-sample synthesized WAV at init and moving its successful parser
-    * to the front keeps the facade's try-all semantics (every provider
-    * still gets a shot before a payload quarantines) while the hot path
-    * hits the right parser first.
+  /** The WAV codec behind every audio walk. Its JDK providers are
+    * stateless and resolved once per JVM, so this one object serves
+    * every partition and has nothing to release.
     */
-  private lazy val audioReaders
-      : Array[javax.sound.sampled.spi.AudioFileReader] = {
-    val it = java.util.ServiceLoader
-      .load(classOf[javax.sound.sampled.spi.AudioFileReader]).iterator()
-    val buf = scala.collection.mutable.ArrayBuffer
-      .empty[javax.sound.sampled.spi.AudioFileReader]
-    while (it.hasNext) buf += it.next()
-    val probe: Array[Byte] = {
-      val fmt = new javax.sound.sampled.AudioFormat(
-        javax.sound.sampled.AudioFormat.Encoding.PCM_SIGNED,
-        SampleRate.toFloat, 16, 1, 2, SampleRate.toFloat, false)
-      val ais = new javax.sound.sampled.AudioInputStream(
-        new java.io.ByteArrayInputStream(Array[Byte](0, 0)), fmt, 1L)
+  private[graft] object Wav extends AutoCloseable {
+    import javax.sound.sampled.{AudioFileFormat, AudioFormat, AudioInputStream}
+    import javax.sound.sampled.spi.{AudioFileReader, AudioFileWriter}
+    import scala.jdk.CollectionConverters._
+
+    def close(): Unit = ()
+
+    private val canonical = new javax.sound.sampled.AudioFormat(
+      AudioFormat.Encoding.PCM_SIGNED, SampleRate.toFloat, 16, 1, 2,
+      SampleRate.toFloat, false)
+
+    private def missing(kind: String): Nothing =
+      throw new IllegalStateException(
+        s"Audio: no javax.sound.sampled $kind for format 'WAVE'")
+
+    /** The JDK's WAVE writer, resolved ONCE per JVM. Going through the
+      * `AudioSystem` facade per row serializes the whole executor: every
+      * `AudioSystem.write`/`getAudioInputStream` call walks the provider
+      * registry via a `static synchronized` lookup
+      * (`JDK13Services.getProviders`), so 32 codec threads contend on one
+      * lock and per-row cost balloons ~30x (measured 3.6 ms/row vs the
+      * 0.13 ms the codec itself costs). The providers themselves
+      * (`WaveFileWriter`/`WaveFileReader` behind the
+      * `javax.sound.sampled.spi` interfaces) are stateless, so one shared
+      * instance serves all partitions — same parser, same bytes, no lock.
+      */
+    private lazy val writer: AudioFileWriter =
+      java.util.ServiceLoader.load(classOf[AudioFileWriter]).asScala
+        .find(_.isFileTypeSupported(AudioFileFormat.Type.WAVE))
+        .getOrElse(missing("writer"))
+
+    /** Registry order puts `SoftMidiAudioFileReader` BEFORE the WAV
+      * parser, and its per-row rejection costs ~0.1 ms with its own
+      * internal synchronization — 20x the whole WAV parse. Probing a
+      * 1-sample synthesized WAV at init and moving its successful parser
+      * to the front keeps the facade's try-all semantics (every provider
+      * still gets a shot before a payload quarantines) while the hot path
+      * hits the right parser first.
+      */
+    private lazy val readers: Array[AudioFileReader] = {
+      val all = java.util.ServiceLoader.load(classOf[AudioFileReader])
+        .asScala.toArray
+      val probe = encode(Array[Byte](0, 0))
+      val (wav, rest) = all.partition { r =>
+        try { r.getAudioInputStream(
+                new java.io.ByteArrayInputStream(probe)); true }
+        catch { case _: Exception => false }
+      }
+      if (wav.isEmpty) missing("reader")
+      wav ++ rest
+    }
+
+    /** The one WAV encoder: canonical PCM sample bytes (16-bit LE mono
+      * @16 kHz) as a real RIFF/WAVE container — the writer lays out the
+      * chunk structure; nothing is hand-assembled.
+      */
+    def encode(pcm: Array[Byte]): Array[Byte] = {
       val bos = new java.io.ByteArrayOutputStream()
-      wavWriter.write(ais,
-        javax.sound.sampled.AudioFileFormat.Type.WAVE, bos)
+      writer.write(new AudioInputStream(new java.io.ByteArrayInputStream(pcm),
+        canonical, pcm.length / 2L), AudioFileFormat.Type.WAVE, bos)
       bos.toByteArray
     }
-    def parses(r: javax.sound.sampled.spi.AudioFileReader): Boolean =
-      try { r.getAudioInputStream(
-              new java.io.ByteArrayInputStream(probe)); true }
-      catch { case _: Exception => false }
-    val (wav, rest) = buf.partition(parses)
-    (wav ++ rest).toArray
-  }
 
-  /** `AudioSystem.getAudioInputStream` minus the per-call synchronized
-    * registry walk: try each resolved provider on a fresh byte stream
-    * (the facade's own probe loop, same order, same semantics — a
-    * provider that can't parse throws `UnsupportedAudioFileException`
-    * and the next one gets a clean stream).
-    */
-  private def parseAudio(
-      bytes: Array[Byte]): javax.sound.sampled.AudioInputStream = {
-    val readers = audioReaders
-    if (readers.isEmpty)
-      return javax.sound.sampled.AudioSystem.getAudioInputStream(
-        new java.io.ByteArrayInputStream(bytes))
-    var i = 0
-    while (i < readers.length) {
+    /** The one decode gate: the payload's samples when the REAL parser
+      * (the facade's probe loop minus its synchronized registry walk:
+      * each resolved provider, in order, on a fresh byte stream) reads
+      * it as canonical 16-bit LE mono PCM, else null — quarantine.
+      */
+    def decode(bytes: Array[Byte]): Pcm =
       try {
-        return readers(i).getAudioInputStream(
-          new java.io.ByteArrayInputStream(bytes))
-      } catch {
-        case _: javax.sound.sampled.UnsupportedAudioFileException => ()
-      }
-      i += 1
-    }
-    throw new javax.sound.sampled.UnsupportedAudioFileException(
-      "no provider parses this payload")
+        val ais = readers.iterator.map { r =>
+          try r.getAudioInputStream(new java.io.ByteArrayInputStream(bytes))
+          catch {
+            case _: javax.sound.sampled.UnsupportedAudioFileException => null
+          }
+        }.find(_ != null).orNull
+        val fmt = if (ais == null) null else ais.getFormat
+        if (fmt == null ||
+            fmt.getEncoding != AudioFormat.Encoding.PCM_SIGNED ||
+            fmt.getSampleSizeInBits != 16 || fmt.getChannels != 1 ||
+            fmt.isBigEndian) null
+        else new Pcm(ais.readAllBytes(), fmt.getSampleRate)
+      } catch { case _: java.io.IOException => null }
   }
 
   /** Samples per clip: 800 + (id mod 5)·160 — 50–90 ms at 16 kHz, five
@@ -144,13 +138,11 @@ object Audio {
     (((id * 7349L + i.toLong * 12345L + 6789L) % 65536L) - 32768L).toInt
 
   /** Synthesize REAL WAV payloads (PCM_SIGNED 16-bit LE mono @16 kHz)
-    * through `AudioSystem.write` — the encoder writes the actual RIFF
-    * chunk structure; nothing is hand-assembled. Output:
-    * (media_id, media: binary, meta: {format, sample_rate, channels,
-    * bits}).
+    * through the one WAV encoder ([[Wav.encode]]) over cores-sized id
+    * partitions ([[Multimodal.idsByCores]]). Output: (media_id, media:
+    * binary, meta: {format, sample_rate, channels, bits}).
     */
-  def packWav(spark: SparkSession, df: DataFrame, idCol: String,
-              batchSize: Int = 64): DataFrame = {
+  def packWav(spark: SparkSession, df: DataFrame, idCol: String): DataFrame = {
     val outSchema = StructType(Seq(
       StructField("media_id", LongType),
       StructField("media", BinaryType),
@@ -159,55 +151,53 @@ object Audio {
         StructField("sample_rate", IntegerType),
         StructField("channels", IntegerType),
         StructField("bits", IntegerType))))))
-    val enc = org.apache.spark.sql.catalyst.encoders.RowEncoder
-      .encoderFor(outSchema)
-    val narrow = df.select(col(idCol).cast("long").as("media_id"))
-    // codec stages are CPU-bound per row: size by cores, not by the
-    // source file's split count (the packImages rule)
-    val target = spark.sparkContext.defaultParallelism
-    val in = if (narrow.rdd.getNumPartitions < target)
-      narrow.repartition(target) else narrow
-    in.mapPartitions { rows =>
-      val fmt = new javax.sound.sampled.AudioFormat(
-        javax.sound.sampled.AudioFormat.Encoding.PCM_SIGNED,
-        SampleRate.toFloat, 16, 1, 2, SampleRate.toFloat, false)
-      rows.grouped(batchSize).flatMap { batch =>
-        batch.map { r =>
-          val id = r.getLong(0)
-          val n = nSamples(id)
-          val pcm = new Array[Byte](n * 2)
-          var i = 0
-          while (i < n) {
-            val s = sample(id, i)
-            pcm(2 * i) = (s & 0xFF).toByte
-            pcm(2 * i + 1) = ((s >> 8) & 0xFF).toByte
-            i += 1
-          }
-          val ais = new javax.sound.sampled.AudioInputStream(
-            new java.io.ByteArrayInputStream(pcm), fmt, n.toLong)
-          val bos = new java.io.ByteArrayOutputStream()
-          wavWriter.write(ais,
-            javax.sound.sampled.AudioFileFormat.Type.WAVE, bos)
-          Row(id, bos.toByteArray, Row("audio/wav", SampleRate, 1, 16))
-        }
-      }
-    }(enc)
+    Multimodal.mediaRows(Multimodal.idsByCores(spark, df, idCol), outSchema,
+      () => Wav) { (wav, id, _) =>
+      val pcm = pcmBytes(nSamples(id))(sample(id, _))
+      Iterator.single(
+        Row(id, wav.encode(pcm), Row("audio/wav", SampleRate, 1, 16)))
+    }
   }
 
-  /** Decode + feature-extract with the REAL parser
-    * (`AudioSystem.getAudioInputStream` — validates the RIFF/WAVE chunk
-    * structure and yields the format): per clip, (n_samples, sample_rate,
-    * duration_ms, rms, peak). Non-WAV payloads (or any codec failure)
-    * yield null features with the byte count kept — quarantine, not
-    * crash.
+  /** Samples `sampleOf(0 until n)` as 16-bit LE PCM bytes. */
+  private def pcmBytes(n: Int)(sampleOf: Int => Int): Array[Byte] = {
+    val pcm = new Array[Byte](n * 2)
+    var i = 0
+    while (i < n) {
+      val s = sampleOf(i)
+      pcm(2 * i) = (s & 0xFF).toByte
+      pcm(2 * i + 1) = ((s >> 8) & 0xFF).toByte
+      i += 1
+    }
+    pcm
+  }
+
+  /** The planted audio-dedup corpus: every `doc_id % 4 == 0` id of
+    * `docs` as a REAL WAV clip, plus a half-gain re-master ([[gainWav]])
+    * of every `media_id % 7 == 0` clip at +3e6 — the amplitude-shifted
+    * duplicates the chained-landmark matcher exists to find (ids are
+    * non-negative, so `%` is the oracle's `pmod`).
+    */
+  def plantedGainCorpus(spark: SparkSession, docs: DataFrame): DataFrame = {
+    val wavs = packWav(spark, docs.where(col("doc_id") % 4 === 0), "doc_id")
+    wavs.unionByName(gainWav(spark,
+      wavs.where(col("media_id") % 7 === 0)
+        .withColumn("media_id", col("media_id") + lit(3000000L))))
+  }
+
+  /** Decode + feature-extract with the REAL parser ([[Wav.decode]] —
+    * validates the RIFF/WAVE chunk structure and yields the format): per
+    * clip, (n_samples, sample_rate, duration_ms, rms, peak). Payloads
+    * the gate refuses — non-WAV, non-canonical PCM, or a codec failure —
+    * and empty clips or non-positive rates yield null features with the
+    * byte count kept — quarantine, not crash.
     *
     * Feature math (the oracle-replicable contract): rms =
     * sqrt(Σ s²/n) with Σ s² accumulated exactly in a long; peak =
     * max |s|; duration_ms = n·1000/rate. All three land bit-identical to
     * the oracle's integer-formula recomputation.
     */
-  def decodeWav(spark: SparkSession, packed: DataFrame,
-                batchSize: Int = 64): DataFrame = {
+  def decodeWav(spark: SparkSession, packed: DataFrame): DataFrame = {
     val outSchema = StructType(Seq(
       StructField("media_id", LongType),
       StructField("n_bytes", IntegerType),
@@ -216,18 +206,9 @@ object Audio {
       StructField("duration_ms", DoubleType),
       StructField("rms", DoubleType),
       StructField("peak", IntegerType)))
-    val enc = org.apache.spark.sql.catalyst.encoders.RowEncoder
-      .encoderFor(outSchema)
-    val in = packed.select(col("media_id").cast("long"), col("media"))
-    in.mapPartitions { rows =>
-      rows.grouped(batchSize).flatMap { batch =>
-        batch.map { r =>
-          val id = r.getLong(0)
-          val bytes = r.getAs[Array[Byte]](1)
-          decodeOne(id, bytes)
-        }
-      }
-    }(enc)
+    Multimodal.mediaRows(packed, outSchema, () => Wav) { (_, id, bytes) =>
+      Iterator.single(decodeOne(id, bytes))
+    }
   }
 
   /** Spectral features over the decoded PCM — the filters a training
@@ -256,9 +237,8 @@ object Audio {
     * Non-WAV/short payloads quarantine to null features (A13 rule).
     */
   def spectralFeatures(spark: SparkSession, packed: DataFrame,
-                       frame: Int = 128, batchSize: Int = 64): DataFrame = {
-    require(frame > 0 && (frame & (frame - 1)) == 0,
-      "frame must be a power of two (fast WHT butterfly)")
+                       frame: Int = 128): DataFrame = {
+    requirePow2(frame)
     val outSchema = StructType(Seq(
       StructField("media_id", LongType),
       StructField("n_samples", IntegerType),
@@ -267,37 +247,14 @@ object Audio {
       StructField("seq_crest", DoubleType),
       StructField("dominant_seq", IntegerType),
       StructField("flatness", DoubleType)))
-    val enc = org.apache.spark.sql.catalyst.encoders.RowEncoder
-      .encoderFor(outSchema)
-    val in = packed.select(col("media_id").cast("long"), col("media"))
-    in.mapPartitions { rows =>
-      rows.grouped(batchSize).flatMap { batch =>
-        batch.map { r =>
-          val id = r.getLong(0)
-          val bytes = r.getAs[Array[Byte]](1)
-          spectralOne(id, bytes, frame)
-        }
-      }
-    }(enc)
+    Multimodal.mediaRows(packed, outSchema, () => Wav) { (_, id, bytes) =>
+      Iterator.single(spectralOne(id, bytes, frame))
+    }
   }
 
-  /** Decode to PCM bytes if the payload is the engine's canonical WAV
-    * shape (16-bit LE mono PCM), else null — shared quarantine gate of
-    * the spectral features.
-    */
-  private def pcmOf(bytes: Array[Byte]): Array[Byte] =
-    try {
-      val ais = parseAudio(bytes)
-      val fmt = ais.getFormat
-      if (fmt.getEncoding !=
-            javax.sound.sampled.AudioFormat.Encoding.PCM_SIGNED ||
-          fmt.getSampleSizeInBits != 16 || fmt.getChannels != 1 ||
-          fmt.isBigEndian) null
-      else ais.readAllBytes()
-    } catch {
-      case _: javax.sound.sampled.UnsupportedAudioFileException => null
-      case _: java.io.IOException => null
-    }
+  private def requirePow2(frame: Int): Unit =
+    require(frame > 0 && (frame & (frame - 1)) == 0,
+      "frame must be a power of two (fast WHT butterfly)")
 
   private def sampleAt(pcm: Array[Byte], i: Int): Int =
     ((pcm(2 * i) & 0xFF) | (pcm(2 * i + 1) << 8)).toShort.toInt
@@ -333,11 +290,12 @@ object Audio {
 
   private[graft] def spectralOne(id: Long, bytes: Array[Byte],
                                  frame: Int): Row = {
-    val pcm = pcmOf(bytes)
-    val n = if (pcm == null) 0 else pcm.length / 2
-    if (pcm == null || n < frame)
-      Row(id, if (pcm == null) null else n, null, null, null, null, null)
+    val decoded = Wav.decode(bytes)
+    val n = if (decoded == null) 0 else decoded.n
+    if (decoded == null || n < frame)
+      Row(id, if (decoded == null) null else n, null, null, null, null, null)
     else {
+      val pcm = decoded.bytes
       // zero crossings over the whole clip: strict sign-bit transitions
       var zcr = 0
       var prevNeg = sampleAt(pcm, 0) < 0
@@ -385,43 +343,39 @@ object Audio {
     * (band = −1, null) row, the A13 rule.
     */
   def bandEnergies(spark: SparkSession, packed: DataFrame,
-                   frame: Int = 128, batchSize: Int = 64): DataFrame = {
-    require(frame > 0 && (frame & (frame - 1)) == 0,
-      "frame must be a power of two (fast WHT butterfly)")
-    val nBands = java.lang.Integer.numberOfTrailingZeros(frame) + 1
+                   frame: Int = 128): DataFrame = {
+    requirePow2(frame)
     val outSchema = StructType(Seq(
       StructField("media_id", LongType),
       StructField("band", IntegerType),
       StructField("band_energy", LongType),
       StructField("frac", DoubleType)))
-    val enc = org.apache.spark.sql.catalyst.encoders.RowEncoder
-      .encoderFor(outSchema)
-    val in = packed.select(col("media_id").cast("long"), col("media"))
-    in.mapPartitions { rows =>
-      rows.grouped(batchSize).flatMap { batch =>
-        batch.flatMap { r =>
-          val id = r.getLong(0)
-          val pcm = pcmOf(r.getAs[Array[Byte]](1))
-          if (pcm == null || pcm.length / 2 < frame)
-            Seq(Row(id, -1, null, null))
-          else {
-            val p = whtPowers(pcm, frame)
-            val bands = new Array[Long](nBands)
-            var total = 0L
-            var j = 0
-            while (j < frame) {
-              val b = if (j == 0) 0 else 32 - Integer.numberOfLeadingZeros(j)
-              bands(b) += p(j)
-              total += p(j)
-              j += 1
-            }
-            if (total == 0L) Seq(Row(id, -1, null, null))
-            else (0 until nBands).map(b =>
-              Row(id, b, bands(b), bands(b).toDouble / total.toDouble))
-          }
-        }
-      }
-    }(enc)
+    Multimodal.mediaRows(packed, outSchema, () => Wav) { (wav, id, bytes) =>
+      val pcm = wav.decode(bytes)
+      val bands =
+        if (pcm == null || pcm.n < frame) Nil
+        else bandProfile(whtPowers(pcm.bytes, frame))
+      if (bands.isEmpty) Seq(Row(id, -1, null, null))
+      else bands.map { case (b, e, frac) => Row(id, b, e, frac) }
+    }
+  }
+
+  /** The one dyadic band fold of a frame's powers: (band, energy, frac)
+    * for band 0 = the DC line and band b ≥ 1 = sequencies [2^(b−1),
+    * 2^b); empty for a silent frame (no total to divide by).
+    */
+  private def bandProfile(p: Array[Long]): Seq[(Int, Long, Double)] = {
+    val bands =
+      new Array[Long](java.lang.Integer.numberOfTrailingZeros(p.length) + 1)
+    var j = 0
+    while (j < p.length) {
+      bands(if (j == 0) 0 else 32 - Integer.numberOfLeadingZeros(j)) += p(j)
+      j += 1
+    }
+    val total = bands.sum
+    if (total == 0L) Nil
+    else bands.indices.map(b =>
+      (b, bands(b), bands(b).toDouble / total.toDouble))
   }
 
   /** WHT spectrogram — the time × sequency surface that completes the
@@ -435,10 +389,8 @@ object Audio {
     * Short/non-WAV payloads quarantine to one (frame_idx = −1) row.
     */
   def spectrogram(spark: SparkSession, packed: DataFrame,
-                  frame: Int = 128, batchSize: Int = 64,
-                  hop: Int = 0): DataFrame = {
-    require(frame > 0 && (frame & (frame - 1)) == 0,
-      "frame must be a power of two (fast WHT butterfly)")
+                  frame: Int = 128, hop: Int = 0): DataFrame = {
+    requirePow2(frame)
     // hop < frame = overlapping frames (the STFT convention: a transient
     // landing on a frame boundary is split by the non-overlapping grid
     // but fully inside some hopped frame). hop <= 0 means hop = frame —
@@ -446,42 +398,21 @@ object Audio {
     // and the two index formulas coincide.
     val step = if (hop <= 0) frame else hop
     require(step <= frame, "hop must not exceed frame (gaps drop samples)")
-    val nBands = java.lang.Integer.numberOfTrailingZeros(frame) + 1
     val outSchema = StructType(Seq(
       StructField("media_id", LongType),
       StructField("frame_idx", IntegerType),
       StructField("band", IntegerType),
       StructField("band_energy", LongType),
       StructField("frac", DoubleType)))
-    val enc = org.apache.spark.sql.catalyst.encoders.RowEncoder
-      .encoderFor(outSchema)
-    val in = packed.select(col("media_id").cast("long"), col("media"))
-    in.mapPartitions { rows =>
-      rows.grouped(batchSize).flatMap { batch =>
-        batch.flatMap { r =>
-          val id = r.getLong(0)
-          val pcm = pcmOf(r.getAs[Array[Byte]](1))
-          val n = if (pcm == null) 0 else pcm.length / 2
-          if (pcm == null || n < frame)
-            Seq(Row(id, -1, null, null, null))
-          else (0 until (n - frame) / step + 1).flatMap { f =>
-            val p = whtPowers(pcm, frame, f * step)
-            val bands = new Array[Long](nBands)
-            var total = 0L
-            var j = 0
-            while (j < frame) {
-              val b = if (j == 0) 0 else 32 - Integer.numberOfLeadingZeros(j)
-              bands(b) += p(j)
-              total += p(j)
-              j += 1
-            }
-            if (total == 0L) Seq(Row(id, f, -1, null, null))
-            else (0 until nBands).map(b =>
-              Row(id, f, b, bands(b), bands(b).toDouble / total.toDouble))
-          }
-        }
+    Multimodal.mediaRows(packed, outSchema, () => Wav) { (wav, id, bytes) =>
+      val pcm = wav.decode(bytes)
+      if (pcm == null || pcm.n < frame) Seq(Row(id, -1, null, null, null))
+      else (0 until (pcm.n - frame) / step + 1).flatMap { f =>
+        val bands = bandProfile(whtPowers(pcm.bytes, frame, f * step))
+        if (bands.isEmpty) Seq(Row(id, f, -1, null, null))
+        else bands.map { case (b, e, frac) => Row(id, f, b, e, frac) }
       }
-    }(enc)
+    }
   }
 
   /** Audio near-duplicate pairs via spectral landmark codes — the dedup
@@ -512,36 +443,48 @@ object Audio {
       StructField("frame_idx", IntegerType),
       StructField("line", IntegerType),
       StructField("power", LongType)))
-    val enc = org.apache.spark.sql.catalyst.encoders.RowEncoder
-      .encoderFor(codeSchema)
-    val in = packed.select(col("media_id").cast("long"), col("media"))
-    val codes = in.mapPartitions { rows =>
-      rows.flatMap { r =>
-        val id = r.getLong(0)
-        val pcm = pcmOf(r.getAs[Array[Byte]](1))
-        val n = if (pcm == null) 0 else pcm.length / 2
-        if (pcm == null || n < frame) Iterator.empty
-        else (0 until n / frame).iterator.map { f =>
-          val p = whtPowers(pcm, frame, f * frame)
-          var best = 0
-          var bestP = -1L
-          var j = 0
-          while (j < frame) {
-            if (p(j) > bestP) { bestP = p(j); best = j }
-            j += 1
-          }
-          Row(id, f, best, bestP)
+    val codes = Multimodal.mediaRows(packed, codeSchema, () => Wav) {
+      (wav, id, bytes) =>
+        dominantLines(wav.decode(bytes), frame).zipWithIndex.map {
+          case ((line, power), f) => Row(id, f, line, power)
         }
+    }
+    sharedCodePairs(codes, codes, Seq("frame_idx", "line", "power"),
+      minShared)
+  }
+
+  /** The one dominant-line pass: per non-overlapping `frame`-sample
+    * window, the argmax sequency line of its WHT power spectrum (ties to
+    * the lower j) with that line's exact power. Empty for a quarantined
+    * clip or one shorter than a frame.
+    */
+  private def dominantLines(pcm: Pcm, frame: Int): IndexedSeq[(Int, Long)] =
+    if (pcm == null) IndexedSeq.empty
+    else (0 until pcm.n / frame).map { f =>
+      val p = whtPowers(pcm.bytes, frame, f * frame)
+      var best = 0
+      var bestP = -1L
+      var j = 0
+      while (j < frame) {
+        if (p(j) > bestP) { bestP = p(j); best = j }
+        j += 1
       }
-    }(enc)
-    val l = codes.select(col("media_id").as("id_a"), col("frame_idx"),
-      col("line"), col("power"))
-    val r = codes.select(col("media_id").as("id_b"), col("frame_idx"),
-      col("line"), col("power"))
-    // shuffle_hash, NOT auto-broadcast (the b25/c27 rule, applied in
-    // the r13 banded-join audit): the build side is the CORPUS-scaled
-    // codes frame (one landmark per frame per clip)
-    l.join(r.hint("shuffle_hash"), Seq("frame_idx", "line", "power"))
+      (best, bestP)
+    }
+
+  /** The one landmark self-join rollup: clips whose codes agree on every
+    * `keys` column pair up (id_a < id_b), counted per pair and kept at
+    * ≥ `minShared` shared codes. `left` and `right` carry `media_id`
+    * and the keys. shuffle_hash, NOT auto-broadcast (the b25/c27 rule,
+    * applied in the r13 banded-join audit): the build side is the
+    * CORPUS-scaled code frame (one landmark per frame per clip).
+    */
+  private def sharedCodePairs(left: DataFrame, right: DataFrame,
+                              keys: Seq[String],
+                              minShared: Int): DataFrame = {
+    def side(codes: DataFrame, id: String): DataFrame =
+      codes.select(col("media_id").as(id) +: keys.map(col): _*)
+    side(left, "id_a").join(side(right, "id_b").hint("shuffle_hash"), keys)
       .where(col("id_a") < col("id_b"))
       .groupBy("id_a", "id_b")
       .agg(count(lit(1)).as("n_shared"))
@@ -565,44 +508,10 @@ object Audio {
     * synthesis LCG. Non-WAV payloads pass through unchanged (A13 rule:
     * quarantine is the consumer's job, a transform never drops rows).
     */
-  def ditherWav(spark: SparkSession, packed: DataFrame,
-                batchSize: Int = 64): DataFrame = {
-    val enc = org.apache.spark.sql.catalyst.encoders.RowEncoder
-      .encoderFor(packed.schema)
-    packed.mapPartitions { rows =>
-      rows.grouped(batchSize).flatMap { batch =>
-        batch.map { r =>
-          val iMedia = r.fieldIndex("media")
-          val bytes = r.getAs[Array[Byte]](iMedia)
-          val pcm = pcmOf(bytes)
-          if (pcm == null) r
-          else {
-            val n = pcm.length / 2
-            val out = new Array[Byte](pcm.length)
-            var i = 0
-            while (i < n) {
-              val d = if (i % 3 == 0) 1 else -1
-              val s = math.max(-32768, math.min(32767, sampleAt(pcm, i) + d))
-              out(2 * i) = (s & 0xFF).toByte
-              out(2 * i + 1) = ((s >> 8) & 0xFF).toByte
-              i += 1
-            }
-            val fmt = new javax.sound.sampled.AudioFormat(
-              javax.sound.sampled.AudioFormat.Encoding.PCM_SIGNED,
-              SampleRate.toFloat, 16, 1, 2, SampleRate.toFloat, false)
-            val ais = new javax.sound.sampled.AudioInputStream(
-              new java.io.ByteArrayInputStream(out), fmt, n.toLong)
-            val bos = new java.io.ByteArrayOutputStream()
-            wavWriter.write(ais,
-              javax.sound.sampled.AudioFileFormat.Type.WAVE, bos)
-            val vals = r.toSeq.toArray
-            vals(iMedia) = bos.toByteArray
-            Row.fromSeq(vals.toSeq)
-          }
-        }
-      }
-    }(enc)
-  }
+  def ditherWav(spark: SparkSession, packed: DataFrame): DataFrame =
+    remapSamples(packed) { (i, s) =>
+      math.max(-32768, math.min(32767, s + (if (i % 3 == 0) 1 else -1)))
+    }
 
   /** Re-encode every clip at HALF gain — the volume-normalization /
     * re-mastering transform that defeats magnitude-carrying fingerprints:
@@ -615,42 +524,23 @@ object Audio {
     * motivates [[chainedFingerprintPairs]]. Real codec both ways;
     * non-WAV payloads pass through (A13).
     */
-  def gainWav(spark: SparkSession, packed: DataFrame,
-              batchSize: Int = 64): DataFrame = {
-    val enc = org.apache.spark.sql.catalyst.encoders.RowEncoder
-      .encoderFor(packed.schema)
-    packed.mapPartitions { rows =>
-      rows.grouped(batchSize).flatMap { batch =>
-        batch.map { r =>
-          val iMedia = r.fieldIndex("media")
-          val bytes = r.getAs[Array[Byte]](iMedia)
-          val pcm = pcmOf(bytes)
-          if (pcm == null) r
-          else {
-            val n = pcm.length / 2
-            val out = new Array[Byte](pcm.length)
-            var i = 0
-            while (i < n) {
-              val s = sampleAt(pcm, i) / 2
-              out(2 * i) = (s & 0xFF).toByte
-              out(2 * i + 1) = ((s >> 8) & 0xFF).toByte
-              i += 1
-            }
-            val fmt = new javax.sound.sampled.AudioFormat(
-              javax.sound.sampled.AudioFormat.Encoding.PCM_SIGNED,
-              SampleRate.toFloat, 16, 1, 2, SampleRate.toFloat, false)
-            val ais = new javax.sound.sampled.AudioInputStream(
-              new java.io.ByteArrayInputStream(out), fmt, n.toLong)
-            val bos = new java.io.ByteArrayOutputStream()
-            wavWriter.write(ais,
-              javax.sound.sampled.AudioFileFormat.Type.WAVE, bos)
-            val vals = r.toSeq.toArray
-            vals(iMedia) = bos.toByteArray
-            Row.fromSeq(vals.toSeq)
-          }
-        }
-      }
-    }(enc)
+  def gainWav(spark: SparkSession, packed: DataFrame): DataFrame =
+    remapSamples(packed)((_, s) => s / 2)
+
+  /** The one sample-remap transform: every canonical clip's sample i
+    * becomes `f(i, s_i)`, re-encoded through [[Wav.encode]]; payloads
+    * the decode gate refuses pass through byte-identical. A 1:1
+    * bytes → bytes map of the `media` column, so it rides `withColumn`
+    * and every other column of `packed` (meta, …) is kept as is.
+    */
+  private def remapSamples(packed: DataFrame)(f: (Int, Int) => Int)
+      : DataFrame = {
+    val remap = udf { (bytes: Array[Byte]) =>
+      val pcm = Wav.decode(bytes)
+      if (pcm == null) bytes
+      else Wav.encode(pcmBytes(pcm.n)(i => f(i, sampleAt(pcm.bytes, i))))
+    }
+    packed.withColumn("media", remap(col("media")))
   }
 
   /** Amplitude-INVARIANT audio matching via chained landmarks — the
@@ -703,41 +593,18 @@ object Audio {
       StructField("anchor", IntegerType),
       StructField("line_a", IntegerType),
       StructField("line_t", IntegerType)))
-    val enc = org.apache.spark.sql.catalyst.encoders.RowEncoder
-      .encoderFor(codeSchema)
-    val in = packed.select(col("media_id").cast("long"), col("media"))
-    in.mapPartitions { rows =>
-      rows.flatMap { r =>
-        val id = r.getLong(0)
-        val pcm = pcmOf(r.getAs[Array[Byte]](1))
-        val n = if (pcm == null) 0 else pcm.length / 2
-        if (pcm == null || n == 0) Iterator.empty
-        else {
-          val meta = Iterator.single(Row(id, n.toLong, -1, -1, -1))
-          val frames = n / frame
-          if (frames < 2) meta
-          else {
-            val lines = new Array[Int](frames)
-            var f = 0
-            while (f < frames) {
-              val p = whtPowers(pcm, frame, f * frame)
-              var best = 0
-              var bestP = -1L
-              var j = 0
-              while (j < frame) {
-                if (p(j) > bestP) { bestP = p(j); best = j }
-                j += 1
-              }
-              lines(f) = best
-              f += 1
-            }
-            meta ++ (0 until frames - 1).iterator.map { a =>
-              Row(id, n.toLong, a, lines(a), lines(a + 1))
-            }
+    Multimodal.mediaRows(packed, codeSchema, () => Wav) { (wav, id, bytes) =>
+      val pcm = wav.decode(bytes)
+      if (pcm == null || pcm.n == 0) Iterator.empty
+      else {
+        val n = pcm.n.toLong
+        val lines = dominantLines(pcm, frame).map(_._1)
+        Iterator.single(Row(id, n, -1, -1, -1)) ++
+          (0 until lines.length - 1).iterator.map { a =>
+            Row(id, n, a, lines(a), lines(a + 1))
           }
-        }
       }
-    }(enc)
+    }
   }
 
   /** The serving half of [[chainedFingerprintPairs]]: the hash
@@ -752,19 +619,7 @@ object Audio {
   def chainedPairsFromCodes(codes: DataFrame,
                             minShared: Int = 4): DataFrame = {
     val base = codes.where(col("anchor") >= 0)
-      .select(col("media_id"), col("anchor"), col("line_a"),
-        col("line_t"))
-    val l = base.select(col("media_id").as("id_a"), col("anchor"),
-      col("line_a"), col("line_t"))
-    val r = base.select(col("media_id").as("id_b"), col("anchor"),
-      col("line_a"), col("line_t"))
-    // shuffle_hash — the r13 banded-join audit rule (corpus-scaled
-    // build side)
-    l.join(r.hint("shuffle_hash"), Seq("anchor", "line_a", "line_t"))
-      .where(col("id_a") < col("id_b"))
-      .groupBy("id_a", "id_b")
-      .agg(count(lit(1)).as("n_shared"))
-      .where(col("n_shared") >= minShared)
+    sharedCodePairs(base, base, Seq("anchor", "line_a", "line_t"), minShared)
   }
 
   /** Cross-corpus chained-landmark pairs (C129) — the c2b
@@ -824,44 +679,23 @@ object Audio {
       StructField("frame_idx", IntegerType),
       StructField("line", IntegerType),
       StructField("qmag", IntegerType)))
-    val enc = org.apache.spark.sql.catalyst.encoders.RowEncoder
-      .encoderFor(codeSchema)
-    val in = packed.select(col("media_id").cast("long"), col("media"))
-    val codes = in.mapPartitions { rows =>
-      rows.flatMap { r =>
-        val id = r.getLong(0)
-        val pcm = pcmOf(r.getAs[Array[Byte]](1))
-        val n = if (pcm == null) 0 else pcm.length / 2
-        if (pcm == null || n < frame) Iterator.empty
-        else (0 until n / frame).iterator.map { f =>
-          val p = whtPowers(pcm, frame, f * frame)
-          var best = 0
-          var bestP = -1L
-          var j = 0
-          while (j < frame) {
-            if (p(j) > bestP) { bestP = p(j); best = j }
-            j += 1
-          }
-          val qmag =
-            if (bestP == 0L) 0
-            else 64 - java.lang.Long.numberOfLeadingZeros(bestP)
-          Row(id, f, best, qmag)
+    val codes = Multimodal.mediaRows(packed, codeSchema, () => Wav) {
+      (wav, id, bytes) =>
+        dominantLines(wav.decode(bytes), frame).zipWithIndex.map {
+          case ((line, power), f) =>
+            val qmag =
+              if (power == 0L) 0
+              else 64 - java.lang.Long.numberOfLeadingZeros(power)
+            Row(id, f, line, qmag)
         }
-      }
-    }(enc)
+    }
+    // the delta-expanded left is 2*tol+1 x the corpus-scaled build side
     val deltas = array((-tol to tol).map(lit): _*)
-    val l = codes.select(col("media_id").as("id_a"), col("frame_idx"),
+    val expanded = codes.select(col("media_id"), col("frame_idx"),
         col("line"), col("qmag"), explode(deltas).as("delta"))
       .withColumn("qmag", col("qmag") + col("delta")).drop("delta")
-    val r = codes.select(col("media_id").as("id_b"), col("frame_idx"),
-      col("line"), col("qmag"))
-    // shuffle_hash — the r13 banded-join audit rule (corpus-scaled
-    // build side; the delta-expanded left is 2*tol+1 x bigger still)
-    l.join(r.hint("shuffle_hash"), Seq("frame_idx", "line", "qmag"))
-      .where(col("id_a") < col("id_b"))
-      .groupBy("id_a", "id_b")
-      .agg(count(lit(1)).as("n_shared"))
-      .where(col("n_shared") >= minShared)
+    sharedCodePairs(expanded, codes, Seq("frame_idx", "line", "qmag"),
+      minShared)
   }
 
   /** Frame-level activity profile — the envelope view a VAD/silence
@@ -875,7 +709,7 @@ object Audio {
     * single (frame_idx = −1, null) row — the A13 rule.
     */
   def activityFrames(spark: SparkSession, packed: DataFrame,
-                     frame: Int = 128, batchSize: Int = 64): DataFrame = {
+                     frame: Int = 128): DataFrame = {
     require(frame > 1, "frame must have at least two samples")
     val outSchema = StructType(Seq(
       StructField("media_id", LongType),
@@ -883,81 +717,53 @@ object Audio {
       StructField("energy", LongType),
       StructField("zcr", IntegerType),
       StructField("peak", IntegerType)))
-    val enc = org.apache.spark.sql.catalyst.encoders.RowEncoder
-      .encoderFor(outSchema)
-    val in = packed.select(col("media_id").cast("long"), col("media"))
-    in.mapPartitions { rows =>
-      rows.grouped(batchSize).flatMap { batch =>
-        batch.flatMap { r =>
-          val id = r.getLong(0)
-          val pcm = pcmOf(r.getAs[Array[Byte]](1))
-          val n = if (pcm == null) 0 else pcm.length / 2
-          if (pcm == null || n < frame) Seq(Row(id, -1, null, null, null))
-          else (0 until n / frame).map { f =>
-            val off = f * frame
-            var energy = 0L
-            var zcr = 0
-            var peak = 0
-            var prevNeg = sampleAt(pcm, off) < 0
-            var i = 0
-            while (i < frame) {
-              val s = sampleAt(pcm, off + i)
-              energy += s.toLong * s
-              val a = math.abs(s)
-              if (a > peak) peak = a
-              val neg = s < 0
-              if (i > 0 && neg != prevNeg) zcr += 1
-              prevNeg = neg
-              i += 1
-            }
-            Row(id, f, energy, zcr, peak)
-          }
+    Multimodal.mediaRows(packed, outSchema, () => Wav) { (wav, id, bytes) =>
+      val decoded = wav.decode(bytes)
+      if (decoded == null || decoded.n < frame)
+        Seq(Row(id, -1, null, null, null))
+      else (0 until decoded.n / frame).map { f =>
+        val pcm = decoded.bytes
+        val off = f * frame
+        var energy = 0L
+        var zcr = 0
+        var peak = 0
+        var prevNeg = sampleAt(pcm, off) < 0
+        var i = 0
+        while (i < frame) {
+          val s = sampleAt(pcm, off + i)
+          energy += s.toLong * s
+          val a = math.abs(s)
+          if (a > peak) peak = a
+          val neg = s < 0
+          if (i > 0 && neg != prevNeg) zcr += 1
+          prevNeg = neg
+          i += 1
         }
+        Row(id, f, energy, zcr, peak)
       }
-    }(enc)
+    }
   }
 
   private[graft] def decodeOne(id: Long, bytes: Array[Byte]): Row = {
-    val parsed =
-      try {
-        val ais = parseAudio(bytes)
-        val fmt = ais.getFormat
-        if (fmt.getEncoding !=
-              javax.sound.sampled.AudioFormat.Encoding.PCM_SIGNED ||
-            fmt.getSampleSizeInBits != 16 || fmt.getChannels != 1 ||
-            fmt.isBigEndian || fmt.getSampleRate <= 0) null
-        else {
-          val pcm = ais.readAllBytes()
-          val n = pcm.length / 2
-          // a structurally valid but EMPTY clip has no rms/duration —
-          // quarantine rather than emit NaN (0/0) features
-          if (n == 0) null
-          else {
-            var sumSq = 0L
-            var peak = 0
-            var i = 0
-            while (i < n) {
-              val s =
-                ((pcm(2 * i) & 0xFF) | (pcm(2 * i + 1) << 8)).toShort.toInt
-              sumSq += s.toLong * s
-              val a = math.abs(s)
-              if (a > peak) peak = a
-              i += 1
-            }
-            val rate = fmt.getSampleRate.toInt
-            (n, rate, sumSq, peak)
-          }
-        }
-      } catch {
-        case _: javax.sound.sampled.UnsupportedAudioFileException => null
-        case _: java.io.IOException => null
-      }
-    if (parsed == null) Row(id, bytes.length, null, null, null, null, null)
+    val pcm = Wav.decode(bytes)
+    // a structurally valid but EMPTY clip has no rms/duration —
+    // quarantine rather than emit NaN (0/0) features
+    if (pcm == null || pcm.rate <= 0 || pcm.n == 0)
+      Row(id, bytes.length, null, null, null, null, null)
     else {
-      val (n, rate, sumSq, peak) = parsed
-      Row(id, bytes.length, n, rate,
-        n * 1000.0 / rate,
-        math.sqrt(sumSq.toDouble / n), peak)
+      var sumSq = 0L
+      var peak = 0
+      var i = 0
+      while (i < pcm.n) {
+        val s = sampleAt(pcm.bytes, i)
+        sumSq += s.toLong * s
+        val a = math.abs(s)
+        if (a > peak) peak = a
+        i += 1
+      }
+      val rate = pcm.rate.toInt
+      Row(id, bytes.length, pcm.n, rate, pcm.n * 1000.0 / rate,
+        math.sqrt(sumSq.toDouble / pcm.n), peak)
     }
   }
 }

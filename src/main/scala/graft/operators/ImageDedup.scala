@@ -39,13 +39,13 @@ import org.apache.spark.sql.types._
   * EXACT-pixel duplicates (the re-encode family: same image, different
   * container) from genuinely perceptual matches.
   *
-  * At 100 TB: code extraction is one decode pass (mapPartitions-batched,
-  * the c12 codec shape — pixels never leave the executor; 8 longs out
-  * per image); the join is banded with long keys and hot-bucket
-  * escalation; pair volume tracks true near-duplicate volume. Integer
-  * arithmetic end to end, so the DuckDB oracle replays pixels (from the
-  * synthesis formula), crop, block sums, bits, bands, hot rule, and
-  * hamming bit-for-bit.
+  * At 100 TB: code extraction is one decode pass through the one media
+  * transport ([[Multimodal.mediaRows]] — pixels never leave the
+  * executor; 8 longs out per image); the join is banded with long keys
+  * and hot-bucket escalation; pair volume tracks true near-duplicate
+  * volume. Integer arithmetic end to end, so the DuckDB oracle replays
+  * pixels (from the synthesis formula), crop, block sums, bits, bands,
+  * hot rule, and hamming bit-for-bit.
   */
 object ImageDedup {
 
@@ -66,33 +66,30 @@ object ImageDedup {
       StructField("media_id", LongType),
       StructField("media", BinaryType),
       StructField("format", StringType)))
-    val enc = org.apache.spark.sql.catalyst.encoders.RowEncoder
-      .encoderFor(outSchema)
-    val in = df.select(col(idCol).cast("long").as("media_id"))
-    in.mapPartitions { rows =>
-      val encoder = new Multimodal.ImageEncoder
-      rows.flatMap { r =>
-        val id = r.getLong(0)
-        // variant ids live at base + 2e6 / base + 3e6: a base id at or
-        // above 2e6 WITHIN ITS 1e7 BAND would silently COLLIDE a
-        // planted variant with a real media id (r13 advice) — refuse
-        // loudly instead. Bands of 1e7 are the documents replica
-        // convention (ScaleReplica's docShift: copy i sits at
-        // i·1e7 + base), which this guard turns from convention into
-        // a checked invariant.
-        require(id >= 0 && id % 10000000L < 2000000L,
-          s"packImageVariants: base id $id at or above 2e6 within its " +
-            "1e7 band — variant ids (+2e6/+3e6) would collide with the " +
-            "corpus id domain")
-        val base = Multimodal.renderImage(id, 0)
-        val png = Row(id, encoder.encode(base, "png"), "image/png")
-        if (id % 10 != 0) Iterator.single(png)
-        else Iterator(png,
-          Row(id + 2000000L, encoder.encode(base, "bmp"), "image/bmp"),
-          Row(id + 3000000L, encoder.encode(
-            Multimodal.renderImage(id, brightDelta), "png"), "image/png"))
-      }
-    }(enc)
+    // ids keep their source partitioning (not Multimodal.idsByCores):
+    // re-partitioning this stage is a performance change of its own
+    val ids = df.select(col(idCol).cast("long").as("media_id"))
+    Multimodal.mediaRows(ids, outSchema,
+      () => new Multimodal.ImageEncoder) { (encoder, id, _) =>
+      // variant ids live at base + 2e6 / base + 3e6: a base id at or
+      // above 2e6 WITHIN ITS 1e7 BAND would silently COLLIDE a
+      // planted variant with a real media id (r13 advice) — refuse
+      // loudly instead. Bands of 1e7 are the documents replica
+      // convention (ScaleReplica's docShift: copy i sits at
+      // i·1e7 + base), which this guard turns from convention into
+      // a checked invariant.
+      require(id >= 0 && id % 10000000L < 2000000L,
+        s"packImageVariants: base id $id at or above 2e6 within its " +
+          "1e7 band — variant ids (+2e6/+3e6) would collide with the " +
+          "corpus id domain")
+      val base = Multimodal.renderImage(id, 0)
+      val png = Row(id, encoder.encode(base, "png"), "image/png")
+      if (id % 10 != 0) Iterator.single(png)
+      else Iterator(png,
+        Row(id + 2000000L, encoder.encode(base, "bmp"), "image/bmp"),
+        Row(id + 3000000L, encoder.encode(
+          Multimodal.renderImage(id, brightDelta), "png"), "image/png"))
+    }
   }
 
   /** Decode each payload with the real codec and emit its grid²-bit
@@ -118,57 +115,51 @@ object ImageDedup {
       StructField("height", IntegerType),
       StructField("code", LongType),
       StructField("pixsum", LongType)))
-    val enc = org.apache.spark.sql.catalyst.encoders.RowEncoder
-      .encoderFor(outSchema)
-    val in = packed.select(col("media_id").cast("long"), col("media"))
-    in.mapPartitions { rows =>
-      val dec = new Multimodal.ImageDecoder
-      rows.flatMap { r =>
-        val id = r.getLong(0)
-        val img = dec.read(r.getAs[Array[Byte]](1))
-        if (img == null) Iterator.empty
+    Multimodal.mediaRows(packed, outSchema,
+      () => new Multimodal.ImageDecoder) { (dec, id, bytes) =>
+      val img = dec.read(bytes)
+      if (img == null) Iterator.empty
+      else {
+        val w = img.getWidth
+        val h = img.getHeight
+        val w8 = w - w % grid
+        val h8 = h - h % grid
+        if (w8 < grid || h8 < grid) Iterator.empty
         else {
-          val w = img.getWidth
-          val h = img.getHeight
-          val w8 = w - w % grid
-          val h8 = h - h % grid
-          if (w8 < grid || h8 < grid) Iterator.empty
-          else {
-            val bw = w8 / grid
-            val bh = h8 / grid
-            val nCells = grid * grid
-            val sums = new Array[Long](nCells)
-            var total = 0L
-            var pixsum = 0L
-            val px = Multimodal.packedRgb(img)
-            var y = 0
-            while (y < h) {
-              var x = 0
-              while (x < w) {
-                // grey g(x, y) = the exact integer r + g + b
-                val p = px(y * w + x)
-                val g = ((p >> 16) & 255) + ((p >> 8) & 255) + (p & 255)
-                pixsum += g.toLong * (x + 1) * (y + 3)
-                if (x < w8 && y < h8) {
-                  val cell = (y / bh) * grid + (x / bw)
-                  sums(cell) += g
-                  total += g
-                }
-                x += 1
+          val bw = w8 / grid
+          val bh = h8 / grid
+          val nCells = grid * grid
+          val sums = new Array[Long](nCells)
+          var total = 0L
+          var pixsum = 0L
+          val px = Multimodal.packedRgb(img)
+          var y = 0
+          while (y < h) {
+            var x = 0
+            while (x < w) {
+              // grey g(x, y) = the exact integer r + g + b
+              val p = px(y * w + x)
+              val g = ((p >> 16) & 255) + ((p >> 8) & 255) + (p & 255)
+              pixsum += g.toLong * (x + 1) * (y + 3)
+              if (x < w8 && y < h8) {
+                val cell = (y / bh) * grid + (x / bw)
+                sums(cell) += g
+                total += g
               }
-              y += 1
+              x += 1
             }
-            var code = 0L
-            var c = 0
-            while (c < nCells) {
-              if (nCells.toLong * sums(c) > total) code |= (1L << c)
-              c += 1
-            }
-            Iterator.single(Row(id, w, h, code, pixsum))
+            y += 1
           }
+          var code = 0L
+          var c = 0
+          while (c < nCells) {
+            if (nCells.toLong * sums(c) > total) code |= (1L << c)
+            c += 1
+          }
+          Iterator.single(Row(id, w, h, code, pixsum))
         }
       }
-    }(enc)
+    }
   }
 
   /** The banded candidate join at an EXPLICIT band count (C114's

@@ -1,7 +1,7 @@
 package graft.operators
 
 import java.awt.image.{BufferedImage, DataBufferInt}
-import javax.imageio.{ImageIO, ImageWriter}
+import javax.imageio.{ImageIO, ImageReader, ImageWriter}
 
 import scala.collection.immutable.ArraySeq
 
@@ -14,15 +14,17 @@ import org.apache.spark.sql.types._
   * opaque `binary` columns with a typed metadata struct alongside, so
   * Catalyst prunes/filters on metadata WITHOUT ever deserializing payloads.
   *
-  * Still images go through ONE codec: [[renderImage]] is the pixel
-  * formula the oracles replay, [[ImageEncoder]] the one encoder and
-  * [[ImageDecoder]] the one decoder (`javax.imageio`, pure JVM), each
-  * built once per partition. [[packImages]] / [[decodeImages]] are
-  * their one transport — a mapPartitions row path — and the c97
-  * perceptual codes ([[ImageDedup]]) ride the same encoder, decoder and
-  * raster accessor. Payloads the decoder cannot read quarantine to a
-  * deterministic byte histogram instead of failing the task. Animated
-  * GIFs keep their own sequence codec ([[packAnimatedGifs]]).
+  * Every media walk — still images, animated GIFs, WAV audio
+  * ([[Audio]]) and the c97 perceptual codes ([[ImageDedup]]) — runs
+  * through ONE transport, [[mediaRows]]: one codec object per
+  * partition, released when the task ends, each `(media_id, media)`
+  * payload mapped to rows of a declared schema. Images and GIFs share
+  * one codec: [[renderImage]] is the pixel formula the oracles replay,
+  * [[ImageEncoder]] the one encoder (single images and GIF frame
+  * sequences) and [[ImageDecoder]] the one decoder (`javax.imageio`,
+  * pure JVM), with [[packedRgb]] the one raster accessor. Payloads the
+  * decoder cannot read quarantine to a deterministic byte histogram
+  * instead of failing the task.
   */
 object Multimodal {
 
@@ -98,34 +100,72 @@ object Multimodal {
   }
 
   /** Run `release` when the current Spark task completes (or dies): the
-    * packers/decoders are lazy iterators, so a completion listener is
-    * the only hook that runs after the partition is exhausted. Off a
-    * task (driver-side use) the codec objects are left to GC.
+    * media walks are lazy iterators, so a completion listener is the
+    * only hook that runs after the partition is exhausted. Off a task
+    * (driver-side use) the codec objects are left to GC.
     */
   private def atTaskEnd(release: => Unit): Unit = {
     val tc = TaskContext.get()
     if (tc != null) tc.addTaskCompletionListener[Unit](_ => release)
   }
 
+  /** The one media transport. Reads `media_id` (cast to long) and, when
+    * the frame has one, the `media` payload (null for the packers, which
+    * start from bare ids); opens ONE codec object per partition, closed
+    * when the task ends; and maps each payload to zero or more rows of
+    * `schema`. Payload bytes stay partition-local — the walk adds no
+    * exchange.
+    */
+  private[graft] def mediaRows[C <: AutoCloseable](in: DataFrame,
+      schema: StructType, open: () => C)(
+      f: (C, Long, Array[Byte]) => IterableOnce[Row]): DataFrame = {
+    val media =
+      if (in.columns.contains("media")) col("media")
+      else lit(null).cast(BinaryType)
+    in.select(col("media_id").cast(LongType), media).mapPartitions { rows =>
+      val codec = open()
+      atTaskEnd(codec.close())
+      rows.flatMap(r => f(codec, r.getLong(0), r.getAs[Array[Byte]](1)))
+    }(org.apache.spark.sql.catalyst.encoders.RowEncoder.encoderFor(schema))
+  }
+
+  /** `df`'s `idCol` as a `media_id` frame sized for a codec stage: a
+    * codec is CPU-bound per row, so partitioning inherited from a small
+    * parquet scan (one split for a sub-128 MB file) would serialize the
+    * whole stage behind one task. The ids are widened to
+    * defaultParallelism when narrower — a shuffle of bare longs, nothing
+    * next to the per-payload work it unlocks (the decoders inherit this
+    * partitioning and stay payload-local).
+    */
+  private[graft] def idsByCores(spark: SparkSession, df: DataFrame,
+                                idCol: String): DataFrame = {
+    val ids = df.select(col(idCol).cast("long").as("media_id"))
+    val target = spark.sparkContext.defaultParallelism
+    if (ids.rdd.getNumPartitions < target) ids.repartition(target) else ids
+  }
+
   /** The one image encoder, one per partition (the twin of
     * [[ImageDecoder]]): ONE `ImageWriter` per format instead of
     * `ImageIO.write`'s registry scan + fresh writer per call, in-memory
     * streams instead of the ImageIO temp-file cache, every writer
-    * disposed when the task completes. A missing codec fails naming the
-    * format, not with an iterator NoSuchElementException.
+    * disposed on `close`. A missing codec fails naming the format, not
+    * with an iterator NoSuchElementException.
     *
     * `setUseCache` is JVM-global: flipping it off from a task is
     * idempotent and the only sane setting for byte-array round trips,
     * so every codec object sets it — noted because it IS cross-task
     * state.
     */
-  final class ImageEncoder {
+  final class ImageEncoder extends AutoCloseable {
     ImageIO.setUseCache(false)
     private val writers =
       scala.collection.mutable.Map.empty[String, ImageWriter]
-    atTaskEnd(writers.values.foreach(w => scala.util.Try(w.dispose())))
 
-    def encode(img: BufferedImage, format: String): Array[Byte] = {
+    def close(): Unit =
+      writers.values.foreach(w => scala.util.Try(w.dispose()))
+
+    private def write(format: String)(body: ImageWriter => Unit)
+        : Array[Byte] = {
       val writer = writers.getOrElseUpdate(format, {
         val found = ImageIO.getImageWritersByFormatName(format)
         require(found.hasNext,
@@ -135,23 +175,31 @@ object Multimodal {
       val bos = new java.io.ByteArrayOutputStream()
       val ios = new javax.imageio.stream.MemoryCacheImageOutputStream(bos)
       writer.setOutput(ios)
-      writer.write(img)
+      body(writer)
       ios.close()
       bos.toByteArray
     }
+
+    def encode(img: BufferedImage, format: String): Array[Byte] =
+      write(format)(_.write(img))
+
+    /** A multi-frame container (an animated GIF for "gif"), written frame
+      * by frame through the writer's sequence API.
+      */
+    def encodeFrames(frames: Iterator[BufferedImage],
+                     format: String): Array[Byte] =
+      write(format) { w =>
+        w.prepareWriteSequence(null)
+        frames.foreach(img =>
+          w.writeToSequence(new javax.imageio.IIOImage(img, null, null), null))
+        w.endWriteSequence()
+      }
   }
 
   /** Generate REAL PNG payloads — [[renderImage]]'s pixels through one
     * [[ImageEncoder]] per partition; the codec (`javax.imageio`, pure
-    * JVM) runs executor-side, the driver never sees bytes.
-    *
-    * The codec stage is sized by CORES, not by the source file's split
-    * count: a codec is CPU-bound per row, so partitioning inherited from
-    * a small parquet scan (one split for a sub-128 MB file) would
-    * serialize the whole stage behind one task. The id frame is widened
-    * to defaultParallelism when narrower — a shuffle of bare longs,
-    * nothing next to the per-image work it unlocks ([[decodeImages]]
-    * inherits this partitioning and stays payload-local).
+    * JVM) runs executor-side over cores-sized id partitions
+    * ([[idsByCores]]), the driver never sees bytes.
     */
   def packImages(spark: SparkSession, df: DataFrame,
                  idCol: String): DataFrame = {
@@ -159,20 +207,11 @@ object Multimodal {
       StructField("media_id", LongType),
       StructField("media", BinaryType),
       StructField("meta", mediaMetaSchema)))
-    val enc = org.apache.spark.sql.catalyst.encoders.RowEncoder
-      .encoderFor(outSchema)
-    val narrow = df.select(col(idCol).cast("long").as("media_id"))
-    val target = spark.sparkContext.defaultParallelism
-    val in = if (narrow.rdd.getNumPartitions < target)
-      narrow.repartition(target) else narrow
-    in.mapPartitions { rows =>
-      val encoder = new ImageEncoder
-      rows.map { r =>
-        val id = r.getLong(0)
-        Row(id, encoder.encode(renderImage(id, 0), "png"),
-          Row("image/png", imageW(id), imageH(id), 1))
-      }
-    }(enc)
+    mediaRows(idsByCores(spark, df, idCol), outSchema,
+      () => new ImageEncoder) { (encoder, id, _) =>
+      Iterator.single(Row(id, encoder.encode(renderImage(id, 0), "png"),
+        Row("image/png", imageW(id), imageH(id), 1)))
+    }
   }
 
   /** Decode + feature-extract every payload with one [[ImageDecoder]]
@@ -190,20 +229,13 @@ object Multimodal {
       StructField("width", IntegerType),
       StructField("height", IntegerType),
       StructField("features", ArrayType(DoubleType))))
-    val enc = org.apache.spark.sql.catalyst.encoders.RowEncoder
-      .encoderFor(outSchema)
-    val in = packed.select(col("media_id").cast("long"), col("media"))
-    in.mapPartitions { rows =>
-      val dec = new ImageDecoder
-      rows.map { r =>
-        val bytes = r.getAs[Array[Byte]](1)
-        val d = dec.decode(bytes)
-        val feats = ArraySeq.unsafeWrapArray(d.features)
-        if (d.width >= 0)
-          Row(r.getLong(0), bytes.length, d.width, d.height, feats)
-        else Row(r.getLong(0), bytes.length, null, null, feats)
-      }
-    }(enc)
+    mediaRows(packed, outSchema, () => new ImageDecoder) { (dec, id, bytes) =>
+      val d = dec.decode(bytes)
+      val feats = ArraySeq.unsafeWrapArray(d.features)
+      Iterator.single(
+        if (d.width >= 0) Row(id, bytes.length, d.width, d.height, feats)
+        else Row(id, bytes.length, null, null, feats))
+    }
   }
 
   /** Result of one image decode: `width < 0` means the payload was not a
@@ -215,50 +247,73 @@ object Multimodal {
   private def hasPrefix(bytes: Array[Byte], magic: Int*): Boolean =
     bytes.length > 4 && magic.indices.forall(i => bytes(i) == magic(i).toByte)
 
-  /** The one image decoder, one per partition. Sniffs the magic bytes —
-    * PNG decodes through ONE reused `ImageReader` (disposed when the
-    * task completes); BMP, JPEG (FF D8 FF) and GIF ("GIF8") ride the
-    * JDK's own ImageIO plugins, no native deps. Lossy JPEG means its
-    * features are codec-true, not formula-pinned, so the oracles stay on
-    * PNG/BMP and JPEG is spec-gated by round-trip tolerance instead.
+  /** Kept frames of an animated GIF: the container's frame count and,
+    * per kept frame, its index, dimensions and [[packedRgb]] pixels.
     */
-  final class ImageDecoder {
+  final case class GifFrame(idx: Int, width: Int, height: Int,
+                            px: Array[Int])
+  final case class GifFrames(n: Int, frames: IndexedSeq[GifFrame])
+
+  /** The one image decoder, one per partition. Sniffs the magic bytes —
+    * PNG and GIF decode through ONE reused `ImageReader` each (disposed
+    * on `close`); BMP and JPEG (FF D8 FF) ride the JDK's own ImageIO
+    * plugins, no native deps. Lossy JPEG means its features are
+    * codec-true, not formula-pinned, so the oracles stay on PNG/BMP and
+    * JPEG is spec-gated by round-trip tolerance instead.
+    */
+  final class ImageDecoder extends AutoCloseable {
     ImageIO.setUseCache(false)
     private val pngReader = ImageIO.getImageReadersByFormatName("png").next()
-    atTaskEnd(pngReader.dispose())
+    private val gifReader = ImageIO.getImageReadersByFormatName("gif").next()
 
-    /** The decoded image, or null when `bytes` is not a decodable image:
-      * no known magic, or any NonFatal codec failure (an OOM or interrupt
-      * still fails the task).
+    def close(): Unit = { pngReader.dispose(); gifReader.dispose() }
+
+    private def isGif(bytes: Array[Byte]): Boolean =
+      hasPrefix(bytes, 'G', 'I', 'F', '8')
+
+    private def parse[T](reader: ImageReader, bytes: Array[Byte],
+                         seekForwardOnly: Boolean)(body: => T): T = {
+      val iis = new javax.imageio.stream.MemoryCacheImageInputStream(
+        new java.io.ByteArrayInputStream(bytes))
+      try { reader.setInput(iis, seekForwardOnly, true); body }
+      finally iis.close()
+    }
+
+    /** The decoded image (a GIF's first frame), or null when `bytes` is
+      * not a decodable image: no known magic, or any NonFatal codec
+      * failure (an OOM or interrupt still fails the task).
       */
     def read(bytes: Array[Byte]): BufferedImage =
       try {
-        if (hasPrefix(bytes, 0x89, 'P', 'N', 'G')) {
-          val iis = new javax.imageio.stream.MemoryCacheImageInputStream(
-            new java.io.ByteArrayInputStream(bytes))
-          try { pngReader.setInput(iis, true, true); pngReader.read(0) }
-          finally iis.close()
-        } else if (hasPrefix(bytes, 'B', 'M') ||
-                   hasPrefix(bytes, 0xFF, 0xD8, 0xFF) ||
-                   hasPrefix(bytes, 'G', 'I', 'F', '8'))
+        if (hasPrefix(bytes, 0x89, 'P', 'N', 'G'))
+          parse(pngReader, bytes, true)(pngReader.read(0))
+        else if (isGif(bytes)) parse(gifReader, bytes, true)(gifReader.read(0))
+        else if (hasPrefix(bytes, 'B', 'M') ||
+                 hasPrefix(bytes, 0xFF, 0xD8, 0xFF))
           ImageIO.read(new java.io.ByteArrayInputStream(bytes))
         else null
       } catch { case scala.util.control.NonFatal(_) => null }
 
+    /** Every `stride`-th frame of an animated GIF, the frame count read
+      * from the container (`getNumImages`); null when `bytes` is not a
+      * GIF or the container fails with an IOException (quarantine — any
+      * other failure fails the task).
+      */
+    def gifFrames(bytes: Array[Byte], stride: Int): GifFrames =
+      if (!isGif(bytes)) null
+      else try parse(gifReader, bytes, false) {
+        val n = gifReader.getNumImages(true)
+        GifFrames(n, (0 until n by stride).map { f =>
+          val img = gifReader.read(f)
+          GifFrame(f, img.getWidth, img.getHeight, packedRgb(img))
+        })
+      } catch { case _: java.io.IOException => null }
+
     def decode(bytes: Array[Byte]): DecodeResult = {
       val img = read(bytes)
       if (img != null) {
-        val px = packedRgb(img)
-        var sr = 0L; var sg = 0L; var sb = 0L
-        var i = 0
-        while (i < px.length) {
-          val p = px(i)
-          sr += (p >> 16) & 0xFF; sg += (p >> 8) & 0xFF; sb += p & 0xFF
-          i += 1
-        }
         val (w, h) = (img.getWidth, img.getHeight)
-        val n = math.max(w * h, 1) * 255.0
-        DecodeResult(w, h, Array(sr / n, sg / n, sb / n))
+        DecodeResult(w, h, meanRgb(packedRgb(img), w, h))
       } else {
         val hist = new Array[Double](histBins)
         var i = 0
@@ -270,6 +325,21 @@ object Multimodal {
         DecodeResult(-1, -1, hist.map(_ / total))
       }
     }
+  }
+
+  /** Mean R, G, B in [0, 1] of a w×h image's packed pixels: exact
+    * integer channel sums over max(w·h, 1)·255.
+    */
+  private def meanRgb(px: Array[Int], w: Int, h: Int): Array[Double] = {
+    var sr = 0L; var sg = 0L; var sb = 0L
+    var i = 0
+    while (i < px.length) {
+      val p = px(i)
+      sr += (p >> 16) & 0xFF; sg += (p >> 8) & 0xFF; sb += p & 0xFF
+      i += 1
+    }
+    val n = math.max(w * h, 1) * 255.0
+    Array(sr / n, sg / n, sb / n)
   }
 
   /** Every pixel of a decoded image as packed 0xRRGGBB ints, row-major —
@@ -317,76 +387,54 @@ object Multimodal {
     ((x + 3 * y + 5 * f + id) % 8).toInt
 
   /** Synthesize REAL multi-frame media: animated GIFs written frame by
-    * frame through ImageIO's sequence writer (`prepareWriteSequence` /
-    * `writeToSequence` — the actual GIF89a animation structure, pure
-    * JDK). The "video" surface of the multimodal stack: n_frames rides
-    * prunable metadata, payload bytes stay opaque. Frames draw from the
-    * exact 8-color [[GifPalette]] so encoding is provably lossless.
+    * frame through [[ImageEncoder.encodeFrames]] (the GIF writer's
+    * sequence API — the actual GIF89a animation structure, pure JDK)
+    * over cores-sized id partitions ([[idsByCores]]). The "video"
+    * surface of the multimodal stack: n_frames rides prunable metadata,
+    * payload bytes stay opaque. Frames draw from the exact 8-color
+    * [[GifPalette]] so encoding is provably lossless.
     */
-  def packAnimatedGifs(spark: SparkSession, df: DataFrame, idCol: String,
-                       batchSize: Int = 64): DataFrame = {
+  def packAnimatedGifs(spark: SparkSession, df: DataFrame,
+                       idCol: String): DataFrame = {
     val outSchema = StructType(Seq(
       StructField("media_id", LongType),
       StructField("media", BinaryType),
       StructField("meta", mediaMetaSchema)))
-    val enc = org.apache.spark.sql.catalyst.encoders.RowEncoder
-      .encoderFor(outSchema)
-    val narrow = df.select(col(idCol).cast("long").as("media_id"))
-    val target = spark.sparkContext.defaultParallelism
-    val in = if (narrow.rdd.getNumPartitions < target)
-      narrow.repartition(target) else narrow
-    in.mapPartitions { rows =>
-      javax.imageio.ImageIO.setUseCache(false)
-      val writer = javax.imageio.ImageIO
-        .getImageWritersByFormatName("gif").next()
-      rows.grouped(batchSize).flatMap { batch =>
-        batch.map { r =>
-          val id = r.getLong(0)
-          val (w, h, nf) = (gifW(id), gifH(id), gifFrames(id))
-          val bos = new java.io.ByteArrayOutputStream()
-          val ios = new javax.imageio.stream.MemoryCacheImageOutputStream(bos)
-          writer.setOutput(ios)
-          writer.prepareWriteSequence(null)
-          var f = 0
-          while (f < nf) {
-            val img = new java.awt.image.BufferedImage(
-              w, h, java.awt.image.BufferedImage.TYPE_INT_RGB)
-            val px = img.getRaster.getDataBuffer
-              .asInstanceOf[java.awt.image.DataBufferInt].getData
-            var y = 0
-            while (y < h) {
-              var x = 0
-              val row = y * w
-              while (x < w) {
-                val (cr, cg, cb) = GifPalette(gifColorIdx(id, f, x, y))
-                px(row + x) = (cr << 16) | (cg << 8) | cb
-                x += 1
-              }
-              y += 1
-            }
-            writer.writeToSequence(
-              new javax.imageio.IIOImage(img, null, null), null)
-            f += 1
+    mediaRows(idsByCores(spark, df, idCol), outSchema,
+      () => new ImageEncoder) { (encoder, id, _) =>
+      val (w, h, nf) = (gifW(id), gifH(id), gifFrames(id))
+      val frames = Iterator.tabulate(nf) { f =>
+        val img = new BufferedImage(w, h, BufferedImage.TYPE_INT_RGB)
+        val px = img.getRaster.getDataBuffer.asInstanceOf[DataBufferInt].getData
+        var y = 0
+        while (y < h) {
+          var x = 0
+          val row = y * w
+          while (x < w) {
+            val (cr, cg, cb) = GifPalette(gifColorIdx(id, f, x, y))
+            px(row + x) = (cr << 16) | (cg << 8) | cb
+            x += 1
           }
-          writer.endWriteSequence()
-          ios.close()
-          Row(id, bos.toByteArray, Row("image/gif", w, h, nf))
+          y += 1
         }
+        img
       }
-    }(enc)
+      Iterator.single(Row(id, encoder.encodeFrames(frames, "gif"),
+        Row("image/gif", w, h, nf)))
+    }
   }
 
   /** Frame-sampled decode of multi-frame media (the real-container
-    * upgrade of [[sampleFrames]]'s byte slicing): ImageIO's GIF reader
-    * reports the frame count from the container (`getNumImages`) and
-    * decodes every `stride`-th frame; per kept frame the mean-RGB
-    * features, via the same color-model-safe accumulation as
-    * [[ImageDecoder]]. Unparseable payloads quarantine to a single
-    * (frame_idx = -1, null dims) row — the A13 rule. Output:
-    * (media_id, n_frames, frame_idx, width, height, mean_r/g/b).
+    * upgrade of [[sampleFrames]]'s byte slicing): [[ImageDecoder.gifFrames]]
+    * reports the frame count from the container and decodes every
+    * `stride`-th frame; per kept frame the mean-RGB features, the same
+    * accumulation as [[ImageDecoder.decode]]. Unparseable payloads
+    * quarantine to a single (frame_idx = -1, null dims) row — the A13
+    * rule. Output: (media_id, n_frames, frame_idx, width, height,
+    * mean_r/g/b).
     */
   def decodeGifFrames(spark: SparkSession, packed: DataFrame,
-                      stride: Int = 2, batchSize: Int = 64): DataFrame = {
+                      stride: Int = 2): DataFrame = {
     val outSchema = StructType(Seq(
       StructField("media_id", LongType),
       StructField("n_frames", IntegerType),
@@ -396,59 +444,23 @@ object Multimodal {
       StructField("mean_r", DoubleType),
       StructField("mean_g", DoubleType),
       StructField("mean_b", DoubleType)))
-    val enc = org.apache.spark.sql.catalyst.encoders.RowEncoder
-      .encoderFor(outSchema)
-    val in = packed.select(col("media_id").cast("long"), col("media"))
-    in.mapPartitions { rows =>
-      javax.imageio.ImageIO.setUseCache(false)
-      val reader = javax.imageio.ImageIO
-        .getImageReadersByFormatName("gif").next()
-      rows.grouped(batchSize).flatMap { batch =>
-        batch.flatMap { r =>
-          val id = r.getLong(0)
-          val bytes = r.getAs[Array[Byte]](1)
-          val isGif = bytes.length > 4 && bytes(0) == 'G' &&
-            bytes(1) == 'I' && bytes(2) == 'F' && bytes(3) == '8'
-          val frames =
-            if (!isGif) null
-            else try {
-              val iis = new javax.imageio.stream.MemoryCacheImageInputStream(
-                new java.io.ByteArrayInputStream(bytes))
-              reader.setInput(iis, false, true)
-              val n = reader.getNumImages(true)
-              val out = (0 until n by stride).map { f =>
-                val img = reader.read(f)
-                val w = img.getWidth; val h = img.getHeight
-                var sr = 0L; var sg = 0L; var sb = 0L
-                val px = img.getRGB(0, 0, w, h, null, 0, w)
-                var i = 0
-                while (i < px.length) {
-                  val p = px(i)
-                  sr += (p >> 16) & 0xFF; sg += (p >> 8) & 0xFF
-                  sb += p & 0xFF
-                  i += 1
-                }
-                val d = math.max(w * h, 1) * 255.0
-                (n, f, w, h, sr / d, sg / d, sb / d)
-              }
-              iis.close()
-              out
-            } catch { case _: java.io.IOException => null }
-          if (frames == null)
-            Seq(Row(id, null, -1, null, null, null, null, null))
-          else frames.map { case (n, f, w, h, mr, mg, mb) =>
-            Row(id, n, f, w, h, mr, mg, mb) }
-        }
+    mediaRows(packed, outSchema, () => new ImageDecoder) { (dec, id, bytes) =>
+      val g = dec.gifFrames(bytes, stride)
+      if (g == null) Iterator.single(
+        Row(id, null, -1, null, null, null, null, null))
+      else g.frames.iterator.map { fr =>
+        val m = meanRgb(fr.px, fr.width, fr.height)
+        Row(id, g.n, fr.idx, fr.width, fr.height, m(0), m(1), m(2))
       }
-    }(enc)
+    }
   }
 
   /** Frame-DIFFERENCE features over multi-frame media — the motion
     * signal [[decodeGifFrames]] stops short of: per consecutive pair of
-    * KEPT frames (stride-sampled, same as the decode path), the
-    * pixel-wise mean absolute difference per channel. This is the
-    * scene-change / static-clip discriminator a video curation pipeline
-    * filters on (a slideshow and a tracking shot have identical
+    * KEPT frames (stride-sampled by the same [[ImageDecoder.gifFrames]]
+    * reader), the pixel-wise mean absolute difference per channel. This
+    * is the scene-change / static-clip discriminator a video curation
+    * pipeline filters on (a slideshow and a tracking shot have identical
     * per-frame means but wildly different MADs).
     *
     * Exactness contract: each |Δ| sum is an exact integer (≤ w·h·255 ≤
@@ -461,7 +473,7 @@ object Multimodal {
     * mad_r, mad_g, mad_b).
     */
   def gifFrameDeltas(spark: SparkSession, packed: DataFrame,
-                     stride: Int = 2, batchSize: Int = 64): DataFrame = {
+                     stride: Int = 2): DataFrame = {
     val outSchema = StructType(Seq(
       StructField("media_id", LongType),
       StructField("n_frames", IntegerType),
@@ -472,60 +484,25 @@ object Multimodal {
       StructField("mad_r", DoubleType),
       StructField("mad_g", DoubleType),
       StructField("mad_b", DoubleType)))
-    val enc = org.apache.spark.sql.catalyst.encoders.RowEncoder
-      .encoderFor(outSchema)
-    val in = packed.select(col("media_id").cast("long"), col("media"))
-    in.mapPartitions { rows =>
-      javax.imageio.ImageIO.setUseCache(false)
-      val reader = javax.imageio.ImageIO
-        .getImageReadersByFormatName("gif").next()
-      rows.grouped(batchSize).flatMap { batch =>
-        batch.flatMap { r =>
-          val id = r.getLong(0)
-          val bytes = r.getAs[Array[Byte]](1)
-          val isGif = bytes.length > 4 && bytes(0) == 'G' &&
-            bytes(1) == 'I' && bytes(2) == 'F' && bytes(3) == '8'
-          val deltas =
-            if (!isGif) null
-            else try {
-              val iis = new javax.imageio.stream.MemoryCacheImageInputStream(
-                new java.io.ByteArrayInputStream(bytes))
-              reader.setInput(iis, false, true)
-              val n = reader.getNumImages(true)
-              var prevPx: Array[Int] = null
-              var prevIdx = -1
-              val out = (0 until n by stride).flatMap { f =>
-                val img = reader.read(f)
-                val w = img.getWidth; val h = img.getHeight
-                val px = img.getRGB(0, 0, w, h, null, 0, w)
-                val res =
-                  if (prevPx == null || prevPx.length != px.length) Nil
-                  else {
-                    var dr = 0L; var dg = 0L; var db = 0L
-                    var i = 0
-                    while (i < px.length) {
-                      val p = px(i); val q = prevPx(i)
-                      dr += math.abs(((p >> 16) & 0xFF) - ((q >> 16) & 0xFF))
-                      dg += math.abs(((p >> 8) & 0xFF) - ((q >> 8) & 0xFF))
-                      db += math.abs((p & 0xFF) - (q & 0xFF))
-                      i += 1
-                    }
-                    val d = math.max(w * h, 1) * 255.0
-                    Seq((n, prevIdx, f, w, h, dr / d, dg / d, db / d))
-                  }
-                prevPx = px
-                prevIdx = f
-                res
-              }
-              iis.close()
-              out
-            } catch { case _: java.io.IOException => null }
-          if (deltas == null)
-            Seq(Row(id, null, -1, null, null, null, null, null, null))
-          else deltas.map { case (n, pf, f, w, h, mr, mg, mb) =>
-            Row(id, n, pf, f, w, h, mr, mg, mb) }
-        }
+    mediaRows(packed, outSchema, () => new ImageDecoder) { (dec, id, bytes) =>
+      val g = dec.gifFrames(bytes, stride)
+      if (g == null) Iterator.single(
+        Row(id, null, -1, null, null, null, null, null, null))
+      else g.frames.iterator.sliding(2).collect {
+        case Seq(prev, cur) if prev.px.length == cur.px.length =>
+          var dr = 0L; var dg = 0L; var db = 0L
+          var i = 0
+          while (i < cur.px.length) {
+            val p = cur.px(i); val q = prev.px(i)
+            dr += math.abs(((p >> 16) & 0xFF) - ((q >> 16) & 0xFF))
+            dg += math.abs(((p >> 8) & 0xFF) - ((q >> 8) & 0xFF))
+            db += math.abs((p & 0xFF) - (q & 0xFF))
+            i += 1
+          }
+          val d = math.max(cur.width * cur.height, 1) * 255.0
+          Row(id, g.n, prev.idx, cur.idx, cur.width, cur.height,
+            dr / d, dg / d, db / d)
       }
-    }(enc)
+    }
   }
 }

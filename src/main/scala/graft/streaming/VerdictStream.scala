@@ -82,13 +82,9 @@ object VerdictStream {
       ImageDedup.blockhashCodes(s,
         ImageDedup.packImageVariants(s, originals, "doc_id")),
       r.images, 1, epochId)
-    val wavs = Audio.packWav(s,
-      originals.where(pmod(col("doc_id"), lit(4)) === 0), "doc_id")
-    val clips = wavs.unionByName(Audio.gainWav(s,
-      wavs.where(pmod(col("media_id"), lit(7)) === 0)
-        .withColumn("media_id", col("media_id") + lit(3000000L))))
     AudioCodeStore.appendEpoch(
-      Audio.chainedLandmarkRows(s, clips), r.audio, 1, epochId)
+      Audio.chainedLandmarkRows(s, Audio.plantedGainCorpus(s, originals)),
+      r.audio, 1, epochId)
     // 3. verdicts from the stores so far; 4. versioned publish
     //    (replay-skipped by the batch watermark)
     val rep = VerdictStore.publishVerdicts(s, r.verdicts,
@@ -184,12 +180,8 @@ object VerdictStream {
       .select("doc_id")
     val imgCodes = ImageDedup.blockhashCodes(s,
       ImageDedup.packImageVariants(s, originals, "doc_id")).persist()
-    val wavs = Audio.packWav(s,
-      originals.where(pmod(col("doc_id"), lit(4)) === 0), "doc_id")
-    val clips = wavs.unionByName(Audio.gainWav(s,
-      wavs.where(pmod(col("media_id"), lit(7)) === 0)
-        .withColumn("media_id", col("media_id") + lit(3000000L))))
-    val audCodes = Audio.chainedLandmarkRows(s, clips).persist()
+    val audCodes = Audio.chainedLandmarkRows(s,
+      Audio.plantedGainCorpus(s, originals)).persist()
     try {
       TextSigStore.appendEpoch(sigs, r.sigs, 1, epochId)
       ImageCodeStore.appendEpoch(imgCodes, r.images, 1, epochId)
