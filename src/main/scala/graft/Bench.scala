@@ -688,7 +688,7 @@ object Bench {
     * timed runs measure execution, not JIT + first-time whole-stage
     * codegen compilation of each plan shape.
     */
-  private def warmup(spark: SparkSession, names: Seq[String]): Unit =
+  private[graft] def warmup(spark: SparkSession, names: Seq[String]): Unit =
     names.foreach { name =>
       SparkEntry.queries.get(name).foreach { fn =>
         try fn(spark, "/root/testdata/sf0.001").queryExecution.toRdd.count()

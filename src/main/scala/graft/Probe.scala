@@ -15,10 +15,7 @@ object Probe {
     // toRdd.count(), as Bench times it: a bare count() lets Catalyst
     // prune every output column and times the query minus its work
     names.foreach { name =>
-      // tiny warmup like Bench does
-      try SparkEntry.queries(name)(spark, "/root/testdata/sf0.001")
-        .queryExecution.toRdd.count()
-      catch { case e: Throwable => System.err.println(s"warmup $name: $e") }
+      Bench.warmup(spark, Seq(name))
       val times = (1 to n).map { _ =>
         val t0 = System.nanoTime()
         SparkEntry.queries(name)(spark, dir).queryExecution.toRdd.count()
