@@ -43,6 +43,12 @@ object GraftExpressions {
   def shingleHashes(tokens: Column, shingleWidth: Int): Column =
     c(ShingleHashesExpr(x(tokens), shingleWidth))
 
+  /** Candidate pairs of one collected LSH bucket (see
+    * [[LshBucketPairsExpr]]).
+    */
+  def lshBucketPairs(members: Column, cap: Int): Column =
+    c(LshBucketPairsExpr(x(members), cap))
+
   /** Distinct char n-gram hashes (see [[CharNgramHashesExpr]]). */
   def charNgramHashes(text: Column, n: Int): Column =
     c(CharNgramHashesExpr(x(text), n))
@@ -470,6 +476,107 @@ case class ShingleHashesExpr(child: Expression, shingleWidth: Int)
     })
 
   override protected def withNewChildInternal(newChild: Expression): ShingleHashesExpr =
+    copy(child = newChild)
+}
+
+/** LshBucketPairs(members): the candidate pairs of ONE banded-LSH bucket
+  * — the grouped bucket → pair generator. `members` is the bucket's
+  * collected rows, `struct<id: bigint, sigh: bigint>` (self mode) or
+  * `struct<id: bigint, sigh: bigint, ref: boolean>` (cross mode), where
+  * `sigh` is the document's full-signature hash.
+  *
+  * A bucket of at most `cap` rows pairs every two members. A larger (hot)
+  * bucket pairs only members with equal `sigh`: the rows are sorted on
+  * `sigh` and paired within each equal run, so a hot bucket costs
+  * O(n log n + output), never n² comparisons. Equivalently: two members
+  * pair when they share (band, bucket, refine), refine = `sigh` in hot
+  * buckets and a constant in cold ones.
+  *
+  * Self mode emits `(id_a, id_b)` with id_a < id_b; cross mode emits
+  * `(ref id, non-ref id)` only, and equal ids may pair. Rows with a null
+  * id count toward the bucket size but never pair. A pair shared by
+  * several bands is emitted once per band; callers DISTINCT.
+  */
+case class LshBucketPairsExpr(child: Expression, cap: Int)
+    extends UnaryExpression {
+
+  private def memberFields: Seq[DataType] = child.dataType match {
+    case ArrayType(StructType(fs), _) => fs.toSeq.map(_.dataType)
+    case _ => Nil
+  }
+  private lazy val cross = memberFields.length == 3
+
+  override def checkInputDataTypes(): TypeCheckResult = memberFields match {
+    case Seq(LongType, LongType) | Seq(LongType, LongType, BooleanType) =>
+      TypeCheckResult.TypeCheckSuccess
+    case _ => TypeCheckResult.TypeCheckFailure(
+      "lshBucketPairs expects array<struct<id: bigint, sigh: bigint" +
+        s"[, ref: boolean]>>, got ${child.dataType.simpleString}")
+  }
+  override def dataType: DataType = ArrayType(StructType(Seq(
+    StructField("id_a", LongType, nullable = false),
+    StructField("id_b", LongType, nullable = false))), containsNull = false)
+
+  private[functions] def compute(members: ArrayData): ArrayData = {
+    import org.apache.spark.sql.catalyst.InternalRow
+    val n = members.numElements()
+    val nFields = if (cross) 3 else 2
+    val ids = new Array[Long](n)
+    val sighs = new Array[Long](n)
+    val refs = new Array[Boolean](n)
+    var m = 0
+    var i = 0
+    while (i < n) {
+      val r = members.getStruct(i, nFields)
+      if (!r.isNullAt(0)) {
+        ids(m) = r.getLong(0)
+        sighs(m) = r.getLong(1)
+        refs(m) = cross && r.getBoolean(2)
+        m += 1
+      }
+      i += 1
+    }
+    val out = scala.collection.mutable.ArrayBuffer.empty[InternalRow]
+    def pair(a: Int, b: Int): Unit =
+      if (cross) {
+        if (refs(a) && !refs(b)) out += InternalRow(ids(a), ids(b))
+        else if (refs(b) && !refs(a)) out += InternalRow(ids(b), ids(a))
+      } else if (ids(a) < ids(b)) out += InternalRow(ids(a), ids(b))
+      else if (ids(b) < ids(a)) out += InternalRow(ids(b), ids(a))
+    // pair every two members of order[from, until)
+    def pairAll(order: Array[Int], from: Int, until: Int): Unit = {
+      var a = from
+      while (a < until) {
+        var b = a + 1
+        while (b < until) { pair(order(a), order(b)); b += 1 }
+        a += 1
+      }
+    }
+    // the bucket size counts every row, null ids included (the census)
+    if (n <= cap) pairAll(Array.range(0, m), 0, m)
+    else {
+      val order = Array.range(0, m).sortBy(sighs(_))
+      var start = 0
+      while (start < m) {
+        var end = start + 1
+        while (end < m && sighs(order(end)) == sighs(order(start))) end += 1
+        pairAll(order, start, end)
+        start = end
+      }
+    }
+    new org.apache.spark.sql.catalyst.util.GenericArrayData(out.toArray[Any])
+  }
+
+  override def nullSafeEval(input: Any): Any =
+    compute(input.asInstanceOf[ArrayData])
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    nullSafeCodeGen(ctx, ev, m => {
+      val ref = ctx.addReferenceObj("lshPairs", this, classOf[LshBucketPairsExpr].getName)
+      s"${ev.value} = $ref.compute($m);"
+    })
+
+  override protected def withNewChildInternal(newChild: Expression): LshBucketPairsExpr =
     copy(child = newChild)
 }
 

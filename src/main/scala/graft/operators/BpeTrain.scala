@@ -58,23 +58,8 @@ object BpeTrain {
   def train(docs: DataFrame, textCol: String,
             numMerges: Int): Seq[Merge] = {
     val (merges, words) = trainKeepingWords(docs, textCol, numMerges)
-    freeState(words)
+    Dedup.freeState(words)
     merges
-  }
-
-  /** `Dataset.unpersist()` is a no-op on a localCheckpoint'd frame (the
-    * checkpoint RDD lives outside the cache manager), so superseded
-    * rounds would otherwise pin their blocks until a driver GC lets the
-    * ContextCleaner find them — a real leak over a 24-round loop. Free
-    * the underlying RDD directly via the frame's LogicalRDD leaf.
-    */
-  private[graft] def freeState(df: DataFrame): Unit = {
-    df.unpersist()
-    df.queryExecution.analyzed.collectLeaves().foreach {
-      case lr: org.apache.spark.sql.execution.LogicalRDD =>
-        lr.rdd.unpersist(false)
-      case _ => ()
-    }
   }
 
   private def trainKeepingWords(docs: DataFrame, textCol: String,
@@ -109,7 +94,7 @@ object BpeTrain {
     * rank r depends only on the post-(r−1) segmentation state, never
     * on the total requested depth (the prefix-stability c96 locks).
     * Returns the new merges (ranks fromRank..fromRank+numMerges−1) and
-    * the post-merge word state (caller owns it — [[freeState]] when
+    * the post-merge word state (caller owns it — [[Dedup.freeState]] when
     * done or pass it back in).
     */
   private[graft] def continueMerges(words0: DataFrame, fromRank: Int,
@@ -152,13 +137,14 @@ object BpeTrain {
       pending += 1
       if (pending == 3 || r == fromRank + numMerges - 1) {
         val next = plan.localCheckpoint(true)
-        freeState(words)
+        Dedup.freeState(words)
         words = next
         plan = next
         pending = 0
       }
     }
-    // caller owns the returned frame — release it with freeState when done
+    // caller owns the returned frame — release it with Dedup.freeState
+    // when done
     (merges.result(), words)
   }
 
@@ -175,7 +161,7 @@ object BpeTrain {
     // the loop's OWN final frame — no re-derivation, no merge replay
     // (the r9-advice fix: the previous version re-read the corpus and
     // replayed all merges a second time). The returned frame rides the
-    // loop's last localCheckpoint; free it with [[freeState]] once
+    // loop's last localCheckpoint; free it with [[Dedup.freeState]] once
     // every result derived from it is materialized.
     val (merges, words) = trainKeepingWords(docs, textCol, numMerges)
     val seg = words.select(
@@ -239,12 +225,12 @@ object BpeTrain {
     // the truncated-lineage checkpoint RDD, which must not be dropped
     // while anything can still recompute from it)
     val local = localizeReport(report)
-    freeState(seg)
+    Dedup.freeState(seg)
     local
   }
 
   /** Reports are one row per SOURCE: tiny by contract. Materializing
-    * them eagerly lets [[freeState]] drop the train loop's checkpoint
+    * them eagerly lets [[Dedup.freeState]] drop the train loop's checkpoint
     * RDDs immediately — but makes these public DataFrame-returning
     * APIs EXECUTE AT CALL TIME and hold the report in driver memory.
     * That contract is stated on each method, and enforced here: if the
@@ -294,7 +280,7 @@ object BpeTrain {
     * projection passes (6 merges per checkpointed chunk; superseded
     * chunk state freed eagerly) — corpus-scale cost lives only in the
     * caller's occurrence join. Caller owns the returned frame
-    * (checkpointed); release with the freeState discipline once
+    * (checkpointed); release with the Dedup.freeState discipline once
     * everything derived from it is materialized.
     */
   def applyMerges(words0: DataFrame, merges: Seq[Merge]): DataFrame = {
@@ -309,7 +295,7 @@ object BpeTrain {
       }
       val next = words.select(applied.as("s"), col("cnt"))
         .localCheckpoint(true)
-      owned.foreach(freeState)
+      owned.foreach(Dedup.freeState)
       owned = Some(next)
       words = next
     }
@@ -356,7 +342,7 @@ object BpeTrain {
           col("n_tokens")).as("chars_per_token_ppm"))
       .orderBy("source")
     val local = localizeReport(report)
-    freeState(seg0)
+    Dedup.freeState(seg0)
     local
   }
 
@@ -400,7 +386,7 @@ object BpeTrain {
           col("n_tokens")).as("chars_per_token_ppm"))
       .orderBy("source")
     val local = localizeReport(report)
-    freeState(seg)
+    Dedup.freeState(seg)
     local
   }
 

@@ -1,15 +1,19 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, functions => F}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ByteType, IntegerType, LongType, ShortType}
 import graft.functions.TextFunctions
 
 /** Deduplication operators for LLM training-data pipelines, smallest-cost
   * first: exact (one shuffle on a 16-byte key), then candidate-generation
-  * schemes (MinHash-LSH, SimHash) whose shuffles are keyed on small bucket
-  * ids, then exact verification only on candidate pairs. Nothing here ever
-  * materializes an O(n²) cross product — at 100 TB the candidate-pair volume
-  * is what decides whether near-dedup is feasible at all.
+  * schemes (MinHash-LSH, SimHash) that share one banded-LSH core
+  * ([[Dedup.lshCandidates]]: one shuffle keyed on (band, bucket), a
+  * grouped bucket → pair generator), then exact verification only on
+  * candidate pairs — for MinHash, only candidate documents are ever
+  * shingled. Nothing here ever materializes an O(n²) cross product — at
+  * 100 TB the candidate-pair volume is what decides whether near-dedup is
+  * feasible at all.
   */
 object Dedup {
 
@@ -49,18 +53,20 @@ object Dedup {
   /** MinHash + LSH near-duplicate pairs.
     *
     * shingle → k-minhash → `bands` bands of r = k/bands rows; docs sharing
-    * any band land in the same bucket (shuffle keyed on (band, bucketHash) —
-    * never on raw text). Candidate id pairs are DISTINCT'd first and only
-    * then joined back to the shingle sets for exact-Jaccard verification —
-    * the band shuffle carries (id, band, bucket) triples, never the shingle
-    * arrays (at 100 TB shipping each doc's shingles ×bands through the
-    * shuffle is the difference between GBs and TBs of shuffle IO).
+    * any band land in the same bucket. One banded-LSH core
+    * ([[lshCandidates]]) turns the bucket rows into DISTINCT candidate id
+    * pairs with ONE shuffle keyed on (band, bucket) — never on raw text —
+    * and only the candidates' documents are then shingled and joined for
+    * exact-Jaccard verification. The bucket shuffle carries (id, sigh)
+    * longs, never the shingle arrays (at 100 TB shipping each doc's
+    * shingles ×bands through the shuffle is the difference between GBs and
+    * TBs of shuffle IO).
     *
     * Default k=64, bands=16 (r=4) → LSH s-curve threshold (1/16)^(1/4) ≈ 0.5.
     *
     * HOT-BUCKET BOUND (`hotBucketCap`): the classic LSH failure mode is a
     * popular bucket — template-heavy corpora put thousands of docs behind
-    * one band value, and the within-bucket self-join goes quadratic in
+    * one band value, and the within-bucket pairing goes quadratic in
     * exactly the place the corpus is most redundant. Buckets larger than
     * the cap therefore escalate to a STRONGER key: their members pair only
     * when the FULL k-value signature matches (estimated Jaccard ≈ 1 —
@@ -73,25 +79,10 @@ object Dedup {
     * lost only above the cap and spec-locked in DedupSpec. Cold buckets
     * (the overwhelming majority) are exhaustive as before.
     *
-    * Returns (id_a, id_b, jaccard) with id_a < id_b.
-    */
-  /** Data-derived hot-bucket cap: high enough that ordinary buckets are
-    * never escalated (no recall change on benign corpora), low enough
-    * that a template cluster cannot go quadratic. The rule —
-    * `clamp(32 × mean bucket size, 16, 4096)` — keys off the corpus's
-    * own bucket-size distribution: mean size is ≈1 for shingled text
-    * (bucket keys are 64-bit hashes of r minhash values; collisions are
-    * near-dups by construction), so a bucket 32× the mean is already
-    * template-grade. The census that feeds it is the same (band,
-    * bucket) aggregate the capped join needs anyway — auto-tuning adds
-    * no pass.
-    */
-  def autoHotBucketCap(meanBucketSize: Double): Int =
-    math.min(4096, math.max(16, math.ceil(32 * meanBucketSize).toInt))
-
-  /** @param hotBucketCap buckets larger than this escalate to the
+    * @param hotBucketCap buckets larger than this escalate to the
     *        full-signature key; pass ≤ 0 to derive it from the corpus's
     *        own bucket-size distribution ([[autoHotBucketCap]])
+    * @return (id_a, id_b, jaccard) with id_a < id_b
     */
   def minhashDedupPairs(df: DataFrame, textCol: String, idCol: String,
                         k: Int = 64, bands: Int = 16,
@@ -99,6 +90,19 @@ object Dedup {
                         hotBucketCap: Int = 64): DataFrame =
     minhashPairsFromSigs(minhashSigRows(df, textCol, idCol, k), df,
       textCol, idCol, k, bands, threshold, hotBucketCap)
+
+  /** Data-derived hot-bucket cap: high enough that ordinary buckets are
+    * never escalated (no recall change on benign corpora), low enough
+    * that a template cluster cannot go quadratic. The rule —
+    * `clamp(32 × mean bucket size, 16, 4096)` — keys off the corpus's
+    * own bucket-size distribution: mean size is ≈1 for shingled text
+    * (bucket keys are 64-bit hashes of r minhash values; collisions are
+    * near-dups by construction), so a bucket 32× the mean is already
+    * template-grade. The mean is one driver scalar over the same grouped
+    * buckets the pair generator reads.
+    */
+  def autoHotBucketCap(meanBucketSize: Double): Int =
+    math.min(4096, math.max(16, math.ceil(32 * meanBucketSize).toInt))
 
   /** The per-document MinHash signature rows (doc_id, sig) — the
     * compute-heavy half of [[minhashDedupPairs]] carved out (C119): one
@@ -118,81 +122,113 @@ object Dedup {
         .minhashSignature(tokens, 3, k).as("sig"))
   }
 
-  /** [[minhashDedupPairs]]'s join half, fed by precomputed signature rows
-    * ((doc_id, sig) — [[minhashSigRows]] live, or
-    * [[graft.sources.TextSigStore]] stored): banding, hot-bucket
-    * census/escalation, candidate DISTINCT and exact-Jaccard verify are
-    * IDENTICAL to the one-shot path — the only difference is where `sig`
-    * comes from. The verify side still reads `docs` text, but only for
-    * the semi-join-pruned candidate ids (result-sized, never the corpus
-    * scan the stored path exists to kill).
+  /** One row per (document, band) of MinHash signature rows (doc_id, sig):
+    * (id, sigh, band, bucket), where `sigh` hashes the full signature and
+    * `bucket` hashes band j's r = k/bands values.
+    */
+  private def minhashBands(sigs: DataFrame, k: Int, bands: Int): DataFrame = {
+    require(k % bands == 0, "bands must divide k")
+    val r = k / bands
+    sigs.select(col("doc_id").as("id"), xxhash64(col("sig")).as("sigh"),
+      posexplode(array((0 until bands).map(j =>
+        xxhash64(lit(j), slice(col("sig"), j * r + 1, r))): _*))
+        .as(Seq("band", "bucket")))
+  }
+
+  /** The banded-LSH core behind [[minhashPairsFromSigs]],
+    * [[minhashCrossPairsFromSigs]] and [[simhashDedupPairs]]: banded rows
+    * (id, sigh, band, bucket[, ref]) in, DISTINCT candidate pairs
+    * (id_a, id_b) out — (reference id, increment id) when a boolean `ref`
+    * column marks the two sides of a cross match.
+    *
+    * The rows are shuffled ONCE, on (band, bucket); each bucket collects
+    * its (id, sigh[, ref]) members, and the codegen'd
+    * [[graft.functions.LshBucketPairsExpr]] emits the bucket's pairs. The
+    * same grouped buckets give both the hot-bucket decision (a bucket's
+    * size is its member count) and the pairs. Pair rule: every pair in a
+    * bucket of at most `cap` rows; above the cap only members with equal
+    * `sigh` (the full-signature escalation). A null bucket (a null
+    * simhash) counts toward the auto cap's mean but pairs nothing: a null
+    * key matches no other. Ids must be integral; they travel as bigint
+    * and come back in their own type.
+    */
+  private[graft] def lshCandidates(banded: DataFrame,
+                                   hotBucketCap: Int): DataFrame = {
+    val idType = banded.schema("id").dataType
+    require(Seq(ByteType, ShortType, IntegerType, LongType).contains(idType),
+      s"LSH ids must be integral, got ${idType.simpleString}")
+    val member = col("id").cast(LongType).as("id") +: col("sigh") +:
+      banded.columns.filter(_ == "ref").toSeq.map(col)
+    val buckets = banded.groupBy("band", "bucket")
+      .agg(collect_list(struct(member: _*)).as("members"))
+    val cap =
+      if (hotBucketCap > 0) hotBucketCap
+      else autoHotBucketCap(
+        buckets.agg(avg(size(col("members")))).head().getDouble(0))
+    buckets.where(col("bucket").isNotNull)
+      .select(inline(graft.functions.GraftExpressions
+        .lshBucketPairs(col("members"), cap)))
+      .distinct()
+      .select(col("id_a").cast(idType).as("id_a"),
+        col("id_b").cast(idType).as("id_b"))
+  }
+
+  /** The candidate pairs (id_a, id_b) of [[minhashPairsFromSigs]] before
+    * verification.
+    */
+  private[graft] def minhashCandidates(sigs: DataFrame, k: Int, bands: Int,
+                                       hotBucketCap: Int): DataFrame =
+    lshCandidates(minhashBands(sigs, k, bands), hotBucketCap)
+
+  /** The `docs` rows whose id is in `ids`, as (id, shingles): the
+    * semi-join runs BEFORE the shingle projection, so normalize +
+    * shingle-hash touch only candidate documents, never the corpus.
+    */
+  private def candidateShingles(docs: DataFrame, ids: DataFrame,
+                                textCol: String, idCol: String): DataFrame =
+    docs.select(col(idCol).as("id"), col(textCol).as("text"))
+      .join(ids, Seq("id"), "left_semi")
+      .select(col("id"), shingleHashes(col("text")).as("shingles"))
+
+  /** Exact-Jaccard verify of candidate pairs (a, b) against the shingle
+    * sets of each side: (a, b, jaccard ≥ threshold, rounded to 6 places).
+    */
+  private def verifyJaccard(candidates: DataFrame, a: String, b: String,
+                            shA: DataFrame, shB: DataFrame,
+                            threshold: Double): DataFrame =
+    candidates
+      .join(shA.select(col("id").as(a), col("shingles").as("sh_a")), a)
+      .join(shB.select(col("id").as(b), col("shingles").as("sh_b")), b)
+      .select(col(a), col(b), jaccard(col("sh_a"), col("sh_b")).as("jaccard"))
+      .where(col("jaccard") >= threshold) // exact value, THEN display rounding
+      .select(col(a), col(b), round(col("jaccard"), 6).as("jaccard"))
+
+  /** [[minhashDedupPairs]]'s pairing half, fed by precomputed signature
+    * rows ((doc_id, sig) — [[minhashSigRows]] live, or
+    * [[graft.sources.TextSigStore]] stored): banding, the
+    * [[lshCandidates]] core and exact-Jaccard verify are IDENTICAL to the
+    * one-shot path — the only difference is where `sig` comes from.
+    *
+    * Plan shape: the signature subtree feeds exactly one exchange (the
+    * (band, bucket) shuffle), and the candidate-id branch reuses the
+    * candidates' DISTINCT exchange instead of re-deriving the pairs, so
+    * signatures are computed once per query. `docs` is semi-joined to
+    * the DISTINCT candidate ids first and shingled after, so the verify
+    * side normalizes and shingle-hashes only candidate documents
+    * (result-sized, never the corpus scan the stored path exists to
+    * kill). No cache boundary anywhere: a persist here blocks AQE and
+    * serializes the branches (the r2 lesson).
     */
   def minhashPairsFromSigs(sigs: DataFrame, docs: DataFrame,
                            textCol: String, idCol: String,
                            k: Int = 64, bands: Int = 16,
                            threshold: Double = 0.7,
                            hotBucketCap: Int = 64): DataFrame = {
-    require(k % bands == 0, "bands must divide k")
-    val r = k / bands
-    val shingled = docs.select(
-      col(idCol).as("id"), shingleHashes(col(textCol)).as("shingles"))
-    val banded = sigs
-      .select(col("doc_id").as("id"), col("sig"))
-      .select(col("id"), xxhash64(col("sig")).as("sigh"),
-        posexplode(array((0 until bands).map(j =>
-          xxhash64(lit(j), slice(col("sig"), j * r + 1, r))): _*))
-          .as(Seq("band", "bucket")))
-
-    // hot-bucket census: the list of over-cap (band, bucket) keys is tiny
-    // (only the pathological ones) and rides a broadcast join — the banded
-    // frame itself is never re-shuffled for the size lookup
-    val census = banded.groupBy("band", "bucket")
-      .agg(count(lit(1)).as("__bsz"))
-    val cap =
-      if (hotBucketCap > 0) hotBucketCap
-      else {
-        // one tiny driver scalar off the census (mean bucket size);
-        // the census frame is reused by the hot filter below
-        val mean = census.agg(avg("__bsz")).head.getDouble(0)
-        autoHotBucketCap(mean)
-      }
-    val hot = census.where(col("__bsz") > cap)
-      .select(col("band"), col("bucket"), lit(true).as("__hot"))
-    val refined = banded.join(F.broadcast(hot), Seq("band", "bucket"), "left")
-      .select(col("id"), col("band"), col("bucket"),
-        // hot buckets join on the full-signature hash; cold on a constant
-        when(col("__hot"), col("sigh")).otherwise(lit(0L)).as("refine"))
-
-    val candidates = refined.as("l")
-      .join(refined.as("r"), Seq("band", "bucket", "refine"))
-      .select(col("l.id").as("id_a"), col("r.id").as("id_b"))
-      .where(col("id_a") < col("id_b"))
-      .distinct()
-
-    // candidates (ids only) join BACK to the shingle sets — the arrays
-    // never ride the ×bands bucket shuffle, only the two id-keyed verify
-    // joins. The shingle sets are first SEMI-JOIN PRUNED to ids that
-    // appear in some candidate pair, so the heavy projection (normalize +
-    // shingle-hash over full text) materializes only for the candidate
-    // subset instead of the whole corpus twice. Measured at 100k docs
-    // (10x replica, local[32], best-of-2): pruned 4.1 s vs
-    // recompute-both-sides 5.3 s vs persist(candidates) 7.3 s — the prune
-    // wins already at this scale (the crossover sits far below the ~10M
-    // docs the r3 comment estimated), and its margin grows with corpus
-    // size while candidate fraction stays small. Re-deriving `candidates`
-    // inside the semi-join costs one extra bucket-join pass, which is
-    // cheaper than a cache boundary (r2 lesson: persist here blocks AQE
-    // and serializes the branches).
+    val candidates = minhashCandidates(sigs, k, bands, hotBucketCap)
     val candIds = candidates
       .select(explode(array(col("id_a"), col("id_b"))).as("id")).distinct()
-    val pruned = shingled.join(candIds, Seq("id"), "left_semi")
-    candidates
-      .join(pruned.select(col("id").as("id_a"), col("shingles").as("sh_a")), "id_a")
-      .join(pruned.select(col("id").as("id_b"), col("shingles").as("sh_b")), "id_b")
-      .select(col("id_a"), col("id_b"),
-        jaccard(col("sh_a"), col("sh_b")).as("jaccard"))
-      .where(col("jaccard") >= threshold) // exact value, THEN display rounding
-      .select(col("id_a"), col("id_b"), round(col("jaccard"), 6).as("jaccard"))
+    val shingled = candidateShingles(docs, candIds, textCol, idCol)
+    verifyJaccard(candidates, "id_a", "id_b", shingled, shingled, threshold)
   }
 
   /** Cross-corpus near-duplicate pairs (C2b) — the INCREMENTAL-crawl
@@ -201,18 +237,16 @@ object Dedup {
     * internal dups are C2's job, the reference's were handled when it
     * was the increment). D21's generational bloom answers "seen EXACTLY
     * before?" in constant state; this answers "seen NEARLY before?" with
-    * the same banded-LSH discipline as C2 — signatures one codegen pass
-    * per side, buckets a hash equi-join keyed on (band, bucket), the
-    * same hot-bucket escalation (a bucket hot on the UNION escalates
-    * both sides to full-signature keys, so identical texts always still
-    * meet), shingle arrays joined only to the DISTINCT'd candidates.
+    * the same banded-LSH core as C2 — signatures one codegen pass per
+    * side, one (band, bucket) shuffle of the union, the same hot-bucket
+    * escalation (a bucket hot on the UNION escalates both sides to
+    * full-signature keys, so identical texts always still meet), and
+    * each side shingled only for its DISTINCT candidate ids.
     *
-    * Scale shape: at a real increment ratio (day ≪ history) the banded
-    * increment side is small and AQE broadcasts it — the reference's
-    * bucket frame is scanned once and never self-joined, so cost is
-    * O(ref + inc + true-cross-pairs), not O((ref+inc)²). Ids may
-    * overlap between corpora (sides are keyed independently). Returns
-    * (ref_id, inc_id, jaccard ≥ threshold).
+    * Scale shape: the bucket generator pairs only reference × increment
+    * members, so cost is O(ref + inc + cross-pairs), not O((ref+inc)²).
+    * Ids may overlap between corpora (sides are keyed independently).
+    * Returns (ref_id, inc_id, jaccard ≥ threshold).
     */
   def minhashCrossPairs(ref: DataFrame, inc: DataFrame, textCol: String,
                         idCol: String, k: Int = 64, bands: Int = 16,
@@ -224,60 +258,25 @@ object Dedup {
   /** [[minhashCrossPairs]] with the REFERENCE side's signatures
     * precomputed (C121 — the real incremental-crawl serving shape:
     * history's signatures sit in [[graft.sources.TextSigStore]], only
-    * today's increment pays its own MinHashSigExpr pass). Banding,
-    * union census, hot-bucket escalation and the cross candidate join
-    * are [[minhashCrossPairs]] verbatim; the reference text is read
-    * only for semi-join-pruned candidate ids at verify time.
+    * today's increment pays its own MinHashSigExpr pass). Banding, union
+    * census, hot-bucket escalation and the cross pair rule are
+    * [[minhashCrossPairs]] verbatim; the reference text is read only for
+    * semi-join-pruned candidate ids at verify time.
     */
   def minhashCrossPairsFromSigs(refSigs: DataFrame, ref: DataFrame,
                                 inc: DataFrame, textCol: String,
                                 idCol: String, k: Int = 64,
                                 bands: Int = 16, threshold: Double = 0.7,
                                 hotBucketCap: Int = 64): DataFrame = {
-    require(k % bands == 0, "bands must divide k")
-    val r = k / bands
-    def shingled(df: DataFrame): DataFrame = df.select(
-      col(idCol).as("id"), shingleHashes(col(textCol)).as("shingles"))
-    def banded(sigs: DataFrame, side: String): DataFrame =
-      sigs.select(col("doc_id").as("id"), col("sig"))
-        .select(lit(side).as("side"), col("id"),
-          xxhash64(col("sig")).as("sigh"),
-          posexplode(array((0 until bands).map(j =>
-            xxhash64(lit(j), slice(col("sig"), j * r + 1, r))): _*))
-            .as(Seq("band", "bucket")))
-    val both = banded(refSigs, "ref")
-      .unionByName(banded(minhashSigRows(inc, textCol, idCol, k), "inc"))
-    val census = both.groupBy("band", "bucket")
-      .agg(count(lit(1)).as("__bsz"))
-    val cap =
-      if (hotBucketCap > 0) hotBucketCap
-      else autoHotBucketCap(census.agg(avg("__bsz")).head.getDouble(0))
-    val hot = census.where(col("__bsz") > cap)
-      .select(col("band"), col("bucket"), lit(true).as("__hot"))
-    val refined = both.join(F.broadcast(hot), Seq("band", "bucket"), "left")
-      .select(col("side"), col("id"), col("band"), col("bucket"),
-        when(col("__hot"), col("sigh")).otherwise(lit(0L)).as("refine"))
-    val candidates = refined.where(col("side") === "ref").as("l")
-      .join(refined.where(col("side") === "inc").as("r"),
-        Seq("band", "bucket", "refine"))
-      .select(col("l.id").as("ref_id"), col("r.id").as("inc_id"))
-      .distinct()
-    val pr = shingled(ref).join(
-      candidates.select(col("ref_id").as("id")).distinct(),
-      Seq("id"), "left_semi")
-    val pi = shingled(inc).join(
-      candidates.select(col("inc_id").as("id")).distinct(),
-      Seq("id"), "left_semi")
-    candidates
-      .join(pr.select(col("id").as("ref_id"), col("shingles").as("sh_a")),
-        "ref_id")
-      .join(pi.select(col("id").as("inc_id"), col("shingles").as("sh_b")),
-        "inc_id")
-      .select(col("ref_id"), col("inc_id"),
-        jaccard(col("sh_a"), col("sh_b")).as("jaccard"))
-      .where(col("jaccard") >= threshold)
-      .select(col("ref_id"), col("inc_id"),
-        round(col("jaccard"), 6).as("jaccard"))
+    val both = minhashBands(refSigs, k, bands).withColumn("ref", lit(true))
+      .unionByName(minhashBands(minhashSigRows(inc, textCol, idCol, k),
+        k, bands).withColumn("ref", lit(false)))
+    val candidates = lshCandidates(both, hotBucketCap)
+      .select(col("id_a").as("ref_id"), col("id_b").as("inc_id"))
+    def side(docs: DataFrame, id: String): DataFrame = candidateShingles(
+      docs, candidates.select(col(id).as("id")).distinct(), textCol, idCol)
+    verifyJaccard(candidates, "ref_id", "inc_id",
+      side(ref, "ref_id"), side(inc, "inc_id"), threshold)
   }
 
   // -------------------------------------------------------------- SimHash
@@ -295,47 +294,39 @@ object Dedup {
   /** SimHash near-duplicate pairs with Hamming distance ≤ maxHamming.
     * Candidate generation: split the 64-bit simhash into 4 16-bit bands —
     * any pair within Hamming ≤ 3 shares at least one exact band (pigeonhole)
-    * — bucket-join on (band, value), verify with bit_count(xor).
+    * — and pair within each (band, value) bucket through the same
+    * [[lshCandidates]] core as [[minhashDedupPairs]]; verify with
+    * bit_count(xor).
     *
-    * Same hot-bucket bound as [[minhashDedupPairs]]: a band value held by
-    * more than `hotBucketCap` docs escalates to the FULL 64-bit simhash as
-    * the join key (Hamming-0 evidence), so a popular 16-bit band never
-    * goes quadratic. Identical-simhash pairs are always found; a hot band
-    * can lose only 1 ≤ hamming ≤ maxHamming pairs whose every shared band
-    * is hot. Returns (id_a, id_b, hamming).
+    * Same hot-bucket bound: a band value held by more than `hotBucketCap`
+    * docs escalates to the FULL 64-bit simhash as the pairing key
+    * (Hamming-0 evidence), so a popular 16-bit band never goes quadratic.
+    * Identical-simhash pairs are always found; a hot band can lose only
+    * 1 ≤ hamming ≤ maxHamming pairs whose every shared band is hot.
+    * Returns (id_a, id_b, hamming).
     */
   def simhashDedupPairs(df: DataFrame, textCol: String, idCol: String,
                         maxHamming: Int = 3,
                         hotBucketCap: Int = 64): DataFrame = {
     val sh = df.select(col(idCol).as("id"),
       simhash64(col(textCol)).as("simhash"))
-    val banded = sh.select(col("id"), col("simhash"),
-      posexplode(array((0 until 4).map(j =>
-        shiftright(col("simhash"), j * 16).bitwiseAND(lit(0xFFFFL))): _*))
-        .as(Seq("band", "bucket")))
-    val census = banded.groupBy("band", "bucket")
-      .agg(count(lit(1)).as("__bsz"))
     // cap ≤ 0 → the C2 auto rule on this banding's own distribution
     // (16-bit band values instead of 64-bit band hashes, same contract)
-    val cap =
-      if (hotBucketCap > 0) hotBucketCap
-      else autoHotBucketCap(census.agg(avg("__bsz")).head.getDouble(0))
-    val hot = census.where(col("__bsz") > cap)
-      .select(col("band"), col("bucket"), lit(true).as("__hot"))
-    val refined = banded.join(F.broadcast(hot), Seq("band", "bucket"), "left")
-      .select(col("id"), col("simhash"), col("band"), col("bucket"),
-        when(col("__hot"), col("simhash")).otherwise(lit(0L)).as("refine"))
-    val left = refined.select(col("band"), col("bucket"), col("refine"),
-      col("id").as("id_a"), col("simhash").as("sh_a"))
-    val right = refined.select(col("band"), col("bucket"), col("refine"),
-      col("id").as("id_b"), col("simhash").as("sh_b"))
-    // shuffle_hash, NOT auto-broadcast (the b25/c27 rule, applied here
-    // in r13 after the same audit caught c97): the build side is the
-    // CORPUS-sized banded frame — 4 rows per document — which Catalyst
-    // happily broadcasts at toy scale and would die on at 100 TB; the
-    // identical sides share one hinted exchange.
-    left.join(right.hint("shuffle_hash"), Seq("band", "bucket", "refine"))
-      .where(col("id_a") < col("id_b"))
+    val candidates = lshCandidates(sh.select(col("id"),
+      col("simhash").as("sigh"),
+      posexplode(array((0 until 4).map(j =>
+        shiftright(col("simhash"), j * 16).bitwiseAND(lit(0xFFFFL))): _*))
+        .as(Seq("band", "bucket"))), hotBucketCap)
+    // the verify joins fetch each side's simhash by id: shuffle_hash,
+    // NOT auto-broadcast (the b25/c27 rule, applied here in r13 after the
+    // same audit caught c97) — the build side is the CORPUS-sized simhash
+    // frame, which Catalyst happily broadcasts at toy scale and would die
+    // on at 100 TB
+    def side(id: String, v: String): DataFrame =
+      sh.select(col("id").as(id), col("simhash").as(v)).hint("shuffle_hash")
+    candidates
+      .join(side("id_a", "sh_a"), "id_a")
+      .join(side("id_b", "sh_b"), "id_b")
       .select(col("id_a"), col("id_b"),
         bit_count(col("sh_a").bitwiseXOR(col("sh_b"))).as("hamming"))
       .where(col("hamming") <= maxHamming)
@@ -345,12 +336,13 @@ object Dedup {
   // ------------------------------------------------ duplicate clustering
 
   /** Release a frame produced by an iterative checkpoint loop
-    * ([[dupClusters]]' returned labels, superseded rounds): plain
-    * `Dataset.unpersist()` is a NO-OP on a checkpointed frame (the
-    * checkpoint RDD lives outside the cache manager), so the blocks
-    * must be freed through the frame's LogicalRDD leaf — the
-    * BpeTrain.freeState rule, exposed here so CALLERS of dupClusters
-    * can actually honor the "release when done" contract (r13 advice).
+    * ([[dupClusters]]' returned labels, [[BpeTrain]]'s word states,
+    * superseded rounds): plain `Dataset.unpersist()` is a NO-OP on a
+    * checkpointed frame (the checkpoint RDD lives outside the cache
+    * manager), so superseded rounds would pin their blocks until a driver
+    * GC lets the ContextCleaner find them. The blocks are freed through
+    * the frame's LogicalRDD leaf instead; this is the one release helper
+    * every loop and every CALLER of a loop's result uses (r13 advice).
     * Safe on any frame: non-LogicalRDD leaves are left untouched.
     */
   def freeState(df: DataFrame): Unit = {
@@ -432,7 +424,7 @@ object Dedup {
     // explainString). Eager checkpointing flattens each round to a
     // LogicalRDD leaf; superseded rounds are freed through the RDD
     // handle because Dataset.unpersist() is a no-op on a
-    // checkpointed frame (the BpeTrain.freeState rule). RELIABLE
+    // checkpointed frame (the freeState rule). RELIABLE
     // checkpoint when a dir is configured (executor-loss-safe at
     // cluster scale), local otherwise (r13 advice).
     val reliable =

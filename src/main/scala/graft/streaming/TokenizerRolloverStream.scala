@@ -3,7 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.streaming.{OutputMode, StreamingQuery, Trigger}
 
-import graft.operators.BpeTrain
+import graft.operators.{BpeTrain, Dedup}
 import graft.sources.TokenizerStore
 
 /** D40: streaming TOKENIZER ROLLOVER — the [[ModelRolloverStream]]
@@ -83,7 +83,7 @@ object TokenizerRolloverStream {
       }
 
     /** Release the held word table (end of the training stream). */
-    def close(): Unit = if (words != null) { BpeTrain.freeState(words); () }
+    def close(): Unit = if (words != null) { Dedup.freeState(words); () }
   }
 
   /** One epoch's fold-then-publish — the unit the streaming sink and

@@ -169,6 +169,68 @@ class DedupSpec extends AnyFunSuite with SparkSpec {
     assert(pairs === Set((1L, 2L), (4L, 5L)))
   }
 
+  test("the bucket pair generator's candidates equal a plain-Scala " +
+    "(band, bucket, refine) join: hot template buckets, cold near-dups, " +
+    "exact copies inside a hot bucket, null texts") {
+    import org.apache.spark.sql.catalyst.expressions.XXH64
+    val cap = 8
+    val tmpl = (1 to 40).map(i => s"tmpl$i").mkString(" ")
+    val cluster = (0 until 200).map { i =>
+      (i.toLong, tmpl + " " + (1 to 8).map(j => s"tail${i}_$j").mkString(" "))
+    }
+    // a 12-doc family of near-copies (200 shared tokens, 2-token tails):
+    // nearly every band bucket holds most of it, just above the cap
+    val family = (0 until 12).map { i =>
+      (500L + i, (1 to 200).map(j => s"fam$j").mkString(" ") +
+        s" ftail${i}_1 ftail${i}_2")
+    }
+    val copies = (900L to 902L).map(_ -> (tmpl + " planted unique tail here"))
+    val cold = Seq((1000L, base), (1001L, nearTail), (1002L, unrelated))
+    val df = (cluster ++ family ++ copies ++ cold)
+      .map { case (i, t) => (i, Option(t)) }
+      .++(Seq(1100L -> None, 1101L -> None)).toDF("doc_id", "text")
+    val sigs = Dedup.minhashSigRows(df, "text", "doc_id")
+    val got = Dedup.minhashCandidates(sigs, 64, 16, cap).collect()
+      .map(r => (r.getLong(0), r.getLong(1))).toSet
+
+    // the model: Spark's xxhash64 chains its inputs from seed 42 and
+    // skips nulls; band j hashes (j, sig[4j .. 4j+3])
+    val rows = sigs.collect().toSeq.flatMap { r =>
+      val id = r.getLong(0)
+      val sig = Option(r.getSeq[Long](1)).getOrElse(Seq.empty)
+      val sigh = sig.foldLeft(42L)((h, v) => XXH64.hashLong(v, h))
+      (0 until 16).map { j =>
+        val bucket = sig.slice(4 * j, 4 * j + 4)
+          .foldLeft(XXH64.hashInt(j, 42L))((h, v) => XXH64.hashLong(v, h))
+        (id, sigh, j, bucket)
+      }
+    }
+    val size = rows.groupBy(r => (r._3, r._4)).map { case (k, v) => k -> v.size }
+    val want = rows
+      .groupBy(r => (r._3, r._4, if (size((r._3, r._4)) > cap) r._2 else 0L))
+      .values.flatMap { m =>
+        for (a <- m; b <- m if a._1 < b._1) yield (a._1, b._1)
+      }.toSet
+    // every branch of the rule is exercised
+    assert(size.values.exists(n => n > cap && n < 2 * cap) &&
+      size.values.exists(n => n > 1 && n <= cap))
+    assert(Set((900L, 901L), (900L, 902L), (901L, 902L), (1000L, 1001L),
+      (1100L, 1101L)).subsetOf(want))
+    assert(got === want, s"missing ${want -- got}, extra ${got -- want}")
+  }
+
+  test("lshCandidates: a null bucket (a null simhash) pairs nothing, " +
+    "below and above the cap") {
+    val nulls = (1L to 12L).map(i => (i, Option.empty[Long], 0, Option.empty[Long]))
+    val live = Seq((20L, Some(7L), 0, Some(5L)), (21L, Some(7L), 0, Some(5L)))
+    val banded = (nulls ++ live).toDF("id", "sigh", "band", "bucket")
+    Seq(4, 64).foreach { cap =>
+      val got = Dedup.lshCandidates(banded, cap).collect()
+        .map(r => (r.getLong(0), r.getLong(1))).toSet
+      assert(got === Set((20L, 21L)), s"cap $cap")
+    }
+  }
+
   test("ngramJaccardPairs verifies candidates sharing a prefix block") {
     val pairs = Dedup.ngramJaccardPairs(docs, "text", "doc_id")
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))

@@ -1,5 +1,11 @@
 package graft
 
+import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.catalyst.plans.LeftSemi
+import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, AdaptiveSparkPlanHelper, QueryStageExec}
+import org.apache.spark.sql.execution.exchange.{Exchange, ReusedExchangeExec}
+import org.apache.spark.sql.execution.joins.BaseJoinExec
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -9,9 +15,51 @@ import org.scalatest.funsuite.AnyFunSuite
   */
 class PlanAuditSpec extends AnyFunSuite with SparkSpec {
 
-  private def plan(name: String): String =
-    SparkEntry.queries(name)(spark, sfDir())
-      .queryExecution.executedPlan.toString
+  private def executed(name: String): SparkPlan =
+    SparkEntry.queries(name)(spark, sfDir()).queryExecution.executedPlan
+
+  private def plan(name: String): String = executed(name).toString
+
+  private object Aqe extends AdaptiveSparkPlanHelper
+
+  /** The root paths of every file scan in `p`, read from the scan nodes:
+    * the rendered `Location:` string is cut at
+    * spark.sql.maxMetadataStringLength, so a long checkout path pushes
+    * the tail segments a test looks for out of the plan string.
+    */
+  private def scanRoots(p: SparkPlan): Seq[String] =
+    Aqe.collect(p) { case s: FileSourceScanExec =>
+      s.relation.location.rootPaths.map(_.toString.toLowerCase)
+    }.flatten
+
+  private def hasExpr(p: SparkPlan, f: Expression => Boolean): Boolean =
+    p.expressions.exists(_.exists(f))
+
+  /** Every node of an executed adaptive plan paired with its stage (the
+    * nearest exchange above it, or the root); reused exchanges are not
+    * descended, so a reused subtree is counted once.
+    */
+  private def staged(p: SparkPlan, stage: SparkPlan): Seq[(SparkPlan, SparkPlan)] =
+    p match {
+      case a: AdaptiveSparkPlanExec => staged(a.executedPlan, stage)
+      case q: QueryStageExec => staged(q.plan, stage)
+      case _: ReusedExchangeExec => Nil
+      case e: Exchange => (e, stage) +: e.children.flatMap(staged(_, e))
+      case _ => (p, stage) +: p.children.flatMap(staged(_, stage))
+    }
+
+  /** Whether some path from `p` down to a leaf passes no left-semi join. */
+  private def reachesLeafWithoutSemi(p: SparkPlan): Boolean = p match {
+    case j: BaseJoinExec if j.joinType == LeftSemi => false
+    case _ =>
+      val kids = p match {
+        case a: AdaptiveSparkPlanExec => Seq(a.executedPlan)
+        case q: QueryStageExec => Seq(q.plan)
+        case r: ReusedExchangeExec => Seq(r.child)
+        case _ => p.children
+      }
+      kids.isEmpty || kids.exists(reachesLeafWithoutSemi)
+  }
 
   test("q3: filters push to parquet scans; top-k is TakeOrdered") {
     val p = plan("q3_join_topk")
@@ -215,6 +263,33 @@ class PlanAuditSpec extends AnyFunSuite with SparkSpec {
       "positive control: the one-shot path computes signatures in-plan")
   }
 
+  test("c2/c2b: the MinHash pairs compute signatures in ONE stage, each " +
+    "signature subtree once (the candidate-id branch reuses the bucket " +
+    "exchange), and shingle only above the candidate-id semi-join — " +
+    "never over the raw docs scan") {
+    import graft.functions.{MinHashSigExpr, ShingleHashesExpr}
+    Seq("c2_minhash_lsh", "c2b_minhash_cross").foreach { n =>
+      val df = SparkEntry.queries(n)(spark, sfDir())
+      df.queryExecution.toRdd.count() // final plan: reuse is resolved
+      val nodes = staged(df.queryExecution.executedPlan, null)
+      val sig = nodes.filter(ns => hasExpr(ns._1, _.isInstanceOf[MinHashSigExpr]))
+      assert(sig.nonEmpty, s"$n: no signature pass in the plan")
+      val sigStages = sig.map(_._2)
+      assert(sigStages.forall(_ eq sigStages.head),
+        s"$n: signatures computed in ${sigStages.distinct.size} stages")
+      // c2 signs docs and their +1e6 copies, c2b the reference and the
+      // increment's two parts: one node per input, none computed twice
+      val subtrees = sig.map(_._1.canonicalized)
+      assert(subtrees.distinct.size === subtrees.size,
+        s"$n: a signature subtree is computed more than once")
+      val shingles = nodes.map(_._1)
+        .filter(hasExpr(_, _.isInstanceOf[ShingleHashesExpr]))
+      assert(shingles.nonEmpty, s"$n: no shingle pass in the plan")
+      assert(!shingles.exists(reachesLeafWithoutSemi),
+        s"$n: shingleHashes runs below the candidate-id semi-join")
+    }
+  }
+
   test("c125: stored-digest span serving has NO digest compute anywhere " +
     "in the plan (the stage-probe-measured majority of the c76 cost — " +
     "it must not leak back in) and every level's count join stays " +
@@ -264,32 +339,36 @@ class PlanAuditSpec extends AnyFunSuite with SparkSpec {
     "digest table, no join of ANY kind, and no digest-store scan " +
     "anywhere in the plan (what c132 still paid per query is prepaid " +
     "at ingest)") {
-    val p = plan("c137_span_ledger_serve")
+    val ep = executed("c137_span_ledger_serve")
+    val p = ep.toString
     val lower = p.toLowerCase
+    val roots = scanRoots(ep)
     assert(!lower.contains("spanmd5"),
       "a digest pass leaked into the ledger serving plan")
     assert(!p.contains("HashJoin") && !p.contains("SortMergeJoin") &&
       !p.contains("BroadcastNestedLoopJoin"),
       "the ledger serve must not join — the flag join's work is " +
         "prepaid into the stored fired windows")
-    assert(!lower.contains("span_digests"),
+    assert(!lower.contains("span_digests") &&
+      !roots.exists(_.contains("span_digests")),
       "the digest store must not be scanned at serve time")
-    assert(lower.contains("/ledger/"),
-      "the serve must scan the fired-window ledger")
+    assert(roots.exists(_.contains("/ledger/")),
+      s"the serve must scan the fired-window ledger: $roots")
     assert("RunningWindowFunction|Window".r.findFirstIn(p).isDefined,
       "the per-document island sweep must be in the plan")
   }
 
   test("c138: the TTL-retained serve is one ledger scan with the age " +
     "filter — no signature compute, no join, no docs scan") {
-    val p = plan("c138_ledger_ttl_retire")
+    val ep = executed("c138_ledger_ttl_retire")
+    val p = ep.toString
     val lower = p.toLowerCase
     assert(!lower.contains("minhashsig"),
       "a signature pass leaked into the retained serving plan")
     assert(!p.contains("HashJoin") && !p.contains("SortMergeJoin"),
       "the retained serve must read stored pairs, never re-join")
-    assert(lower.contains("/pairs/"),
-      "the serve must scan the pair ledger")
+    assert(scanRoots(ep).exists(_.contains("/pairs/")),
+      s"the serve must scan the pair ledger: ${scanRoots(ep)}")
   }
 
   test("c76c/c84/c87: the strip family serves its digests from the " +
